@@ -8,8 +8,9 @@ DataFrame job over a table of source-code files:
 
 Stages (each checkpointable, each a pure DataFrame -> DataFrame transform):
 
-    normalize -> blocking -> features (tf-idf postings) -> pair scoring
-              -> rank/top-k -> edges -> connected components -> clusters
+    normalize -> features (broadcast IDF + one-pass side features)
+              -> blocking -> pair scoring -> rank/top-k -> edges
+              -> connected components -> clusters
 
 Everything is DataFrame/Catalyst-first; Python appears only inside
 vectorized pandas/Arrow UDFs (never per-row Spark UDFs).

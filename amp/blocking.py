@@ -13,9 +13,10 @@ Passes:
   minhash — b bands × r rows MinHash over k-token shingles; the analog
             of the reference's 10-bit anchor "binary key"
             (internal/matcher/shared.go:79-101): a fixed-width
-            content-derived signature used as an equi-join key.
-            Computed entirely JVM-side (array_min over transform) —
-            no Python in this stage at all.
+            content-derived signature used as an equi-join key. The
+            signature comes from the one-pass feature kernel
+            (scoring.side_features_onepass, column ``sig``); band keys
+            are built from it JVM-side, with no Python in this stage.
   path    — (lang, path stem): the analog of the reference's exact
             attribute blocks (state/city/zip/phone, match.sql:24-25).
 
@@ -37,7 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import AmpConfig, DEFAULT_CONFIG
-from .normalize import shingles_expr
 
 _MERSENNE_P = (1 << 61) - 1
 
@@ -45,84 +45,13 @@ _MERSENNE_P = (1 << 61) - 1
 def _minhash_coeffs(cfg: AmpConfig) -> tuple[list[int], list[int]]:
     """Deterministic permutation coefficients h_j(x) = (a_j*x + b_j) mod p.
 
-    Coefficients are kept below 2^30 so a_j * (x + 2^31) + b_j stays
-    under 2^62 — Spark 4 runs ANSI mode by default and would throw on
-    bigint overflow."""
+    Coefficients are kept below 2^30 so a_j * x + b_j over 32-bit
+    shingle hashes stays under 2^62 — the int64 affine map in
+    scoring.side_features_onepass never overflows."""
     rng = np.random.RandomState(cfg.seed)
     a = rng.randint(1, 1 << 30, size=cfg.minhash_perms, dtype=np.int64)
     b = rng.randint(0, 1 << 30, size=cfg.minhash_perms, dtype=np.int64)
     return a.tolist(), b.tolist()
-
-
-def minhash_signature_cols(cfg: AmpConfig = DEFAULT_CONFIG, shingle_col: str = "shingles"):
-    """One column per permutation, all built-in expressions (codegen'd):
-    min over shingles of (a*x+b) mod p. Shingle hashes are murmur3 int32
-    from ``hash``; lifted to non-negative bigint before the affine map."""
-    a, b = _minhash_coeffs(cfg)
-    cols = []
-    for j in range(cfg.minhash_perms):
-        cols.append(
-            F.expr(
-                f"array_min(transform({shingle_col}, "
-                f"x -> pmod({a[j]}L * (cast(x as bigint) + 2147483648L) + {b[j]}L, "
-                f"{_MERSENNE_P}L)))"
-            ).alias(f"mh_{j}")
-        )
-    return cols
-
-
-def minhash_signatures(reps: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(record_id, sig array<bigint>) — the full MinHash signature,
-    computed in one Arrow-batched mapInPandas pass (crc32 shingle hash +
-    numpy affine permutations). Reused twice: band keys here, Jaccard
-    estimation at scoring (mean positional agreement), so shingle sets
-    are never carried past this stage. A JVM-expression variant
-    (minhash_signatures_jvm) exists; the pandas kernel is the default
-    for the same reason as normalize() — string-heavy JVM work
-    anti-scales across local threads, Python worker processes don't."""
-    import zlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    a, b = _minhash_coeffs(cfg)
-    a_arr = np.array(a, dtype=np.int64)[:, None]
-    b_arr = np.array(b, dtype=np.int64)[:, None]
-    k = cfg.shingle_k
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            sigs = []
-            for text in pdf["norm_text"]:
-                toks = text.split() if text else []
-                if len(toks) < k:
-                    shingles = [" ".join(toks)]
-                else:
-                    shingles = [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-                h = np.fromiter(
-                    (zlib.crc32(s.encode()) for s in set(shingles)),
-                    dtype=np.int64,
-                )
-                sig = ((a_arr * h[None, :] + b_arr) % _MERSENNE_P).min(axis=1)
-                sigs.append(sig)
-            yield pd.DataFrame({"record_id": pdf["record_id"], "sig": sigs})
-
-    return reps.select("record_id", "norm_text").mapInPandas(
-        fn, "record_id string, sig array<long>"
-    )
-
-
-def minhash_signatures_jvm(reps: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
-    """Built-in-expression twin (murmur3 shingle hash instead of crc32 —
-    signatures differ numerically but are an equally valid MinHash)."""
-    wide = reps.select(
-        "record_id",
-        shingles_expr(cfg.shingle_k).alias("shingles"),
-    ).select("record_id", *minhash_signature_cols(cfg))
-    return wide.select(
-        "record_id",
-        F.array(*[F.col(f"mh_{j}") for j in range(cfg.minhash_perms)]).alias("sig"),
-    )
 
 
 def minhash_blocks(sigs: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:

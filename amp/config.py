@@ -34,10 +34,6 @@ class AmpConfig:
     idf_smoothing: bool = False     # reference parity: idf = ln(N/df), unsmoothed
                                     # (reference make_tf_idf.go:66-72)
     emb_dim: int = 64               # hashing-trick embedding dimension
-    broadcast_idf: bool = True      # True: IDF dict broadcast into a one-pass
-                                    # feature kernel (vocab fits driver);
-                                    # False: distributed postings-join scoring
-                                    # (open-vocabulary scale path)
 
     # ---- scoring ----
     # weights mirror the shape of the reference composite score
@@ -68,27 +64,6 @@ class AmpConfig:
                                     # network-wide shuffle) the crossover sits
                                     # higher; the knob is the executor-memory
                                     # budget for the dimension-style side.
-
-    gather_sides_max_records: int = 0
-                                    # round-6 alternate scorer transport (the
-                                    # round-5 "dictionary join" proposal): at or
-                                    # below this many records the side-features
-                                    # table is collected once and broadcast as
-                                    # numpy stores; the pair stream then crosses
-                                    # the Arrow boundary as BARE ID PAIRS and
-                                    # the kernel gathers payloads by index —
-                                    # no payload joins, no payload shuffle, no
-                                    # per-pair payload serialization. Measured
-                                    # A/B at 168k records on local[32]
-                                    # (OPTIMIZATION_r06.md): 19.1 s vs the join
-                                    # path's 15.8 s — the driver-serial
-                                    # collect+broadcast costs more than the
-                                    # tmpfs-local shuffle it replaces, so the
-                                    # default stays OFF. The transport exists
-                                    # for network-bound clusters where shuffle
-                                    # bytes, not driver serialization, dominate;
-                                    # budget ~payload bytes x records per Python
-                                    # worker when enabling.
 
     fused_reps_min_partitions: int = 24
                                     # pipeline constant-phase shape: when the

@@ -91,7 +91,7 @@ def minhash_band_keys(docs: DataFrame, bands: int = 4) -> DataFrame:
     """(doc_id, band, band_key): band_key = min over distinct word
     3-shingles of md5(seed || shingle) — one independent 1-perm MinHash
     per band. md5 keeps the oracle comparison exact; the production
-    variant uses int64 affine perms (amp.blocking.minhash_signatures).
+    variant uses int64 affine perms (amp.scoring.side_features_onepass).
 
     Round 6 (guide §2.4/§4.2): computed in ONE Arrow-batched pass — the
     per-doc shingle set never leaves the Python worker, replacing the

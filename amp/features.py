@@ -1,136 +1,35 @@
-"""Stage 3 — features: TF-IDF postings, IDF dictionary, embeddings.
+"""Stage 3 — features: the IDF dictionary and the TF-IDF document operators.
 
 Reference parity (SURVEY.md §2.4/§2.8):
-  * postings layout mirrors `customer_tokens` (scripts/init_db.sql:87-96):
-    exploded (record_id, field, token, tfidf) rows — the idiomatic Spark
-    sparse-vector representation.
   * idf = ln(N / df), UNSMOOTHED (internal/matcher/make_tf_idf.go:66-72);
     token missing from the dictionary weighs 0 (Go map zero-value
     semantics, make_tf_idf.go:268-270).
   * tf = token count / tokens in doc (make_tf_idf.go:242-255).
   * per-field token namespaces replace the reference's entity_type_id
-    (1=street, 2=name; make_tf_idf.go:256-282).
+    (1=street, 2=name; make_tf_idf.go:256-282): token hashes are
+    field-salted crc32 ('c:' content tokens, 'p:' path trigrams).
   * the pair score SUM(l.tfidf * r.tfidf) (match.sql:65) is kept as
     `tfidf_dot`, plus the properly normalized `tfidf_cosine`.
-  * embedding: the reference shells out to spaCy for a 300-d mean
-    word vector (python-ml/generate_embeddings.py:43-67). Same
-    semantics — record -> fixed-dim dense vector, order-insensitive sum
-    of per-token vectors — via the signed hashing trick (public
-    technique; no model download), in ONE vectorized pandas UDF.
 
-The IDF dictionary is a small aggregate (vocabulary-sized, not
-corpus-sized) and is broadcast into the postings join — the
-north_rule's "broadcast of frequency dictionaries".
+The ER pipeline uses ``idf_map``: the IDF dictionary is a small
+aggregate (vocabulary-sized, not corpus-sized), collected once and
+broadcast into the one-pass feature kernel
+(scoring.side_features_onepass), which builds each record's tf-idf
+vector and hashing-trick embedding — the north_rule's "broadcast of
+frequency dictionaries". ``doc_tfidf``, ``doc_pair_dot`` and
+``doc_pair_dot_grouped`` are the same TF-IDF math over a
+documents(doc_id, text) table: postings as (doc_id, token, tfidf)
+rows, mirroring `customer_tokens` (scripts/init_db.sql:87-96), and
+pair dots resolved by Arrow kernels.
 """
 
 from __future__ import annotations
 
-import zlib
-from collections.abc import Iterator
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .config import AmpConfig, DEFAULT_CONFIG
-
-
-def term_counts(reps: DataFrame) -> DataFrame:
-    """(record_id, field, token, cnt, n_doc_tokens) — per-record term
-    counts, already aggregated.
-
-    fields: 'content' = code token unigrams; 'path' = char trigrams of
-    the basename (reference: trigrams over name/street,
-    make_tf_idf.go:53-63).
-
-    Computed with collections.Counter inside one mapInPandas pass —
-    the per-record aggregation needs NO shuffle at all (the reference's
-    goroutine TF fan-out, make_tf_idf.go:229-286, collapses into this),
-    versus explode + groupBy which would shuffle every token occurrence
-    (~100x more rows than the counted output)."""
-    from collections import Counter
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    import zlib
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rid, fld, tok, th, cnt, ndoc = [], [], [], [], [], []
-            for record_id, text, base in zip(
-                pdf["record_id"], pdf["norm_text"], pdf["basename"]
-            ):
-                toks = text.split() if text else []
-                c = Counter(toks)
-                n = len(toks)
-                for t, k in c.items():
-                    rid.append(record_id); fld.append("content")
-                    tok.append(t); th.append(zlib.crc32(b"c:" + t.encode()))
-                    cnt.append(k); ndoc.append(n)
-                tris = (
-                    [base]
-                    if len(base) < 3
-                    else [base[i : i + 3] for i in range(len(base) - 2)]
-                )
-                c = Counter(tris)
-                n = len(tris)
-                for t, k in c.items():
-                    rid.append(record_id); fld.append("path")
-                    tok.append(t); th.append(zlib.crc32(b"p:" + t.encode()))
-                    cnt.append(k); ndoc.append(n)
-            yield pd.DataFrame(
-                {
-                    "record_id": rid,
-                    "field": fld,
-                    "token": tok,
-                    "token_hash": pd.array(th, dtype="int64"),
-                    "cnt": pd.array(cnt, dtype="int64"),
-                    "n_doc_tokens": pd.array(ndoc, dtype="int64"),
-                }
-            )
-
-    return reps.select("record_id", "norm_text", "basename").mapInPandas(
-        fn,
-        "record_id string, field string, token string, token_hash long, "
-        "cnt long, n_doc_tokens long",
-    )
-
-
-def idf_dict(counts: DataFrame, n_docs: int, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
-    """df = docs containing token (per field); idf = ln(N/df) unsmoothed.
-
-    Keyed by int64 token_hash, not the token string: every downstream
-    shuffle/agg/join on the vocabulary goes through fixed-width ints
-    (string keys measurably anti-scale the JVM hash agg on this
-    hardware, and are strictly more bytes at any scale). The hash is
-    field-salted crc32, computed once at term_counts time."""
-    df_tbl = counts.groupBy("field", "token_hash").agg(
-        F.count("*").alias("df")  # counts are pre-aggregated per record
-    )
-    denom = (F.col("df") + F.lit(1)) if cfg.idf_smoothing else F.col("df")
-    return df_tbl.withColumn(
-        "idf", F.log(F.lit(float(n_docs)) / denom.cast("double"))
-    )
-
-
-def postings(counts: DataFrame, idf: DataFrame) -> DataFrame:
-    """(record_id, field, token, token_hash, tf, tfidf) — weighted
-    postings.
-
-    Norms are NOT carried per posting: a window over (record_id, field)
-    would sort-shuffle the full postings table (measured: the single
-    most expensive stage). record_norms() aggregates them into a
-    record-sized side table instead (partial map-side agg, then a join
-    against the much smaller pair set)."""
-    return (
-        counts.join(F.broadcast(idf), ["field", "token_hash"], "left")
-        .withColumn("tf", F.col("cnt") / F.col("n_doc_tokens"))
-        .withColumn("tfidf", F.col("tf") * F.coalesce(F.col("idf"), F.lit(0.0)))
-        .select("record_id", "field", "token", "token_hash", "tf", "tfidf")
-    )
 
 
 def df_partials(reps: DataFrame) -> DataFrame:
@@ -182,15 +81,19 @@ def df_partials(reps: DataFrame) -> DataFrame:
     )
 
 
+# ~20M hashes ~= 320MB as a broadcast dict: the largest vocabulary
+# idf_map collects to the driver and broadcasts
+IDF_MAP_MAX_VOCAB = 20_000_000
+
+
 def idf_map(reps: DataFrame, n_docs: int, cfg: AmpConfig = DEFAULT_CONFIG) -> dict[int, float]:
     """Collect the IDF dictionary to the driver as {field-salted
     token_hash: idf} for broadcast into the one-pass feature kernel —
     the north_rule's 'broadcast of frequency dictionaries', and exactly
     what the reference does (IDF map held in Go memory,
     make_tf_idf.go:66-72,253-255). Valid while the vocabulary fits on
-    the driver (vocab is corpus-content-bounded, not row-bounded); for
-    open-web-scale vocabularies flip AmpConfig.broadcast_idf=False to
-    use the distributed postings-join path (pair_tfidf)."""
+    the driver (vocab is corpus-content-bounded, not row-bounded); a
+    vocabulary above IDF_MAP_MAX_VOCAB raises ValueError."""
     denom = (F.col("df") + F.lit(1)) if cfg.idf_smoothing else F.col("df")
     pdf = (
         df_partials(reps)
@@ -204,75 +107,28 @@ def idf_map(reps: DataFrame, n_docs: int, cfg: AmpConfig = DEFAULT_CONFIG) -> di
     # vocabulary serializes through py4j and dominates the whole
     # pipeline wall (measured 29-54s vs ~2s via Arrow)
     vocab = len(pdf)
-    if vocab > 20_000_000:
-        # ~20M hashes ~= 320MB as a broadcast dict — past this the
-        # driver-bounded path is the wrong plan; fail loudly instead of
-        # OOMing an executor mid-broadcast
+    if vocab > IDF_MAP_MAX_VOCAB:
+        # fail loudly instead of OOMing an executor mid-broadcast
         raise ValueError(
-            f"idf_map: vocabulary has {vocab} hashes — too large to broadcast; "
-            "set AmpConfig.broadcast_idf=False to use the distributed "
-            "postings-join path"
+            f"idf_map: vocabulary has {vocab} token hashes, above the "
+            f"{IDF_MAP_MAX_VOCAB}-hash broadcast limit (IDF_MAP_MAX_VOCAB)"
         )
     if vocab > 5_000_000:
         import logging
 
         logging.getLogger("amp.features").warning(
-            "idf_map: broadcasting %d-entry IDF dict; consider "
-            "broadcast_idf=False (postings-join path) at this vocabulary size",
+            "idf_map: broadcasting a %d-entry IDF dict (limit %d)",
             vocab,
+            IDF_MAP_MAX_VOCAB,
         )
     return dict(zip(pdf["token_hash"].astype("int64"), pdf["idf"].astype("float64")))
 
 
-def record_norms(post: DataFrame) -> DataFrame:
-    """Per-(record, field) L2 norm of the tfidf vector — record-sized."""
-    return post.groupBy("record_id", "field").agg(
-        F.sqrt(F.sum(F.col("tfidf") * F.col("tfidf"))).alias("norm")
-    )
-
-
-def pair_tfidf(pairs: DataFrame, post: DataFrame, field: str = "content") -> DataFrame:
-    """A1 / J4 (match.sql:65-75): grouped SUM of tfidf products over the
-    shared tokens of each candidate pair, via two equi-joins through the
-    postings table. Emits both the reference's unnormalized dot and the
-    normalized cosine (norms joined from the record-sized norms table,
-    never carried per posting)."""
-    norms = record_norms(post.where(F.col("field") == field))
-    pl = post.where(F.col("field") == field).select(
-        F.col("record_id").alias("left_id"),
-        F.col("token_hash"),
-        F.col("tfidf").alias("l_tfidf"),
-    )
-    pr = post.where(F.col("field") == field).select(
-        F.col("record_id").alias("right_id"),
-        F.col("token_hash"),
-        F.col("tfidf").alias("r_tfidf"),
-    )
-    joined = pairs.join(pl, "left_id").join(pr, ["right_id", "token_hash"])
-    dots = joined.groupBy("left_id", "right_id").agg(
-        F.sum(F.col("l_tfidf") * F.col("r_tfidf")).alias("tfidf_dot")
-    )
-    nl = norms.select(F.col("record_id").alias("left_id"), F.col("norm").alias("l_norm"))
-    nr = norms.select(F.col("record_id").alias("right_id"), F.col("norm").alias("r_norm"))
-    return (
-        dots.join(nl, "left_id")
-        .join(nr, "right_id")
-        .select(
-            "left_id",
-            "right_id",
-            "tfidf_dot",
-            (F.col("tfidf_dot") / (F.col("l_norm") * F.col("r_norm"))).alias(
-                "tfidf_cosine"
-            ),
-        )
-    )
-
-
 def doc_tfidf(docs: DataFrame, n_docs: int | None = None) -> DataFrame:
-    """TF-IDF postings over a documents(doc_id, text) table — the
-    oracle-facing twin of postings(): tf = count/len, idf = ln(N/df)
-    unsmoothed (reference make_tf_idf.go:66-72). ``n_docs`` lets a
-    caller that already counted the corpus skip the extra scan.
+    """TF-IDF postings over a documents(doc_id, text) table:
+    tf = count/len, idf = ln(N/df) unsmoothed (reference
+    make_tf_idf.go:66-72). ``n_docs`` lets a caller that already
+    counted the corpus skip the extra scan.
 
     Round 6 (guide §2.3 "aggregate before you shuffle" / §4.2): the
     per-document term counts and document length come out of ONE Arrow
@@ -283,7 +139,7 @@ def doc_tfidf(docs: DataFrame, n_docs: int | None = None) -> DataFrame:
     frequency aggregate, which is map-side combinable and broadcast
     back. The tfidf arithmetic itself stays in Spark SQL expressions —
     identical doubles to the old plan. Same kernel discipline as
-    features.term_counts (the pipeline's production twin)."""
+    df_partials."""
     import re
     from collections import Counter
     from collections.abc import Iterator
@@ -481,8 +337,8 @@ def doc_pair_dot_grouped(
     chunk_elems: int = 8_000_000,
     dense_elems: int = 4_000_000,
 ) -> DataFrame:
-    """All WITHIN-GROUP candidate pairs' tfidf dots: bit-identical to
-    ``doc_pair_dot(docs, p)`` where p is the equi-join of docs with
+    """All WITHIN-GROUP candidate pairs' tfidf dots: rounded-to-6 equal
+    to ``doc_pair_dot(docs, p)`` where p is the equi-join of docs with
     itself on ``group_cols`` filtered to left_id < right_id — the shape
     of every blocking-key pair query.
 
@@ -772,45 +628,3 @@ def doc_pair_dot_grouped(
         kernel, f"left_id {id_ddl}, right_id {id_ddl}, _dot double"
     ).select("left_id", "right_id", F.round(F.col("_dot"), 6).alias("tfidf_dot"))
 
-
-# ---------------------------------------------------------------------------
-# hashing-trick embeddings
-# ---------------------------------------------------------------------------
-
-def _embed_batchfn(dim: int):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = np.zeros((len(pdf), dim), dtype=np.float32)
-            for i, text in enumerate(pdf["norm_text"]):
-                toks = text.split() if text else []
-                if not toks:
-                    continue
-                v = np.zeros(dim, dtype=np.float32)
-                for t in toks:
-                    h = zlib.crc32(t.encode())
-                    idx = h % dim
-                    sign = 1.0 if (h >> 16) & 1 else -1.0
-                    v[idx] += sign
-                n = float(np.linalg.norm(v))
-                if n > 0:
-                    v /= n
-                out[i] = v
-            yield pd.DataFrame(
-                {"record_id": pdf["record_id"], "embedding": list(out)}
-            )
-
-    return fn
-
-
-def embeddings(reps: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
-    """record_id -> unit-norm array<float> embedding (signed hashing
-    trick over content tokens). Arrow-batched; no per-row Python UDFs."""
-    schema = T.StructType(
-        [
-            T.StructField("record_id", T.StringType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    return reps.select("record_id", "norm_text").mapInPandas(
-        _embed_batchfn(cfg.emb_dim), schema=schema
-    )

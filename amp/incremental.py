@@ -32,6 +32,10 @@ from . import blocking, features, normalize, rank, scoring
 from .checkpoint import CheckpointManager
 from .config import AmpConfig, DEFAULT_CONFIG
 
+# AmpConfig fields that index_config.json files may still carry but
+# AmpConfig no longer has; MatchIndex.load drops them
+_RETIRED_CFG_KEYS = ("broadcast_idf", "gather_sides_max_records")
+
 
 class MatchIndex:
     """Materialized candidate space (the reference's run 0)."""
@@ -87,6 +91,9 @@ class MatchIndex:
     def load(cls, spark: SparkSession, root: str) -> "MatchIndex":
         with open(os.path.join(root, "index_config.json")) as fh:
             meta = json.load(fh)
+        # neither retired knob ever affected index build or match
+        for retired in _RETIRED_CFG_KEYS:
+            meta["cfg"].pop(retired, None)
         cfg = AmpConfig(**meta["cfg"])
         ck = CheckpointManager(spark, root, run_id=0)
         records = ck.read("index_records")

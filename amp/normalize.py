@@ -183,31 +183,6 @@ def normalize_jvm(files: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG, run_id: int
     )
 
 
-def shingles_expr(k: int, text_col: str = "norm_text"):
-    """k-token shingle hashes as array<int> — JVM-side (murmur3 via
-    ``hash``), no Python. Empty-ish docs get a single whole-string shingle
-    (reference parity: ngrams() returns the whole string when shorter
-    than n, ngram_similarity.go:41-43). norm_text is single-space
-    delimited by construction, so split(' ') is exact.
-
-    The token array is bound as a lambda VARIABLE (``transform`` over a
-    1-element wrapper), not inlined into the sliding-window lambda:
-    inlining would re-split the full text once per shingle position —
-    quadratic in document length (same fix as
-    dedup._shingles_of_tokens)."""
-    return F.expr(
-        f"""
-        element_at(transform(array(split({text_col}, ' ')), ts ->
-          CASE WHEN size(ts) < {k}
-               THEN array(hash({text_col}))
-               ELSE transform(
-                      sequence(1, size(ts) - {k} + 1),
-                      i -> hash(concat_ws(' ', slice(ts, i, {k}))))
-          END), 1)
-        """
-    )
-
-
 def representatives(records: DataFrame) -> DataFrame:
     """One canonical row per distinct content (min record_id wins).
 

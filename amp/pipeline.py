@@ -154,72 +154,36 @@ def run_pipeline(
         "exact_edges", lambda: normalize.exact_edges(records, winners=winners)
     )
 
-    out: dict[str, DataFrame] = {}
-
-    if cfg.broadcast_idf:
-        # -- default path: broadcast IDF dict + one-pass feature kernel --
-        def _sides():
-            idf = features.idf_map(reps, n_contents, cfg)
-            s = scoring.side_features_onepass(reps, idf, cfg)
-            if embeddings is not None:
-                s = scoring.attach_embeddings(
-                    s, embeddings, expected_ids=reps.select("record_id")
-                )
-            return s
-
-        sides = stage("sides", _sides)
-        if ck is None:
-            sides = pin(sides)
-        sigs = sides.select("record_id", "sig")
-        blocks = blocking.all_blocks(reps, sigs, cfg)
-        stats = blocking.block_stats(blocks)
-        # pairs is NOT pinned here: its only consumer is the scorer,
-        # whose own pin materializes the fused pair-gen -> score plan in
-        # one pass (a separate pairs materialization measured ~20%
-        # slower end-to-end); the checkpointed path still persists the
-        # pairs table for resume/inspection
-        pairs = stage("pairs", lambda: blocking.candidate_pairs(blocks, cfg, stats))
-        scored = stage(
-            "scored",
-            # n_rows (already probed) gates the scorer's join strategy:
-            # small-enough side tables broadcast, big corpora shuffle
-            lambda: scoring.score_pairs_onepass(pairs, sides, cfg, n_records=n_rows),
-        )
-        if ck is None:
-            scored = pin(scored)
-        out.update(sides=sides, sigs=sigs)
-    else:
-        # -- open-vocabulary scale path: distributed postings join --
-        sigs = stage("sigs", lambda: blocking.minhash_signatures(reps, cfg))
-        if ck is None:
-            sigs = pin(sigs)
-        blocks = blocking.all_blocks(reps, sigs, cfg)
-        stats = blocking.block_stats(blocks)
-        pairs = stage("pairs", lambda: blocking.candidate_pairs(blocks, cfg, stats))
-        if ck is None:
-            pairs = pin(pairs)
-
-        def _postings():
-            counts = features.term_counts(reps)
-            idf = features.idf_dict(counts, n_contents, cfg)
-            return features.postings(counts, idf)
-
-        post = stage("postings", _postings)
-        if ck is None:
-            post = pin(post)
-        ptf = stage("pair_tfidf", lambda: features.pair_tfidf(pairs, post))
-        embs = stage("embeddings", lambda: features.embeddings(reps, cfg))
-        sides = scoring.side_features(reps, sigs, embs)
+    # broadcast IDF dict + one-pass feature kernel
+    def _sides():
+        idf = features.idf_map(reps, n_contents, cfg)
+        s = scoring.side_features_onepass(reps, idf, cfg)
         if embeddings is not None:
-            sides = scoring.attach_embeddings(
-                sides, embeddings, expected_ids=reps.select("record_id")
+            s = scoring.attach_embeddings(
+                s, embeddings, expected_ids=reps.select("record_id")
             )
-        if ck is None:
-            sides = pin(sides)
-        scored = stage("scored", lambda: scoring.score_pairs(pairs, sides, ptf, cfg))
-        if ck is None:
-            scored = pin(scored)
-        out.update(sigs=sigs, postings=post, pair_tfidf=ptf, embeddings=embs)
+        return s
+
+    sides = stage("sides", _sides)
+    if ck is None:
+        sides = pin(sides)
+    sigs = sides.select("record_id", "sig")
+    blocks = blocking.all_blocks(reps, sigs, cfg)
+    stats = blocking.block_stats(blocks)
+    # pairs is NOT pinned here: its only consumer is the scorer,
+    # whose own pin materializes the fused pair-gen -> score plan in
+    # one pass (a separate pairs materialization measured ~20%
+    # slower end-to-end); the checkpointed path still persists the
+    # pairs table for resume/inspection
+    pairs = stage("pairs", lambda: blocking.candidate_pairs(blocks, cfg, stats))
+    scored = stage(
+        "scored",
+        # n_rows (already probed) gates the scorer's join strategy:
+        # small-enough side tables broadcast, big corpora shuffle
+        lambda: scoring.score_pairs_onepass(pairs, sides, cfg, n_records=n_rows),
+    )
+    if ck is None:
+        scored = pin(scored)
 
     # checkpointed stages come back with a run_id partition column —
     # project both sides to the edge schema before the union
@@ -261,8 +225,10 @@ def run_pipeline(
             n_rows - cc_stats["n_edge_nodes"]
         )
         metrics.update(cc_stats)
-    out["metrics"] = metrics
-    out.update(
+    return dict(
+        sides=sides,
+        sigs=sigs,
+        metrics=metrics,
         records=records,
         reps=reps,
         exact_edges=ex_edges,
@@ -273,7 +239,6 @@ def run_pipeline(
         edges=edges,
         clusters=clusters,
     )
-    return out
 
 
 def main() -> None:

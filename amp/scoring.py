@@ -6,16 +6,19 @@ them with fixed weights and clamps to [1,100]
 (internal/matcher/matcher.go:160-208, match.sql:21,65). Same shape
 here, re-targeted at code records:
 
-  feature            reference analog                       where computed
-  tfidf_cosine       tfidf_score (match.sql:65)             postings join (features.pair_tfidf)
-  jaccard_est        binary-key match (shared.go:79-101)    JVM zip_with over MinHash sigs
-  emb_cosine         pgvector <=> (match.sql:21)            JVM zip_with dot (unit vectors)
-  path_jw            trigram_cosine_first/last_name         pandas UDF (batched Jaro-Winkler)
-  path_lev_sim       —  (north_rule requires Levenshtein)   built-in F.levenshtein
-  lang_match         state/zip equality attrs               column expression
+  feature            reference analog                       computed from
+  tfidf_cosine       tfidf_score (match.sql:65)             tfblob sorted-hash intersection
+  jaccard_est        binary-key match (shared.go:79-101)    MinHash positional agreement
+  emb_cosine         pgvector <=> (match.sql:21)            int8 hashed (or provided) vectors
+  path_jw            trigram_cosine_first/last_name         batched Jaro-Winkler on path stem
+  path_lev_sim       —  (north_rule requires Levenshtein)   batched Levenshtein on path stem
+  lang_match         state/zip equality attrs               lang equality
 
-Only Jaro-Winkler needs Python at all, and it runs as ONE Arrow-batched
-pandas UDF; everything else stays inside whole-stage codegen.
+Two Arrow-batched passes do all the Python work:
+side_features_onepass builds every per-record feature (signature,
+embedding, packed tf-idf vector) once, and score_pairs_onepass joins
+both sides onto each candidate pair and computes every similarity plus
+the weighted composite in one numpy kernel per batch.
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .config import AmpConfig, DEFAULT_CONFIG
 
@@ -80,13 +82,6 @@ def jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1, threshold: float 
             prefix += 1
         j += prefix * prefix_weight * (1.0 - j)
     return j
-
-
-@F.pandas_udf(T.DoubleType())
-def jaro_winkler_udf(s1: pd.Series, s2: pd.Series) -> pd.Series:
-    a = s1.fillna("")
-    b = s2.fillna("")
-    return pd.Series([jaro_winkler(x, y) for x, y in zip(a, b)], dtype="float64")
 
 
 # ---------------------------------------------------------------------------
@@ -290,8 +285,8 @@ def side_features_onepass(
     """ALL per-record scoring features in ONE Arrow-batched pass:
     MinHash signature, hashing-trick embedding, and the tf-idf sparse
     vector (token hashes sorted + weights + L2 norm) weighted by the
-    broadcast IDF dict. Replaces three separate stages + their joins;
-    the pair scorer then needs exactly two record-sized equi-joins.
+    broadcast IDF dict. Every feature comes out of the same pass, so
+    the pair scorer needs exactly two record-sized equi-joins.
 
     This is the Spark shape of the reference's per-record feature
     tables (customer_keys / customer_tokens / customer_vector_embedding,
@@ -465,18 +460,6 @@ def attach_embeddings(
     return joined.withColumn("embedding", unit).drop("p_emb")
 
 
-def side_features(reps: DataFrame, sigs: DataFrame, embs: DataFrame) -> DataFrame:
-    """Join-based feature assembly (used by the postings-join scale
-    path). Downstream, pairs join this table twice (left/right side) —
-    the Spark replacement for the reference's per-side index lookups
-    (match.sql:26-29): no index, so denormalize."""
-    return (
-        reps.select("record_id", "stem", "lang")
-        .join(sigs, "record_id")
-        .join(embs, "record_id")
-    )
-
-
 def levenshtein(s1: str, s2: str) -> int:
     """Classic edit distance (matches F.levenshtein / DuckDB
     levenshtein). Strings here are path stems (short)."""
@@ -644,60 +627,11 @@ def score_pairs_onepass(
     joins stay shuffled-hash — the shape that survives 10^12 records."""
     import numpy as np
 
-    w = cfg
-
-    def score_parts(
-        left_ids, right_ids, ls_m, rs_m, le_m, re_m,
-        l_blob, r_blob, l_stem, r_stem, lang_match,
-    ):
-        """The scoring math, shared verbatim by both transports (join
-        and gather) — inputs are already-aligned per-pair arrays."""
-        n = len(lang_match)
-        dots = np.zeros(n); coss = np.zeros(n); jac = np.zeros(n)
-        embc = np.zeros(n); jws = np.zeros(n); levs = np.zeros(n)
-        if n:
-            jac = (ls_m == rs_m).mean(axis=1)
-            den = np.linalg.norm(le_m, axis=1) * np.linalg.norm(re_m, axis=1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                embc = np.where(
-                    den > 0, (le_m * re_m).sum(axis=1) / den, 0.0
-                )
-            # tf-idf dot/cosine: fully vectorized sorted-hash
-            # intersection over DISTINCT (l, r) blob pairs — bit-exact
-            # twin of the scalar per-pair searchsorted loop (see
-            # tfblob_dots_batch); no Python statement runs per pair
-            dots, coss = tfblob_dots_batch(l_blob, r_blob)
-            # batch-vectorized Jaro-Winkler + Levenshtein (bit-exact
-            # twin of the scalar functions; see stem_sims_batch)
-            jws, levs = stem_sims_batch(l_stem, r_stem)
-        score = (
-            coss * w.w_token_cosine
-            + jac * w.w_shingle_jaccard
-            + embc * w.w_emb_cosine
-            + jws * w.w_path_jw
-            + levs * w.w_path_lev
-            + lang_match * w.w_lang_match
-        )
-        return pd.DataFrame(
-            {
-                "left_id": left_ids,
-                "right_id": right_ids,
-                "tfidf_dot": dots,
-                "tfidf_cosine": coss,
-                "jaccard_est": jac,
-                "emb_cosine": embc,
-                "path_jw": jws,
-                "path_lev_sim": levs,
-                "lang_match": lang_match,
-                "score": score,
-                # reference clamp (matcher.go:208)
-                "score_100": np.clip(score * 100.0, 1.0, 100.0),
-            }
-        )
-
     def fn(batches):
         for pdf in batches:
             n = len(pdf)
+            dots = np.zeros(n); coss = np.zeros(n); jac = np.zeros(n)
+            embc = np.zeros(n); jws = np.zeros(n); levs = np.zeros(n)
             if n:
                 # fully-vectorized fixed-width features: signatures and
                 # embeddings stack to (n, k) matrices. Norms computed
@@ -707,73 +641,47 @@ def score_pairs_onepass(
                 rs_m = np.stack(pdf["r_sig"].values)
                 le_m = np.stack(pdf["l_emb"].values).astype(np.float64)
                 re_m = np.stack(pdf["r_emb"].values).astype(np.float64)
-            else:
-                ls_m = rs_m = le_m = re_m = np.zeros((0, 1))
+                jac = (ls_m == rs_m).mean(axis=1)
+                den = np.linalg.norm(le_m, axis=1) * np.linalg.norm(re_m, axis=1)
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    embc = np.where(
+                        den > 0, (le_m * re_m).sum(axis=1) / den, 0.0
+                    )
+                # tf-idf dot/cosine: fully vectorized sorted-hash
+                # intersection over DISTINCT (l, r) blob pairs — bit-exact
+                # twin of the scalar per-pair searchsorted loop (see
+                # tfblob_dots_batch); no Python statement runs per pair
+                dots, coss = tfblob_dots_batch(pdf["l_tfblob"], pdf["r_tfblob"])
+                # batch-vectorized Jaro-Winkler + Levenshtein (bit-exact
+                # twin of the scalar functions; see stem_sims_batch)
+                jws, levs = stem_sims_batch(
+                    pdf["l_stem"].values, pdf["r_stem"].values
+                )
             lang_match = (pdf["l_lang"] == pdf["r_lang"]).astype("float64").values
-            yield score_parts(
-                pdf["left_id"], pdf["right_id"], ls_m, rs_m, le_m, re_m,
-                pdf["l_tfblob"], pdf["r_tfblob"],
-                pdf["l_stem"].values, pdf["r_stem"].values, lang_match,
+            score = (
+                coss * cfg.w_token_cosine
+                + jac * cfg.w_shingle_jaccard
+                + embc * cfg.w_emb_cosine
+                + jws * cfg.w_path_jw
+                + levs * cfg.w_path_lev
+                + lang_match * cfg.w_lang_match
             )
-
-    if n_records is not None and n_records <= cfg.gather_sides_max_records:
-        # round-6 transport (guide §2.3 "shuffle keys, not payloads" +
-        # §4.1 "pass only the columns the function needs"): collect the
-        # record-sized side table ONCE, broadcast it as numpy stores,
-        # and stream BARE ID PAIRS into the same scoring kernel, which
-        # gathers payloads by index. Identical math (the inner fn is
-        # shared verbatim); only the transport changed — the two
-        # payload joins, their shuffles, and the 2x ~1 KB/pair Arrow
-        # serialization disappear. Inner-join semantics on missing ids
-        # are preserved by the mask below.
-        sp = sides.select(
-            "record_id", "stem", "lang", "sig", "embedding", "tfblob"
-        ).toPandas()
-        n_side = len(sp)
-        # contiguous matrices pickle/unpickle as single buffers (an
-        # object array of 168k tiny ndarrays costs seconds per worker);
-        # the stack here is also the one the kernel no longer does
-        stores = (
-            {r: i for i, r in enumerate(sp["record_id"])},
-            sp["stem"].to_numpy(),
-            sp["lang"].to_numpy(),
-            np.stack(sp["sig"].values) if n_side else np.zeros((0, 1)),
-            np.stack(sp["embedding"].values) if n_side else np.zeros((0, 1)),
-            sp["tfblob"].to_numpy(),
-        )
-        bc = pairs.sparkSession.sparkContext.broadcast(stores)
-
-        def gfn(batches):
-            idx_, stem_a, lang_a, sig_m, emb_m, blob_a = bc.value
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                li = np.fromiter(
-                    (idx_.get(i, -1) for i in pdf["left_id"]),
-                    np.int64, len(pdf),
-                )
-                ri = np.fromiter(
-                    (idx_.get(i, -1) for i in pdf["right_id"]),
-                    np.int64, len(pdf),
-                )
-                ok = (li >= 0) & (ri >= 0)
-                if not ok.all():
-                    pdf = pdf[ok]
-                    li, ri = li[ok], ri[ok]
-                if not len(pdf):
-                    continue
-                lang_match = (lang_a[li] == lang_a[ri]).astype("float64")
-                yield score_parts(
-                    pdf["left_id"].values, pdf["right_id"].values,
-                    sig_m[li], sig_m[ri],
-                    emb_m[li].astype(np.float64), emb_m[ri].astype(np.float64),
-                    pd.Series(blob_a[li]), pd.Series(blob_a[ri]),
-                    stem_a[li], stem_a[ri], lang_match,
-                )
-
-        return pairs.select("left_id", "right_id").mapInPandas(
-            gfn, SCORED_SCHEMA
-        )
+            yield pd.DataFrame(
+                {
+                    "left_id": pdf["left_id"],
+                    "right_id": pdf["right_id"],
+                    "tfidf_dot": dots,
+                    "tfidf_cosine": coss,
+                    "jaccard_est": jac,
+                    "emb_cosine": embc,
+                    "path_jw": jws,
+                    "path_lev_sim": levs,
+                    "lang_match": lang_match,
+                    "score": score,
+                    # reference clamp (matcher.go:208)
+                    "score_100": np.clip(score * 100.0, 1.0, 100.0),
+                }
+            )
 
     lhs = sides.select(
         F.col("record_id").alias("left_id"),
@@ -792,91 +700,3 @@ def score_pairs_onepass(
     joined = pairs.join(lhs, "left_id").join(rhs, "right_id")
     return joined.mapInPandas(fn, SCORED_SCHEMA)
 
-
-def _dot_expr(l: str, r: str) -> F.Column:
-    return F.expr(
-        f"aggregate(zip_with({l}, {r}, (x, y) -> cast(x as double) * cast(y as double)), "
-        f"0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def _sig_agreement_expr(l: str, r: str) -> F.Column:
-    """MinHash Jaccard estimate: fraction of agreeing signature positions."""
-    return F.expr(
-        f"aggregate(zip_with({l}, {r}, (x, y) -> CASE WHEN x = y THEN 1.0D ELSE 0.0D END), "
-        f"0.0D, (acc, v) -> acc + v) / cast(size({l}) as double)"
-    )
-
-
-def score_pairs(
-    pairs: DataFrame,
-    sides: DataFrame,
-    pair_tfidf: DataFrame,
-    cfg: AmpConfig = DEFAULT_CONFIG,
-) -> DataFrame:
-    """candidate pairs -> scored pairs.
-
-    Output: left_id, right_id, tfidf_dot, tfidf_cosine, jaccard_est,
-    emb_cosine, path_jw, path_lev_sim, lang_match, score (composite in
-    [0,1]), score_100 (reference-style clamp to [1,100],
-    matcher.go:208)."""
-    lhs = sides.select(
-        F.col("record_id").alias("left_id"),
-        F.col("stem").alias("l_stem"),
-        F.col("lang").alias("l_lang"),
-        F.col("sig").alias("l_sig"),
-        F.col("embedding").alias("l_emb"),
-    )
-    rhs = sides.select(
-        F.col("record_id").alias("right_id"),
-        F.col("stem").alias("r_stem"),
-        F.col("lang").alias("r_lang"),
-        F.col("sig").alias("r_sig"),
-        F.col("embedding").alias("r_emb"),
-    )
-    feat = (
-        pairs.join(lhs, "left_id")
-        .join(rhs, "right_id")
-        .join(pair_tfidf, ["left_id", "right_id"], "left")
-        .withColumn("tfidf_dot", F.coalesce(F.col("tfidf_dot"), F.lit(0.0)))
-        .withColumn(
-            "tfidf_cosine",
-            F.coalesce(F.nanvl(F.col("tfidf_cosine"), F.lit(0.0)), F.lit(0.0)),
-        )
-        .withColumn("jaccard_est", _sig_agreement_expr("l_sig", "r_sig"))
-        .withColumn("emb_cosine", F.coalesce(_dot_expr("l_emb", "r_emb"), F.lit(0.0)))
-        .withColumn("path_jw", jaro_winkler_udf(F.col("l_stem"), F.col("r_stem")))
-        .withColumn(
-            "path_lev_sim",
-            F.lit(1.0)
-            - F.levenshtein("l_stem", "r_stem")
-            / F.greatest(F.length("l_stem"), F.length("r_stem"), F.lit(1)),
-        )
-        .withColumn(
-            "lang_match", (F.col("l_lang") == F.col("r_lang")).cast("double")
-        )
-    )
-    composite = (
-        F.col("tfidf_cosine") * cfg.w_token_cosine
-        + F.col("jaccard_est") * cfg.w_shingle_jaccard
-        + F.col("emb_cosine") * cfg.w_emb_cosine
-        + F.col("path_jw") * cfg.w_path_jw
-        + F.col("path_lev_sim") * cfg.w_path_lev
-        + F.col("lang_match") * cfg.w_lang_match
-    )
-    return feat.select(
-        "left_id",
-        "right_id",
-        "tfidf_dot",
-        "tfidf_cosine",
-        "jaccard_est",
-        "emb_cosine",
-        "path_jw",
-        "path_lev_sim",
-        "lang_match",
-        composite.alias("score"),
-        # reference composite clamp (matcher.go:208): max(1, min(100, 100*s))
-        F.greatest(F.lit(1.0), F.least(F.lit(100.0), composite * 100.0)).alias(
-            "score_100"
-        ),
-    )

@@ -7,7 +7,7 @@ import dataclasses
 
 from pyspark.sql import functions as F
 
-from amp import blocking, normalize
+from amp import blocking, normalize, scoring
 from amp.config import DEFAULT_CONFIG as CFG, AmpConfig
 
 
@@ -82,7 +82,7 @@ def test_minhash_identical_content_same_bands(spark):
         "repo string, path string, commit string, lang string, content string",
     )
     reps = normalize.normalize(files, CFG)
-    sigs = blocking.minhash_signatures(reps, CFG)
+    sigs = scoring.side_features_onepass(reps, {}, CFG)
     s1, s2 = [r["sig"] for r in sigs.collect()]
     assert s1 == s2
 
@@ -110,7 +110,7 @@ def test_adversarial_skew_cap_salt_and_surfaced_drops(spark):
     reps = spark.createDataFrame(
         rows, "record_id string, norm_text string, lang string, stem string"
     )
-    sigs = blocking.minhash_signatures(reps, CFG)
+    sigs = scoring.side_features_onepass(reps, {}, CFG).select("record_id", "sig")
     blocks = blocking.all_blocks(reps, sigs, CFG)
     stats = blocking.block_stats(blocks).cache()
 

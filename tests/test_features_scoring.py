@@ -56,6 +56,18 @@ def test_idf_unsmoothed_missing_token_zero(spark):
     assert rows[(1, "common")] == 0.0 and rows[(2, "common")] == 0.0
 
 
+def test_idf_map_vocabulary_limit_raises(spark, monkeypatch):
+    """A vocabulary past the broadcast limit fails loudly, naming its
+    size and the limit."""
+    reps = spark.createDataFrame(
+        [("alpha beta", "a.py"), ("beta gamma", "b.py")],
+        "norm_text string, basename string",
+    )
+    monkeypatch.setattr(features, "IDF_MAP_MAX_VOCAB", 1)
+    with pytest.raises(ValueError, match=r"vocabulary has \d+ token hashes, above the 1-hash"):
+        features.idf_map(reps, 2)
+
+
 @pytest.mark.parametrize(
     "a,b,expected",
     [
@@ -239,17 +251,26 @@ def test_tfblob_dots_batch_chunked_and_null_guard(monkeypatch):
 
 
 def test_embeddings_unit_norm_and_deterministic(spark):
+    """The one-pass kernel's int8 hashing-trick embedding: identical text
+    embeds identically, empty text is all zeros, and the dequantized
+    vector (emb / 127) is unit-norm within int8 rounding."""
+    import amp.scoring as scoring
+    from amp.config import DEFAULT_CONFIG as CFG
+
     reps = spark.createDataFrame(
         [("r1", "def foo bar"), ("r2", "def foo bar"), ("r3", "")],
         "record_id string, norm_text string",
-    )
-    from amp.config import DEFAULT_CONFIG as CFG
-
-    rows = {r["record_id"]: r["embedding"] for r in features.embeddings(reps, CFG).collect()}
+    ).select("record_id", "norm_text", F.lit("f").alias("stem"), F.lit("py").alias("lang"))
+    rows = {
+        r["record_id"]: r["embedding"]
+        for r in scoring.side_features_onepass(reps, {}, CFG).collect()
+    }
     assert rows["r1"] == rows["r2"]
-    norm = math.sqrt(sum(x * x for x in rows["r1"]))
-    assert norm == pytest.approx(1.0, abs=1e-5)
-    assert all(x == 0.0 for x in rows["r3"])
+    assert len(rows["r1"]) == CFG.emb_dim
+    norm = math.sqrt(sum((x / 127.0) ** 2 for x in rows["r1"]))
+    # each nonzero component rounds by at most 0.5/127
+    assert norm == pytest.approx(1.0, abs=1e-2)
+    assert all(x == 0 for x in rows["r3"])
 
 
 # ---------------------------------------------------------------------------

@@ -289,6 +289,33 @@ def test_index_save_load_identical_matches(spark, small_corpus, index, tmp_path_
     assert got_mem == got_disk
 
 
+def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_path_factory):
+    """An index_config.json written before the postings-join and gather
+    scorer paths were removed still carries their two knobs; load drops
+    exactly those and matches like the in-memory index."""
+    import json
+    import os
+
+    from amp.incremental import MatchIndex
+
+    files, _ = small_corpus
+    root = str(tmp_path_factory.mktemp("index_ck_retired"))
+    index.save(root)
+    path = os.path.join(root, "index_config.json")
+    with open(path) as fh:
+        meta = json.load(fh)
+    meta["cfg"].update(broadcast_idf=True, gather_sides_max_records=0)
+    with open(path, "w") as fh:
+        json.dump(meta, fh)
+    loaded = MatchIndex.load(spark, root)
+    assert loaded.cfg == index.cfg
+
+    q = files.limit(15)
+    got_mem = sorted(tuple(r) for r in match_records(index, q, run_id=9, top_n=5).collect())
+    got_disk = sorted(tuple(r) for r in match_records(loaded, q, run_id=9, top_n=5).collect())
+    assert got_mem == got_disk
+
+
 def test_build_index_with_provided_embeddings(spark, small_corpus):
     """Precomputed-embedding ingest: provided vectors replace the
     hashing-trick ones (unit-normalized), and the match path runs on

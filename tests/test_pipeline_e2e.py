@@ -162,23 +162,6 @@ def test_resume_equals_fresh(spark, tmp_path_factory):
     assert man["rows"] == len(fresh) and man["stage"] == "clusters"
 
 
-def test_open_vocabulary_postings_path_f1(spark, small_corpus):
-    """The broadcast_idf=False branch (distributed postings-join
-    scoring — the open-web-vocabulary scale path) must hold the same
-    F1 gate as the default one-pass kernel."""
-    import dataclasses
-
-    from amp.cluster import pairwise_f1
-    from amp.config import DEFAULT_CONFIG
-    from amp.pipeline import run_pipeline
-
-    files, labels = small_corpus
-    cfg = dataclasses.replace(DEFAULT_CONFIG, broadcast_idf=False)
-    out = run_pipeline(spark, files, cfg)
-    m = pairwise_f1(out["clusters"], labels)
-    assert m["f1"] >= 0.99, m
-
-
 @pytest.mark.parametrize("seed", [7, 1234])
 def test_f1_gate_holds_across_corpus_seeds(spark, seed):
     """The F1 >= 0.99 gate must not be an artifact of the default
@@ -399,24 +382,3 @@ def test_legacy_flat_checkpoint_resumes_and_upgrades(spark, tmp_path_factory):
     ]
     assert flat_leftovers == []
 
-
-def test_scorer_gather_transport_matches_join_transport(spark):
-    """The round-6 gather transport (broadcast payload stores + bare-id
-    pair stream) must produce EXACTLY the join transport's scored
-    table — same pairs, same doubles — since only the transport moved."""
-    import dataclasses
-
-    from amp.config import DEFAULT_CONFIG
-    from amp.datagen import gen_files
-    from amp.pipeline import run_pipeline
-
-    files = gen_files(spark, 80, partitions=4)
-    base = run_pipeline(spark, files)["scored"]
-    cfg_gather = dataclasses.replace(
-        DEFAULT_CONFIG, gather_sides_max_records=10**9
-    )
-    gathered = run_pipeline(spark, files, cfg=cfg_gather)["scored"]
-    cols = base.columns
-    a = sorted(tuple(r) for r in base.select(*cols).collect())
-    b = sorted(tuple(r) for r in gathered.select(*cols).collect())
-    assert a == b and len(a) > 0
