@@ -22,13 +22,14 @@ Passes:
 
 Skew handling (north_rule): exact-duplicate contents are already
 collapsed to representatives before blocking (normalize.representatives).
-Remaining hot keys are handled two ways, both explicit and counted:
-  * frequency cap  — blocks larger than ``max_block_size`` are dropped
-    from pair generation and surfaced in a metrics DataFrame (never
-    silent; standard ER practice).
-  * salted self-join — blocks above ``salt_block_size`` get their pair
-    generation split across ceil(m/salt) tasks via the
-    replicate-one-side trick, preserving the exact pair set.
+Remaining hot keys hit the frequency cap: blocks larger than
+``max_block_size`` are dropped from pair generation and surfaced in a
+metrics DataFrame (never silent; standard ER practice). The cap is
+also what bounds skew in the pair generator: a kept block's pairs are
+exploded in ONE task, at most cap^2/2 of them (2,016 at the default
+cap of 64), before the pair table is repartitioned on ``left_id`` for
+the dedup and the scorer — so no task owns unbounded work and no block
+needs splitting across tasks.
 """
 
 from __future__ import annotations
@@ -98,47 +99,23 @@ def all_blocks(
 
 
 def block_stats(blocks: DataFrame) -> DataFrame:
-    """Per-key sizes — broadcast back for cap/salt decisions and kept
-    as a metrics table (never drop a block silently)."""
+    """Per-key sizes — the metrics table of the frequency cap (never
+    drop a block silently; see dropped_blocks)."""
     return blocks.groupBy("pass_name", "block_key").agg(
         F.count("*").alias("block_size")
     )
 
 
-def candidate_pairs(
-    blocks: DataFrame,
-    cfg: AmpConfig = DEFAULT_CONFIG,
-    stats: DataFrame | None = None,
-) -> DataFrame:
+def candidate_pairs(blocks: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
     """Blocks -> distinct candidate pairs (left_id < right_id).
 
-    Two shapes, chosen by the frequency cap:
-
-      cap <= grouped_pairgen_max_block (default): ONE groupBy shuffle
-        collects each block's (capped, deduplicated) member array and a
-        codegen'd lambda explodes the ordered pairs in place — pair
-        output per block is bounded by cap^2/2, so no task ever owns
-        unbounded work and the salt machinery is unnecessary. This
-        replaces the window + salted self-join shape (3 shuffles of the
-        blocks table) with one shuffle + the final pair dedup.
-
-      cap > grouped_pairgen_max_block: the salted equi-self-join
-        (_candidate_pairs_salted) — with a loose cap a single block's
-        m^2/2 pair generation is real work and must be SPLIT across
-        tasks, which only the replicate-one-side salt can do.
-
-    Both shapes produce the identical distinct pair set (asserted in
-    tests). Cap semantics in the grouped shape count DISTINCT member
-    ids per key (collect_set), which is the intended meaning; the
-    window shape counted raw rows — identical unless a pass emits the
-    same (record, key) twice, which none does.
+    ONE groupBy shuffle collects each block's (capped, deduplicated)
+    member array and a codegen'd lambda explodes the ordered pairs in
+    place. Per-block pair work is at most cap^2/2 (cap =
+    ``max_block_size``) and runs in one task, before the ``left_id``
+    repartition spreads the pair rows for the dedup and the scorer.
+    Cap semantics count DISTINCT member ids per key (collect_set).
     """
-    if cfg.max_block_size <= cfg.grouped_pairgen_max_block:
-        return _candidate_pairs_grouped(blocks, cfg)
-    return _candidate_pairs_salted(blocks, cfg, stats)
-
-
-def _candidate_pairs_grouped(blocks: DataFrame, cfg: AmpConfig) -> DataFrame:
     # Hot-key guard BEFORE the collect: a degenerate key (a band every
     # record shares, a stem like "index" across millions of repos) would
     # otherwise build its full member array in one non-spillable
@@ -196,61 +173,6 @@ def _candidate_pairs_grouped(blocks: DataFrame, cfg: AmpConfig) -> DataFrame:
     return pairs.repartition(cfg.shuffle_partitions, "left_id").dropDuplicates(
         ["left_id", "right_id"]
     )
-
-
-def _candidate_pairs_salted(
-    blocks: DataFrame,
-    cfg: AmpConfig,
-    stats: DataFrame | None = None,
-) -> DataFrame:
-    """Salted equi-self-join pair generation (the loose-cap shape).
-
-    Three size regimes, per key:
-      m <= salt_block_size      : plain equi-join (AQE handles residue)
-      salt < m <= max_block_size: salted — right side carries
-          salt = hash(id) mod s, left side is replicated s times with a
-          target_salt column, join on (key, target_salt = salt). The
-          shuffle key becomes (key, salt): a hot block's m^2/2 pair
-          outputs are computed by s tasks instead of one.
-      m > max_block_size        : dropped (counted in dropped_blocks()).
-    """
-    # Block sizes via a count window over block_key: ONE shuffle of the
-    # blocks table and no second scan — strictly cheaper than the
-    # aggregate-then-join-back shape (blocks scanned twice + stats
-    # shuffled) at every scale. The separate block_stats() table remains
-    # the metrics surface (computed only when something acts on it);
-    # the ``stats`` parameter is kept for API compatibility but the
-    # sizes here are derived inline.
-    from pyspark.sql import Window
-
-    sized = blocks.withColumn(
-        "block_size", F.count("*").over(Window.partitionBy("block_key"))
-    ).where(
-        (F.col("block_size") > 1) & (F.col("block_size") <= cfg.max_block_size)
-    )
-
-    s_expr = F.ceil(F.col("block_size") / F.lit(cfg.salt_block_size)).cast("int")
-    sized = sized.withColumn("n_salt", F.greatest(F.lit(1), s_expr)).withColumn(
-        "salt", F.pmod(F.hash("record_id"), F.col("n_salt"))
-    )
-
-    left = (
-        sized.withColumn("target_salt", F.explode(F.expr("sequence(0, n_salt - 1)")))
-        .select(
-            F.col("block_key"),
-            F.col("record_id").alias("left_id"),
-            F.col("target_salt"),
-        )
-    )
-    right = sized.select(
-        F.col("block_key"),
-        F.col("record_id").alias("right_id"),
-        F.col("salt").alias("target_salt"),
-    )
-    pairs = left.join(right, ["block_key", "target_salt"]).where(
-        F.col("left_id") < F.col("right_id")
-    )
-    return pairs.select("left_id", "right_id").dropDuplicates(["left_id", "right_id"])
 
 
 def dropped_blocks(stats: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:

@@ -20,15 +20,9 @@ class AmpConfig:
     minhash_perms: int = 32         # total permutations
     minhash_bands: int = 8          # bands (rows per band = perms // bands)
     max_block_size: int = 64        # frequency cap: blocks larger than this are
-                                    # dropped from pair generation (counted, never silent)
-    salt_block_size: int = 16       # blocks above this get salted sub-pairing
-                                    # (salted-join shape only; see next knob)
-    grouped_pairgen_max_block: int = 256
-                                    # cap at or below this: pair generation is ONE
-                                    # groupBy + in-place pair explode (per-block
-                                    # work bounded by cap^2/2 — no salt needed);
-                                    # above: the salted self-join, which can SPLIT
-                                    # a hot block's m^2/2 output across tasks
+                                    # dropped from pair generation (counted, never
+                                    # silent); also bounds a block's pair work to
+                                    # cap^2/2 (blocking.candidate_pairs)
 
     # ---- features ----
     idf_smoothing: bool = False     # reference parity: idf = ln(N/df), unsmoothed
@@ -53,8 +47,10 @@ class AmpConfig:
                                     # wide pair+features intermediate never
                                     # shuffle; above it, shuffled-hash joins
                                     # (the only shape that survives 10^12 rows).
-                                    # Crossover measured on the 280k-record
-                                    # scaling job (scripts/phase_scaling.py):
+                                    # Crossover measured on a 280k-record
+                                    # scaling job, per phase (today's tool
+                                    # for that split: perfbench/run.py
+                                    # --workload er_sf1 --trace 1):
                                     # broadcast cuts the scoring phase ~13s at
                                     # local[2] but ADDS ~6s at local[8] — the
                                     # relation build is driver-single-threaded
@@ -64,21 +60,6 @@ class AmpConfig:
                                     # network-wide shuffle) the crossover sits
                                     # higher; the knob is the executor-memory
                                     # budget for the dimension-style side.
-
-    fused_reps_min_partitions: int = 24
-                                    # pipeline constant-phase shape: when the
-                                    # pinned records table has at least this
-                                    # many partitions (a cheap driver-side
-                                    # size proxy — partition count scales with
-                                    # input bytes), the representatives pin is
-                                    # fused into the uniqueness-probe window
-                                    # as ONE concurrent groupBy+semijoin job
-                                    # instead of two sequential pins (winners,
-                                    # then reps). Both shapes are semantically
-                                    # identical; the heuristic only decides
-                                    # which timing we get, so a wrong guess is
-                                    # never a correctness event. Small corpora
-                                    # keep the lazy broadcast-winners reps.
 
     # ---- rank / edges ----
     score_threshold: float = 0.62   # composite in [0,1]; >= threshold -> edge

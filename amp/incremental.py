@@ -31,10 +31,14 @@ from pyspark.sql import functions as F
 from . import blocking, features, normalize, rank, scoring
 from .checkpoint import CheckpointManager
 from .config import AmpConfig, DEFAULT_CONFIG
+from .pipeline import prepare
 
 # AmpConfig fields that index_config.json files may still carry but
 # AmpConfig no longer has; MatchIndex.load drops them
-_RETIRED_CFG_KEYS = ("broadcast_idf", "gather_sides_max_records")
+_RETIRED_CFG_KEYS = (
+    "broadcast_idf", "gather_sides_max_records", "fused_reps_min_partitions",
+    "salt_block_size", "grouped_pairgen_max_block",
+)
 
 
 class MatchIndex:
@@ -91,7 +95,7 @@ class MatchIndex:
     def load(cls, spark: SparkSession, root: str) -> "MatchIndex":
         with open(os.path.join(root, "index_config.json")) as fh:
             meta = json.load(fh)
-        # neither retired knob ever affected index build or match
+        # no retired knob ever changed what an index build or match computes
         for retired in _RETIRED_CFG_KEYS:
             meta["cfg"].pop(retired, None)
         cfg = AmpConfig(**meta["cfg"])
@@ -118,8 +122,9 @@ def build_index(
     idf_override: dict[int, float] | None = None,
 ) -> MatchIndex:
     """Offline bootstrap of the candidate space (reference main.go:92-173):
-    normalize -> representatives -> IDF dict -> one-pass features.
-    The IDF dictionary is frozen here and reused for query batches —
+    normalize -> representatives -> IDF dict -> one-pass features, the
+    same front half run_pipeline runs (pipeline.prepare). The IDF
+    dictionary is frozen here and reused for query batches —
     same semantics as the reference, which computes IDF over run 0 only
     (make_tf_idf.go:75-168) and weighs query tokens with it.
     ``embeddings`` ingests precomputed semantic vectors
@@ -127,26 +132,9 @@ def build_index(
     computation and featurizes with the given dictionary — the
     fresh-build equivalence point for append_records' frozen-IDF policy
     (and the bring-your-own-IDF hook for cross-corpus scoring)."""
-    records = normalize.normalize(files, cfg, run_id=0).localCheckpoint(eager=True)
-    # probe AFTER the checkpoint (see run_pipeline: avoids re-running
-    # the normalize kernel for a one-column uniqueness count); the probe
-    # job doubles as the IDF corpus-size count (uniqueness_stats)
-    n_rows, n_ids, n_contents = normalize.uniqueness_stats(records)
-    if n_ids != n_rows:
-        records = normalize.dedupe_full(records).localCheckpoint(eager=True)
-        _, _, n_contents = normalize.uniqueness_stats(records)
-    reps = normalize.representatives(records).localCheckpoint(eager=True)
-    idf = (
-        idf_override
-        if idf_override is not None
-        else features.idf_map(reps, n_contents, cfg)
+    records, _, idf, sides, _, _ = prepare(
+        files, cfg, run_id=0, embeddings=embeddings, idf=idf_override
     )
-    sides = scoring.side_features_onepass(reps, idf, cfg)
-    if embeddings is not None:
-        sides = scoring.attach_embeddings(
-            sides, embeddings, expected_ids=reps.select("record_id")
-        )
-    sides = sides.localCheckpoint(eager=True)
     return MatchIndex(
         records, sides, idf, cfg, uses_provided_embeddings=embeddings is not None
     )
@@ -167,7 +155,7 @@ def append_records(
       * ``frozen`` (default): new records are weighted with the index's
         EXISTING IDF dictionary. Incremental cost — one normalize pass
         over the new files, one feature pass over the new
-        representatives, a thin winner-id recompute. Drift trade-off:
+        representatives, one representatives recompute. Drift trade-off:
         tokens introduced by the appended batch score 0 (absent from
         the dictionary), and document frequencies do not shift — scores
         equal a fresh ``build_index(all_files, idf_override=old_idf)``
@@ -206,8 +194,7 @@ def append_records(
             "for upserts"
         )
     records = records.localCheckpoint(eager=True)
-    winners = normalize.winner_ids(records).localCheckpoint(eager=True)
-    reps = normalize.representatives_from_winners(records, winners)
+    reps = normalize.representatives(records).localCheckpoint(eager=True)
 
     if policy == "refresh":
         idf = features.idf_map(reps, n_contents, cfg)
@@ -309,8 +296,7 @@ def remove_records(
             "remove_records: removal would empty the index — rebuild "
             "instead of shrinking to nothing"
         )
-    winners = normalize.winner_ids(records).localCheckpoint(eager=True)
-    reps = normalize.representatives_from_winners(records, winners)
+    reps = normalize.representatives(records).localCheckpoint(eager=True)
 
     old_vecs = (index.sides.select("record_id", "embedding")
                 if index.uses_provided_embeddings else None)
@@ -347,13 +333,6 @@ def remove_records(
     return MatchIndex(
         records, sides, idf, cfg,
         uses_provided_embeddings=index.uses_provided_embeddings,
-    )
-
-
-def _blocks_for(sides: DataFrame, reps_like: DataFrame, cfg: AmpConfig) -> DataFrame:
-    sigs = sides.select("record_id", "sig")
-    return blocking.minhash_blocks(sigs, cfg).unionByName(
-        blocking.path_blocks(reps_like)
     )
 
 
@@ -394,10 +373,10 @@ def match_records(
         )
 
     # blocking: query side vs index side ONLY (match.sql:30-31 semantics)
-    q_blocks = _blocks_for(q_sides, q_records, cfg).select(
+    q_blocks = blocking.all_blocks(q_records, q_sides, cfg).select(
         F.col("record_id").alias("left_id"), "block_key"
     )
-    i_blocks = _blocks_for(index.sides, index.records, cfg).select(
+    i_blocks = blocking.all_blocks(index.records, index.sides, cfg).select(
         F.col("record_id").alias("right_id"), "block_key"
     )
     # the query side is request-scoped by definition (single record or

@@ -204,24 +204,20 @@ def representatives(records: DataFrame) -> DataFrame:
     shuffle at all; at 10^12 files the semi join degrades gracefully
     to a sort-merge on record_id — never worse than the window.
     """
-    return representatives_from_winners(records, winner_ids(records), broadcast=False)
+    return representatives_from_winners(records, winner_ids(records))
 
 
 def winner_ids(records: DataFrame) -> DataFrame:
     """(content_sha, record_id) winner table: min record_id per distinct
-    content — two pruned columns, record-count-sized. Pin THIS (not the
-    fat reps rows) when consumers can afford to re-run the semi-join."""
+    content — two pruned columns, record-count-sized."""
     return records.groupBy("content_sha").agg(F.min("record_id").alias("record_id"))
 
 
-def representatives_from_winners(
-    records: DataFrame, winners: DataFrame, broadcast: bool = False
-) -> DataFrame:
-    """reps as a semi-join of records against a (possibly pre-pinned)
-    winner-id table. ``broadcast=True`` forces the hint for the
-    small-corpus shape (winner table known to fit); the default leaves
-    the strategy to AQE (broadcast at modest scale, sort-merge at 10^12
-    files — never worse than the window-over-fat-rows alternative).
+def representatives_from_winners(records: DataFrame, winners: DataFrame) -> DataFrame:
+    """reps as a semi-join of records against a winner-id table; the
+    join strategy is AQE's (broadcast at modest scale, sort-merge at
+    10^12 files — never worse than the window-over-fat-rows
+    alternative).
 
     Semi-join on BOTH columns: record_id alone would let a row leak
     through whenever record_ids collide across rows (duplicate
@@ -229,11 +225,10 @@ def representatives_from_winners(
     must not depend on record_id uniqueness.
     PRECONDITION: records is unique on record_id (identical ingested
     copies of one row would all survive the semi-join). The pipeline
-    enforces this with dedupe_records() — a cheap pruned-column probe,
-    falling back to a deterministic full dedup only when duplicates
+    enforces this with uniqueness_stats() — a cheap pruned-column
+    probe — falling back to dedupe_full() only when duplicates
     actually exist."""
-    w = F.broadcast(winners) if broadcast else winners
-    return records.join(w, ["content_sha", "record_id"], "leftsemi")
+    return records.join(winners, ["content_sha", "record_id"], "leftsemi")
 
 
 def uniqueness_stats(
@@ -249,7 +244,7 @@ def uniqueness_stats(
     Exact countDistincts expand the thin (record_id, content_sha)
     projection — still far cheaper than the separate jobs this replaces
     (each full-stage-scheduled on its own). Callers that hold a PINNED
-    winner/reps table pass ``with_contents=False`` (third element comes
+    reps table pass ``with_contents=False`` (third element comes
     back None): its row count IS n_distinct_contents at ~zero cost, so
     the probe drops the content-sha countDistinct and its row
     expansion."""
@@ -288,21 +283,7 @@ def dedupe_full(records: DataFrame) -> DataFrame:
     )
 
 
-def dedupe_records(records: DataFrame) -> DataFrame:
-    """Enforce record_id uniqueness on an ingested records table.
-
-    Clean inputs pay ONE pruned-column aggregation; only when duplicate
-    ids actually exist (re-ingested batches, corrupt feeds) does the
-    deterministic full dedup run. The pipeline driver uses
-    uniqueness_stats() directly so the probe job is fused with the
-    reps-count job; this wrapper serves standalone callers."""
-    n, d_id, _ = uniqueness_stats(records)
-    if n == d_id:
-        return records
-    return dedupe_full(records)
-
-
-def exact_edges(records: DataFrame, winners: DataFrame | None = None) -> DataFrame:
+def exact_edges(records: DataFrame, reps: DataFrame) -> DataFrame:
     """Star edges inside each exact-duplicate group: (member -> min id).
 
     m identical files contribute m-1 edges, not m^2/2 pairs — the
@@ -310,18 +291,10 @@ def exact_edges(records: DataFrame, winners: DataFrame | None = None) -> DataFra
     reference's self-match-everything `/duplicates` semantics
     (pkg/api/handler.go:82-102) with a linear-cost equivalent.
 
-    ``winners`` (the pinned winner_ids table, when the caller already
-    built one) IS the per-content min-id aggregate — passing it skips
-    recomputing that groupBy shuffle inside whatever action first
-    consumes the edges."""
-    if winners is not None:
-        grp = winners.select(
-            "content_sha", F.col("record_id").alias("canon_id")
-        )
-    else:
-        grp = records.groupBy("content_sha").agg(
-            F.min("record_id").alias("canon_id")
-        )
+    ``reps`` (representatives(records), pinned by the caller) IS the
+    per-content min-id table — every reps row is its content's winner —
+    so the edges reuse it instead of re-running that groupBy shuffle."""
+    grp = reps.select("content_sha", F.col("record_id").alias("canon_id"))
     return (
         records.select("record_id", "content_sha")
         .join(grp, "content_sha")

@@ -13,6 +13,8 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,6 +22,101 @@ from pyspark.sql import functions as F
 from . import blocking, cluster, features, normalize, rank, scoring
 from .checkpoint import CheckpointManager
 from .config import AmpConfig, DEFAULT_CONFIG
+
+
+class Corpus(NamedTuple):
+    """The front half of the ER chain, as prepare() leaves it."""
+
+    records: DataFrame
+    reps: DataFrame
+    # None when the sides stage resumed from a checkpoint (the IDF pass
+    # lives inside that stage and is skipped with it)
+    idf: dict[int, float] | None
+    sides: DataFrame
+    n_rows: int
+    n_contents: int
+
+
+def pin(name: str, thunk) -> DataFrame:
+    """The no-checkpoint stage: materialize + TRUNCATE the logical plan.
+
+    cache() alone is not enough: every downstream action still
+    re-analyzes the full logical tree, and with ~20 actions over a
+    deep DAG the driver-side Catalyst work dominates wall clock
+    (measured: wall identical at local[8] and local[32]).
+    localCheckpoint is the in-memory analog of the reference's
+    table-to-table stage materialization. Same (name, thunk) signature
+    as CheckpointManager.stage, which takes its place on checkpointed
+    runs."""
+    return thunk().localCheckpoint(eager=True)
+
+
+def prepare(
+    files: DataFrame,
+    cfg: AmpConfig = DEFAULT_CONFIG,
+    run_id: int = 0,
+    ck: CheckpointManager | None = None,
+    embeddings: DataFrame | None = None,
+    idf: dict[int, float] | None = None,
+) -> Corpus:
+    """records -> representatives -> features: normalize, enforce
+    record_id uniqueness, one row per distinct content, IDF dictionary
+    (unless ``idf`` is given), one-pass side features (+ provided
+    ``embeddings``). Every table is materialized as a stage — a
+    CheckpointManager stage when ``ck`` is given (stage names
+    records / reps / sides), an in-memory pin otherwise.
+
+    The uniqueness probe runs AFTER the records stage: probing the raw
+    normalize plan would re-run the whole Arrow kernel (mapInPandas
+    output is not column-prunable), against the materialized table it
+    is a cheap pruned-column aggregation. The probe and the reps stage
+    are independent actions over that same immutable table, so they
+    run concurrently (Spark drivers schedule concurrent jobs safely):
+    both are constant-cost phases that don't shrink with data, and
+    overlapping them keeps that constant to one window. The reps
+    stage's row count IS n_contents (one row per distinct content), so
+    the probe skips the content-sha countDistinct.
+
+    Dirty input (duplicate record_ids, rare): the reps stage was built
+    from the pre-dedup rows, so records are deduped and pinned (a
+    checkpointed records stage keeps the rows as ingested; every run
+    re-dedupes them) and the reps stage is recomputed from the deduped
+    rows. dedupe_full keeps one row per id, so the deduped row count is
+    the probe's distinct-id count."""
+    persist = ck.stage if ck else pin
+
+    def reps_of_records():
+        return normalize.representatives(records)
+
+    records = persist("records", lambda: normalize.normalize(files, cfg, run_id))
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_probe = pool.submit(
+            lambda: normalize.uniqueness_stats(records, with_contents=False)
+        )
+        f_reps = pool.submit(persist, "reps", reps_of_records)
+        n_rows, n_ids, _ = f_probe.result()
+        reps = f_reps.result()
+    if n_ids != n_rows:
+        records = pin("records", lambda: normalize.dedupe_full(records))
+        n_rows = n_ids
+        if ck:
+            ck.invalidate("reps")
+        reps = persist("reps", reps_of_records)
+    n_contents = reps.count()  # materialized-table count, ~free
+
+    def _sides():
+        nonlocal idf
+        if idf is None:
+            idf = features.idf_map(reps, n_contents, cfg)
+        s = scoring.side_features_onepass(reps, idf, cfg)
+        if embeddings is not None:
+            s = scoring.attach_embeddings(
+                s, embeddings, expected_ids=reps.select("record_id")
+            )
+        return s
+
+    sides = persist("sides", _sides)
+    return Corpus(records, reps, idf, sides, n_rows, n_contents)
 
 
 def run_pipeline(
@@ -38,135 +135,16 @@ def run_pipeline(
     the hook for bringing reference-style model vectors
     (python-ml/generate_embeddings.py) instead of hashed ones."""
     ck = CheckpointManager(spark, checkpoint_root, run_id) if checkpoint_root else None
+    persist = ck.stage if ck else pin
 
     def stage(name: str, thunk):
+        """A stage the no-checkpoint path leaves lazy."""
         return ck.stage(name, thunk) if ck else thunk()
 
-    def pin(df):
-        """Materialize + TRUNCATE the logical plan (no-checkpoint path).
-
-        cache() alone is not enough: every downstream action still
-        re-analyzes the full logical tree, and with ~20 actions over a
-        deep DAG the driver-side Catalyst work dominates wall clock
-        (measured: wall identical at local[8] and local[32]).
-        localCheckpoint is the in-memory analog of the reference's
-        table-to-table stage materialization."""
-        return df.localCheckpoint(eager=True)
-
-    records = stage("records", lambda: normalize.normalize(files, cfg, run_id))
-    if ck is None:
-        records = pin(records)
-    # uniqueness probe AFTER materialization: probing the raw normalize
-    # plan would re-run the whole Arrow kernel (mapInPandas output is
-    # not column-prunable); against the pinned/checkpointed table the
-    # probe is a cheap pruned-column aggregation — fused with the IDF
-    # corpus-size count into ONE job (uniqueness_stats): when record_id
-    # is unique, reps emits exactly one row per distinct content_sha,
-    # so n_contents IS reps.count() and that job disappears. Clean
-    # inputs keep the same frame; a dirty input yields a new (deduped)
-    # plan -> re-pin + re-count (rare path pays the extra job).
-    #
-    # The probe and the winner-side pin are INDEPENDENT actions over the
-    # same pinned table, so the no-checkpoint path submits them
-    # concurrently (Spark drivers schedule concurrent jobs safely; both
-    # inputs are immutable pins). These are the pipeline's constant-cost
-    # phases — they don't shrink with data, so at high parallelism they
-    # dilute scaling; overlapping them halves that constant.
-    #
-    # WHICH table the winner thread pins is a size call: small corpora
-    # pin the thin (content_sha, record_id) winner table and leave reps
-    # as a lazy broadcast semi-join; large corpora pin the fat reps rows
-    # directly — representatives() fuses the winner groupBy and the
-    # semi-join into ONE job, so the pin lands inside the probe window
-    # instead of running as a second sequential materialization, and
-    # the winner table falls out of the pinned reps as a free projection
-    # (every reps row IS its content's winner). n_rows isn't known until
-    # the probe returns, so the call uses the pinned table's partition
-    # count as the size proxy (cfg.fused_reps_min_partitions); both
-    # shapes are semantically identical, so a wrong guess costs timing,
-    # never correctness.
-    winners = None
-    reps = None
-    if ck is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        fused_reps = (
-            records.rdd.getNumPartitions() >= cfg.fused_reps_min_partitions
-        )
-
-        def _winner_side():
-            if fused_reps:
-                return pin(normalize.representatives(records))
-            return pin(normalize.winner_ids(records))
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            # the pinned winner side's row count IS n_contents (one row
-            # per distinct content either way), so the probe skips the
-            # content-sha countDistinct and its row expansion
-            f_probe = pool.submit(
-                lambda: normalize.uniqueness_stats(records, with_contents=False)
-            )
-            f_side = pool.submit(_winner_side)
-            n_rows, n_ids, _ = f_probe.result()
-            side = f_side.result()
-        if n_ids != n_rows:
-            # dirty input (rare): the winner side was derived from the
-            # pre-dedup rows — recompute everything off the deduped pin.
-            # Re-probe the row counts: n_rows feeds metrics + the
-            # cluster arithmetic below, not just the gate.
-            records = pin(normalize.dedupe_full(records))
-            n_rows, n_ids, _ = normalize.uniqueness_stats(
-                records, with_contents=False
-            )
-            side = _winner_side()
-        n_contents = side.count()  # pinned-table count, ~free
-        if fused_reps:
-            reps = side
-            winners = reps.select("content_sha", "record_id")
-        else:
-            winners = side
-    else:
-        n_rows, n_ids, n_contents = normalize.uniqueness_stats(records)
-        if n_ids != n_rows:
-            records = normalize.dedupe_full(records)
-            n_rows, n_ids, n_contents = normalize.uniqueness_stats(records)
-
-    if ck is not None:
-        reps = stage("reps", lambda: normalize.representatives(records))
-    elif reps is not None:
-        pass  # fused path: reps pinned inside the probe window above
-    elif n_rows <= cfg.broadcast_sides_max_records:
-        # small-corpus shape: the THIN pinned winner table broadcasts
-        # and reps stays a lazy semi-join against pinned records — each
-        # consumer (IDF pass, feature kernel, path blocks) re-runs a
-        # ~free in-memory broadcast join instead of the pipeline paying
-        # a second fat-row materialization pass up front.
-        reps = normalize.representatives_from_winners(
-            records, winners, broadcast=True
-        )
-    else:
-        # above the gate a corpus-sized winner table can't broadcast;
-        # materialize the fat reps rows once (AQE picks the join) —
-        # repeating a shuffled semi-join per consumer costs more than
-        # one materialization.
-        reps = pin(normalize.representatives_from_winners(records, winners))
-    ex_edges = stage(
-        "exact_edges", lambda: normalize.exact_edges(records, winners=winners)
+    records, reps, _, sides, n_rows, n_contents = prepare(
+        files, cfg, run_id, ck, embeddings
     )
-
-    # broadcast IDF dict + one-pass feature kernel
-    def _sides():
-        idf = features.idf_map(reps, n_contents, cfg)
-        s = scoring.side_features_onepass(reps, idf, cfg)
-        if embeddings is not None:
-            s = scoring.attach_embeddings(
-                s, embeddings, expected_ids=reps.select("record_id")
-            )
-        return s
-
-    sides = stage("sides", _sides)
-    if ck is None:
-        sides = pin(sides)
+    ex_edges = stage("exact_edges", lambda: normalize.exact_edges(records, reps))
     sigs = sides.select("record_id", "sig")
     blocks = blocking.all_blocks(reps, sigs, cfg)
     stats = blocking.block_stats(blocks)
@@ -175,15 +153,13 @@ def run_pipeline(
     # one pass (a separate pairs materialization measured ~20%
     # slower end-to-end); the checkpointed path still persists the
     # pairs table for resume/inspection
-    pairs = stage("pairs", lambda: blocking.candidate_pairs(blocks, cfg, stats))
-    scored = stage(
+    pairs = stage("pairs", lambda: blocking.candidate_pairs(blocks, cfg))
+    scored = persist(
         "scored",
         # n_rows (already probed) gates the scorer's join strategy:
         # small-enough side tables broadcast, big corpora shuffle
         lambda: scoring.score_pairs_onepass(pairs, sides, cfg, n_records=n_rows),
     )
-    if ck is None:
-        scored = pin(scored)
 
     # checkpointed stages come back with a run_id partition column —
     # project both sides to the edge schema before the union

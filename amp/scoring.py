@@ -316,19 +316,6 @@ def side_features_onepass(
         # partition's vocabulary — the same driver-bounded quantity as
         # the broadcast idf dict itself.
         tok_memo: dict[str, tuple[int, float, int, float]] = {}
-        # Shingle memo, same policy (round 6): the k-shingle vocabulary
-        # is corpus-content-bounded and repeats across documents, so
-        # each distinct shingle's UTF-8 encode + crc32 runs once per
-        # partition instead of once per (document, shingle). Identical
-        # int64 hashes into the identical affine-permutation min.
-        sh_memo: dict[str, int] = {}
-
-        def sh_hash(s: str) -> int:
-            v = sh_memo.get(s)
-            if v is None:
-                v = zlib.crc32(s.encode())
-                sh_memo[s] = v
-            return v
 
         def tok_info(t: str) -> tuple[int, float, int, float]:
             v = tok_memo.get(t)
@@ -353,7 +340,9 @@ def side_features_onepass(
                     shingles = {" ".join(toks)}
                 else:
                     shingles = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
-                h = np.fromiter(map(sh_hash, shingles), dtype=np.int64)
+                h = np.fromiter(
+                    (zlib.crc32(sh.encode()) for sh in shingles), dtype=np.int64
+                )
                 sig64 = ((a_arr * h[None, :] + b_arr) % _MERSENNE_P).min(axis=1)
                 # fold to int32 for transport: positional agreement is
                 # preserved exactly; disagreement collides at 2^-31

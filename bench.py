@@ -56,11 +56,9 @@ def _corpus_path(spark, n_base: int) -> str:
 
 def completed_stages(spark) -> list[dict]:
     """Raw completed-stage records from the live UI REST API (requires
-    spark.ui.enabled=true). The one fetch shared by every measurement
-    harness (stage_metrics here, scripts/phase_scaling.py,
-    scripts/probe_pairs_phase.py); scripts/riser_ab.py keeps its own
-    copy on purpose — it imports `bench` from arbitrary checkouts that
-    may predate this helper."""
+    spark.ui.enabled=true), read by stage_metrics. Per-layer timings of
+    a pipeline run come from perfbench/run.py --trace 1, which
+    attributes Spark's event log to layer spans instead."""
     import urllib.request
 
     ui = spark.sparkContext.uiWebUrl

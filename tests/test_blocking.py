@@ -1,5 +1,5 @@
-"""Blocking: recall over labeled pairs, salted pair-gen equivalence,
-frequency cap surfaced as metrics."""
+"""Blocking: recall over labeled pairs, pair generation equal to the
+brute-force per-key pair set, frequency cap surfaced as metrics."""
 
 from __future__ import annotations
 
@@ -36,25 +36,36 @@ def test_blocking_recall_on_labeled_pairs(spark, small_corpus, pipeline_out):
     assert missed == 0, f"{missed} labeled positive pairs not co-blocked"
 
 
+def _per_key_pairs(rows, cap: int) -> set:
+    """Brute-force ground truth: every left<right pair inside each key
+    with 1 < size <= cap."""
+    members: dict = {}
+    for rid, key in rows:
+        members.setdefault(key, set()).add(rid)
+    want = set()
+    for ms in members.values():
+        if 1 < len(ms) <= cap:
+            ms = sorted(ms)
+            want.update(
+                (ms[i], ms[j]) for i in range(len(ms)) for j in range(i + 1, len(ms))
+            )
+    return want
+
+
 def test_salted_pairgen_equals_plain(spark):
-    """The replicate-one-side salted self-join must produce EXACTLY the
-    plain per-block pair set (no loss, no dup) regardless of salt size."""
+    """A loose cap (1,000: the regime a salted self-join once served)
+    still yields EXACTLY the per-key pair set — no loss, no dup."""
     rows = [(f"r{i:02d}", f"k{i % 3}") for i in range(30)]
     blocks = spark.createDataFrame(rows, "record_id string, block_key string").withColumn(
         "pass_name", F.lit("t")
     )
-    base_cfg = dataclasses.replace(CFG, salt_block_size=1000, max_block_size=1000)
-    salty_cfg = dataclasses.replace(CFG, salt_block_size=3, max_block_size=1000)
-    plain = {
+    cfg = dataclasses.replace(CFG, max_block_size=1000)
+    got = {
         (r["left_id"], r["right_id"])
-        for r in blocking.candidate_pairs(blocks, base_cfg).collect()
+        for r in blocking.candidate_pairs(blocks, cfg).collect()
     }
-    salted = {
-        (r["left_id"], r["right_id"])
-        for r in blocking.candidate_pairs(blocks, salty_cfg).collect()
-    }
-    assert plain == salted
-    assert len(plain) == 3 * (10 * 9 // 2)
+    assert got == _per_key_pairs(rows, cap=1000)
+    assert len(got) == 3 * (10 * 9 // 2)
 
 
 def test_frequency_cap_counts_dropped_blocks(spark):
@@ -66,7 +77,7 @@ def test_frequency_cap_counts_dropped_blocks(spark):
     stats = blocking.block_stats(blocks)
     dropped = blocking.dropped_blocks(stats, cfg).collect()
     assert [(d["block_key"], d["block_size"]) for d in dropped] == [("hot", 80)]
-    pairs = blocking.candidate_pairs(blocks, cfg, stats)
+    pairs = blocking.candidate_pairs(blocks, cfg)
     # no pair from the hot block
     hot_ids = {f"r{i:03d}" for i in range(80)}
     for r in pairs.collect():
@@ -91,8 +102,8 @@ def test_adversarial_skew_cap_salt_and_surfaced_drops(spark):
     """Adversarial mega-block corpus (license-boilerplate shape): every
     doc in group A shares all minhash bands -> one 200-member block that
     must be CAPPED (dropped from pair-gen, surfaced in dropped_blocks);
-    group B (40 near-identical docs) exceeds salt_block_size -> salted
-    pair-gen; group C is a plain small block. The emitted pair set must
+    group B (40 near-identical docs) is a large kept block, exploded in
+    one task; group C is a plain small block. The emitted pair set must
     equal the per-key ground truth over kept blocks exactly."""
     from pyspark.sql import functions as F
 
@@ -119,56 +130,35 @@ def test_adversarial_skew_cap_salt_and_surfaced_drops(spark):
     dropped = blocking.dropped_blocks(stats, CFG).collect()
     assert dropped and all(r["block_size"] > CFG.max_block_size for r in dropped)
 
-    # ground truth: pairs per kept key (1 < size <= max_block_size)
-    key_members: dict = {}
-    for r in blocks.collect():
-        key_members.setdefault(r["block_key"], set()).add(r["record_id"])
-    want = set()
-    n_salted_keys = 0
-    for members in key_members.values():
-        if 1 < len(members) <= CFG.max_block_size:
-            if len(members) > CFG.salt_block_size:
-                n_salted_keys += 1
-            ms = sorted(members)
-            for i in range(len(ms)):
-                for j in range(i + 1, len(ms)):
-                    want.add((ms[i], ms[j]))
-    assert n_salted_keys > 0, "fixture must exercise the salted regime"
-
+    want = _per_key_pairs(
+        [(r["record_id"], r["block_key"]) for r in blocks.collect()],
+        cap=CFG.max_block_size,
+    )
     got = {
         (r["left_id"], r["right_id"])
-        for r in blocking.candidate_pairs(blocks, CFG, stats).collect()
+        for r in blocking.candidate_pairs(blocks, CFG).collect()
     }
     assert got == want
-    # capped group contributes nothing; salted group B fully paired
+    # capped group contributes nothing; group B fully paired
     assert not any(l.startswith("a") for l, _ in got)
     assert sum(1 for l, r in got if l.startswith("b") and r.startswith("b")) == 40 * 39 // 2
 
 
 def test_grouped_pairgen_hot_key_dropped_and_equals_salted(spark):
-    """The grouped shape's hot-key guard: a key above the cap is dropped
-    BEFORE its member array is collected, and the surviving pair set
-    still equals the salted shape's output exactly."""
+    """The hot-key guard: a key above the cap is dropped BEFORE its
+    member array is collected, and the surviving pair set equals the
+    brute-force per-key pairs exactly."""
     rows = [(f"h{i:03d}", "hot") for i in range(500)]  # one degenerate key
     rows += [(f"r{i:02d}", f"k{i % 4}") for i in range(40)]  # healthy keys
     blocks = spark.createDataFrame(
         rows, "record_id string, block_key string"
     ).withColumn("pass_name", F.lit("t"))
     cap = 64
-    grouped_cfg = dataclasses.replace(
-        CFG, max_block_size=cap, grouped_pairgen_max_block=256
-    )
-    salted_cfg = dataclasses.replace(
-        CFG, max_block_size=cap, grouped_pairgen_max_block=0, salt_block_size=8
-    )
-    grouped = {
+    cfg = dataclasses.replace(CFG, max_block_size=cap)
+    got = {
         (r["left_id"], r["right_id"])
-        for r in blocking.candidate_pairs(blocks, grouped_cfg).collect()
+        for r in blocking.candidate_pairs(blocks, cfg).collect()
     }
-    salted = {
-        (r["left_id"], r["right_id"])
-        for r in blocking.candidate_pairs(blocks, salted_cfg).collect()
-    }
-    assert grouped == salted
-    assert len(grouped) == 4 * (10 * 9 // 2)
-    assert not any(l.startswith("h") for l, _ in grouped)
+    assert got == _per_key_pairs(rows, cap=cap)
+    assert len(got) == 4 * (10 * 9 // 2)
+    assert not any(l.startswith("h") for l, _ in got)

@@ -290,9 +290,10 @@ def test_index_save_load_identical_matches(spark, small_corpus, index, tmp_path_
 
 
 def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_path_factory):
-    """An index_config.json written before the postings-join and gather
-    scorer paths were removed still carries their two knobs; load drops
-    exactly those and matches like the in-memory index."""
+    """An index_config.json written before the postings-join, gather
+    scorer, fused-reps and salted pair-gen paths were removed still
+    carries their five knobs; load drops exactly those and matches like
+    the in-memory index."""
     import json
     import os
 
@@ -304,7 +305,13 @@ def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_
     path = os.path.join(root, "index_config.json")
     with open(path) as fh:
         meta = json.load(fh)
-    meta["cfg"].update(broadcast_idf=True, gather_sides_max_records=0)
+    meta["cfg"].update(
+        broadcast_idf=True,
+        gather_sides_max_records=0,
+        fused_reps_min_partitions=24,
+        salt_block_size=16,
+        grouped_pairgen_max_block=256,
+    )
     with open(path, "w") as fh:
         json.dump(meta, fh)
     loaded = MatchIndex.load(spark, root)

@@ -84,7 +84,7 @@ def test_representatives_and_exact_edges(spark):
     recs = normalize.normalize(files, CFG)
     reps = normalize.representatives(recs)
     assert reps.count() == 2  # one per distinct content
-    edges = normalize.exact_edges(recs).collect()
+    edges = normalize.exact_edges(recs, reps).collect()
     # 3-way exact group -> 2 star edges to the min id, not 3 pairs
     assert len(edges) == 2
     ids = sorted(r["record_id"] for r in recs.where(

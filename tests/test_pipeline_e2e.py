@@ -53,48 +53,38 @@ def test_dirty_input_metrics_use_post_dedup_counts(spark, small_corpus):
         m["n_clusters"]
         == out["clusters"].agg(F.countDistinct("cluster_id")).collect()[0][0]
     )
+    # reps recomputed off the deduped rows: one row per content
+    assert out["reps"].count() == out["reps"].select("content_sha").distinct().count()
 
 
-def test_fused_reps_path_identical_to_default(spark, small_corpus, pipeline_out):
-    """The large-corpus shape (reps pinned inside the probe window as
-    one fused groupBy+semijoin job, winners derived as a projection of
-    the pinned reps) must produce byte-identical clusters to the
-    small-corpus shape (thin winner pin + lazy broadcast reps). Forced
-    here by dropping the partition-count gate to 1; the dirty-input
-    rare path is exercised through the same fused branch."""
-    import dataclasses
-
-    from amp.config import DEFAULT_CONFIG
+def test_checkpointed_run_equals_in_memory_on_dirty_input(
+    spark, small_corpus, tmp_path_factory
+):
+    """Dirty input through the checkpointed stages: the records stage
+    holds the pre-dedup rows and the reps stage is first built from
+    them, so the run must dedupe and rebuild reps exactly as the
+    in-memory run does — fresh and resumed."""
     from amp.pipeline import run_pipeline
 
     files, _ = small_corpus
-    cfg = dataclasses.replace(DEFAULT_CONFIG, fused_reps_min_partitions=1)
-    out = run_pipeline(spark, files, cfg)
-    base = {
-        tuple(r) for r in pipeline_out["clusters"].select(
-            "record_id", "cluster_id"
-        ).collect()
-    }
-    fused = {
-        tuple(r) for r in out["clusters"].select(
-            "record_id", "cluster_id"
-        ).collect()
-    }
-    assert fused == base
-    # metrics contract holds on the fused path too
-    m = out["metrics"]
-    assert m["n_records"] == out["records"].count()
-    assert (
-        m["n_clusters"]
-        == out["clusters"].agg(F.countDistinct("cluster_id")).collect()[0][0]
-    )
-    # dirty input through the fused branch: winner side recomputed off
-    # the deduped pin
-    sample = files.limit(40)
-    doubled = sample.unionByName(sample)
-    out2 = run_pipeline(spark, doubled, cfg)
-    assert out2["metrics"]["n_records"] == 40
-    assert out2["reps"].count() == out2["reps"].select("content_sha").distinct().count()
+    # collected once so all three runs read the same 40 rows
+    sample = spark.createDataFrame(files.limit(40).collect(), files.schema)
+    doubled = sample.unionByName(sample)  # every id duplicated
+
+    def assignments(out):
+        return {
+            tuple(r) for r in out["clusters"].select("record_id", "cluster_id").collect()
+        }
+
+    mem = run_pipeline(spark, doubled)
+    assert mem["metrics"]["n_records"] == 40
+    root = str(tmp_path_factory.mktemp("ck_dirty"))
+    for _ in ("fresh", "resumed"):
+        ck = run_pipeline(spark, doubled, checkpoint_root=root)
+        assert ck["metrics"]["n_records"] == 40
+        assert ck["metrics"]["n_contents"] == mem["metrics"]["n_contents"]
+        assert ck["reps"].count() == mem["reps"].count()
+        assert assignments(ck) == assignments(mem)
 
 
 def test_per_class_recall(spark, small_corpus, pipeline_out):
