@@ -145,10 +145,13 @@ def mixture_sample(
         )
         .select(strata_col, "_f", "_thresh")
     )
+    # th's columns are named through th, so input columns that happen
+    # to be called _f/_thresh pass through untouched
+    th = F.broadcast(th)
     return (
-        docs.join(F.broadcast(th), strata_col)
-        .where((F.col("_f") >= 1.0) | (_hash8(key_col, salt) < F.col("_thresh")))
-        .drop("_f", "_thresh")
+        docs.join(th, strata_col)
+        .where((th["_f"] >= 1.0) | (_hash8(key_col, salt) < th["_thresh"]))
+        .drop(th["_f"], th["_thresh"])
     )
 
 

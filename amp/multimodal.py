@@ -1,16 +1,14 @@
 """Multimodal column plumbing: image/audio/video as opaque binary
 columns with typed metadata.
 
-The image libraries are not in this container, so the decode ladder
-carries its own pure-stdlib codecs: PIL when importable, else real
-decoders for PNG (RFC 2083 subset, below), baseline AND progressive
-JPEG (amp.jpeg, ITU T.81 incl. Annex G), lossless WebP (amp.vp8l),
-BMP incl. RLE4/RLE8, first-frame + animated GIF, WAV/PCM audio and
-FLAC (amp.flac, MD5-verified inside the format; the audio rows ride
-the same status ladder via a coarse 8x8 spectrogram grid); everything
-else (lossy VP8, arithmetic-coded JPEG, BMP bitfields, MP3/ADPCM)
-degrades to a deterministic fake or a NULL feature with
-decode_status as data (AMP_FAKE_DECODE). The Spark-side plumbing is real and tested:
+Pillow is optional, so the decode ladder carries its own pure-stdlib
+codecs: PIL when importable, else real decoders for PNG (RFC 2083
+subset, below), lossless WebP (amp.vp8l), BMP incl. RLE4/RLE8,
+first-frame + animated GIF and WAV/PCM audio (the audio rows ride the
+same status ladder via a coarse 8x8 spectrogram grid). Every other
+payload, sniffed formats such as JPEG and FLAC included, degrades to
+a deterministic fake or a NULL feature with decode_status as data
+(AMP_FAKE_DECODE). The Spark-side plumbing is real and tested:
 schemas, Arrow batch shapes, mapInPandas signatures, partition-size
 control. On a real cluster only the ladder's top rung changes (PIL/
 libav present); the plan shape is already the scalable one: a single
@@ -732,7 +730,7 @@ def _audio_grid(samples: np.ndarray) -> np.ndarray:
     windows x 8 rFFT magnitude bands (a coarse deterministic
     spectrogram) — the audio analog of the image path's 8x8 luma grid,
     so the same downstream feature plumbing applies to both
-    modalities. Shared by the WAV and FLAC branches."""
+    modalities."""
     n = len(samples)
     grid = np.zeros((8, 8), dtype=np.float64)
     edges = np.linspace(0, n, 9).astype(int)
@@ -783,22 +781,23 @@ def _decode_image_status(
     100-TB pass; see FEATURE_SCHEMA for the status enum).
 
     Decode ladder:
-      1. Pillow (any format it knows) when importable;
-      2. the pure-stdlib PNG codec above (real decode, no dependency);
-      3. the deterministic content-derived fake when allowed, else a
-         NULL feature with status corrupt/unsupported."""
+      1. WAV audio via the spectrogram grid (before PIL, which has no
+         audio path);
+      2. Pillow (any format it knows) when importable;
+      3. the pure-stdlib PNG, BMP, GIF and lossless-WebP decoders in
+         this module and amp.vp8l (real decode, no dependency);
+      4. any other payload (JPEG and FLAC included, which are sniffed
+         but have no stdlib decoder) gets the deterministic
+         content-derived fake when allowed, else a NULL feature with
+         status unsupported. A failing real decoder yields the fake,
+         or corrupt/unsupported."""
     raw = payload or b""
     fmt = sniff_format(raw)
-    if fmt in ("wav", "flac"):
+    if fmt == "wav":
         # audio rides the same status ladder: a coarse 8x8 spectrogram
         # grid (_audio_grid) is the modality's analog of the luma
-        # grid. Checked before PIL — Pillow has no audio path. The
-        # FLAC decode is MD5-verified inside the format itself.
+        # grid. Checked before PIL — Pillow has no audio path.
         try:
-            if fmt == "flac":
-                from . import flac as _flac
-
-                return _audio_grid(_flac.decode(raw)[0]), "real", fmt
             return wav_feature_grid(raw), "real", fmt
         except Exception as e:
             if allow_fake:
@@ -823,21 +822,6 @@ def _decode_image_status(
             if allow_fake:
                 return _fake_grid(raw), "fake", fmt
             return None, "corrupt", fmt
-    if fmt == "jpeg":
-        # pure-Python baseline + progressive decoder (amp.jpeg, ITU
-        # T.81 incl. Annex G): real decode for the dominant real-world
-        # format without Pillow. Arithmetic-coded / hierarchical files
-        # raise ValueError("unsupported ...") and are counted as
-        # unsupported, torn/garbled ones as corrupt.
-        from . import jpeg as _jpeg
-
-        try:
-            return _resize8(_jpeg.decode_gray(raw)), "real", fmt
-        except Exception as e:
-            if allow_fake:
-                return _fake_grid(raw), "fake", fmt
-            status = "unsupported" if "unsupported" in str(e) else "corrupt"
-            return None, status, fmt
     if fmt in ("bmp", "gif", "webp"):
         # DIB incl. RLE / first-frame GIF / lossless VP8L; anything
         # the decoder calls "unsupported" (BMP bitfields, lossy VP8,

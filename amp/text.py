@@ -73,27 +73,32 @@ def _quality_counts(docs: DataFrame) -> DataFrame:
     Python kernel tokenizes once and counts everything; only the
     COUNTS cross the boundary — every ratio and the score stay the
     exact Spark SQL expressions below, so the emitted doubles are
-    bit-identical. Count semantics are engine-portable on this
-    corpus contract (ASCII text, the same contract the oracle's
-    lower()/regex comparison already pins): `[^a-zA-Z0-9\\s]`,
-    `[0-9]` and the tokenizer split behave identically in Java, RE2
-    and Python `re` on ASCII, and len(text) == length(text) ==
-    F.length without astral-plane characters."""
+    bit-identical. The spec is the DuckDB oracle: NULL text yields NULL
+    counts (as length(NULL) and regexp_extract_all(NULL) do there),
+    and the punct class spells out RE2's `\\s` as `[\\t\\n\\f\\r ]`,
+    because Python's `\\s` also matches `\\x0b`, `\\x1c`-`\\x1f`,
+    `\\x85` and `\\xa0` (and Java's matches `\\x0b`). `[0-9]` and the
+    tokenizer split behave identically in RE2 and Python `re` on
+    ASCII, and len(text) == length(text) == F.length without
+    astral-plane characters."""
     import re
     from collections.abc import Iterator
 
     import pandas as pd
 
     split = re.compile(TOKEN_SPLIT_RE).split
-    punct = re.compile("[^a-zA-Z0-9\\s]")
+    punct = re.compile("[^a-zA-Z0-9 \\t\\n\\f\\r]")
     digit = re.compile("[0-9]")
     markers = set(LANG_MARKERS["en"])
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             n_chars, n_tokens, n_punct, n_digit, stop = [], [], [], [], []
-            for text in pdf["text"]:
-                t = text or ""
+            for t in pdf["text"]:
+                if t is None:
+                    for col in (n_chars, n_tokens, n_punct, n_digit, stop):
+                        col.append(None)
+                    continue
                 toks = [x for x in split(t.lower()) if x]
                 n_chars.append(len(t))
                 n_tokens.append(len(toks))
@@ -103,11 +108,11 @@ def _quality_counts(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "n_chars_i": pd.array(n_chars, dtype="int64"),
-                    "n_tokens_i": pd.array(n_tokens, dtype="int64"),
-                    "n_punct_i": pd.array(n_punct, dtype="int64"),
-                    "n_digit_i": pd.array(n_digit, dtype="int64"),
-                    "stop_hits_i": pd.array(stop, dtype="int64"),
+                    "n_chars_i": pd.array(n_chars, dtype="Int64"),
+                    "n_tokens_i": pd.array(n_tokens, dtype="Int64"),
+                    "n_punct_i": pd.array(n_punct, dtype="Int64"),
+                    "n_digit_i": pd.array(n_digit, dtype="Int64"),
+                    "stop_hits_i": pd.array(stop, dtype="Int64"),
                 }
             )
 

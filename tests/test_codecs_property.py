@@ -6,9 +6,6 @@ shrinking) over the invariants that must hold for EVERY input:
 
 - VP8L encode/decode is LOSSLESS bit-identical RGBA under any option
   combination;
-- progressive JPEG decode is BIT-IDENTICAL to sequential decode of
-  the same image (successive approximation reassembles the exact
-  coefficients under unit quantization);
 - WAV survives every sample format within its quantization tolerance;
 - GIF LZW + frame compositing reproduce planted frames exactly.
 """
@@ -19,7 +16,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from amp import jpeg, vp8l
+from amp import vp8l
 from amp.multimodal import wav_decode, wav_encode
 
 _rng_img = st.integers(min_value=0, max_value=2**32 - 1)
@@ -60,26 +57,6 @@ def test_vp8l_palette_lossless(seed, h, w, n_colors):
     img = colors[idx]
     data = vp8l.encode_lossless(img, palette=True, lz77=False)
     assert np.array_equal(vp8l.decode_rgba(data), img)
-
-
-@settings(max_examples=30, deadline=None)
-@given(seed=_rng_img, h=st.integers(1, 40), w=st.integers(1, 40),
-       dri=st.integers(0, 4))
-def test_jpeg_progressive_bit_identical(seed, h, w, dri):
-    img = _image(seed, h, w, 1)[:, :, 0]
-    base = jpeg.decode_gray(jpeg.encode_gray(img))
-    prog = jpeg.decode_gray(
-        jpeg.encode_gray_progressive(img, restart_interval=dri))
-    assert np.array_equal(base, prog)
-
-
-@settings(max_examples=15, deadline=None)
-@given(seed=_rng_img, h=st.integers(1, 24), w=st.integers(1, 24))
-def test_jpeg_progressive_color_bit_identical(seed, h, w):
-    rgb = _image(seed, h, w, 3)
-    base = jpeg.decode_gray(jpeg.encode_rgb420(rgb))
-    prog = jpeg.decode_gray(jpeg.encode_rgb420_progressive(rgb))
-    assert np.array_equal(base, prog)
 
 
 @settings(max_examples=40, deadline=None)

@@ -226,6 +226,15 @@ def test_mixture_sample_waterfilling(spark, docs):
         for r in curate.mixture_sample(docs.repartition(9), {"web": 0.75, "repo": 0.25}).collect()
     )
     assert a == c
+    # input columns named like the threshold table's pass through intact
+    clash = docs.withColumn("_f", F.col("doc_id") * 0.5).withColumn(
+        "_thresh", F.lit("mine")
+    )
+    kept = curate.mixture_sample(clash, {"web": 0.75, "repo": 0.25})
+    assert set(kept.columns) == set(clash.columns)
+    rows = kept.collect()
+    assert sorted(r["doc_id"] for r in rows) == a
+    assert all(r["_f"] == r["doc_id"] * 0.5 and r["_thresh"] == "mine" for r in rows)
     # unknown sources dropped; bad weights rejected
     only_web = curate.mixture_sample(docs, {"web": 1.0})
     assert only_web.where(F.col("source") == "repo").count() == 0

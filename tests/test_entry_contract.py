@@ -5,13 +5,16 @@ at sf0.01)."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as E
 from scripts.check_oracles import TABLES, value_hash
@@ -65,3 +68,32 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert df.columns == ["cluster_size", "n_clusters"]
+
+
+MEDIA_MODULES = {"multimodal", "vp8l", "jpeg", "flac"}
+
+
+def test_media_stack_unreachable_from_engine():
+    """No engine module imports the media codecs, not even lazily inside
+    a function: the rest of the stack can be deleted without touching a
+    query, the pipeline, serve, streaming or incremental."""
+    paths = [os.path.join(ROOT, "__spark_entry__.py")] + [
+        p
+        for p in sorted(glob.glob(os.path.join(ROOT, "amp", "*.py")))
+        if os.path.basename(p)[:-3] not in {"multimodal", "vp8l"}
+    ]
+    hits = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom):
+                names = [node.module or ""] + [a.name for a in node.names]
+            else:
+                continue
+            if any(set(n.split(".")) & MEDIA_MODULES for n in names):
+                hits.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert len(paths) > 20
+    assert not hits, hits

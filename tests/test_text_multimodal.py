@@ -66,8 +66,9 @@ def test_multimodal_feature_shapes(spark):
 def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
     """Format policy as DATA (magic-byte sniff + per-row decode_status +
     counted metrics) over a mixed PNG / corrupt-PNG / JPEG-stub /
-    garbage corpus with fakes DISALLOWED: nothing raises, statuses and
-    feature nullability are exact, and decode_metrics counts match."""
+    FLAC-stub / WebP / garbage corpus with fakes DISALLOWED: nothing
+    raises, statuses and feature nullability are exact, and
+    decode_metrics counts match."""
     import numpy as np
 
     from amp import multimodal as mm
@@ -76,12 +77,6 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
     good_png = mm.png_encode(
         np.arange(64, dtype=np.uint8).reshape(8, 8), filter_type=2
     )
-    from amp import jpeg as amp_jpeg
-
-    jpeg_img = (np.arange(300, dtype=np.uint16).reshape(15, 20) % 256
-                ).astype(np.uint8)
-    good_jpeg = amp_jpeg.encode_gray(jpeg_img)
-    prog_jpeg = amp_jpeg.encode_gray_progressive(jpeg_img)
     import struct as _struct
 
     from amp import vp8l as amp_vp8l
@@ -97,8 +92,7 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
         ("ok1", mm.png_encode(np.zeros((4, 4), np.uint8))),
         ("corrupt0", good_png[: len(good_png) // 2]),      # torn PNG
         ("jpeg0", b"\xff\xd8\xff\xe0" + b"\x00" * 32),     # torn JPEG
-        ("jpeg1", good_jpeg),                              # real baseline JPEG
-        ("jpeg2", prog_jpeg),                              # real progressive JPEG
+        ("flac0", b"fLaC" + b"\x00" * 32),                # FLAC stub
         ("webp0", lossy_webp),                             # lossy VP8: unsupported
         ("webp1", good_webp),                              # real lossless VP8L
         ("junk0", b"not an image at all"),
@@ -120,16 +114,14 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
         assert feats["ok1"]["decode_status"] == "real"
         assert feats["corrupt0"]["decode_status"] == "corrupt"
         assert feats["corrupt0"]["feature"] is None
-        # baseline JPEG now REALLY decodes via amp.jpeg (no Pillow);
-        # the torn stub is corrupt-as-data, not a crash
-        assert feats["jpeg0"]["decode_status"] == "corrupt"
+        # JPEG and FLAC are sniffed but have no stdlib decoder: the
+        # ladder's tail counts them unsupported-as-data, not a crash
+        assert feats["jpeg0"]["decode_status"] == "unsupported"
         assert feats["jpeg0"]["fmt"] == "jpeg"
-        assert feats["jpeg1"]["decode_status"] == "real"
-        assert feats["jpeg1"]["feature"] is not None
-        # progressive JPEG decodes for real too (T.81 Annex G), and
-        # the two encodings of the same image yield the same grid
-        assert feats["jpeg2"]["decode_status"] == "real"
-        assert feats["jpeg2"]["feature"] == feats["jpeg1"]["feature"]
+        assert feats["jpeg0"]["feature"] is None
+        assert feats["flac0"]["decode_status"] == "unsupported"
+        assert feats["flac0"]["fmt"] == "flac"
+        assert feats["flac0"]["feature"] is None
         # lossless WebP decodes for real (amp.vp8l); lossy VP8 is
         # unsupported-as-data
         assert feats["webp0"]["fmt"] == "webp"
@@ -143,7 +135,8 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
             for r in mm.decode_metrics(mm.extract_features(media)).collect()
         }
         assert m[("real", "png")] == 2 and m[("corrupt", "png")] == 1
-        assert m[("real", "jpeg")] == 2 and m[("corrupt", "jpeg")] == 1
+        assert m[("unsupported", "jpeg")] == 1
+        assert m[("unsupported", "flac")] == 1
         assert m[("unsupported", "webp")] == 1
         assert m[("real", "webp")] == 1
         assert m[("unsupported", "unknown")] == 1
@@ -487,6 +480,38 @@ def test_repetition_metrics_crafted_and_duckdb_parity(spark):
         o = oracle[did]
         assert (r["n_lines"], r["dup_line_frac"], r["top_2gram_frac"],
                 r["dup_5gram_frac"]) == (o[1], o[2], o[3], o[4]), did
+
+
+def test_quality_score_crafted_duckdb_parity(spark):
+    """quality_score vs the DuckDB text_quality oracle on crafted rows the
+    corpus never holds: NULL text (NULL counts, not zeros) and the
+    characters Python's `\\s` calls whitespace but RE2's does not."""
+    import duckdb
+    import pandas as pd
+
+    rows = [
+        (0, None),
+        (1, ""),
+        (2, "The cat sat on the mat, and the dog ran off."),
+        (3, "tab\x0bvertical"),
+        (4, "file\x1cseparator"),
+        (5, "next\x85line"),
+        (6, "no\xa0break space"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = {r["doc_id"]: r for r in text.quality_score(docs).collect()}
+
+    import __spark_entry__ as entry
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    oracle = {
+        int(r[0]): r[1:] for r in con.sql(entry.oracle_sql()["text_quality"]).fetchall()
+    }
+    assert set(got) == set(oracle) == {d for d, _ in rows}
+    for did, r in got.items():
+        assert (r["punct_ratio"], r["stop_ratio"], r["quality"]) == oracle[did], did
+    assert got[0]["punct_ratio"] is None and got[0]["stop_ratio"] is None
 
 
 def test_pii_scan_counts_and_redaction(spark):
