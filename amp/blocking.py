@@ -62,10 +62,15 @@ def minhash_blocks(sigs: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFram
     never strings (explicit-repartition-on-blocking-keys is the
     north_rule; int keys make that repartition cheap)."""
     r = cfg.minhash_rows_per_band
-    band_keys = []
-    for band in range(cfg.minhash_bands):
-        parts = [F.element_at("sig", band * r + i + 1) for i in range(r)]
-        band_keys.append(F.xxhash64(F.lit(band), *parts))
+    # one SQL expression, not ~14 Column calls per band: a query batch
+    # builds this plan per request, and each Column call is a driver
+    # round trip to the JVM
+    band_keys = ", ".join(
+        f"xxhash64({band}, "
+        + ", ".join(f"element_at(sig, {band * r + i + 1})" for i in range(r))
+        + ")"
+        for band in range(cfg.minhash_bands)
+    )
     # array_distinct makes the no-duplicate-(record_id, block_key)
     # invariant STRUCTURAL within the pass (band index is salted into
     # each key, so duplicates require a real xxhash64 collision — but
@@ -76,7 +81,7 @@ def minhash_blocks(sigs: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFram
     # and the post-collect distinct-size filter remains authoritative.
     return (
         sigs.select(
-            "record_id", F.array_distinct(F.array(*band_keys)).alias("keys")
+            "record_id", F.expr(f"array_distinct(array({band_keys}))").alias("keys")
         )
         .select("record_id", F.explode("keys").alias("block_key"))
         .withColumn("pass_name", F.lit("minhash"))

@@ -8,15 +8,32 @@ pkg/api/handler.go:104-163):
   * dedup         (POST /api/v1/duplicates)       -> the self-match in
     amp.pipeline.run_pipeline (run 0 vs itself + transitive clusters)
 
-match_records() is the Spark form: the query side is blocked against
-the index side ONLY (no index-index pairs — the reference gets this
-from `candidates.run_id = 0 AND input.run_id = $1`), scored with the
-same one-pass features, then ranked/top-k per query record
-(match.sql:66, matcher.go:221-228).
+An index version (MatchIndex) holds everything about run 0 that a
+request would otherwise recompute — the analog of the reference's
+offline run-0 bootstrap, which fills its feature tables and the
+customer_keys blocking keys once (cmd/addressmatchpro/main.go:92-173,
+init_db.sql:78-85):
+  * ``records`` — the normalized rows, and ``n_records``, their count;
+  * ``sides``   — one-pass feature rows, one per distinct content;
+  * ``blocks``  — the pinned (right_id, block_key) table:
+    blocking.all_blocks over the side rows;
+  * ``idf`` and ``idf_b`` — the frozen IDF dictionary and ONE Broadcast
+    handle of it, shared by every request and write of the version.
+build_index and MatchIndex.load create all of it. append_records and
+remove_records derive the next version incrementally: they featurize
+and block only the side rows they add, anti-join only the side ids
+they drop, and reuse the IDF handle under ``frozen`` (a new one under
+``refresh``).
 
-The index side's features are precomputed once (index_features) and
-reused across query batches — the analog of the reference's offline
-run-0 bootstrap (cmd/addressmatchpro/main.go:92-173).
+A request (match_records) owns only its own rows: the query batch is
+normalized and featurized in one Python pass and pinned, its block keys
+meet the pinned index blocks in a broadcast join (the candidate pairs,
+pinned), and the scorer reads the query sides plus the index side rows
+those pairs name — no index-side table is rebuilt or shuffled per
+request. The query side is blocked against the index side ONLY (no
+index-index pairs — the reference gets this from `candidates.run_id = 0
+AND input.run_id = $1`), then ranked/top-k per query record
+(match.sql:66, matcher.go:221-228).
 """
 
 from __future__ import annotations
@@ -24,7 +41,9 @@ from __future__ import annotations
 import dataclasses
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,11 +70,21 @@ class MatchIndex:
         idf: dict[int, float],
         cfg: AmpConfig,
         uses_provided_embeddings: bool = False,
+        *,
+        blocks: DataFrame,
+        idf_b: Broadcast,
+        n_records: int,
     ):
         self.records = records
         self.sides = sides
         self.idf = idf
         self.cfg = cfg
+        # pinned (right_id, block_key) rows of every side row
+        self.blocks = blocks
+        # the broadcast of ``idf``; a retired version's handle is
+        # unpersisted, never destroyed (in-flight requests may read it)
+        self.idf_b = idf_b
+        self.n_records = n_records
         # when True, every query batch must bring vectors of the same
         # model/dim (match_records query_embeddings=...) — pair scoring
         # dots left x right vectors and mixed dims would score garbage
@@ -102,7 +131,7 @@ class MatchIndex:
         ck = CheckpointManager(spark, root, run_id=0)
         records = ck.read("index_records")
         # checkpointed tables come back with the run_id partition column;
-        # sides must match the query batch's schema for the union
+        # sides keep the side-table schema (writes union new rows on)
         sides = ck.read("index_sides").drop("run_id")
         if meta.get("idf_empty"):
             idf: dict[int, float] = {}
@@ -112,7 +141,19 @@ class MatchIndex:
         return cls(
             records, sides, idf, cfg,
             uses_provided_embeddings=meta.get("uses_provided_embeddings", False),
+            blocks=_block_table(sides, cfg).localCheckpoint(eager=True),
+            idf_b=spark.sparkContext.broadcast(idf),
+            n_records=records.count(),
         )
+
+
+def _block_table(sides: DataFrame, cfg: AmpConfig) -> DataFrame:
+    """(right_id, block_key) rows of side rows: their MinHash band keys
+    and (lang, stem) key. Only side rows are blocked — a non-representative
+    record never scores (the scorer inner-joins side rows)."""
+    return blocking.all_blocks(sides, sides, cfg).select(
+        F.col("record_id").alias("right_id"), "block_key"
+    )
 
 
 def build_index(
@@ -126,17 +167,112 @@ def build_index(
     same front half run_pipeline runs (pipeline.prepare). The IDF
     dictionary is frozen here and reused for query batches —
     same semantics as the reference, which computes IDF over run 0 only
-    (make_tf_idf.go:75-168) and weighs query tokens with it.
+    (make_tf_idf.go:75-168) and weighs query tokens with it. The
+    version's block table and IDF broadcast are built here too.
     ``embeddings`` ingests precomputed semantic vectors
     (scoring.attach_embeddings). ``idf_override`` skips the IDF
     computation and featurizes with the given dictionary — the
     fresh-build equivalence point for append_records' frozen-IDF policy
     (and the bring-your-own-IDF hook for cross-corpus scoring)."""
-    records, _, idf, sides, _, _ = prepare(
+    records, _, idf, sides, n_rows, _ = prepare(
         files, cfg, run_id=0, embeddings=embeddings, idf=idf_override
     )
     return MatchIndex(
-        records, sides, idf, cfg, uses_provided_embeddings=embeddings is not None
+        records, sides, idf, cfg, uses_provided_embeddings=embeddings is not None,
+        blocks=_block_table(sides, cfg).localCheckpoint(eager=True),
+        idf_b=files.sparkSession.sparkContext.broadcast(idf),
+        n_records=n_rows,
+    )
+
+
+def _probe_and_reps(records: DataFrame) -> tuple[int, int, DataFrame]:
+    """(n_rows, n_distinct_ids, pinned representatives) of pinned
+    ``records``. The probe and the representatives pin are independent
+    jobs over one immutable table, so they run side by side, as in
+    pipeline.prepare."""
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_probe = pool.submit(normalize.uniqueness_stats, records, False)
+        reps = normalize.representatives(records).localCheckpoint(eager=True)
+        n_rows, n_ids, _ = f_probe.result()
+    return n_rows, n_ids, reps
+
+
+def _next_version(
+    index: MatchIndex,
+    records: DataFrame,
+    reps: DataFrame,
+    new_reps: DataFrame,
+    dropped: DataFrame,
+    n_rows: int,
+    policy: str,
+    vecs: DataFrame | None,
+) -> MatchIndex:
+    """The index version over ``records`` and their ``reps`` (both
+    pinned), derived from ``index`` by the write's own rows:
+      * ``new_reps`` — the representatives with no side row yet (new
+        contents, and contents whose representative changed);
+      * ``dropped`` (record_id) — ids covering every side row that lost
+        its place, and no representative; extra ids that hold no side
+        row leave the anti-joins unchanged.
+    Both are write-sized, so they broadcast and the index tables stream
+    past them. Side rows of representatives that stay are kept
+    (``frozen``) or re-featurized with a fresh IDF (``refresh``); only
+    the side rows added are blocked. ``vecs`` (record_id, embedding)
+    covers every representative featurized here, for indexes holding
+    provided embeddings."""
+    cfg = index.cfg
+    f_sides = None
+    # independent pins run side by side: the dropped ids beside the
+    # feature pass, then the side table beside the block table
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_dropped = pool.submit(dropped.localCheckpoint, True)
+        if policy == "refresh":
+            idf = features.idf_map(reps, reps.count(), cfg)
+            idf_b = reps.sparkSession.sparkContext.broadcast(idf)
+            sides = scoring.side_features_onepass(reps, idf_b, cfg)
+            if vecs is not None:
+                sides = scoring.attach_embeddings(
+                    sides, vecs, expected_ids=reps.select("record_id")
+                )
+            sides = sides.localCheckpoint(eager=True)
+            added = sides.join(
+                F.broadcast(new_reps.select("record_id")), "record_id", "leftsemi"
+            )
+        else:
+            idf, idf_b = index.idf, index.idf_b
+            added = scoring.side_features_onepass(new_reps, idf_b, cfg)
+            if vecs is not None:
+                added = scoring.attach_embeddings(
+                    added, vecs, expected_ids=new_reps.select("record_id")
+                )
+            added = added.localCheckpoint(eager=True)
+        dropped = f_dropped.result()
+        if policy == "frozen":
+            f_sides = pool.submit(
+                index.sides.join(F.broadcast(dropped), "record_id", "left_anti")
+                .select(*added.columns)
+                .unionByName(added)
+                .coalesce(index.sides.rdd.getNumPartitions())
+                .localCheckpoint,
+                True,
+            )
+        # block keys come from sig, lang and stem, never from the IDF, so
+        # a kept side row keeps its keys under both policies
+        blocks = (
+            index.blocks.join(
+                F.broadcast(dropped.withColumnRenamed("record_id", "right_id")),
+                "right_id", "left_anti",
+            )
+            .unionByName(_block_table(added, cfg))
+            .coalesce(index.blocks.rdd.getNumPartitions())
+            .localCheckpoint(eager=True)
+        )
+        if f_sides is not None:
+            sides = f_sides.result()
+    return MatchIndex(
+        records, sides, idf, cfg,
+        uses_provided_embeddings=index.uses_provided_embeddings,
+        blocks=blocks, idf_b=idf_b, n_records=n_rows,
     )
 
 
@@ -182,8 +318,12 @@ def append_records(
     new_records = normalize.normalize(files, cfg, run_id=0).localCheckpoint(
         eager=True
     )
-    records = index.records.select(*new_records.columns).unionByName(new_records)
-    n_rows, n_ids, n_contents = normalize.uniqueness_stats(records)
+    records = (
+        index.records.select(*new_records.columns)
+        .unionByName(new_records)
+        .localCheckpoint(eager=True)
+    )
+    n_rows, n_ids, reps = _probe_and_reps(records)
     if n_ids != n_rows:
         # appending a record_id that already exists is an upsert, which
         # this path does not implement — fail loudly (the reference's
@@ -193,43 +333,27 @@ def append_records(
             "with existing ones — append is insert-only; rebuild the index "
             "for upserts"
         )
-    records = records.localCheckpoint(eager=True)
-    reps = normalize.representatives(records).localCheckpoint(eager=True)
-
-    if policy == "refresh":
-        idf = features.idf_map(reps, n_contents, cfg)
-        sides = scoring.side_features_onepass(reps, idf, cfg)
-        if index.uses_provided_embeddings:
-            old_vecs = index.sides.select("record_id", "embedding")
-            all_vecs = old_vecs.unionByName(
-                embeddings.select(
-                    F.col(embeddings.columns[0]).alias("record_id"),
-                    F.col(embeddings.columns[1]).alias("embedding"),
-                )
-            )
-            sides = scoring.attach_embeddings(
-                sides, all_vecs, expected_ids=reps.select("record_id")
-            )
-    else:
-        idf = index.idf
-        # featurize ONLY representatives not already in the side table
-        # (new contents, plus existing contents whose rep swapped to an
-        # appended lower id); keep the still-valid old rows
-        old_ids = index.sides.select("record_id")
-        new_reps = reps.join(old_ids, "record_id", "left_anti")
-        add_sides = scoring.side_features_onepass(new_reps, idf, cfg)
-        if index.uses_provided_embeddings:
-            add_sides = scoring.attach_embeddings(
-                add_sides, embeddings, expected_ids=new_reps.select("record_id")
-            )
-        keep_old = index.sides.join(
-            reps.select("record_id"), "record_id", "leftsemi"
+    # append is insert-only, so every new representative is an appended
+    # record, and every old record sharing its content lost its place
+    # (the former representative among them holds the side row)
+    new_reps = reps.join(
+        F.broadcast(new_records.select("record_id")), "record_id", "leftsemi"
+    )
+    dropped = (
+        index.records.select("record_id", "content_sha")
+        .join(F.broadcast(new_reps.select("content_sha")), "content_sha", "leftsemi")
+        .select("record_id")
+    )
+    vecs = None
+    if index.uses_provided_embeddings:
+        vecs = embeddings.select(
+            F.col(embeddings.columns[0]).alias("record_id"),
+            F.col(embeddings.columns[1]).alias("embedding"),
         )
-        sides = keep_old.select(*add_sides.columns).unionByName(add_sides)
-    sides = sides.localCheckpoint(eager=True)
-    return MatchIndex(
-        records, sides, idf, cfg,
-        uses_provided_embeddings=index.uses_provided_embeddings,
+        if policy == "refresh":
+            vecs = index.sides.select("record_id", "embedding").unionByName(vecs)
+    return _next_version(
+        index, records, reps, new_reps, dropped, n_rows, policy, vecs
     )
 
 
@@ -278,61 +402,50 @@ def remove_records(
         ids_df = spark.createDataFrame([(i,) for i in ids],
                                        "record_id string")
     ids_df = ids_df.dropDuplicates(["record_id"]).localCheckpoint(eager=True)
-    n_req = ids_df.count()
-    n_hit = ids_df.join(
-        index.records.select("record_id"), "record_id", "leftsemi"
-    ).count()
+    # the removal is write-sized, so its ids broadcast and the index
+    # tables stream past them, never shuffled. Requested and present ids
+    # in one aggregation (index record_ids are unique: each requested id
+    # hits at most once).
+    gone = F.broadcast(ids_df)
+    hits = index.records.select("record_id").join(gone, "record_id", "leftsemi")
+    counts = (
+        ids_df.select(F.lit(1).alias("req"), F.lit(0).alias("hit"))
+        .unionByName(hits.select(F.lit(0).alias("req"), F.lit(1).alias("hit")))
+        .agg(F.sum("req").alias("n_req"), F.sum("hit").alias("n_hit"))
+        .first()
+    )
+    n_req, n_hit = int(counts["n_req"] or 0), int(counts["n_hit"] or 0)
     if n_hit != n_req:
         raise ValueError(
             f"remove_records: {n_req - n_hit} of {n_req} ids are not in "
             "the index — removal is exact, not best-effort"
         )
-    records = index.records.join(
-        ids_df, "record_id", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_rows, _, n_contents = normalize.uniqueness_stats(records)
+    records = index.records.join(gone, "record_id", "left_anti").localCheckpoint(
+        eager=True
+    )
+    n_rows, _, reps = _probe_and_reps(records)
     if n_rows == 0:
         raise ValueError(
             "remove_records: removal would empty the index — rebuild "
             "instead of shrinking to nothing"
         )
-    reps = normalize.representatives(records).localCheckpoint(eager=True)
 
-    old_vecs = (index.sides.select("record_id", "embedding")
-                if index.uses_provided_embeddings else None)
-    if embeddings is not None and old_vecs is not None:
-        old_vecs = old_vecs.unionByName(
+    vecs = (index.sides.select("record_id", "embedding")
+            if index.uses_provided_embeddings else None)
+    if embeddings is not None and vecs is not None:
+        vecs = vecs.unionByName(
             embeddings.select(
                 F.col(embeddings.columns[0]).cast("string").alias("record_id"),
                 F.col(embeddings.columns[1]).alias("embedding"),
             )
         ).dropDuplicates(["record_id"])
-
-    if policy == "refresh":
-        idf = features.idf_map(reps, n_contents, cfg)
-        sides = scoring.side_features_onepass(reps, idf, cfg)
-        if index.uses_provided_embeddings:
-            sides = scoring.attach_embeddings(
-                sides, old_vecs, expected_ids=reps.select("record_id")
-            )
-    else:
-        idf = index.idf
-        old_ids = index.sides.select("record_id")
-        # reps promoted by the removal (their content's old winner died)
-        new_reps = reps.join(old_ids, "record_id", "left_anti")
-        add_sides = scoring.side_features_onepass(new_reps, idf, cfg)
-        if index.uses_provided_embeddings:
-            add_sides = scoring.attach_embeddings(
-                add_sides, old_vecs, expected_ids=new_reps.select("record_id")
-            )
-        keep_old = index.sides.join(
-            reps.select("record_id"), "record_id", "leftsemi"
-        )
-        sides = keep_old.select(*add_sides.columns).unionByName(add_sides)
-    sides = sides.localCheckpoint(eager=True)
-    return MatchIndex(
-        records, sides, idf, cfg,
-        uses_provided_embeddings=index.uses_provided_embeddings,
+    # representatives promoted because their content's winner was
+    # removed. A removed id is nobody's representative any more, and
+    # removal never dethrones a surviving representative, so the removed
+    # ids cover exactly the side rows to drop.
+    new_reps = reps.join(index.sides.select("record_id"), "record_id", "left_anti")
+    return _next_version(
+        index, records, reps, new_reps, ids_df, n_rows, policy, vecs
     )
 
 
@@ -349,6 +462,19 @@ def match_records(
     (query_id, candidate_id, <similarity features>, score, rank),
     top_n per query record (matcher.go:221-228 — distributed per-input
     form; see rank.global_top_n for exact single-request parity).
+
+    Precomputed per index version and only read here: the side rows,
+    the pinned block table and the IDF broadcast. Request-scoped:
+      1. the query sides — normalize and side kernels in ONE Python pass
+         over the batch (plus provided ``query_embeddings``), pinned;
+      2. the candidate pairs — the query's block keys broadcast-joined
+         against the pinned index blocks (the index blocks stream
+         map-side, never shuffled), deduplicated and pinned;
+      3. the scorer — query sides on the left, on the right only the
+         index side rows the pairs name. Up to
+         ``cfg.broadcast_sides_max_records`` pairs, both broadcast and
+         the index side table is never shuffled; a larger batch keeps
+         the shuffled joins.
     """
     cfg = index.cfg
     if index.uses_provided_embeddings and query_embeddings is None:
@@ -363,35 +489,37 @@ def match_records(
             "hashing-trick vectors — rebuild the index with "
             "build_index(embeddings=...) so both sides share a model/dim"
         )
-    q_records = normalize.normalize(query_files, cfg, run_id=run_id).localCheckpoint(
-        eager=True
-    )
-    q_sides = scoring.side_features_onepass(q_records, index.idf, cfg)
+    q_sides = scoring.query_side_features(query_files, index.idf_b, cfg, run_id)
     if query_embeddings is not None:
         q_sides = scoring.attach_embeddings(
-            q_sides, query_embeddings, expected_ids=q_records.select("record_id")
+            q_sides, query_embeddings,
+            expected_ids=query_files.select(
+                normalize.record_id_expr().alias("record_id")
+            ),
         )
+    q_sides = q_sides.localCheckpoint(eager=True)
 
     # blocking: query side vs index side ONLY (match.sql:30-31 semantics)
-    q_blocks = blocking.all_blocks(q_records, q_sides, cfg).select(
+    q_blocks = blocking.all_blocks(q_sides, q_sides, cfg).select(
         F.col("record_id").alias("left_id"), "block_key"
     )
-    i_blocks = blocking.all_blocks(index.records, index.sides, cfg).select(
-        F.col("record_id").alias("right_id"), "block_key"
-    )
-    # the query side is request-scoped by definition (single record or
-    # an HTTP batch) — broadcast it so the INDEX blocks table (records
-    # x ~9 keys, the big side at scale) streams map-side and never
-    # shuffles per request
     pairs = (
-        i_blocks.join(F.broadcast(q_blocks), "block_key")
-        .select("left_id", "right_id")
+        index.blocks.join(F.broadcast(q_blocks), "block_key")
         .where(F.col("left_id") != F.col("right_id"))
+        .select("left_id", "right_id")
         .dropDuplicates(["left_id", "right_id"])
+        .localCheckpoint(eager=True)
     )
-
-    both_sides = q_sides.unionByName(index.sides)
-    scored = scoring.score_pairs_onepass(pairs, both_sides, cfg)
+    # one task over the pinned pairs: a single partition needs no
+    # exchange before the count aggregate
+    n_pairs = pairs.coalesce(1).count()
+    cand_ids = pairs.select(F.col("right_id").alias("record_id"))
+    if n_pairs <= cfg.broadcast_sides_max_records:
+        cand_ids = F.broadcast(cand_ids)
+    candidates = index.sides.join(cand_ids, "record_id", "leftsemi")
+    scored = scoring.score_pairs_onepass(
+        pairs, q_sides, cfg, n_records=n_pairs, right_sides=candidates
+    )
     k = top_n if top_n is not None else cfg.top_k
     return (
         rank.rank_candidates(rank.top_k(scored, k=k, cfg=cfg))

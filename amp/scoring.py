@@ -18,13 +18,16 @@ Two Arrow-batched passes do all the Python work:
 side_features_onepass builds every per-record feature (signature,
 embedding, packed tf-idf vector) once, and score_pairs_onepass joins
 both sides onto each candidate pair and computes every similarity plus
-the weighted composite in one numpy kernel per batch.
+the weighted composite in one numpy kernel per batch. A query batch
+takes query_side_features instead, which runs the normalize kernel and
+the same side kernel in one pass over the raw files.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark import Broadcast
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import AmpConfig, DEFAULT_CONFIG
@@ -279,19 +282,12 @@ def tfblob_dots_batch(l_col, r_col):
     return dots, coss
 
 
-def side_features_onepass(
-    reps: DataFrame, idf: dict[int, float], cfg: AmpConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """ALL per-record scoring features in ONE Arrow-batched pass:
-    MinHash signature, hashing-trick embedding, and the tf-idf sparse
-    vector (token hashes sorted + weights + L2 norm) weighted by the
-    broadcast IDF dict. Every feature comes out of the same pass, so
-    the pair scorer needs exactly two record-sized equi-joins.
-
-    This is the Spark shape of the reference's per-record feature
-    tables (customer_keys / customer_tokens / customer_vector_embedding,
-    init_db.sql:78-115) — except materialized in one pass instead of
-    three Postgres round-trips."""
+def _side_kernel(idf_b: Broadcast, cfg: AmpConfig):
+    """The per-record feature kernel over Arrow batches carrying
+    (record_id, stem, lang, norm_text): one output row per input row in
+    SIDE_SCHEMA. Shared by side_features_onepass (a records or reps
+    table) and query_side_features (raw files, normalized in the same
+    pass)."""
     import zlib
     from collections import Counter
     from collections.abc import Iterator
@@ -305,7 +301,6 @@ def side_features_onepass(
     b_arr = np.array(b, dtype=np.int64)[:, None]
     k = cfg.shingle_k
     dim = cfg.emb_dim
-    idf_b = reps.sparkSession.sparkContext.broadcast(idf)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         idf_local = idf_b.value
@@ -386,9 +381,55 @@ def side_features_onepass(
                 }
             )
 
+    return fn
+
+
+def _idf_handle(spark: SparkSession, idf: dict[int, float] | Broadcast) -> Broadcast:
+    return idf if isinstance(idf, Broadcast) else spark.sparkContext.broadcast(idf)
+
+
+def side_features_onepass(
+    reps: DataFrame,
+    idf: dict[int, float] | Broadcast,
+    cfg: AmpConfig = DEFAULT_CONFIG,
+) -> DataFrame:
+    """ALL per-record scoring features in ONE Arrow-batched pass:
+    MinHash signature, hashing-trick embedding, and the tf-idf sparse
+    vector (token hashes sorted + weights + L2 norm) weighted by the
+    broadcast IDF dict. Every feature comes out of the same pass, so
+    the pair scorer needs exactly two record-sized equi-joins.
+
+    ``idf`` is the dictionary (broadcast here, once per call) or an
+    existing Broadcast handle of it — a MatchIndex holds one per index
+    version so its writes and requests never re-ship the dictionary.
+
+    This is the Spark shape of the reference's per-record feature
+    tables (customer_keys / customer_tokens / customer_vector_embedding,
+    init_db.sql:78-115) — except materialized in one pass instead of
+    three Postgres round-trips."""
+    fn = _side_kernel(_idf_handle(reps.sparkSession, idf), cfg)
     return reps.select("record_id", "stem", "lang", "norm_text").mapInPandas(
         fn, SIDE_SCHEMA
     )
+
+
+def query_side_features(
+    files: DataFrame,
+    idf: dict[int, float] | Broadcast,
+    cfg: AmpConfig = DEFAULT_CONFIG,
+    run_id: int = 1,
+) -> DataFrame:
+    """repo_files -> side features in ONE Python pass: every Arrow batch
+    goes through the normalize kernel and straight into the side kernel,
+    so a query batch pays one Python worker round trip, not two, and
+    never materializes its records table. Row for row equal to
+    ``side_features_onepass(normalize.normalize(files, cfg, run_id),
+    idf, cfg)`` (tested)."""
+    from .normalize import _normalize_batches
+
+    norm_fn = _normalize_batches(cfg, run_id)
+    side_fn = _side_kernel(_idf_handle(files.sparkSession, idf), cfg)
+    return files.mapInPandas(lambda batches: side_fn(norm_fn(batches)), SIDE_SCHEMA)
 
 
 def attach_embeddings(
@@ -599,6 +640,7 @@ def score_pairs_onepass(
     sides: DataFrame,
     cfg: AmpConfig = DEFAULT_CONFIG,
     n_records: int | None = None,
+    right_sides: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs -> scored pairs: two record-sized equi-joins to
     the one-pass feature table, then ONE Arrow-batched scorer computing
@@ -613,7 +655,12 @@ def score_pairs_onepass(
     and the wide pair+features intermediate then never shuffle (the
     intermediate is the single largest exchange in the pipeline: every
     pair row carries BOTH sides' ~300 B payloads). Above the gate the
-    joins stay shuffled-hash — the shape that survives 10^12 records."""
+    joins stay shuffled-hash — the shape that survives 10^12 records.
+
+    ``right_sides`` (default: ``sides``) is the table right_ids join
+    against, for callers whose two ends come from different tables —
+    match_records joins query ids to the query batch and candidate ids
+    to index rows only."""
     import numpy as np
 
     def fn(batches):
@@ -672,18 +719,15 @@ def score_pairs_onepass(
                 }
             )
 
-    lhs = sides.select(
-        F.col("record_id").alias("left_id"),
-        F.col("stem").alias("l_stem"), F.col("lang").alias("l_lang"),
-        F.col("sig").alias("l_sig"), F.col("embedding").alias("l_emb"),
-        F.col("tfblob").alias("l_tfblob"),
-    )
-    rhs = sides.select(
-        F.col("record_id").alias("right_id"),
-        F.col("stem").alias("r_stem"), F.col("lang").alias("r_lang"),
-        F.col("sig").alias("r_sig"), F.col("embedding").alias("r_emb"),
-        F.col("tfblob").alias("r_tfblob"),
-    )
+    def side(df: DataFrame, end: str, p: str) -> DataFrame:
+        # one selectExpr call: each Column call is a driver-JVM round trip
+        return df.selectExpr(
+            f"record_id AS {end}_id", f"stem AS {p}_stem", f"lang AS {p}_lang",
+            f"sig AS {p}_sig", f"embedding AS {p}_emb", f"tfblob AS {p}_tfblob",
+        )
+
+    lhs = side(sides, "left", "l")
+    rhs = side(sides if right_sides is None else right_sides, "right", "r")
     if n_records is not None and n_records <= cfg.broadcast_sides_max_records:
         lhs, rhs = F.broadcast(lhs), F.broadcast(rhs)
     joined = pairs.join(lhs, "left_id").join(rhs, "right_id")

@@ -17,8 +17,14 @@ shape as the reference's single binary). Request batches become run_id
 thin adapter; all matching semantics live in amp.incremental.
 
 Scale note: per-request Spark jobs on a shared session are fine for
-the reference's interactive shapes (single/batch match); bulk dedup is
-the offline pipeline (amp.pipeline), not a request.
+the reference's interactive shapes (single/batch match) because a
+request pays only for its own rows. Everything index-sized — side
+rows, the (record, block key) table, the IDF broadcast — is built once
+per index version (build, load, or an append/remove, which maintains it
+incrementally), and a match streams the pinned index tables into
+broadcast joins against the request's rows, never shuffling them. A
+single match is about ten small jobs whose cost is scheduling, not data.
+Bulk dedup is the offline pipeline (amp.pipeline), not a request.
 """
 
 from __future__ import annotations
@@ -143,15 +149,8 @@ class MatchService:
         files = self._records_df(records)
         with self._append_lock:
             new_index = append_records(self.index, files, policy=policy)
-            n_total = new_index.records.count()
-            with self._lock:
-                self.index = new_index
-                self.metrics["append_requests"] += 1
-                self.metrics["index_records"] = int(n_total)
-                old_dup, self._dup_df = self._dup_df, None
-            if old_dup is not None:
-                old_dup.unpersist()
-        return {"appended": len(records), "index_records": int(n_total)}
+            self._swap(new_index, "append_requests")
+        return {"appended": len(records), "index_records": new_index.n_records}
 
     def remove(self, record_ids: list[str], policy: str = "frozen") -> dict:
         """POST /api/v1/index/remove: drop records from the live index
@@ -174,16 +173,24 @@ class MatchService:
             )
         with self._append_lock:
             new_index = remove_records(self.index, record_ids, policy=policy)
-            n_total = new_index.records.count()
-            with self._lock:
-                self.index = new_index
-                self.metrics["remove_requests"] += 1
-                self.metrics["index_records"] = int(n_total)
-                old_dup, self._dup_df = self._dup_df, None
-            if old_dup is not None:
-                old_dup.unpersist()
+            self._swap(new_index, "remove_requests")
         return {"removed": len(set(record_ids)),
-                "index_records": int(n_total)}
+                "index_records": new_index.n_records}
+
+    def _swap(self, new_index: MatchIndex, counter: str) -> None:
+        """Install the next index version (caller holds ``_append_lock``)
+        and invalidate the pinned duplicates cache. A retired IDF
+        broadcast is unpersisted, never destroyed: in-flight requests on
+        the old version re-fetch it from the driver."""
+        with self._lock:
+            old_index, self.index = self.index, new_index
+            self.metrics[counter] += 1
+            self.metrics["index_records"] = new_index.n_records
+            old_dup, self._dup_df = self._dup_df, None
+        if old_dup is not None:
+            old_dup.unpersist()
+        if old_index.idf_b is not new_index.idf_b:
+            old_index.idf_b.unpersist()
 
     def duplicates(self, limit: int = 1000, refresh: bool = False) -> list[dict]:
         """POST /api/v1/duplicates: cluster the index's own records

@@ -273,6 +273,54 @@ def test_embeddings_unit_norm_and_deterministic(spark):
     assert all(x == 0 for x in rows["r3"])
 
 
+def test_query_side_features_equals_normalize_then_sides(spark, small_corpus):
+    """Two paths, one answer: the fused query featurizer (normalize and
+    side kernels in one Python pass) emits exactly the rows of
+    side_features_onepass(normalize(files)) — on the corpus and on
+    crafted rows: empty content, content that normalizes to nothing,
+    fewer tokens than shingle_k, and duplicate contents in one batch."""
+    import amp.scoring as scoring
+    from amp import normalize
+    from amp.config import DEFAULT_CONFIG as CFG
+
+    files, _ = small_corpus
+    dup = "def add(a, b):\n    return a + b\n"
+    crafted = spark.createDataFrame(
+        [
+            ("crafted/a", "src/empty.py", "c1", "py", ""),
+            ("crafted/a", "src/comment.py", "c1", "py", "# nothing but a comment\n"),
+            ("crafted/a", "src/short.go", "c1", "go", "x := 1"),
+            ("crafted/b", "src/dup.py", "c2", "py", dup),
+            ("crafted/c", "lib/dup.py", "c3", "py", dup),
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    ).coalesce(1)  # one partition: every crafted row in one Arrow batch
+    q = files.unionByName(crafted)
+    records = normalize.normalize(q, CFG, run_id=3)
+    n_tokens = {r["path"]: r["n_tokens"] for r in records.where(
+        F.col("repo").startswith("crafted/")).collect()}
+    assert n_tokens["src/empty.py"] == n_tokens["src/comment.py"] == 0
+    assert 0 < n_tokens["src/short.go"] < CFG.shingle_k
+    idf = features.idf_map(records, records.count(), CFG)
+
+    def rows(df):
+        return sorted(
+            (r["record_id"], r["stem"], r["lang"], tuple(r["sig"]),
+             tuple(r["embedding"]), bytes(r["tfblob"]))
+            for r in df.collect()
+        )
+
+    fused = rows(scoring.query_side_features(q, idf, CFG, run_id=3))
+    two_pass = rows(scoring.side_features_onepass(records, idf, CFG))
+    assert len(fused) == q.count()
+    assert fused == two_pass
+    # the handle form featurizes like the dict it broadcasts
+    idf_b = spark.sparkContext.broadcast(idf)
+    assert rows(scoring.query_side_features(crafted, idf_b, CFG, run_id=3)) == rows(
+        scoring.side_features_onepass(normalize.normalize(crafted, CFG, 3), idf, CFG)
+    )
+
+
 # ---------------------------------------------------------------------------
 # round-6 pair-dot kernels: equivalence against the old join formulation
 # ---------------------------------------------------------------------------

@@ -33,11 +33,128 @@ def test_match_single_record_finds_its_duplicate(spark, small_corpus, index):
 
 
 def test_match_batch_topk_bounded(spark, small_corpus, index):
+    """Top-k per query, and one row per (query, candidate) — also when
+    the batch resubmits index records under their own ids, so a query
+    id is another query's candidate."""
     files, _ = small_corpus
     q = files.limit(20)
     out = match_records(index, q, run_id=8, top_n=3)
     per_query = out.groupBy("query_id").count().agg(F.max("count")).collect()[0][0]
     assert per_query <= 3
+    assert out.groupBy("query_id", "candidate_id").count().where("count > 1").count() == 0
+
+
+# operators that pass an input's rows on unchanged in kind: an exchange
+# reached from a scan through these alone shuffles that table's rows
+_ROW_PASSING = {"Project", "Filter", "Union", "Coalesce", "ColumnarToRow"}
+_PYTHON_MAP = ("InPandas", "InArrow", "EvalPython")
+
+
+def _executed_graphs(spark, fn):
+    """Run ``fn`` and return the final plan graph of every SQL execution
+    it started: [(nodes {id: (name, desc)}, children {id: [child ids]})]."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def execution_ids():
+        execs = store.executionsList()
+        return {execs.apply(i).executionId() for i in range(execs.size())}
+
+    bus.waitUntilEmpty()
+    before = execution_ids()
+    fn()
+    bus.waitUntilEmpty()
+    graphs = []
+    for eid in sorted(execution_ids() - before):
+        g = store.planGraph(eid)
+        nodes, children = {}, {}
+        all_nodes, edges = g.allNodes(), g.edges()
+        for i in range(all_nodes.size()):
+            n = all_nodes.apply(i)
+            nodes[n.id()] = (n.name(), n.desc())
+        for i in range(edges.size()):
+            e = edges.apply(i)
+            children.setdefault(e.toId(), []).append(e.fromId())
+        graphs.append((nodes, children))
+    return graphs
+
+
+def test_single_match_plan_shape(spark, small_corpus, index):
+    """A single-record match reads the index version's pinned tables and
+    never shuffles them: across every job of the request, no shuffle
+    Exchange takes rows of the index side table or the index block
+    table as its input (reached through row-passing operators only —
+    the index streams into broadcast joins instead), and exactly two
+    Python map nodes run: the query featurizer and the scorer."""
+    files, _ = small_corpus
+    one = files.limit(1).collect()[0]
+    q = amp_io.single_record(
+        spark, "query/repo", "query/" + one["path"], "f" * 40, one["lang"], one["content"]
+    )
+    out: list = []
+    graphs = _executed_graphs(
+        spark, lambda: out.extend(match_records(index, q, run_id=12, top_n=5).collect())
+    )
+    assert out, "the planted query found no candidates"
+
+    # a scan of a pinned table outputs all of its attributes; tables
+    # derived from it (the pinned pairs) reuse some of them, never all
+    index_tables = []
+    for table in (index.sides, index.blocks):
+        plan_out = table._jdf.queryExecution().analyzed().output()
+        index_tables.append({plan_out.apply(i).toString() for i in range(plan_out.size())})
+
+    def reads_index(desc):
+        cols = {c.strip() for c in desc[desc.find("[") + 1 : desc.find("]")].split(",")}
+        return cols in index_tables
+
+    def feeds_index_rows(nodes, children, nid):
+        name, desc = nodes[nid]
+        if name.startswith("Scan") and reads_index(desc):
+            return True
+        if name not in _ROW_PASSING:
+            return False
+        return any(feeds_index_rows(nodes, children, c) for c in children.get(nid, []))
+
+    index_scans = python_nodes = 0
+    for nodes, children in graphs:
+        for nid, (name, desc) in nodes.items():
+            index_scans += name.startswith("Scan") and reads_index(desc)
+            python_nodes += any(m in name for m in _PYTHON_MAP)
+            if name == "Exchange":
+                assert not any(
+                    feeds_index_rows(nodes, children, c) for c in children.get(nid, [])
+                ), f"shuffle of an index table: {desc}"
+    assert index_scans >= 2  # the checks above did see both index tables
+    assert python_nodes == 2
+
+
+def _assert_index_state(idx):
+    """An index version's pinned block table is blocking.all_blocks over
+    its side rows (as a row set), and its record count is exact."""
+    from collections import Counter
+
+    from amp import blocking
+
+    got = Counter((r["right_id"], r["block_key"]) for r in idx.blocks.collect())
+    want = Counter(
+        (r["record_id"], r["block_key"])
+        for r in blocking.all_blocks(idx.sides, idx.sides, idx.cfg).collect()
+    )
+    assert got == want
+    assert idx.n_records == idx.records.count()
+
+
+def _match_rows(idx, q):
+    return sorted(
+        (r["query_id"], r["candidate_id"], r["rank"], r["score"])
+        for r in match_records(idx, q, run_id=9, top_n=5).collect()
+    )
+
+
+def _queries(files, n=15):
+    """n corpus files resubmitted under another repo (new record ids)."""
+    return files.limit(n).withColumn("repo", F.concat(F.lit("query/"), F.col("repo")))
 
 
 def _split_files(files):
@@ -73,6 +190,11 @@ def test_append_records_frozen_idf_equals_fresh_frozen_build(spark, small_corpus
         assert list(ar["sig"]) == list(fr["sig"]), rid
         assert list(ar["embedding"]) == list(fr["embedding"]), rid
     assert appended.idf == idx0.idf  # frozen, by identity of contract
+    assert appended.idf_b is idx0.idf_b  # the broadcast is reused too
+    _assert_index_state(idx0)
+    _assert_index_state(appended)
+    q = _queries(files)
+    assert _match_rows(appended, q) == _match_rows(fresh, q)
 
 
 def test_append_then_match_finds_new_record(spark, small_corpus):
@@ -110,6 +232,8 @@ def test_append_refresh_policy_recomputes_idf(spark, small_corpus):
     idx1 = append_records(idx0, extra, policy="refresh")
     fresh = build_index(files, CFG)
     assert idx1.idf == fresh.idf  # zero drift under refresh
+    assert idx1.idf_b is not idx0.idf_b
+    _assert_index_state(idx1)
     with pytest.raises(ValueError, match="insert-only"):
         append_records(idx1, extra)  # same ids again -> loud failure
 
@@ -164,6 +288,10 @@ def test_remove_records_frozen_equals_fresh_frozen_build(spark, small_corpus):
         assert list(ar["sig"]) == list(fr["sig"]), rid
         assert list(ar["embedding"]) == list(fr["embedding"]), rid
     assert idx1.idf == idx0.idf
+    # the removed representatives' keys left the block table
+    _assert_index_state(idx1)
+    q = _queries(files)
+    assert _match_rows(idx1, q) == _match_rows(fresh, q)
 
 
 def test_remove_then_match_no_longer_finds_record(spark, small_corpus):
@@ -223,6 +351,9 @@ def test_remove_refresh_policy_recomputes_idf(spark, small_corpus):
     idx1 = remove_records(idx0, extra_ids, policy="refresh")
     fresh = build_index(base, CFG)
     assert idx1.idf == fresh.idf  # zero drift under refresh
+    _assert_index_state(idx1)
+    q = _queries(files)
+    assert _match_rows(idx1, q) == _match_rows(fresh, q)
 
 
 def test_streaming_ingest_normalizes_like_batch(spark, small_corpus, tmp_path_factory):
@@ -275,6 +406,7 @@ def test_index_save_load_identical_matches(spark, small_corpus, index, tmp_path_
     loaded = MatchIndex.load(spark, root)
     assert loaded.idf == index.idf
     assert loaded.cfg == index.cfg
+    _assert_index_state(loaded)
 
     q = files.limit(15)
     key = lambda r: (r["query_id"], r["candidate_id"])  # noqa: E731
