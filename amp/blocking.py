@@ -168,16 +168,17 @@ def candidate_pairs(blocks: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataF
     # explicit partition count on the dedup shuffle: pair ROWS are tiny
     # (~80 B) but each costs real Python-kernel work downstream, so
     # AQE's byte-based coalesce would serialize the scorer onto one
-    # task. Partition by left_id ONLY: hash(left_id) satisfies the
+    # task. The count is the session's own shuffle width (one source of
+    # truth; callers size it with session.shuffle_partitions_for).
+    # Partition by left_id ONLY: hash(left_id) satisfies the
     # dedup's clustered distribution on (left_id, right_id) — every
     # duplicate shares its left_id — AND the scorer's first
     # shuffled-hash join keys on left_id, so dedup + join-1 share THIS
     # one exchange and the pair table shuffles once, not twice
     # (round-4 verdict task 1). Skew is bounded: one record pairs with
     # at most (max_block_size - 1) x n_passes others.
-    return pairs.repartition(cfg.shuffle_partitions, "left_id").dropDuplicates(
-        ["left_id", "right_id"]
-    )
+    width = int(blocks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return pairs.repartition(width, "left_id").dropDuplicates(["left_id", "right_id"])
 
 
 def dropped_blocks(stats: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:

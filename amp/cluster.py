@@ -69,14 +69,6 @@ def _signature(e: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Small-graph fast path: collect edges (Arrow) and run union-find
-    with path compression on the driver. Same output contract as the
-    distributed loop (cluster_id = min member id)."""
-    pdf = e.toPandas()
-    return _union_find_pdf(pdf, e.sparkSession, e.schema["u"].dataType.simpleString())
-
-
 def _union_find_pdf(pdf, spark, id_type: str, stats_out: dict | None = None) -> DataFrame:
     """Connected components over an already-collected edge frame,
     vectorized: ids are factorized to sort-ordered integer codes (so

@@ -74,7 +74,6 @@ class AmpConfig:
 
     # ---- misc ----
     seed: int = 42
-    shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:
         assert self.minhash_perms % self.minhash_bands == 0

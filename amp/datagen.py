@@ -230,17 +230,3 @@ def gen_labels(spark: SparkSession, n_base: int, seed: int = 42, partitions: int
         spark.range(0, n_base, numPartitions=partitions)
         .mapInPandas(_gen_partition("labels", seed), schema=LABELS_SCHEMA)
     )
-
-
-def gen_local(n_base: int, seed: int = 42) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Driver-side generation for small unit-test fixtures."""
-    files: list[dict] = []
-    labels: list[dict] = []
-    for i in range(n_base):
-        f, l = rows_for_base(i, seed)
-        files.extend(f)
-        labels.extend(l)
-    return (
-        pd.DataFrame(files, columns=["repo", "path", "commit", "lang", "content"]),
-        pd.DataFrame(labels, columns=["left_id", "right_id", "is_match", "corruption"]),
-    )

@@ -48,45 +48,6 @@ def _distinct_tokens(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingles_of_tokens(tok_col: str = "toks", k: int = 3):
-    """Word k-shingles over an ALREADY-MATERIALIZED token-array column
-    (whole text when shorter, nothing at all for token-less docs — an
-    empty/punctuation-only doc must NOT contribute the shared ''
-    shingle, which would glue every such doc into one mega-bucket
-    across all bands). Token unigrams would be degenerate on
-    small-vocabulary corpora (every doc contains the global min token).
-
-    Callers must project the token array in a separate step first:
-    inlining the tokenizer (split+filter) here would place it inside
-    the transform lambda, re-splitting the full text once per shingle
-    position — quadratic in document length (measured ~2.4x on the
-    sf0.1 minhash query)."""
-    toks = F.col(tok_col)
-    whole = F.array(F.concat_ws(" ", toks))
-    slid = F.expr(
-        f"transform(sequence(1, size({tok_col}) - {k - 1}), "
-        f"i -> concat_ws(' ', slice({tok_col}, i, {k})))"
-    )
-    return (
-        F.when(F.size(toks) == 0, F.expr("array()"))
-        .when(F.size(toks) < k, whole)
-        .otherwise(slid)
-    )
-
-
-def _distinct_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
-    # two-step projection: the token array materializes once per row
-    # (Catalyst's CollapseProject keeps multiply-referenced non-cheap
-    # aliases in their own project), then shingling slices it
-    return (
-        docs.select("doc_id", tokens_col().alias("toks"))
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(_shingles_of_tokens("toks", k))).alias("shingle"),
-        )
-    )
-
-
 def minhash_band_keys(docs: DataFrame, bands: int = 4) -> DataFrame:
     """(doc_id, band, band_key): band_key = min over distinct word
     3-shingles of md5(seed || shingle) — one independent 1-perm MinHash
@@ -100,8 +61,8 @@ def minhash_band_keys(docs: DataFrame, bands: int = 4) -> DataFrame:
     over 2.6M rows (measured 10.8 of the query's 11.6 s at the
     driver's sf=1.0). hashlib.md5 of the identical salted UTF-8 bytes
     produces the identical lowercase-hex digest, and min over hex
-    strings is byte order — bit-equal keys, asserted against the
-    expression formulation in tests and by the DuckDB oracle.
+    strings is byte order — bit-equal keys, asserted by the DuckDB
+    oracle of the dedup_minhash_lsh query.
     Tokenization mirrors text.tokens_col exactly: re.split on the same
     pattern over str.lower() (corpus contract: the oracle's DuckDB
     lower() already pins ASCII-equivalent lowering)."""

@@ -56,7 +56,7 @@ from .pipeline import prepare
 # AmpConfig no longer has; MatchIndex.load drops them
 _RETIRED_CFG_KEYS = (
     "broadcast_idf", "gather_sides_max_records", "fused_reps_min_partitions",
-    "salt_block_size", "grouped_pairgen_max_block",
+    "salt_block_size", "grouped_pairgen_max_block", "shuffle_partitions",
 )
 
 

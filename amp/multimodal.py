@@ -3,17 +3,16 @@ columns with typed metadata.
 
 Pillow is optional, so the decode ladder carries its own pure-stdlib
 codecs: PIL when importable, else real decoders for PNG (RFC 2083
-subset, below), lossless WebP (amp.vp8l), BMP incl. RLE4/RLE8,
-first-frame + animated GIF and WAV/PCM audio (the audio rows ride the
-same status ladder via a coarse 8x8 spectrogram grid). Every other
-payload, sniffed formats such as JPEG and FLAC included, degrades to
-a deterministic fake or a NULL feature with decode_status as data
-(AMP_FAKE_DECODE). The Spark-side plumbing is real and tested:
-schemas, Arrow batch shapes, mapInPandas signatures, partition-size
-control. On a real cluster only the ladder's top rung changes (PIL/
-libav present); the plan shape is already the scalable one: a single
-mapInPandas pass, no shuffle, binary payloads never leave the executor
-that read them.
+subset, below), BMP incl. RLE4/RLE8, first-frame + animated GIF and
+WAV/PCM audio (the audio rows ride the same status ladder via a coarse
+8x8 spectrogram grid). Every other payload, sniffed formats such as
+JPEG, FLAC and WebP included, degrades to a deterministic fake or a
+NULL feature with decode_status as data (AMP_FAKE_DECODE). The
+Spark-side plumbing is real and tested: schemas, Arrow batch shapes,
+mapInPandas signatures, partition-size control. On a real cluster only
+the ladder's top rung changes (PIL/libav present); the plan shape is
+already the scalable one: a single mapInPandas pass, no shuffle, binary
+payloads never leave the executor that read them.
 """
 
 from __future__ import annotations
@@ -784,10 +783,10 @@ def _decode_image_status(
       1. WAV audio via the spectrogram grid (before PIL, which has no
          audio path);
       2. Pillow (any format it knows) when importable;
-      3. the pure-stdlib PNG, BMP, GIF and lossless-WebP decoders in
-         this module and amp.vp8l (real decode, no dependency);
-      4. any other payload (JPEG and FLAC included, which are sniffed
-         but have no stdlib decoder) gets the deterministic
+      3. the pure-stdlib PNG, BMP and GIF decoders in this module
+         (real decode, no dependency);
+      4. any other payload (JPEG, FLAC and WebP included, which are
+         sniffed but have no stdlib decoder) gets the deterministic
          content-derived fake when allowed, else a NULL feature with
          status unsupported. A failing real decoder yields the fake,
          or corrupt/unsupported."""
@@ -822,14 +821,10 @@ def _decode_image_status(
             if allow_fake:
                 return _fake_grid(raw), "fake", fmt
             return None, "corrupt", fmt
-    if fmt in ("bmp", "gif", "webp"):
-        # DIB incl. RLE / first-frame GIF / lossless VP8L; anything
-        # the decoder calls "unsupported" (BMP bitfields, lossy VP8,
-        # animations) falls through as that status
-        if fmt == "webp":
-            from .vp8l import decode_gray as dec
-        else:
-            dec = bmp_decode_gray if fmt == "bmp" else gif_decode_gray
+    if fmt in ("bmp", "gif"):
+        # DIB incl. RLE / first-frame GIF; anything the decoder calls
+        # "unsupported" (BMP bitfields) falls through as that status
+        dec = bmp_decode_gray if fmt == "bmp" else gif_decode_gray
         try:
             return _resize8(dec(raw)), "real", fmt
         except Exception as e:

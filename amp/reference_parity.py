@@ -7,9 +7,10 @@ README (§Examples: exact expected score / trigram_cosine_* /
 bin_key_match values) and the standardizer golden cases
 (tests/standardizer_test.go:9-79).
 
-Every function documents its reference citation. All Spark execution is
-vectorized pandas UDFs over Arrow batches (the reference's goroutine
-worker pools, internal/matcher/shared.go:104-167, collapse into these).
+Every function documents its reference citation. The functions are
+scalar; amp.address_pipeline runs them inside Arrow-batched mapInPandas
+kernels (the reference's goroutine worker pools,
+internal/matcher/shared.go:104-167, collapse into those).
 
 Parity caveat, established empirically: the README worked example's
 `trigram_cosine_*` values match this implementation bit-for-bit
@@ -28,12 +29,6 @@ from __future__ import annotations
 import math
 import string
 from collections import Counter
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # internal/matcher/standardizer.go:10-36 — 26-entry USPS abbreviation map
 ABBREVIATIONS = {
@@ -223,67 +218,3 @@ def composite_score(
         + (1.0 if bin_key_match else 0.0) * w["binKeyMatch"]
     )
     return max(1.0, min(100.0, s * 100.0))
-
-
-# ---------------------------------------------------------------------------
-# Spark surface — vectorized over Arrow batches
-# ---------------------------------------------------------------------------
-
-def standardize_udf():
-    @F.pandas_udf(T.StringType())
-    def _std(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(standardize_address)
-
-    return _std
-
-
-def binary_key_udf(refs: list[str] | None = None):
-    refs = refs if refs is not None else REFERENCE_ENTITIES
-
-    @F.pandas_udf(T.StringType())
-    def _bk(s: pd.Series) -> pd.Series:
-        return s.fillna("").map(lambda x: calculate_binary_key(x, refs))
-
-    return _bk
-
-
-def bigram_cosine_udf():
-    @F.pandas_udf(T.DoubleType())
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        av, bv = a.fillna(""), b.fillna("")
-        return pd.Series(
-            [ngram_frequency_similarity(x, y, 2) for x, y in zip(av, bv)],
-            dtype="float64",
-        )
-
-    return _cos
-
-
-def score_address_pairs(pairs: DataFrame) -> DataFrame:
-    """Score reference-shaped candidate pairs. Expects columns
-    input_/candidate_ first_name,last_name,street,city,state,zip_code,
-    phone_number plus similarity (cosine distance), tfidf_score,
-    bin_key_match. Emits the six trigram_cosine_* fields and the
-    composite score — one vectorized pass, replacing the reference's
-    driver-side Go row loop (matcher.go:119-211)."""
-    cos = bigram_cosine_udf()
-    out = pairs
-    for fld in ("first_name", "last_name", "street", "city", "phone_number", "zip_code"):
-        out = out.withColumn(
-            f"trigram_cosine_{fld}",
-            cos(F.col(f"input_{fld}"), F.col(f"candidate_{fld}")),
-        )
-    composite = (
-        (F.lit(1.0) - F.col("similarity")) * WEIGHTS["similarity"]
-        + F.col("tfidf_score") * WEIGHTS["tfidf"]
-        + F.col("trigram_cosine_first_name") * WEIGHTS["firstName"]
-        + F.col("trigram_cosine_last_name") * WEIGHTS["lastName"]
-        + F.col("trigram_cosine_street") * WEIGHTS["street"]
-        + F.col("trigram_cosine_city") * WEIGHTS["city"]
-        + F.col("trigram_cosine_phone_number") * WEIGHTS["phoneNumber"]
-        + F.col("trigram_cosine_zip_code") * WEIGHTS["zipCode"]
-        + F.col("bin_key_match").cast("double") * WEIGHTS["binKeyMatch"]
-    )
-    return out.withColumn(
-        "score", F.greatest(F.lit(1.0), F.least(F.lit(100.0), composite * 100.0))
-    )

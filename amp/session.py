@@ -26,11 +26,7 @@ def shuffle_partitions_for(cpus: int, n_records: int) -> int:
     partitions beat 2; local[8]: 16 beat both 8 and 32). Small corpora
     keep 1x cores: per-task overhead outweighs the tail there
     (measured +5 s on a 17k-record run).
-
-    AMP_SHUFFLE_MULT=<m> overrides to cpus*m for experiments.
     """
-    if os.environ.get("AMP_SHUFFLE_MULT"):
-        return cpus * int(os.environ["AMP_SHUFFLE_MULT"])
     if n_records < 50_000:
         return cpus
     return max(8, 2 * cpus)
@@ -62,6 +58,7 @@ def get_spark(
     cpus=None -> local[*]. shuffle partitions default to the core count:
     at local scale 200 partitions would mean ~200 tiny tasks per shuffle;
     on a real cluster this knob is set per-deployment via spark-submit.
+    extra_conf is applied last, so it overrides any default below.
     """
     if cpus is None:
         cpus_env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -98,7 +95,7 @@ def get_spark(
         # time -22% at local[8] (the pair join ships repeated per-pair
         # feature payloads; zstd's larger window recovers the
         # repetition where lz4 cannot). Standard production tuning for
-        # shuffle-heavy jobs; override via AMP_EXTRA_CONF.
+        # shuffle-heavy jobs; override via extra_conf.
         .config("spark.io.compression.codec", "zstd")
         # shuffled-hash join over sort-merge when neither side
         # broadcasts: the engine's non-broadcast joins build against
@@ -110,13 +107,6 @@ def get_spark(
         # splits skewed partitions (OptimizeSkewedJoin covers SHJ).
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
-    extra_env = os.environ.get("AMP_EXTRA_CONF")
-    if extra_env:
-        # experiment hook: "key=value;key=value" pairs applied verbatim
-        for kv in extra_env.split(";"):
-            if "=" in kv:
-                k, v = kv.split("=", 1)
-                builder = builder.config(k.strip(), v.strip())
     local_dir = os.environ.get("AMP_LOCAL_DIR")
     if local_dir:
         # opt-in shuffle/spill scratch override. The benchmark harness
@@ -127,13 +117,6 @@ def get_spark(
         # precisely for spills larger than memory, and a silent tmpfs
         # default would turn big-job spills into ENOSPC failures.
         builder = builder.config("spark.local.dir", local_dir)
-    gc_opts = os.environ.get("AMP_GC_OPTS")
-    if gc_opts:
-        # experiment hook only. -XX:+UseParallelGC helped a pure string
-        # microbenchmark but measured WORSE on the full pipeline
-        # (scaling efficiency 0.606 vs 0.698 — see bench.py run_scaling
-        # and BENCH notes); the default stays G1 deliberately.
-        builder = builder.config("spark.driver.extraJavaOptions", gc_opts)
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -68,6 +68,18 @@ def test_salted_pairgen_equals_plain(spark):
     assert len(got) == 3 * (10 * 9 // 2)
 
 
+def test_pair_shuffle_width_is_the_session_width(spark):
+    """The pair table's explicit repartition takes its width from the
+    session's spark.sql.shuffle.partitions, the one source of truth the
+    callers size with session.shuffle_partitions_for."""
+    rows = [(f"r{i:02d}", f"k{i % 3}") for i in range(30)]
+    blocks = spark.createDataFrame(rows, "record_id string, block_key string").withColumn(
+        "pass_name", F.lit("t")
+    )
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert blocking.candidate_pairs(blocks, CFG).rdd.getNumPartitions() == width
+
+
 def test_frequency_cap_counts_dropped_blocks(spark):
     rows = [(f"r{i:03d}", "hot" if i < 80 else f"cold{i % 5}") for i in range(100)]
     blocks = spark.createDataFrame(rows, "record_id string, block_key string").withColumn(

@@ -423,9 +423,10 @@ def test_index_save_load_identical_matches(spark, small_corpus, index, tmp_path_
 
 def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_path_factory):
     """An index_config.json written before the postings-join, gather
-    scorer, fused-reps and salted pair-gen paths were removed still
-    carries their five knobs; load drops exactly those and matches like
-    the in-memory index."""
+    scorer, fused-reps and salted pair-gen paths were removed, and
+    before the pair shuffle width moved to the session, still carries
+    their six knobs; load drops exactly those and matches like the
+    in-memory index."""
     import json
     import os
 
@@ -443,6 +444,7 @@ def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_
         fused_reps_min_partitions=24,
         salt_block_size=16,
         grouped_pairgen_max_block=256,
+        shuffle_partitions=32,
     )
     with open(path, "w") as fh:
         json.dump(meta, fh)

@@ -2,13 +2,10 @@
 
 The rule is measured, not guessed (BENCH/BASELINE.md round-5 A/B):
 large runs get max(8, 2*cpus) — two reduce waves per core with a
-floor — small corpora keep 1x cores. The env override must win so the
-A/B harness stays usable.
+floor — small corpora keep 1x cores.
 """
 
 from __future__ import annotations
-
-import os
 
 from amp.session import shuffle_partitions_for
 
@@ -22,11 +19,3 @@ def test_large_runs_two_waves_with_floor():
 def test_small_corpora_keep_one_wave():
     assert shuffle_partitions_for(32, 17_000) == 32
     assert shuffle_partitions_for(8, 49_999) == 8
-
-
-def test_env_override_wins(monkeypatch):
-    monkeypatch.setenv("AMP_SHUFFLE_MULT", "4")
-    assert shuffle_partitions_for(8, 200_000) == 32
-    assert shuffle_partitions_for(8, 1_000) == 32
-    monkeypatch.delenv("AMP_SHUFFLE_MULT")
-    assert "AMP_SHUFFLE_MULT" not in os.environ

@@ -66,7 +66,7 @@ def test_multimodal_feature_shapes(spark):
 def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
     """Format policy as DATA (magic-byte sniff + per-row decode_status +
     counted metrics) over a mixed PNG / corrupt-PNG / JPEG-stub /
-    FLAC-stub / WebP / garbage corpus with fakes DISALLOWED: nothing
+    FLAC-stub / WebP-stub / garbage corpus with fakes DISALLOWED: nothing
     raises, statuses and feature nullability are exact, and
     decode_metrics counts match."""
     import numpy as np
@@ -79,22 +79,18 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
     )
     import struct as _struct
 
-    from amp import vp8l as amp_vp8l
-
-    webp_rgba = np.zeros((10, 12, 4), np.uint8)
-    webp_rgba[:, :, 1] = np.arange(12, dtype=np.uint8) * 20
-    webp_rgba[:, :, 3] = 255
-    good_webp = amp_vp8l.encode_lossless(webp_rgba, cache_bits=3)
     lossy_webp = (b"RIFF" + _struct.pack("<I", 16) + b"WEBP"
                   + b"VP8 " + _struct.pack("<I", 4) + b"\x00" * 4)
+    lossless_webp = (b"RIFF" + _struct.pack("<I", 17) + b"WEBP"
+                     + b"VP8L" + _struct.pack("<I", 5) + b"\x2f" + b"\x00" * 4)
     rows = [
         ("ok0", good_png),
         ("ok1", mm.png_encode(np.zeros((4, 4), np.uint8))),
         ("corrupt0", good_png[: len(good_png) // 2]),      # torn PNG
         ("jpeg0", b"\xff\xd8\xff\xe0" + b"\x00" * 32),     # torn JPEG
         ("flac0", b"fLaC" + b"\x00" * 32),                # FLAC stub
-        ("webp0", lossy_webp),                             # lossy VP8: unsupported
-        ("webp1", good_webp),                              # real lossless VP8L
+        ("webp0", lossy_webp),                             # lossy VP8 stub
+        ("webp1", lossless_webp),                          # lossless VP8L stub
         ("junk0", b"not an image at all"),
     ]
     media = spark.createDataFrame(
@@ -122,12 +118,11 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
         assert feats["flac0"]["decode_status"] == "unsupported"
         assert feats["flac0"]["fmt"] == "flac"
         assert feats["flac0"]["feature"] is None
-        # lossless WebP decodes for real (amp.vp8l); lossy VP8 is
-        # unsupported-as-data
-        assert feats["webp0"]["fmt"] == "webp"
-        assert feats["webp0"]["decode_status"] == "unsupported"
-        assert feats["webp1"]["decode_status"] == "real"
-        assert feats["webp1"]["feature"] is not None
+        # WebP likewise, lossy VP8 and lossless VP8L alike
+        for k in ("webp0", "webp1"):
+            assert feats[k]["fmt"] == "webp"
+            assert feats[k]["decode_status"] == "unsupported"
+            assert feats[k]["feature"] is None
         assert feats["junk0"]["decode_status"] == "unsupported"
         assert feats["junk0"]["fmt"] == "unknown"
         m = {
@@ -137,8 +132,8 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
         assert m[("real", "png")] == 2 and m[("corrupt", "png")] == 1
         assert m[("unsupported", "jpeg")] == 1
         assert m[("unsupported", "flac")] == 1
-        assert m[("unsupported", "webp")] == 1
-        assert m[("real", "webp")] == 1
+        assert m[("unsupported", "webp")] == 2
+        assert ("real", "webp") not in m
         assert m[("unsupported", "unknown")] == 1
 
     # with fakes allowed every row gets a feature and a fake/real status
