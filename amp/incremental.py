@@ -25,15 +25,18 @@ and block only the side rows they add, anti-join only the side ids
 they drop, and reuse the IDF handle under ``frozen`` (a new one under
 ``refresh``).
 
-A request (match_records) owns only its own rows: the query batch is
-normalized and featurized in one Python pass and pinned, its block keys
-meet the pinned index blocks in a broadcast join (the candidate pairs,
-pinned), and the scorer reads the query sides plus the index side rows
-those pairs name — no index-side table is rebuilt or shuffled per
-request. The query side is blocked against the index side ONLY (no
-index-index pairs — the reference gets this from `candidates.run_id = 0
-AND input.run_id = $1`), then ranked/top-k per query record
-(match.sql:66, matcher.go:221-228).
+A request owns only its own rows. match_records normalizes and
+featurizes a query DataFrame in one Python worker pass and pins it;
+match_rows featurizes query rows already in the driver (a served
+request's) in-process and hands Spark the finished side rows, so the
+scorer is the request's only Python stage. From there both share one
+tail: the query's block keys meet the pinned index blocks in a
+broadcast join (the candidate pairs, pinned), and the scorer reads the
+query sides plus the index side rows those pairs name — no index-side
+table is rebuilt or shuffled per request. The query side is blocked
+against the index side ONLY (no index-index pairs — the reference gets
+this from `candidates.run_id = 0 AND input.run_id = $1`), then
+ranked/top-k per query record (match.sql:66, matcher.go:221-228).
 """
 
 from __future__ import annotations
@@ -43,11 +46,13 @@ import json
 import os
 from concurrent.futures import ThreadPoolExecutor
 
+import pandas as pd
 from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import blocking, features, normalize, rank, scoring
+from . import io as amp_io
 from .checkpoint import CheckpointManager
 from .config import AmpConfig, DEFAULT_CONFIG
 from .pipeline import prepare
@@ -399,7 +404,9 @@ def remove_records(
         ids = [str(r) for r in record_ids]
         if not ids:
             raise ValueError("remove_records: empty id list")
-        ids_df = spark.createDataFrame([(i,) for i in ids],
+        # built from pandas: a frame of a Python list is computed by a
+        # Python worker pool of its own (see serve.MatchService._files_df)
+        ids_df = spark.createDataFrame(pd.DataFrame({"record_id": ids}),
                                        "record_id string")
     ids_df = ids_df.dropDuplicates(["record_id"]).localCheckpoint(eager=True)
     # the removal is write-sized, so its ids broadcast and the index
@@ -449,6 +456,24 @@ def remove_records(
     )
 
 
+def _check_query_embeddings(index: MatchIndex, query_embeddings) -> None:
+    """A provided-embedding index scores only queries that bring vectors
+    of the same model/dim, and a hashing-trick index only queries that
+    do not (mixed dims would score garbage)."""
+    if index.uses_provided_embeddings and query_embeddings is None:
+        raise ValueError(
+            "match_records: the index was built with provided embeddings; "
+            "pass query_embeddings (record_id, embedding) of the same "
+            "model/dim for the query batch"
+        )
+    if query_embeddings is not None and not index.uses_provided_embeddings:
+        raise ValueError(
+            "match_records: query_embeddings given but the index holds "
+            "hashing-trick vectors — rebuild the index with "
+            "build_index(embeddings=...) so both sides share a model/dim"
+        )
+
+
 def match_records(
     index: MatchIndex,
     query_files: DataFrame,
@@ -465,8 +490,10 @@ def match_records(
 
     Precomputed per index version and only read here: the side rows,
     the pinned block table and the IDF broadcast. Request-scoped:
-      1. the query sides — normalize and side kernels in ONE Python pass
-         over the batch (plus provided ``query_embeddings``), pinned;
+      1. the query sides — normalize and side kernels in ONE Python
+         worker pass over the batch (plus provided ``query_embeddings``),
+         pinned; match_rows featurizes rows already in the driver
+         in-process instead, and shares steps 2-3 (_match_sides);
       2. the candidate pairs — the query's block keys broadcast-joined
          against the pinned index blocks (the index blocks stream
          map-side, never shuffled), deduplicated and pinned;
@@ -476,20 +503,8 @@ def match_records(
          the index side table is never shuffled; a larger batch keeps
          the shuffled joins.
     """
-    cfg = index.cfg
-    if index.uses_provided_embeddings and query_embeddings is None:
-        raise ValueError(
-            "match_records: the index was built with provided embeddings; "
-            "pass query_embeddings (record_id, embedding) of the same "
-            "model/dim for the query batch"
-        )
-    if query_embeddings is not None and not index.uses_provided_embeddings:
-        raise ValueError(
-            "match_records: query_embeddings given but the index holds "
-            "hashing-trick vectors — rebuild the index with "
-            "build_index(embeddings=...) so both sides share a model/dim"
-        )
-    q_sides = scoring.query_side_features(query_files, index.idf_b, cfg, run_id)
+    _check_query_embeddings(index, query_embeddings)
+    q_sides = scoring.query_side_features(query_files, index.idf_b, index.cfg, run_id)
     if query_embeddings is not None:
         q_sides = scoring.attach_embeddings(
             q_sides, query_embeddings,
@@ -497,9 +512,39 @@ def match_records(
                 normalize.record_id_expr().alias("record_id")
             ),
         )
-    q_sides = q_sides.localCheckpoint(eager=True)
+    return _match_sides(index, q_sides.localCheckpoint(eager=True), top_n)
 
-    # blocking: query side vs index side ONLY (match.sql:30-31 semantics)
+
+def match_rows(
+    index: MatchIndex,
+    rows: list[tuple],
+    run_id: int = 1,
+    top_n: int | None = None,
+) -> DataFrame:
+    """match_records for query rows that are Python objects in the
+    driver already — an HTTP request's: ``rows`` are (repo, path,
+    commit, lang, content) tuples of strings (lang may be None). The
+    rows are featurized in this process with the version's IDF
+    dictionary (scoring.query_side_rows) and handed to Spark as an
+    in-memory Arrow relation, so no Python worker runs and nothing is
+    pinned before blocking; the rest is match_records' steps 2-3.
+    Answers equal match_records over the same rows (tested). The cost
+    grows with the rows in the driver's one thread, so large batches
+    belong on match_records (serve bounds the rows it sends here)."""
+    _check_query_embeddings(index, None)
+    files = pd.DataFrame(rows, columns=amp_io.REPO_FILES_SCHEMA.names)
+    q_sides = index.records.sparkSession.createDataFrame(
+        scoring.query_side_rows(files, index.idf, index.cfg, run_id),
+        scoring.SIDE_SCHEMA,
+    )
+    return _match_sides(index, q_sides, top_n)
+
+
+def _match_sides(index: MatchIndex, q_sides: DataFrame, top_n: int | None) -> DataFrame:
+    """Query side rows -> ranked candidates: match_records' steps 2-3
+    and the top-k/rank. The query side is blocked against the index
+    side ONLY (match.sql:30-31 semantics)."""
+    cfg = index.cfg
     q_blocks = blocking.all_blocks(q_sides, q_sides, cfg).select(
         F.col("record_id").alias("left_id"), "block_key"
     )

@@ -19,8 +19,11 @@ side_features_onepass builds every per-record feature (signature,
 embedding, packed tf-idf vector) once, and score_pairs_onepass joins
 both sides onto each candidate pair and computes every similarity plus
 the weighted composite in one numpy kernel per batch. A query batch
-takes query_side_features instead, which runs the normalize kernel and
-the same side kernel in one pass over the raw files.
+takes the query kernel instead: the normalize kernel and the same side
+kernel composed over raw files. query_side_features runs it in one
+Python worker pass over a files DataFrame; query_side_rows runs it in
+the driver over one pandas frame of rows already there (a served
+request's), with no Python worker at all.
 """
 
 from __future__ import annotations
@@ -282,12 +285,14 @@ def tfblob_dots_batch(l_col, r_col):
     return dots, coss
 
 
-def _side_kernel(idf_b: Broadcast, cfg: AmpConfig):
+def _side_kernel(idf: dict[int, float] | Broadcast, cfg: AmpConfig):
     """The per-record feature kernel over Arrow batches carrying
     (record_id, stem, lang, norm_text): one output row per input row in
     SIDE_SCHEMA. Shared by side_features_onepass (a records or reps
-    table) and query_side_features (raw files, normalized in the same
-    pass)."""
+    table) and the query kernel (raw files, normalized in the same
+    pass). ``idf`` is a Broadcast on every executor path — the kernel is
+    pickled into a closure there, and a dict would ship with it — and
+    the dictionary itself only when the kernel runs in the driver."""
     import zlib
     from collections import Counter
     from collections.abc import Iterator
@@ -303,7 +308,7 @@ def _side_kernel(idf_b: Broadcast, cfg: AmpConfig):
     dim = cfg.emb_dim
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idf_local = idf_b.value
+        idf_local = idf.value if isinstance(idf, Broadcast) else idf
         # Per-worker token memo: a code corpus reuses its vocabulary
         # across documents, so the crc32 pair + idf lookup per token is
         # computed once per PARTITION instead of once per occurrence
@@ -425,11 +430,33 @@ def query_side_features(
     never materializes its records table. Row for row equal to
     ``side_features_onepass(normalize.normalize(files, cfg, run_id),
     idf, cfg)`` (tested)."""
+    kernel = _query_kernel(_idf_handle(files.sparkSession, idf), cfg, run_id)
+    return files.mapInPandas(kernel, SIDE_SCHEMA)
+
+
+def query_side_rows(
+    files: pd.DataFrame,
+    idf: dict[int, float],
+    cfg: AmpConfig = DEFAULT_CONFIG,
+    run_id: int = 1,
+) -> pd.DataFrame:
+    """The query kernel run in this process over one pandas frame of
+    repo_files rows (repo, path, commit, lang, content) with the IDF
+    dictionary itself: the SIDE_SCHEMA rows query_side_features emits
+    for the same rows (tested byte-equal), as pandas. For rows that are
+    already Python objects in the driver (a served request's), so no
+    Python worker runs to featurize them."""
+    return next(_query_kernel(idf, cfg, run_id)(iter([files])))
+
+
+def _query_kernel(idf: dict[int, float] | Broadcast, cfg: AmpConfig, run_id: int):
+    """repo_files batches -> SIDE_SCHEMA batches: the normalize kernel
+    feeding the side kernel, one batch at a time."""
     from .normalize import _normalize_batches
 
     norm_fn = _normalize_batches(cfg, run_id)
-    side_fn = _side_kernel(_idf_handle(files.sparkSession, idf), cfg)
-    return files.mapInPandas(lambda batches: side_fn(norm_fn(batches)), SIDE_SCHEMA)
+    side_fn = _side_kernel(idf, cfg)
+    return lambda batches: side_fn(norm_fn(batches))
 
 
 def attach_embeddings(

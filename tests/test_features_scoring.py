@@ -278,7 +278,9 @@ def test_query_side_features_equals_normalize_then_sides(spark, small_corpus):
     side kernels in one Python pass) emits exactly the rows of
     side_features_onepass(normalize(files)) — on the corpus and on
     crafted rows: empty content, content that normalizes to nothing,
-    fewer tokens than shingle_k, and duplicate contents in one batch."""
+    fewer tokens than shingle_k, duplicate contents in one batch and a
+    null lang. The same kernel run in the driver over a pandas frame
+    (query_side_rows, with the IDF dict) emits the same bytes."""
     import amp.scoring as scoring
     from amp import normalize
     from amp.config import DEFAULT_CONFIG as CFG
@@ -292,6 +294,7 @@ def test_query_side_features_equals_normalize_then_sides(spark, small_corpus):
             ("crafted/a", "src/short.go", "c1", "go", "x := 1"),
             ("crafted/b", "src/dup.py", "c2", "py", dup),
             ("crafted/c", "lib/dup.py", "c3", "py", dup),
+            ("crafted/d", "notes/readme", "c4", None, "plain words, no lang"),
         ],
         "repo string, path string, commit string, lang string, content string",
     ).coalesce(1)  # one partition: every crafted row in one Arrow batch
@@ -314,6 +317,13 @@ def test_query_side_features_equals_normalize_then_sides(spark, small_corpus):
     two_pass = rows(scoring.side_features_onepass(records, idf, CFG))
     assert len(fused) == q.count()
     assert fused == two_pass
+    in_driver = scoring.query_side_rows(q.toPandas(), idf, CFG, run_id=3)
+    assert sorted(
+        (r.record_id, r.stem, r.lang, tuple(int(x) for x in r.sig),
+         tuple(int(x) for x in r.embedding), bytes(r.tfblob))
+        for r in in_driver.itertuples()
+    ) == fused
+    assert any(r[2] is None for r in fused)  # the null lang survives
     # the handle form featurizes like the dict it broadcasts
     idf_b = spark.sparkContext.broadcast(idf)
     assert rows(scoring.query_side_features(crafted, idf_b, CFG, run_id=3)) == rows(

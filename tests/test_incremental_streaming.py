@@ -79,22 +79,15 @@ def _executed_graphs(spark, fn):
     return graphs
 
 
-def test_single_match_plan_shape(spark, small_corpus, index):
-    """A single-record match reads the index version's pinned tables and
-    never shuffles them: across every job of the request, no shuffle
-    Exchange takes rows of the index side table or the index block
-    table as its input (reached through row-passing operators only —
-    the index streams into broadcast joins instead), and exactly two
-    Python map nodes run: the query featurizer and the scorer."""
-    files, _ = small_corpus
-    one = files.limit(1).collect()[0]
-    q = amp_io.single_record(
-        spark, "query/repo", "query/" + one["path"], "f" * 40, one["lang"], one["content"]
-    )
+def _match_python_nodes(spark, index, fn):
+    """Run ``fn`` (a match against ``index`` returning its rows) and
+    check the plans of every job it started: no shuffle Exchange takes
+    rows of the index side table or the index block table as its input
+    (reached through row-passing operators only — the index streams
+    into broadcast joins instead), and both tables were scanned.
+    -> (the rows, the count of Python map nodes across the jobs)."""
     out: list = []
-    graphs = _executed_graphs(
-        spark, lambda: out.extend(match_records(index, q, run_id=12, top_n=5).collect())
-    )
+    graphs = _executed_graphs(spark, lambda: out.extend(fn()))
     assert out, "the planted query found no candidates"
 
     # a scan of a pinned table outputs all of its attributes; tables
@@ -126,7 +119,56 @@ def test_single_match_plan_shape(spark, small_corpus, index):
                     feeds_index_rows(nodes, children, c) for c in children.get(nid, [])
                 ), f"shuffle of an index table: {desc}"
     assert index_scans >= 2  # the checks above did see both index tables
+    return out, python_nodes
+
+
+def test_single_match_plan_shape(spark, small_corpus, index):
+    """A single-record match reads the index version's pinned tables and
+    never shuffles them, and exactly two Python map nodes run: the
+    query featurizer and the scorer."""
+    files, _ = small_corpus
+    one = files.limit(1).collect()[0]
+    q = amp_io.single_record(
+        spark, "query/repo", "query/" + one["path"], "f" * 40, one["lang"], one["content"]
+    )
+    _, python_nodes = _match_python_nodes(
+        spark, index, lambda: match_records(index, q, run_id=12, top_n=5).collect()
+    )
     assert python_nodes == 2
+
+
+def test_served_match_plan_shape(spark, small_corpus, index, monkeypatch):
+    """A served match featurizes its rows in the driver: a single match
+    runs exactly one Python map node, the scorer, and shuffles no index
+    table. A batch over the row bound takes the DataFrame path (the
+    featurizer and the scorer) and answers with identical rows."""
+    import amp.serve as serve_mod
+
+    files, _ = small_corpus
+    one = files.limit(1).collect()[0]
+    rec = {"repo": "query/repo", "path": "query/" + one["path"], "commit": "f" * 40,
+           "lang": one["lang"], "content": one["content"]}
+    svc = serve_mod.MatchService(spark, index)
+    _, python_nodes = _match_python_nodes(
+        spark, index, lambda: svc.match_single(rec, top_n=5)
+    )
+    assert python_nodes == 1
+
+    batch = [rec, dict(rec, path="other/" + rec["path"])]
+    in_driver, python_nodes = _match_python_nodes(
+        spark, index, lambda: svc.match_batch(batch, top_n=5)
+    )
+    assert python_nodes == 1
+    monkeypatch.setattr(serve_mod, "_LOCAL_FEATURIZE_MAX_ROWS", 1)
+    via_frame, python_nodes = _match_python_nodes(
+        spark, index, lambda: svc.match_batch(batch, top_n=5)
+    )
+    assert python_nodes == 2
+
+    def key(rows):
+        return sorted(tuple(sorted(m.items())) for m in rows)
+
+    assert key(via_frame) == key(in_driver)
 
 
 def _assert_index_state(idx):

@@ -81,6 +81,120 @@ def test_http_roundtrip(spark, small_corpus, service):
         httpd.shutdown()
 
 
+_FIELDS = ("repo", "path", "commit", "lang", "content")
+
+
+def _post(port, path, body):
+    """POST a JSON body -> (status code, decoded JSON reply)."""
+    req = urllib.request.Request(
+        f"http://127.0.0.1:{port}{path}",
+        data=json.dumps(body).encode(),
+        headers={"Content-Type": "application/json"},
+        method="POST",
+    )
+    try:
+        with urllib.request.urlopen(req) as r:
+            return r.status, json.load(r)
+    except urllib.error.HTTPError as e:
+        return e.code, json.load(e)
+
+
+def test_served_matches_equal_dataframe_path(spark, small_corpus, service):
+    """match_single/match_batch answer exactly what match_records answers
+    over a DataFrame of the same rows, on every output column — also for
+    a batch holding an index record under its own id, two rows with one
+    content and a null lang (lang is the one field a record may leave
+    null). An empty batch answers no matches."""
+    from amp import io as amp_io
+    from amp.incremental import match_records
+
+    files, _ = small_corpus
+    q = _one_record(files)
+    own = files.select(*_FIELDS).limit(1).collect()[0].asDict()
+    twin = dict(q, path="twin/" + q["path"])
+    nolang = dict(q, path="nolang/" + q["path"], lang=None)
+
+    def key(matches):
+        return sorted(tuple(sorted(m.items())) for m in matches)
+
+    def want(records):
+        df = spark.createDataFrame(
+            [tuple(r[f] for f in _FIELDS) for r in records],
+            "repo string, path string, commit string, lang string, content string",
+        )
+        return key(amp_io.results_json(match_records(service.index, df, top_n=3)))
+
+    single = key(service.match_single(q, top_n=3))
+    assert single and single == want([q])
+    assert key(service.match_single(nolang, top_n=3)) == want([nolang])
+    batch = [own, q, twin, nolang]
+    got = service.match_batch(batch, top_n=3)
+    assert key(got) == want(batch)
+    assert len({m["query_id"] for m in got}) == 4
+    assert service.match_batch([]) == []
+
+
+@pytest.mark.parametrize("field, value", [
+    ("content", None), ("content", 5), ("path", None), ("repo", 7),
+    ("commit", ["c"]), ("lang", 5),
+], ids=["content-null", "content-int", "path-null", "repo-int", "commit-list", "lang-int"])
+def test_malformed_field_values_are_400(spark, small_corpus, service, field, value):
+    """repo/path/commit/content must be strings and lang a string or
+    null, on single match, batch match and append alike: a violation is
+    a 400 naming the field and counts as an error; the index is left
+    as it was."""
+    from amp.serve import serve
+
+    files, _ = small_corpus
+    good = _one_record(files)
+    bad = dict(good, **{field: value})
+    n0 = service.index.n_records
+    httpd = serve(service, port=0)
+    try:
+        port = httpd.server_address[1]
+        for path, body in (
+            ("/api/v1/match", bad),
+            ("/api/v1/match", [good, bad]),
+            ("/api/v1/index/append", {"records": [bad]}),
+        ):
+            errors = service.metrics["errors"]
+            code, reply = _post(port, path, body)
+            assert code == 400, (path, reply)
+            assert repr(field) in reply["error"], reply
+            assert service.metrics["errors"] == errors + 1
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+    assert service.index.n_records == n0
+
+
+def test_provided_embedding_index_match_is_400(spark, small_corpus, service):
+    """A JSON body cannot carry query vectors, so a provided-embedding
+    index answers single and batch matches 400 with match_records'
+    message."""
+    import copy
+
+    from amp.serve import MatchService, serve
+
+    files, _ = small_corpus
+    index = copy.copy(service.index)
+    index.uses_provided_embeddings = True
+    httpd = serve(MatchService(spark, index), port=0)
+    try:
+        port = httpd.server_address[1]
+        for body in (_one_record(files), [_one_record(files)]):
+            code, reply = _post(port, "/api/v1/match", body)
+            assert code == 400
+            assert reply["error"] == (
+                "match_records: the index was built with provided embeddings; "
+                "pass query_embeddings (record_id, embedding) of the same "
+                "model/dim for the query batch"
+            )
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+
+
 def test_derive_anchors_deterministic_and_usable():
     from amp.reference_parity import calculate_binary_key, derive_anchors
 
