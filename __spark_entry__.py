@@ -293,8 +293,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- similarity search: IVF inverted lists (alternate scale path) ----
     # deterministic build (centroids = 16 lowest-id vectors) -> the
     # assignment + probing + top-k is exactly specified and DuckDB
-    # oracle-checked; swap trained k-means centroids in via the
-    # `centroids` parameter with an identical plan
+    # oracle-checked
     def q_ann_ivf(spark, sf_dir):
         e = _embs(spark, sf_dir)
         return ann.ivf_topk(

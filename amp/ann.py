@@ -217,21 +217,18 @@ def ivf_topk(
     n_probe: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF-style ANN: partition the corpus into inverted lists by
     nearest centroid; queries probe only the ``n_probe`` nearest lists,
     then exact cosine + top-k inside them — work per query is
     ~n * n_probe / n_centroids instead of n.
 
-    BUILD phase: ``centroids`` defaults to the ``n_centroids``
-    lowest-id corpus vectors — a deterministic, oracle-checkable
-    stand-in for trained k-means centroids (swap trained ones in via
-    the parameter; list structure and query plan are identical). The
-    build collects only C tiny rows once. List ASSIGNMENT and query
-    PROBING run as one Arrow-batched numpy kernel each (scan-side, no
-    shuffle): ||v-c||^2 = ||v||^2 - 2 v.C^T + ||c||^2 via a single
-    (batch x C) GEMM, argmin ties to the lowest centroid id — the same
+    BUILD phase: the centroids are the ``n_centroids`` lowest-id corpus
+    vectors, a deterministic, oracle-checkable stand-in for trained
+    k-means centroids. The build collects only C tiny rows once. List
+    ASSIGNMENT and query PROBING run as one Arrow-batched numpy kernel
+    each (scan-side, no shuffle): ||v-c||^2 = ||v||^2 - 2 v.C^T +
+    ||c||^2 via a single (batch x C) GEMM, argmin ties to the lowest centroid id — the same
     ordering as the SQL oracle's per-term sum up to FP ulps (the two
     formulations can disagree only when two centroid distances differ
     by less than the cancellation error, ~1e-13 relative; verified
@@ -241,25 +238,20 @@ def ivf_topk(
     only the centroid-free parts (exact cosine, top-k window) stay as
     JVM expressions. Recall is tunable via n_probe (n_probe ==
     n_centroids degenerates to exact brute force)."""
-    if centroids is None:
-        # the n_centroids LOWEST-ID vectors (not `id < n_centroids`,
-        # which assumes a 0-based contiguous id space)
-        rows = (
-            corpus.select(F.col(id_col).alias("i"), _as_double(vec_col).alias("v"))
-            .orderBy("i")
-            .limit(n_centroids)
-            .collect()
+    # the n_centroids LOWEST-ID vectors (not `id < n_centroids`, which
+    # assumes a 0-based contiguous id space)
+    rows = (
+        corpus.select(F.col(id_col).alias("i"), _as_double(vec_col).alias("v"))
+        .orderBy("i")
+        .limit(n_centroids)
+        .collect()
+    )
+    centroids = [list(r["v"]) for r in rows]
+    if len(centroids) < n_centroids:
+        raise ValueError(
+            f"ivf_topk: corpus has only {len(centroids)} vectors for "
+            f"n_centroids={n_centroids}"
         )
-        centroids = [list(r["v"]) for r in rows]
-        if len(centroids) < n_centroids:
-            raise ValueError(
-                f"ivf_topk: corpus has only {len(centroids)} vectors for "
-                f"n_centroids={n_centroids}"
-            )
-    else:
-        # explicitly-passed (e.g. trained) centroids define the list
-        # count; n_centroids describes only the default build
-        n_centroids = len(centroids)
     if len(centroids) < n_probe:
         raise ValueError("n_probe exceeds centroid count")
 
@@ -347,91 +339,6 @@ def ivf_topk(
         .where(F.col("rnk") <= k)
         .select("query_id", "corpus_id", "cosine", "rnk")
     )
-
-
-def train_ivf_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    n_iters: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_fraction: float | None = None,
-    seed: int = 42,
-    tol: float = 1e-6,
-) -> list[list[float]]:
-    """Seeded Lloyd's k-means over the embedding column — the trainer
-    for ivf_topk's ``centroids=`` hook (public algorithm; the
-    reference's analog is the KMeans anchor training in
-    python-ml/reference_entities.py:1-116).
-
-    Distributed shape: each iteration is ONE Arrow-batched mapInPandas
-    pass emitting per-partition partial sums (centroid, sum-vector,
-    count) — C x P tiny rows collected and reduced on the driver, so
-    the corpus never shuffles and the only driver data is
-    O(n_centroids x partitions x dim). Deterministic given (input,
-    seed): init = the n_centroids lowest-id vectors (the same
-    deterministic stand-in ivf_topk defaults to), numpy argmin
-    tie-breaks to the lowest centroid id, and empty clusters keep their
-    previous centroid. ``sample_fraction`` trains on a seeded sample —
-    the standard move at 10^12 rows (centroid quality needs a
-    representative sample, not the full corpus)."""
-    import pandas as pd
-
-    data = corpus.select(F.col(id_col).alias("i"), _as_double(vec_col).alias("v"))
-    if sample_fraction is not None:
-        data = data.sample(fraction=sample_fraction, seed=seed)
-    init_rows = data.orderBy("i").limit(n_centroids).collect()
-    if len(init_rows) < n_centroids:
-        raise ValueError(
-            f"train_ivf_centroids: corpus has only {len(init_rows)} vectors "
-            f"for n_centroids={n_centroids}"
-        )
-    cents = np.array([list(r["v"]) for r in init_rows], dtype=np.float64)
-    dim = cents.shape[1]
-    out_schema = "c int, s array<double>, n long"
-
-    for _ in range(n_iters):
-        C = cents.copy()
-
-        def fn(batches, C=C):
-            sums = np.zeros((n_centroids, dim), dtype=np.float64)
-            counts = np.zeros(n_centroids, dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                V = np.array([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-                # ||v-c||^2 = ||v||^2 - 2 v.c + ||c||^2 ; argmin over c
-                d2 = (V * V).sum(1)[:, None] - 2.0 * V @ C.T + (C * C).sum(1)[None, :]
-                a = d2.argmin(axis=1)
-                for j in range(n_centroids):
-                    m = a == j
-                    if m.any():
-                        sums[j] += V[m].sum(axis=0)
-                        counts[j] += int(m.sum())
-            yield pd.DataFrame(
-                {
-                    "c": np.arange(n_centroids, dtype=np.int32),
-                    "s": [sums[j] for j in range(n_centroids)],
-                    "n": counts,
-                }
-            )
-
-        partials = data.mapInPandas(fn, out_schema).collect()
-        sums = np.zeros((n_centroids, dim), dtype=np.float64)
-        counts = np.zeros(n_centroids, dtype=np.int64)
-        for r in partials:
-            sums[r["c"]] += np.asarray(r["s"], dtype=np.float64)
-            counts[r["c"]] += r["n"]
-        new = cents.copy()  # empty cluster -> keep previous centroid
-        nz = counts > 0
-        new[nz] = sums[nz] / counts[nz, None]
-        shift = float(np.abs(new - cents).max())
-        cents = new
-        if shift < tol:
-            break
-    # round so the literals folded into the plan are compact and the
-    # same values can be re-embedded in an external (SQL) twin exactly
-    return np.round(cents, 6).tolist()
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:

@@ -98,7 +98,8 @@ def _union_find_pdf(pdf, spark, id_type: str, stats_out: dict | None = None) -> 
         # schema follows the edge id type (string record_ids in the ER
         # pipeline, int64 doc_ids in the documents-table queries)
         return spark.createDataFrame(
-            [], f"record_id {id_type}, cluster_id {id_type}"
+            pd.DataFrame({"record_id": [], "cluster_id": []}),
+            f"record_id {id_type}, cluster_id {id_type}",
         )
 
     both = pd.concat([pdf["u"], pdf["v"]], ignore_index=True)

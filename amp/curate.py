@@ -20,6 +20,7 @@ anywhere.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -110,7 +111,10 @@ def mixture_sample(
         raise ValueError("weights must be positive")
     spark = docs.sparkSession
     wdf = spark.createDataFrame(
-        [(k, float(v)) for k, v in sorted(weights.items())],
+        pd.DataFrame(
+            [(k, float(v)) for k, v in sorted(weights.items())],
+            columns=[strata_col, "_w"],
+        ),
         f"{strata_col} string, _w double",
     )
     counts = (

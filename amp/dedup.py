@@ -353,12 +353,11 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
         # the fingerprint is assembled as a SUM of 1<<j literals into a
         # single signed-long column: j=63 overflows the long literal, so
         # the practical ceiling is 63 bits regardless of the md5 digest
-        # width. Wider fingerprints need the two-long/decimal layout of
-        # simhash64's production variant.
+        # width.
         raise ValueError(
             f"simhash: bits={bits} exceeds the 63-bit signed-long "
             "fingerprint budget (1<<j literals are summed into one long "
-            "column); use simhash64 for the 64-bit production variant"
+            "column)"
         )
     # Round 6 (guide §2.4/§4.2): one Arrow-batched pass instead of
     # explode -> Exchange -> groupBy with ``bits`` conditional sums
@@ -498,43 +497,6 @@ def simhash_near_pairs(docs: DataFrame, bits: int = 16, max_hamming: int = 3) ->
     if n_bands > bits:
         raise ValueError(f"max_hamming+1={n_bands} bands need at least that many bits")
     return _banded_fp_pairs(simhash(docs, bits), "simhash", n_bands, bits, max_hamming)
-
-
-def simhash64(docs: DataFrame) -> DataFrame:
-    """Production-scale 64-bit SimHash: bit j votes per distinct token
-    on bit j of xxhash64(token) (JVM-side, no md5-string parsing).
-    Assembled with bitwise OR of shifted bits — no ANSI overflow on the
-    sign bit. Verified against a brute-force pytest (xxhash64 has no
-    DuckDB twin, so no SQL oracle — the 16-bit md5 variant carries the
-    oracle)."""
-    toks = _distinct_tokens(docs)
-    h = F.xxhash64("token")
-    votes = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftrightunsigned(h, j).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v_{j}")
-            for j in range(64)
-        ]
-    )
-    fp = F.lit(0)
-    for j in range(64):
-        fp = fp.bitwiseOR(
-            F.shiftleft(F.when(F.col(f"v_{j}") > 0, F.lit(1)).otherwise(F.lit(0)).cast("long"), j)
-        )
-    return votes.select("doc_id", fp.alias("simhash64"))
-
-
-def simhash64_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
-    """64-bit near-pairs with 16-bit Hamming bands (max_hamming=3 ->
-    4 bands x 65536 bucket values): the band key space is large enough
-    that bucket occupancy — and therefore join parallelism — scales
-    with the corpus, the property the 16-bit oracle variant trades away
-    for SQL expressibility."""
-    n_bands = max_hamming + 1
-    if n_bands > 64:
-        raise ValueError(f"max_hamming+1={n_bands} bands need at least that many bits")
-    return _banded_fp_pairs(simhash64(docs), "simhash64", n_bands, 64, max_hamming)
 
 
 def _vec_norm(embs: DataFrame, id_col: str, vec_col: str) -> DataFrame:

@@ -420,8 +420,14 @@ def doc_pair_dot_grouped(
     gcols_ddl = ", ".join(
         f"{c} {t}" for c, t in docs.select(*group_cols).dtypes
     )
-    gidtbl = spark.createDataFrame(gid_rows, f"{gcols_ddl}, _gid long, _nt long")
-    tp = spark.createDataFrame(tp_rows, "_gid long, _ti long, _tj long")
+    gidtbl = spark.createDataFrame(
+        pd.DataFrame(gid_rows, columns=[*group_cols, "_gid", "_nt"]),
+        f"{gcols_ddl}, _gid long, _nt long",
+    )
+    tp = spark.createDataFrame(
+        pd.DataFrame(tp_rows, columns=["_gid", "_ti", "_tj"], dtype="int64"),
+        "_gid long, _ti long, _tj long",
+    )
     docmap = (
         paired.join(F.broadcast(gidtbl), list(group_cols))
         .withColumn("_tile", F.pmod(F.xxhash64("doc_id"), F.col("_nt")))

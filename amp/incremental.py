@@ -109,7 +109,8 @@ class MatchIndex:
         items = sorted(self.idf.items())
         if items:
             idf_df = spark.createDataFrame(
-                [(int(k), float(v)) for k, v in items], "token_hash long, idf double"
+                pd.DataFrame(items, columns=["token_hash", "idf"]),
+                "token_hash long, idf double",
             )
             ck.write(idf_df, "index_idf")
         # empty vocabulary: skip the table entirely (a partitioned write

@@ -3,8 +3,9 @@
 The reference's ingest surface is: CSV bulk COPY into a staging table
 (pkg/utils/load_csv.go:72-125), staging -> main insert-select with
 lowercasing (internal/matcher/shared.go:285-291), single-record insert
-(shared.go:191-203), partition delete / truncate for idempotent re-runs
-(shared.go:244-256,294-297), and a JSON result sink (pkg/api/handler.go:190).
+(shared.go:191-203; here `incremental.match_rows`), partition delete /
+truncate for idempotent re-runs (shared.go:244-256,294-297), and a JSON
+result sink (pkg/api/handler.go:190).
 
 Spark-side every one of these is a one-liner around the DataFrame
 reader/writer — batching, vectorization and parallel load come free
@@ -40,15 +41,6 @@ def read_repo_files(spark: SparkSession, path: str, fmt: str = "parquet") -> Dat
     if fmt == "json":
         return spark.read.schema(REPO_FILES_SCHEMA).json(path)
     raise ValueError(f"unsupported format: {fmt}")
-
-
-def single_record(spark: SparkSession, repo: str, path: str, commit: str, lang: str, content: str) -> DataFrame:
-    """S4 (ProcessSingleRecord, shared.go:191-203): a one-row batch.
-    Lowercasing etc. happens in normalize — ingest stays byte-faithful
-    so content_sha is computed over the original bytes."""
-    return spark.createDataFrame(
-        [(repo, path, commit, lang, content)], schema=REPO_FILES_SCHEMA
-    )
 
 
 def write_results(

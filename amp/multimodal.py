@@ -3,11 +3,11 @@ columns with typed metadata.
 
 Pillow is optional, so the decode ladder carries its own pure-stdlib
 codecs: PIL when importable, else real decoders for PNG (RFC 2083
-subset, below), BMP incl. RLE4/RLE8, first-frame + animated GIF and
-WAV/PCM audio (the audio rows ride the same status ladder via a coarse
-8x8 spectrogram grid). Every other payload, sniffed formats such as
-JPEG, FLAC and WebP included, degrades to a deterministic fake or a
-NULL feature with decode_status as data (AMP_FAKE_DECODE). The
+subset, below) and WAV/PCM audio (the audio rows ride the same status
+ladder via a coarse 8x8 spectrogram grid). Every other payload, sniffed
+formats such as JPEG, GIF, BMP, FLAC and WebP included, degrades to a
+deterministic fake or a NULL feature with decode_status as data
+(AMP_FAKE_DECODE). The
 Spark-side plumbing is real and tested: schemas, Arrow batch shapes,
 mapInPandas signatures, partition-size control. On a real cluster only
 the ladder's top rung changes (PIL/libav present); the plan shape is
@@ -239,382 +239,6 @@ def png_encode(gray: np.ndarray, filter_type: int = 0) -> bytes:
     )
 
 
-def _bmp_rle_decode(data: bytes, w: int, h: int, rle4: bool) -> np.ndarray:
-    """BI_RLE8 / BI_RLE4 -> (h, w) uint8 palette indices, rows in
-    BOTTOM-UP file order (the caller flips). Escapes: 0,0 = end of
-    line, 0,1 = end of bitmap, 0,2 = delta move, 0,n>=3 = absolute run
-    of n pixels padded to a 16-bit boundary. Pixels skipped by
-    deltas/early EOL stay 0 (the spec leaves them undefined)."""
-    out = np.zeros((h, w), dtype=np.uint8)
-    x = y = i = 0
-    while i + 1 < len(data):
-        cnt, val = data[i], data[i + 1]
-        i += 2
-        if cnt > 0:  # encoded run
-            if rle4:
-                pair = ((val >> 4) & 0xF, val & 0xF)
-                for j in range(cnt):
-                    if x >= w or y >= h:
-                        raise ValueError("corrupt bmp: RLE overflow")
-                    out[y, x] = pair[j & 1]
-                    x += 1
-            else:
-                if x + cnt > w or y >= h:
-                    raise ValueError("corrupt bmp: RLE overflow")
-                out[y, x:x + cnt] = val
-                x += cnt
-        elif val == 0:  # end of line
-            x, y = 0, y + 1
-        elif val == 1:  # end of bitmap
-            return out
-        elif val == 2:  # delta
-            if i + 1 >= len(data):
-                raise ValueError("corrupt bmp: truncated RLE delta")
-            x += data[i]
-            y += data[i + 1]
-            i += 2
-            if x > w or y > h:
-                raise ValueError("corrupt bmp: RLE delta out of range")
-        else:  # absolute mode: val literal pixels
-            n_bytes = (val + 1) // 2 if rle4 else val
-            n_bytes += n_bytes & 1  # pad to 16-bit boundary
-            if i + n_bytes > len(data):
-                raise ValueError("corrupt bmp: truncated RLE literals")
-            if y >= h or x + val > w:
-                raise ValueError("corrupt bmp: RLE overflow")
-            for j in range(val):
-                b = data[i + (j // 2 if rle4 else j)]
-                out[y, x] = ((b >> 4) & 0xF) if (rle4 and j % 2 == 0) \
-                    else (b & 0xF) if rle4 else b
-                x += 1
-            i += n_bytes
-    raise ValueError("corrupt bmp: RLE stream missing end-of-bitmap")
-
-
-def bmp_decode_gray(payload: bytes) -> np.ndarray:
-    """BMP (BITMAPINFOHEADER) -> float32 (H, W) grayscale in [0, 1]
-    (ITU-R 601 luma for color, palette lookup for indexed). Public
-    format: the Windows DIB layout — 'BM' header, pixel offset at byte
-    10, int32 width/height (negative height = top-down), rows padded
-    to 4 bytes, bottom-up by default. Supports BI_RGB at 4/8/24/32 bpp
-    plus BI_RLE8 and BI_RLE4 run-length compression; raises ValueError
-    outside that subset (bitfields, embedded PNG/JPEG) — callers
-    decide whether to fall back (same contract as png_decode)."""
-    if len(payload) < 54 or payload[:2] != b"BM":
-        raise ValueError("not a BMP (bad signature)")
-    (px_off,) = struct.unpack_from("<I", payload, 10)
-    (dib_size,) = struct.unpack_from("<I", payload, 14)
-    if dib_size < 40:
-        raise ValueError("unsupported bmp: pre-BITMAPINFOHEADER DIB")
-    w, h_raw = struct.unpack_from("<ii", payload, 18)
-    bpp, comp = struct.unpack_from("<HI", payload, 28)
-    if comp not in (0, 1, 2):
-        raise ValueError("unsupported bmp: bitfields/embedded codec")
-    if (comp == 1 and bpp != 8) or (comp == 2 and bpp != 4):
-        raise ValueError("corrupt bmp: RLE type mismatches bit depth")
-    if bpp not in ((4, 8, 24, 32) if comp == 0 else (4, 8)):
-        raise ValueError(f"unsupported bmp: {bpp} bpp")
-    if w <= 0 or h_raw == 0:
-        raise ValueError("corrupt bmp: bad dimensions")
-    top_down = h_raw < 0
-    h = -h_raw if top_down else h_raw
-
-    def palette() -> np.ndarray:
-        # BGRX quads between the DIB header and the pixels
-        pal_off = 14 + dib_size
-        n_pal = (px_off - pal_off) // 4
-        if n_pal <= 0:
-            raise ValueError("corrupt bmp: missing palette")
-        return np.frombuffer(
-            payload, dtype=np.uint8, count=n_pal * 4, offset=pal_off
-        ).reshape(n_pal, 4).astype(np.float64)
-
-    def pal_luma(idx: np.ndarray, pal: np.ndarray) -> np.ndarray:
-        if int(idx.max(initial=0)) >= len(pal):
-            raise ValueError("corrupt bmp: palette index out of range")
-        return (0.114 * pal[idx, 0] + 0.587 * pal[idx, 1]
-                + 0.299 * pal[idx, 2])
-
-    if comp in (1, 2):  # BI_RLE8 / BI_RLE4
-        if top_down:
-            raise ValueError("corrupt bmp: top-down RLE is not allowed")
-        idx = _bmp_rle_decode(payload[px_off:], w, h, rle4=comp == 2)
-        luma = pal_luma(idx[::-1].astype(np.int64), palette())
-        return np.clip(luma / 255.0, 0.0, 1.0).astype(np.float32)
-
-    stride = ((w * bpp + 7) // 8 + 3) & ~3
-    if px_off + stride * h > len(payload):
-        raise ValueError("corrupt bmp: truncated pixel data")
-    rows = np.frombuffer(
-        payload, dtype=np.uint8, count=stride * h, offset=px_off
-    ).reshape(h, stride)
-    if not top_down:
-        rows = rows[::-1]
-    if bpp == 4:
-        nibbles = np.empty((h, stride * 2), dtype=np.uint8)
-        nibbles[:, 0::2] = (rows >> 4) & 0xF
-        nibbles[:, 1::2] = rows & 0xF
-        luma = pal_luma(nibbles[:, :w].astype(np.int64), palette())
-    elif bpp == 8:
-        luma = pal_luma(rows[:, :w].astype(np.int64), palette())
-    else:
-        nb = bpp // 8
-        px = rows[:, : w * nb].reshape(h, w, nb).astype(np.float64)
-        # pixel order is B, G, R (alpha ignored at 32 bpp)
-        luma = 0.114 * px[:, :, 0] + 0.587 * px[:, :, 1] + 0.299 * px[:, :, 2]
-    return np.clip(luma / 255.0, 0.0, 1.0).astype(np.float32)
-
-
-def _gif_lzw_decode(min_code_size: int, data: bytes, expected: int) -> bytes:
-    """GIF-variant LZW (GIF89a spec appendix F): LSB-first variable
-    width codes, clear/end codes, table capped at 12 bits."""
-    clear = 1 << min_code_size
-    end = clear + 1
-    width = min_code_size + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    out = bytearray()
-    prev: bytes | None = None
-    bitpos = 0
-    total_bits = len(data) * 8
-    while bitpos + width <= total_bits and len(out) < expected:
-        byte_i = bitpos >> 3
-        chunk = int.from_bytes(data[byte_i:byte_i + 3], "little")
-        code = (chunk >> (bitpos & 7)) & ((1 << width) - 1)
-        bitpos += width
-        if code == clear:
-            table = list(base)
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == end:
-            break
-        if prev is None:
-            if code >= len(table):
-                raise ValueError("corrupt gif: bad first LZW code")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-            table.append(prev + entry[:1])
-        elif code == len(table):
-            entry = prev + prev[:1]
-            table.append(entry)
-        else:
-            raise ValueError("corrupt gif: LZW code out of range")
-        out += entry
-        prev = entry
-        # the decoder's table lags the encoder's by one entry (the
-        # entry for the code just read is created by the NEXT code), so
-        # the width bump comes one slot early
-        if len(table) == (1 << width) - 1 and width < 12:
-            width += 1
-    if len(out) < expected:
-        raise ValueError("corrupt gif: truncated LZW stream")
-    return bytes(out[:expected])
-
-
-def gif_decode_gray(payload: bytes) -> np.ndarray:
-    """GIF87a/89a -> float32 (H, W) grayscale in [0, 1] of the FIRST
-    image frame (palette-mapped ITU-R 601 luma), at the frame's own
-    dimensions — the right summary input for an 8x8 feature grid.
-    Handles global/local color tables, interlacing and extension
-    blocks; raises ValueError outside that subset (same contract as
-    png_decode / bmp_decode_gray)."""
-    if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    packed = payload[10]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x7)
-        if pos + 3 * n > len(payload):
-            raise ValueError("corrupt gif: truncated color table")
-        gct = np.frombuffer(
-            payload, dtype=np.uint8, count=3 * n, offset=pos
-        ).reshape(n, 3)
-        pos += 3 * n
-    while pos < len(payload):
-        b0 = payload[pos]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension: label + data sub-blocks
-            pos += 2
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"corrupt gif: unknown block 0x{b0:02x}")
-        # image descriptor
-        if pos + 11 > len(payload):
-            raise ValueError("corrupt gif: truncated image descriptor")
-        w, h = struct.unpack_from("<HH", payload, pos + 5)
-        ipacked = payload[pos + 9]
-        pos += 10
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x7)
-            if pos + 3 * n > len(payload):
-                raise ValueError("corrupt gif: truncated color table")
-            pal = np.frombuffer(
-                payload, dtype=np.uint8, count=3 * n, offset=pos
-            ).reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("corrupt gif: no color table")
-        if w == 0 or h == 0:
-            raise ValueError("corrupt gif: empty frame")
-        min_code = payload[pos]
-        pos += 1
-        lzw = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            ln = payload[pos]
-            lzw += payload[pos + 1:pos + 1 + ln]
-            pos += 1 + ln
-        idx = np.frombuffer(
-            _gif_lzw_decode(min_code, bytes(lzw), w * h), dtype=np.uint8
-        ).astype(np.int64)
-        if int(idx.max(initial=0)) >= len(pal):
-            raise ValueError("corrupt gif: palette index out of range")
-        rows = idx.reshape(h, w)
-        if ipacked & 0x40:  # interlaced: 4-pass row order
-            out_rows = np.empty_like(rows)
-            order = (
-                list(range(0, h, 8)) + list(range(4, h, 8))
-                + list(range(2, h, 4)) + list(range(1, h, 2))
-            )
-            for src_i, dst_i in enumerate(order):
-                out_rows[dst_i] = rows[src_i]
-            rows = out_rows
-        p = pal.astype(np.float64)
-        luma = (0.299 * p[rows, 0] + 0.587 * p[rows, 1]
-                + 0.114 * p[rows, 2])
-        return np.clip(luma / 255.0, 0.0, 1.0).astype(np.float32)
-    raise ValueError("corrupt gif: no image frame")
-
-
-def gif_decode_frames(payload: bytes,
-                      max_frames: int = 0) -> tuple[list, list]:
-    """Animated GIF87a/89a -> (frames, delays_ms): every animation
-    frame composited onto the LOGICAL SCREEN canvas per the spec's
-    graphic-control semantics — frame offsets (left/top), per-frame
-    local palettes, transparency (transparent pixels leave the canvas
-    unchanged), and disposal methods 0/1 (keep), 2 (restore the frame
-    region to the background color) and 3 (restore the previous
-    canvas). Frames are float32 (H, W) luma grids in [0, 1]; delays
-    are milliseconds with the 0-delay convention mapped to 100 ms
-    (the browser-compatible default, documented not inferred).
-    ``max_frames`` > 0 stops early — timestamp sampling rarely needs
-    the whole animation. Raises ValueError outside the subset (same
-    contract as gif_decode_gray, which returns the FIRST frame at the
-    frame's own dims for the still-image ladder)."""
-    if len(payload) < 13 or payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (bad signature)")
-    sw, sh = struct.unpack_from("<HH", payload, 6)
-    if sw == 0 or sh == 0:
-        raise ValueError("corrupt gif: empty logical screen")
-    packed = payload[10]
-    bg_index = payload[11]
-    pos = 13
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x7)
-        if pos + 3 * n > len(payload):
-            raise ValueError("corrupt gif: truncated color table")
-        gct = np.frombuffer(
-            payload, dtype=np.uint8, count=3 * n, offset=pos
-        ).reshape(n, 3)
-        pos += 3 * n
-    bg_rgb = (gct[bg_index] if gct is not None and bg_index < len(gct)
-              else np.zeros(3, np.uint8))
-    canvas = np.broadcast_to(bg_rgb, (sh, sw, 3)).copy()
-    frames: list[np.ndarray] = []
-    delays: list[int] = []
-    disposal, transparent, delay_cs = 0, None, 0
-    while pos < len(payload):
-        b0 = payload[pos]
-        if b0 == 0x3B:  # trailer
-            break
-        if b0 == 0x21:  # extension
-            if pos + 2 >= len(payload):
-                raise ValueError("corrupt gif: truncated extension")
-            label = payload[pos + 1]
-            pos += 2
-            if label == 0xF9 and payload[pos] >= 4:
-                gce = payload[pos + 1:pos + 5]
-                if len(gce) < 4:
-                    raise ValueError("corrupt gif: truncated GCE")
-                disposal = (gce[0] >> 2) & 0x7
-                delay_cs = gce[1] | (gce[2] << 8)
-                transparent = gce[3] if gce[0] & 1 else None
-            while pos < len(payload) and payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-            continue
-        if b0 != 0x2C:
-            raise ValueError(f"corrupt gif: unknown block 0x{b0:02x}")
-        if pos + 11 > len(payload):
-            raise ValueError("corrupt gif: truncated image descriptor")
-        left, top, fw, fh = struct.unpack_from("<HHHH", payload, pos + 1)
-        ipacked = payload[pos + 9]
-        pos += 10
-        pal = gct
-        if ipacked & 0x80:
-            n = 2 << (ipacked & 0x7)
-            if pos + 3 * n > len(payload):
-                raise ValueError("corrupt gif: truncated color table")
-            pal = np.frombuffer(
-                payload, dtype=np.uint8, count=3 * n, offset=pos
-            ).reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("corrupt gif: no color table")
-        if fw == 0 or fh == 0 or left + fw > sw or top + fh > sh:
-            raise ValueError("corrupt gif: frame outside logical screen")
-        min_code = payload[pos]
-        pos += 1
-        lzw = bytearray()
-        while pos < len(payload) and payload[pos] != 0:
-            ln = payload[pos]
-            lzw += payload[pos + 1:pos + 1 + ln]
-            pos += 1 + ln
-        pos += 1  # block terminator
-        idx = np.frombuffer(
-            _gif_lzw_decode(min_code, bytes(lzw), fw * fh), dtype=np.uint8
-        ).astype(np.int64).reshape(fh, fw)
-        if ipacked & 0x40:  # interlaced
-            order = (
-                list(range(0, fh, 8)) + list(range(4, fh, 8))
-                + list(range(2, fh, 4)) + list(range(1, fh, 2))
-            )
-            deint = np.empty_like(idx)
-            for src_i, dst_i in enumerate(order):
-                deint[dst_i] = idx[src_i]
-            idx = deint
-        if int(idx.max(initial=0)) >= len(pal):
-            raise ValueError("corrupt gif: palette index out of range")
-        prev = canvas.copy() if disposal == 3 else None
-        region = canvas[top:top + fh, left:left + fw]
-        mask = (idx != transparent) if transparent is not None \
-            else np.ones((fh, fw), dtype=bool)
-        region[mask] = pal[idx[mask]]
-        luma = (0.299 * canvas[:, :, 0].astype(np.float64)
-                + 0.587 * canvas[:, :, 1] + 0.114 * canvas[:, :, 2])
-        frames.append(
-            np.clip(luma / 255.0, 0.0, 1.0).astype(np.float32))
-        delays.append(delay_cs * 10 if delay_cs > 0 else 100)
-        if disposal == 2:
-            canvas[top:top + fh, left:left + fw] = bg_rgb
-        elif disposal == 3:
-            canvas = prev
-        disposal, transparent, delay_cs = 0, None, 0
-        if max_frames and len(frames) >= max_frames:
-            return frames, delays
-    if not frames:
-        raise ValueError("corrupt gif: no image frame")
-    return frames, delays
-
-
 def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
     """RIFF/WAVE PCM -> (mono float32 samples in [-1, 1], sample_rate).
     Public format: 'fmt ' + 'data' chunks; supports integer PCM
@@ -622,7 +246,7 @@ def wav_decode(payload: bytes) -> tuple[np.ndarray, int]:
     IEEE float (format 3: 32/64-bit). Multi-channel audio is downmixed
     by mean. Compressed formats (ADPCM, mu-law, MP3-in-WAV) raise
     ValueError("unsupported ..."), torn files "corrupt ..." — the
-    same status contract as the image decoders."""
+    same status contract as the image decoder."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("corrupt wav: bad RIFF/WAVE header")
     pos = 12
@@ -783,12 +407,12 @@ def _decode_image_status(
       1. WAV audio via the spectrogram grid (before PIL, which has no
          audio path);
       2. Pillow (any format it knows) when importable;
-      3. the pure-stdlib PNG, BMP and GIF decoders in this module
-         (real decode, no dependency);
-      4. any other payload (JPEG, FLAC and WebP included, which are
-         sniffed but have no stdlib decoder) gets the deterministic
-         content-derived fake when allowed, else a NULL feature with
-         status unsupported. A failing real decoder yields the fake,
+      3. the pure-stdlib PNG decoder in this module (real decode, no
+         dependency);
+      4. any other payload (JPEG, GIF, BMP, FLAC and WebP included,
+         which are sniffed but have no stdlib decoder) gets the
+         deterministic content-derived fake when allowed, else a NULL
+         feature with status unsupported. A failing real decoder yields the fake,
          or corrupt/unsupported."""
     raw = payload or b""
     fmt = sniff_format(raw)
@@ -821,17 +445,6 @@ def _decode_image_status(
             if allow_fake:
                 return _fake_grid(raw), "fake", fmt
             return None, "corrupt", fmt
-    if fmt in ("bmp", "gif"):
-        # DIB incl. RLE / first-frame GIF; anything the decoder calls
-        # "unsupported" (BMP bitfields) falls through as that status
-        dec = bmp_decode_gray if fmt == "bmp" else gif_decode_gray
-        try:
-            return _resize8(dec(raw)), "real", fmt
-        except Exception as e:
-            if allow_fake:
-                return _fake_grid(raw), "fake", fmt
-            status = "unsupported" if "unsupported" in str(e) else "corrupt"
-            return None, status, fmt
     # no real decoder for this format in the current ladder
     if allow_fake:
         return _fake_grid(raw), "fake", fmt
@@ -908,104 +521,6 @@ def decode_metrics(features: DataFrame) -> DataFrame:
     return features.groupBy("decode_status", "fmt").agg(F.count("*").alias("n"))
 
 
-FRAME_FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.StringType(), False),
-        T.StructField("frame_ts_ms", T.LongType(), False),
-        T.StructField("frame_index", T.IntegerType(), True),
-        T.StructField("feature", T.ArrayType(T.FloatType()), True),
-        T.StructField("decode_status", T.StringType(), False),
-        T.StructField("fmt", T.StringType(), False),
-    ]
-)
-
-
-def frame_sample(media: DataFrame, every_ms: int = 1000,
-                 decode: bool = False) -> DataFrame:
-    """Video/animation frame sampling: one row per sampled timestamp
-    (explode over duration metadata — output rows = duration/interval,
-    the real cost model). With decode=False (default) the payload rides
-    along undecoded. With decode=True a second mapInPandas stage
-    REALLY decodes animated GIFs (gif_decode_frames: compositing,
-    disposal, transparency) and maps each timestamp to its frame via
-    the cumulative delays; other containers (mp4 etc.) have no
-    pure-stdlib decoder and stay fake/unsupported-as-data. The decode
-    is memoized per media_id within each Arrow batch — explode keeps a
-    payload's rows adjacent (no shuffle between the two stages), so
-    each animation decodes once, not once per sampled frame."""
-    sampled = (
-        media.where(F.col("kind") == "video")
-        .withColumn(
-            "frame_ts_ms",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ),
-        )
-        .select("media_id", "frame_ts_ms", "payload")
-    )
-    if not decode:
-        return sampled
-    allow_fake = _fake_decode_allowed()  # driver-side, shipped in closure
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            memo: dict = {}
-            ids, tss, fidx, feats, statuses, fmts = [], [], [], [], [], []
-            for mid, ts, payload in zip(
-                pdf["media_id"], pdf["frame_ts_ms"], pdf["payload"]
-            ):
-                if mid not in memo:
-                    raw = bytes(payload) if payload is not None else b""
-                    fmt = sniff_format(raw)
-                    if fmt == "gif":
-                        try:
-                            frames, delays = gif_decode_frames(raw)
-                            ends = np.cumsum(delays)
-                            memo[mid] = ("real", fmt,
-                                         [_resize8(f) for f in frames], ends)
-                        except Exception:
-                            memo[mid] = ("corrupt", fmt, None, None)
-                    else:
-                        memo[mid] = ("unsupported", fmt, None, None)
-                status, fmt, grids, ends = memo[mid]
-                ids.append(mid)
-                tss.append(int(ts))
-                fmts.append(fmt)
-                if status == "real":
-                    i = min(int(np.searchsorted(ends, int(ts), side="right")),
-                            len(grids) - 1)
-                    fidx.append(i)
-                    feats.append(grids[i].reshape(-1))
-                    statuses.append("real")
-                elif allow_fake:
-                    # deterministic per-(payload, ts) fake frame
-                    raw = bytes(payload) if payload is not None else b""
-                    fidx.append(None)
-                    feats.append(_fake_grid(
-                        raw + str(int(ts)).encode()).reshape(-1))
-                    statuses.append("fake")
-                else:
-                    fidx.append(None)
-                    feats.append(None)
-                    statuses.append(status)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "frame_ts_ms": np.array(tss, dtype=np.int64),
-                    "frame_index": pd.array(fidx, dtype="Int32"),
-                    "feature": feats,
-                    "decode_status": statuses,
-                    "fmt": fmts,
-                }
-            )
-
-    return sampled.mapInPandas(fn, FRAME_FEATURE_SCHEMA)
-
-
 def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
     """Deterministic fake media table for tests."""
     rows = []
@@ -1041,4 +556,7 @@ def synth_media(spark, n: int = 64, seed: int = 42) -> DataFrame:
                 "duration_ms": 5000 + i * 100 if kind != "image" else None,
             }
         )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)
+    pdf = pd.DataFrame(rows).astype(
+        {"width": "Int32", "height": "Int32", "duration_ms": "Int32"}
+    )
+    return spark.createDataFrame(pdf, schema=MEDIA_SCHEMA)

@@ -357,7 +357,19 @@ def make_handler(service: MatchService):
         MAX_BODY_BYTES = 8 * 1024 * 1024
 
         def do_POST(self):
-            n = int(self.headers.get("Content-Length", "0"))
+            try:
+                n = int(self.headers.get("Content-Length", "0"))
+            except ValueError:
+                n = -1
+            if n < 0:
+                # rfile.read(-1) would block this pool worker until the
+                # client hangs up: answer without reading the body
+                with service._lock:
+                    service.metrics["errors"] += 1
+                self._send(400, {
+                    "error": "Content-Length must be a non-negative integer"
+                })
+                return
             if n > self.MAX_BODY_BYTES:
                 self._send(413, {
                     "error": f"body too large ({n} bytes; cap "

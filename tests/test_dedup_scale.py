@@ -51,17 +51,6 @@ def test_simhash16_banding_equals_bruteforce(spark):
     assert len(want) > 0  # non-vacuous
 
 
-def test_simhash64_banding_equals_bruteforce(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    fps = [(r.doc_id, r.simhash64) for r in dedup.simhash64(docs).collect()]
-    # 64-bit fingerprints of distinct docs rarely land within hamming 3;
-    # widen the radius so the completeness check bites (4 bands allow
-    # max_hamming=3; use exactly that)
-    want = _brute_hamming_pairs(fps, 3)
-    got = _pairs(dedup.simhash64_near_pairs(docs, max_hamming=3))
-    assert got == want
-
-
 # ---------------------------------------------------------------------------
 # embedding near-dup: tiled exact kernel + LSH scale path
 # ---------------------------------------------------------------------------
@@ -265,43 +254,3 @@ def test_ngram_jaccard_zero_overlap_pairs_reported(spark):
     got = {(r.left_id, r.right_id): r.jaccard for r in dedup.ngram_jaccard(docs, pairs).collect()}
     assert got[(1, 2)] == 0.0
     assert abs(got[(1, 3)] - round(2 / 4, 6)) < 1e-9
-
-
-def test_ivf_trained_centroids_beat_lowest_id_standin(spark):
-    """Seeded Lloyd's k-means (train_ivf_centroids) feeding the
-    centroids= hook: at EQUAL n_probe, trained centroids recover at
-    least as much planted-cluster recall as the lowest-id stand-in,
-    and clear the floor the stand-in may miss at tight probing."""
-    rng = np.random.RandomState(17)
-    mat = _planted_clusters(rng, n_clusters=16, per=10, dim=16, noise=0.05)
-    corpus = _vec_df(spark, mat)
-    queries = corpus.where(F.col("vec_id") % 10 == 3)
-    truth = {
-        (r.query_id, r.corpus_id)
-        for r in ann.brute_force_topk(corpus, queries, k=5).collect()
-    }
-    trained = ann.train_ivf_centroids(corpus, n_centroids=16, n_iters=10)
-    assert len(trained) == 16 and len(trained[0]) == 16
-
-    def recall(cents):
-        got = {
-            (r.query_id, r.corpus_id)
-            for r in ann.ivf_topk(
-                corpus, queries, k=5, n_probe=2, centroids=cents
-            ).collect()
-        }
-        return len(got & truth) / len(truth)
-
-    standin_cents = [list(map(float, mat[i])) for i in range(16)]
-    r_trained, r_standin = recall(trained), recall(standin_cents)
-    assert r_trained >= r_standin, (r_trained, r_standin)
-    assert r_trained >= 0.9, f"trained recall={r_trained:.3f}"
-
-
-def test_ivf_trainer_deterministic(spark):
-    rng = np.random.RandomState(19)
-    mat = _planted_clusters(rng, n_clusters=8, per=6, dim=8, noise=0.1)
-    corpus = _vec_df(spark, mat)
-    a = ann.train_ivf_centroids(corpus, n_centroids=8, n_iters=5)
-    b = ann.train_ivf_centroids(corpus, n_centroids=8, n_iters=5)
-    assert a == b

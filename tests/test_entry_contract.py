@@ -100,22 +100,40 @@ def test_media_stack_unreachable_from_engine():
     assert not hits, hits
 
 
+# Engine code that only tests reach, and why it stays. An entry is a
+# whole module ("streaming") or one top-level name ("io.read_repo_files").
+KEPT_FOR_TESTS = {
+    "streaming": "a declared capability: micro-batch ingest into an index",
+    "address_pipeline": "reference address-matching semantics (COVERAGE F-rows)",
+    "reference_parity": "reference algorithm twins (COVERAGE F-rows)",
+    "multimodal": "media plumbing, kept until its last removal slice",
+    "normalize.normalize_jvm": "the Catalyst twin the pandas normalize kernel is checked against",
+    "scoring.jaro_winkler": "the spec the vectorized Jaro-Winkler kernel is tested against",
+    "scoring.levenshtein": "the spec the vectorized Levenshtein kernel is tested against",
+    "io.read_repo_files": "CSV/JSON ingest (COVERAGE S1)",
+}
+
+
 def test_no_orphan_top_level_names_in_engine():
-    """Every top-level def/class in amp/ is named somewhere else in the
-    repo's code or used again in its own module: a helper nothing calls
-    is dead weight to delete, not to keep around. The callers that count
-    are the engine, its scripts, tests and benchmark harness, the driver
-    entry and the bench mains."""
-    pats = ["amp/*.py", "scripts/**/*.py", "tests/**/*.py", "perfbench/**/*.py",
+    """Every top-level def/class in amp/ is reached by code that is not
+    a test: the engine itself (used again in its own module or named in
+    another), its scripts, the benchmark harness, the driver entry or
+    the bench mains. Code only tests reach is dead weight to delete,
+    unless KEPT_FOR_TESTS names it with a reason; an entry that no
+    longer exempts anything must go too."""
+    pats = ["amp/*.py", "scripts/**/*.py", "perfbench/**/*.py",
             "__spark_entry__.py", "bench*.py"]
     texts = {}
     for pat in pats:
         for p in glob.glob(os.path.join(ROOT, pat), recursive=True):
+            if "tests" in os.path.relpath(p, ROOT).split(os.sep):
+                continue
             with open(p) as fh:
                 texts[p] = fh.read()
     engine = [p for p in texts if os.path.dirname(p) == os.path.join(ROOT, "amp")]
-    orphans = []
+    orphans, kept_used = [], set()
     for path in engine:
+        mod = os.path.basename(path)[:-3]
         tree = ast.parse(texts[path], path)
         used_here = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)} | {
             n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)
@@ -127,7 +145,59 @@ def test_no_orphan_top_level_names_in_engine():
             if name in used_here:
                 continue
             word = re.compile(rf"\b{re.escape(name)}\b")
-            if not any(word.search(t) for q, t in texts.items() if q != path):
+            if any(word.search(t) for q, t in texts.items() if q != path):
+                continue
+            kept = {mod, f"{mod}.{name}"} & set(KEPT_FOR_TESTS)
+            if kept:
+                kept_used |= kept
+            else:
                 orphans.append(f"{os.path.relpath(path, ROOT)}:{node.lineno} {name}")
     assert len(engine) > 20
     assert not orphans, orphans
+    assert kept_used == set(KEPT_FOR_TESTS), set(KEPT_FOR_TESTS) - kept_used
+
+
+def _list_bound_names(scope: ast.AST) -> set[str]:
+    """Names a scope binds to a list literal or list comprehension,
+    including through tuple unpacking (``a, b = [], []``)."""
+    lists = (ast.List, ast.ListComp)
+    names = set()
+    for node in ast.walk(scope):
+        if isinstance(node, ast.Assign):
+            pairs = [(t, node.value) for t in node.targets]
+        elif isinstance(node, ast.AnnAssign):
+            pairs = [(node.target, node.value)]
+        else:
+            continue
+        for target, value in pairs:
+            if isinstance(target, ast.Tuple) and isinstance(value, ast.Tuple):
+                pairs += list(zip(target.elts, value.elts))
+            elif isinstance(target, ast.Name) and isinstance(value, lists):
+                names.add(target.id)
+    return names
+
+
+def test_engine_frames_are_not_built_from_python_lists():
+    """A DataFrame of a Python list is planned through a plain-RDD
+    Python worker pool of its own (a daemon plus one worker per core);
+    the same frame built from pandas is a local relation that needs no
+    Python worker. Every engine-local frame is built from pandas."""
+    hits = []
+    for path in sorted(glob.glob(os.path.join(ROOT, "amp", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        fns = [n for n in ast.walk(tree)
+               if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))]
+        for fn in fns:
+            bound = _list_bound_names(fn)
+            for node in ast.walk(fn):
+                if not (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createDataFrame" and node.args):
+                    continue
+                arg = node.args[0]
+                if isinstance(arg, (ast.List, ast.ListComp)) or (
+                    isinstance(arg, ast.Name) and arg.id in bound
+                ):
+                    hits.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
+    assert not hits, sorted(set(hits))

@@ -2,12 +2,21 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from amp import io as amp_io
 from amp.config import DEFAULT_CONFIG as CFG
 from amp.incremental import build_index, match_records
+
+
+def _query_frame(spark, src):
+    """One query row resubmitting ``src``'s content under a new key,
+    built from pandas (a local relation, no RDD worker pool)."""
+    row = {"repo": "query/repo", "path": "query/" + src["path"],
+           "commit": "f" * 40, "lang": src["lang"], "content": src["content"]}
+    return spark.createDataFrame(pd.DataFrame([row]), amp_io.REPO_FILES_SCHEMA)
 
 
 @pytest.fixture(scope="module")
@@ -21,9 +30,7 @@ def test_match_single_record_finds_its_duplicate(spark, small_corpus, index):
     must rank its own index copy first with a saturated score."""
     files, _ = small_corpus
     one = files.limit(1).collect()[0]
-    q = amp_io.single_record(
-        spark, "query/repo", "query/" + one["path"], "f" * 40, one["lang"], one["content"]
-    )
+    q = _query_frame(spark, one)
     out = match_records(index, q, run_id=7, top_n=5).collect()
     assert out, "no candidates returned"
     best = min(out, key=lambda r: r["rank"])
@@ -128,9 +135,7 @@ def test_single_match_plan_shape(spark, small_corpus, index):
     query featurizer and the scorer."""
     files, _ = small_corpus
     one = files.limit(1).collect()[0]
-    q = amp_io.single_record(
-        spark, "query/repo", "query/" + one["path"], "f" * 40, one["lang"], one["content"]
-    )
+    q = _query_frame(spark, one)
     _, python_nodes = _match_python_nodes(
         spark, index, lambda: match_records(index, q, run_id=12, top_n=5).collect()
     )
@@ -248,10 +253,7 @@ def test_append_then_match_finds_new_record(spark, small_corpus):
     idx1 = append_records(idx0, extra, policy="frozen")
 
     one = extra.limit(1).collect()[0]
-    q = amp_io.single_record(
-        spark, "query/repo", "query/" + one["path"], "f" * 40, one["lang"],
-        one["content"],
-    )
+    q = _query_frame(spark, one)
     out = match_records(idx1, q, run_id=9, top_n=5).collect()
     assert out, "appended record must be findable"
     best = min(out, key=lambda r: r["rank"])
@@ -355,10 +357,7 @@ def test_remove_then_match_no_longer_finds_record(spark, small_corpus):
         (F.col("repo") == victim["repo"]) & (F.col("path") == victim["path"])
         & (F.col("commit") == victim["commit"])
     ).collect()[0]
-    q = amp_io.single_record(
-        spark, "query/repo", "query/" + src["path"], "f" * 40,
-        src["lang"], src["content"],
-    )
+    q = _query_frame(spark, src)
     out = match_records(idx1, q, run_id=11, top_n=5).collect()
     gone = set(victim["ids"])
     assert all(r["candidate_id"] not in gone for r in out)

@@ -348,6 +348,35 @@ def test_concurrent_requests_share_one_pipeline_run(
         httpd.shutdown()
 
 
+def test_malformed_content_length_is_400(spark, small_corpus, service):
+    """A non-integer or negative Content-Length is answered 400 naming
+    the header, counted as an error, and the body is never read: a
+    read(-1) would hold the pool worker until the client hangs up."""
+    import socket
+
+    from amp.serve import serve
+
+    httpd = serve(service, port=0)
+    try:
+        port = httpd.server_address[1]
+        errors0 = service.metrics["errors"]
+        for value in ("abc", "-1"):
+            with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+                s.sendall(
+                    b"POST /api/v1/match HTTP/1.1\r\nHost: localhost\r\n"
+                    + f"Content-Length: {value}\r\n\r\n".encode()
+                )
+                reply = b""
+                while chunk := s.recv(4096):
+                    reply += chunk
+            head, _, body = reply.partition(b"\r\n\r\n")
+            assert head.split(b" ")[1:2] == [b"400"], (value, reply)
+            assert "Content-Length" in json.loads(body)["error"], value
+        assert service.metrics["errors"] == errors0 + 2
+    finally:
+        httpd.shutdown()
+
+
 def test_bad_limit_types_are_400_not_500(spark, small_corpus, service):
     """null/list/dict 'limit' values are client errors: the handler must
     classify them as 400, not fall through to the generic 500."""

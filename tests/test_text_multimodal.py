@@ -3,10 +3,9 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from amp import text
-from amp.multimodal import extract_features, frame_sample, synth_media
+from amp.multimodal import extract_features, synth_media
 
 
 @pytest.fixture(scope="module")
@@ -66,9 +65,9 @@ def test_multimodal_feature_shapes(spark):
 def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
     """Format policy as DATA (magic-byte sniff + per-row decode_status +
     counted metrics) over a mixed PNG / corrupt-PNG / JPEG-stub /
-    FLAC-stub / WebP-stub / garbage corpus with fakes DISALLOWED: nothing
-    raises, statuses and feature nullability are exact, and
-    decode_metrics counts match."""
+    FLAC-stub / WebP-stub / GIF / BMP / garbage corpus with fakes
+    DISALLOWED: nothing raises, statuses and feature nullability are
+    exact, and decode_metrics counts match."""
     import numpy as np
 
     from amp import multimodal as mm
@@ -83,6 +82,12 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
                   + b"VP8 " + _struct.pack("<I", 4) + b"\x00" * 4)
     lossless_webp = (b"RIFF" + _struct.pack("<I", 17) + b"WEBP"
                      + b"VP8L" + _struct.pack("<I", 5) + b"\x2f" + b"\x00" * 4)
+    # well-formed 1x1 images: a decoder would read them, the ladder has none
+    gif = (b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
+           b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02D\x01\x00;")
+    bmp = (b"BM" + _struct.pack("<IHHI", 58, 0, 0, 54)
+           + _struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 0, 0, 0, 0)
+           + b"\x80\x80\x80\x00")
     rows = [
         ("ok0", good_png),
         ("ok1", mm.png_encode(np.zeros((4, 4), np.uint8))),
@@ -91,6 +96,8 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
         ("flac0", b"fLaC" + b"\x00" * 32),                # FLAC stub
         ("webp0", lossy_webp),                             # lossy VP8 stub
         ("webp1", lossless_webp),                          # lossless VP8L stub
+        ("gif0", gif),                                     # 1x1 GIF89a
+        ("bmp0", bmp),                                     # 1x1 24-bit BMP
         ("junk0", b"not an image at all"),
     ]
     media = spark.createDataFrame(
@@ -123,6 +130,11 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
             assert feats[k]["fmt"] == "webp"
             assert feats[k]["decode_status"] == "unsupported"
             assert feats[k]["feature"] is None
+        # GIF and BMP likewise: sniffed, no stdlib decoder
+        for k, fmt in (("gif0", "gif"), ("bmp0", "bmp")):
+            assert feats[k]["fmt"] == fmt
+            assert feats[k]["decode_status"] == "unsupported"
+            assert feats[k]["feature"] is None
         assert feats["junk0"]["decode_status"] == "unsupported"
         assert feats["junk0"]["fmt"] == "unknown"
         m = {
@@ -134,6 +146,8 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
         assert m[("unsupported", "flac")] == 1
         assert m[("unsupported", "webp")] == 2
         assert ("real", "webp") not in m
+        assert m[("unsupported", "gif")] == 1
+        assert m[("unsupported", "bmp")] == 1
         assert m[("unsupported", "unknown")] == 1
 
     # with fakes allowed every row gets a feature and a fake/real status
@@ -141,16 +155,10 @@ def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
     feats2 = mm.extract_features(media).collect()
     assert all(r["feature"] is not None for r in feats2)
     assert {r["decode_status"] for r in feats2} <= {"real", "fake"}
-
-
-def test_frame_sample_row_counts(spark):
-    media = synth_media(spark, 12)
-    fs = frame_sample(media, every_ms=1000)
-    rows = fs.groupBy("media_id").count().collect()
-    vids = {r["media_id"]: r["duration_ms"] for r in media.where(F.col("kind") == "video").collect()}
-    for r in rows:
-        dur = vids[r["media_id"]]
-        assert r["count"] == (dur - 1) // 1000 + 1
+    if not mm.HAVE_PIL:
+        fake = {r["media_id"]: r for r in feats2}
+        assert fake["gif0"]["decode_status"] == "fake"
+        assert fake["bmp0"]["decode_status"] == "fake"
 
 
 def test_decode_real_path_when_pil_else_fake(spark):
@@ -295,84 +303,6 @@ def test_decode_corrupt_png_raises_without_fake():
     g1 = mm._decode_image(bad, allow_fake=True)
     g2 = mm._decode_image(bad, allow_fake=True)
     assert g1.shape == (8, 8) and (g1 == g2).all()
-
-
-def test_frame_sample_real_gif_decode(spark, monkeypatch):
-    """frame_sample(decode=True): animated GIFs REALLY decode — each
-    sampled timestamp maps to its frame via the cumulative delays —
-    while undecodable containers stay status-as-data."""
-    import struct as _struct
-
-    import numpy as np
-
-    from amp import multimodal as mm
-
-    monkeypatch.setenv("AMP_FAKE_DECODE", "0")
-    # two frames, 200 ms each, visually distinct
-    pal = b"".join(bytes((v, v, v)) for v in range(256))
-    f0 = np.full((4, 4), 40, np.uint8)
-    f1 = np.full((4, 4), 220, np.uint8)
-
-    def lzw_trivial(data: bytes) -> bytes:
-        # clear-per-pixel appendix-F floor encoder, 8-bit codes
-        acc, nbits, out = 0, 0, bytearray()
-        for code in [256] + [c for b in data for c in (b, 256)] + [257]:
-            acc |= code << nbits
-            nbits += 9
-            while nbits >= 8:
-                out.append(acc & 0xFF)
-                acc >>= 8
-                nbits -= 8
-        if nbits:
-            out.append(acc & 0xFF)
-        return bytes(out)
-
-    body = bytearray(b"GIF89a" + _struct.pack("<HH", 4, 4)
-                     + bytes((0xF7, 0, 0)) + pal)
-    for img in (f0, f1):
-        raw = lzw_trivial(img.tobytes())
-        body += bytes((0x21, 0xF9, 4, 0x04, 20, 0, 0, 0))  # 200 ms, keep
-        body += b"\x2c" + _struct.pack("<HHHH", 0, 0, 4, 4) + b"\x00"
-        body += bytes((8,))
-        for i in range(0, len(raw), 255):
-            part = raw[i:i + 255]
-            body += bytes((len(part),)) + part
-        body += b"\x00"
-    body += b"\x3b"
-    gif = bytes(body)
-
-    media = spark.createDataFrame(
-        [
-            {"media_id": "anim0", "kind": "video", "mime": "image/gif",
-             "payload": gif, "width": 4, "height": 4, "duration_ms": 400},
-            {"media_id": "vid0", "kind": "video", "mime": "video/mp4",
-             "payload": b"\x00\x00\x00\x18ftypmp42", "width": None,
-             "height": None, "duration_ms": 300},
-        ],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    rows = {(r["media_id"], r["frame_ts_ms"]): r
-            for r in mm.frame_sample(media, every_ms=150,
-                                     decode=True).collect()}
-    # anim0 sampled at 0/150/300: frames 0, 0, 1 by cumulative delays
-    assert rows[("anim0", 0)]["frame_index"] == 0
-    assert rows[("anim0", 150)]["frame_index"] == 0
-    assert rows[("anim0", 300)]["frame_index"] == 1
-    for ts, want in ((0, 40 / 255.0), (300, 220 / 255.0)):
-        r = rows[("anim0", ts)]
-        assert r["decode_status"] == "real" and r["fmt"] == "gif"
-        assert abs(r["feature"][0] - want) < 1e-3
-    # the mp4 container has no pure-stdlib decoder: status stays data
-    for ts in (0, 150):
-        r = rows[("vid0", ts)]
-        assert r["decode_status"] == "unsupported"
-        assert r["feature"] is None and r["frame_index"] is None
-
-    # fakes allowed: every sampled frame gets a deterministic feature
-    monkeypatch.setenv("AMP_FAKE_DECODE", "1")
-    rows2 = mm.frame_sample(media, every_ms=150, decode=True).collect()
-    assert all(r["feature"] is not None for r in rows2)
-    assert {r["decode_status"] for r in rows2} <= {"real", "fake"}
 
 
 def test_decompress_documents_statuses(spark):
