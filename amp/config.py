@@ -67,7 +67,6 @@ class AmpConfig:
 
     # ---- clustering ----
     cc_max_iters: int = 20
-    cc_checkpoint_every: int = 3
     cc_driver_cutoff: int = 5_000_000  # <= this many edges: driver union-find;
                                        # above: distributed large/small-star.
                                        # 0 disables the driver path entirely.

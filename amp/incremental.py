@@ -62,6 +62,7 @@ from .pipeline import prepare
 _RETIRED_CFG_KEYS = (
     "broadcast_idf", "gather_sides_max_records", "fused_reps_min_partitions",
     "salt_block_size", "grouped_pairgen_max_block", "shuffle_partitions",
+    "cc_checkpoint_every",
 )
 
 

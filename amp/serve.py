@@ -356,6 +356,12 @@ def make_handler(service: MatchService):
         # 127.0.0.1, but an unbounded read is still an OOM lever)
         MAX_BODY_BYTES = 8 * 1024 * 1024
 
+        def _fail(self, code: int, error: str) -> None:
+            """A client or server error reply, counted in ``errors``."""
+            with service._lock:
+                service.metrics["errors"] += 1
+            self._send(code, {"error": error})
+
         def do_POST(self):
             try:
                 n = int(self.headers.get("Content-Length", "0"))
@@ -364,22 +370,16 @@ def make_handler(service: MatchService):
             if n < 0:
                 # rfile.read(-1) would block this pool worker until the
                 # client hangs up: answer without reading the body
-                with service._lock:
-                    service.metrics["errors"] += 1
-                self._send(400, {
-                    "error": "Content-Length must be a non-negative integer"
-                })
+                self._fail(400, "Content-Length must be a non-negative integer")
                 return
             if n > self.MAX_BODY_BYTES:
-                self._send(413, {
-                    "error": f"body too large ({n} bytes; cap "
-                             f"{self.MAX_BODY_BYTES})"
-                })
+                self._fail(413, f"body too large ({n} bytes; cap "
+                                f"{self.MAX_BODY_BYTES})")
                 return
             try:
                 payload = json.loads(self.rfile.read(n) or b"{}")
             except json.JSONDecodeError:
-                self._send(400, {"error": "invalid json"})
+                self._fail(400, "invalid json")
                 return
             try:
                 if self.path == "/api/v1/match":
@@ -394,15 +394,19 @@ def make_handler(service: MatchService):
                         service.metrics["duplicates_requests"] += 1
                     # body options: {"limit": N, "refresh": true} — refresh
                     # is how an operator invalidates the pinned cluster
-                    # table after swapping the service's index
+                    # table after swapping the service's index. Both are
+                    # checked before any compute: a bad one is a 400, not
+                    # a pipeline run and then a 500
                     opts = payload if isinstance(payload, dict) else {}
                     try:
                         limit = int(opts.get("limit", 1000))
-                    except (TypeError, ValueError):
-                        # null/list/dict limits are CLIENT errors: keep
-                        # them on the 400 path, not the generic 500
-                        raise ValueError("limit must be an integer")
-                    refresh = bool(opts.get("refresh", False))
+                    except (TypeError, ValueError, OverflowError):
+                        limit = -1
+                    if limit < 0:
+                        raise ValueError("limit must be a non-negative integer")
+                    refresh = opts.get("refresh", False)
+                    if not isinstance(refresh, bool):
+                        raise ValueError("refresh must be a boolean")
                     self._send(
                         200,
                         {"clusters": service.duplicates(limit=limit, refresh=refresh)},
@@ -436,14 +440,10 @@ def make_handler(service: MatchService):
                 else:
                     self._send(404, {"error": "not found"})
             except ValueError as e:
-                with service._lock:
-                    service.metrics["errors"] += 1
-                self._send(400, {"error": str(e)})
+                self._fail(400, str(e))
             except Exception as e:  # noqa: BLE001 — a failed Spark job
                 # must come back as a 500 body, not a dropped socket
-                with service._lock:
-                    service.metrics["errors"] += 1
-                self._send(500, {"error": f"{type(e).__name__}: {e}"})
+                self._fail(500, f"{type(e).__name__}: {e}")
 
     return Handler
 

@@ -448,8 +448,9 @@ def decompress_documents(
     max_text_bytes: int = 16 * 1024 * 1024,
     encoding: str = "utf-8",
 ) -> DataFrame:
-    """Binary corpus payloads -> text rows, outcome AS DATA (the
-    multimodal ladder's contract applied to text ingestion):
+    """Binary corpus payloads -> text rows, outcome AS DATA: every
+    input row yields one output row whose ``decode_status`` says what
+    happened, and no payload makes the pass raise:
 
       real        — payload decompressed (gzip/zlib/bz2/xz, sniffed by
                     magic bytes) or was already plain text; ``text``

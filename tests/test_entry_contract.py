@@ -71,42 +71,12 @@ def test_entry_smoke(spark):
     assert df.columns == ["cluster_size", "n_clusters"]
 
 
-MEDIA_MODULES = {"multimodal", "vp8l", "jpeg", "flac"}
-
-
-def test_media_stack_unreachable_from_engine():
-    """No engine module imports the media codecs, not even lazily inside
-    a function: the rest of the stack can be deleted without touching a
-    query, the pipeline, serve, streaming or incremental."""
-    paths = [os.path.join(ROOT, "__spark_entry__.py")] + [
-        p
-        for p in sorted(glob.glob(os.path.join(ROOT, "amp", "*.py")))
-        if os.path.basename(p) != "multimodal.py"
-    ]
-    hits = []
-    for path in paths:
-        with open(path) as fh:
-            tree = ast.parse(fh.read(), path)
-        for node in ast.walk(tree):
-            if isinstance(node, ast.Import):
-                names = [a.name for a in node.names]
-            elif isinstance(node, ast.ImportFrom):
-                names = [node.module or ""] + [a.name for a in node.names]
-            else:
-                continue
-            if any(set(n.split(".")) & MEDIA_MODULES for n in names):
-                hits.append(f"{os.path.relpath(path, ROOT)}:{node.lineno}")
-    assert len(paths) > 20
-    assert not hits, hits
-
-
 # Engine code that only tests reach, and why it stays. An entry is a
 # whole module ("streaming") or one top-level name ("io.read_repo_files").
 KEPT_FOR_TESTS = {
     "streaming": "a declared capability: micro-batch ingest into an index",
     "address_pipeline": "reference address-matching semantics (COVERAGE F-rows)",
     "reference_parity": "reference algorithm twins (COVERAGE F-rows)",
-    "multimodal": "media plumbing, kept until its last removal slice",
     "normalize.normalize_jvm": "the Catalyst twin the pandas normalize kernel is checked against",
     "scoring.jaro_winkler": "the spec the vectorized Jaro-Winkler kernel is tested against",
     "scoring.levenshtein": "the spec the vectorized Levenshtein kernel is tested against",
@@ -114,13 +84,10 @@ KEPT_FOR_TESTS = {
 }
 
 
-def test_no_orphan_top_level_names_in_engine():
-    """Every top-level def/class in amp/ is reached by code that is not
-    a test: the engine itself (used again in its own module or named in
-    another), its scripts, the benchmark harness, the driver entry or
-    the bench mains. Code only tests reach is dead weight to delete,
-    unless KEPT_FOR_TESTS names it with a reason; an entry that no
-    longer exempts anything must go too."""
+def _non_test_sources() -> dict[str, str]:
+    """Path -> source of every Python file that is not a test: the
+    engine, its scripts, the benchmark harness, the driver entry and
+    the bench mains."""
     pats = ["amp/*.py", "scripts/**/*.py", "perfbench/**/*.py",
             "__spark_entry__.py", "bench*.py"]
     texts = {}
@@ -130,6 +97,17 @@ def test_no_orphan_top_level_names_in_engine():
                 continue
             with open(p) as fh:
                 texts[p] = fh.read()
+    return texts
+
+
+def test_no_orphan_top_level_names_in_engine():
+    """Every top-level def/class in amp/ is reached by code that is not
+    a test: the engine itself (used again in its own module or named in
+    another), its scripts, the benchmark harness, the driver entry or
+    the bench mains. Code only tests reach is dead weight to delete,
+    unless KEPT_FOR_TESTS names it with a reason; an entry that no
+    longer exempts anything must go too."""
+    texts = _non_test_sources()
     engine = [p for p in texts if os.path.dirname(p) == os.path.join(ROOT, "amp")]
     orphans, kept_used = [], set()
     for path in engine:
@@ -155,6 +133,28 @@ def test_no_orphan_top_level_names_in_engine():
     assert len(engine) > 20
     assert not orphans, orphans
     assert kept_used == set(KEPT_FOR_TESTS), set(KEPT_FOR_TESTS) - kept_used
+
+
+def test_every_config_field_is_read():
+    """Every AmpConfig field is read as an attribute (``cfg.<field>``)
+    by some non-test file other than amp/config.py: a field nothing
+    reads is a knob that changes no answer."""
+    import dataclasses
+
+    from amp.config import AmpConfig
+
+    config_py = os.path.join(ROOT, "amp", "config.py")
+    read = set()
+    for path, src in _non_test_sources().items():
+        if path == config_py:
+            continue
+        read |= {
+            n.attr for n in ast.walk(ast.parse(src, path))
+            if isinstance(n, ast.Attribute) and isinstance(n.ctx, ast.Load)
+        }
+    fields = [f.name for f in dataclasses.fields(AmpConfig)]
+    assert len(fields) > 10
+    assert not [f for f in fields if f not in read]
 
 
 def _list_bound_names(scope: ast.AST) -> set[str]:

@@ -464,10 +464,10 @@ def test_index_save_load_identical_matches(spark, small_corpus, index, tmp_path_
 
 def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_path_factory):
     """An index_config.json written before the postings-join, gather
-    scorer, fused-reps and salted pair-gen paths were removed, and
-    before the pair shuffle width moved to the session, still carries
-    their six knobs; load drops exactly those and matches like the
-    in-memory index."""
+    scorer, fused-reps and salted pair-gen paths were removed, before
+    the pair shuffle width moved to the session, and before the unread
+    CC checkpoint interval went, still carries their seven knobs; load
+    drops exactly those and matches like the in-memory index."""
     import json
     import os
 
@@ -486,6 +486,7 @@ def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_
         salt_block_size=16,
         grouped_pairgen_max_block=256,
         shuffle_partitions=32,
+        cc_checkpoint_every=3,
     )
     with open(path, "w") as fh:
         json.dump(meta, fh)

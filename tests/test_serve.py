@@ -378,14 +378,15 @@ def test_malformed_content_length_is_400(spark, small_corpus, service):
 
 
 def test_bad_limit_types_are_400_not_500(spark, small_corpus, service):
-    """null/list/dict 'limit' values are client errors: the handler must
-    classify them as 400, not fall through to the generic 500."""
+    """null/list/dict/negative 'limit' values are client errors: the
+    handler must classify them as 400, not fall through to the generic
+    500."""
     from amp.serve import serve
 
     httpd = serve(service, port=0)
     try:
         port = httpd.server_address[1]
-        for limit in (None, [1], {"n": 1}, "abc"):
+        for limit in (None, [1], {"n": 1}, "abc", -1):
             req = urllib.request.Request(
                 f"http://127.0.0.1:{port}/api/v1/duplicates",
                 data=json.dumps({"limit": limit}).encode(),
@@ -396,6 +397,48 @@ def test_bad_limit_types_are_400_not_500(spark, small_corpus, service):
             assert ei.value.code == 400, limit
     finally:
         httpd.shutdown()
+
+
+def test_rejected_duplicates_bodies_are_counted_before_compute(
+    spark, small_corpus, service, monkeypatch
+):
+    """'refresh' must be a JSON boolean (``bool("false")`` is True and
+    would force a full pipeline run) and 'limit' non-negative (Spark
+    rejects a negative limit only after the pipeline ran): both are
+    400s naming the key. Like an oversize body's 413, each is counted
+    as an error and starts no duplicates compute."""
+    import socket
+
+    from amp.serve import serve
+
+    def no_compute(*a, **kw):
+        raise AssertionError("duplicates computed for a rejected body")
+
+    monkeypatch.setattr(service, "duplicates", no_compute)
+    httpd = serve(service, port=0)
+    try:
+        port = httpd.server_address[1]
+        for body in ({"refresh": "false"}, {"limit": -1}):
+            errors = service.metrics["errors"]
+            code, reply = _post(port, "/api/v1/duplicates", body)
+            assert code == 400, (body, reply)
+            assert next(iter(body)) in reply["error"], reply
+            assert service.metrics["errors"] == errors + 1
+        errors = service.metrics["errors"]
+        with socket.create_connection(("127.0.0.1", port), timeout=10) as s:
+            s.sendall(
+                b"POST /api/v1/duplicates HTTP/1.1\r\nHost: localhost\r\n"
+                + f"Content-Length: {httpd.RequestHandlerClass.MAX_BODY_BYTES + 1}"
+                  "\r\n\r\n".encode()
+            )
+            reply = b""
+            while chunk := s.recv(4096):
+                reply += chunk
+        assert reply.split(b" ")[1:2] == [b"413"], reply
+        assert service.metrics["errors"] == errors + 1
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
 
 
 def test_http_workers_are_daemon_threads(spark, small_corpus, service):

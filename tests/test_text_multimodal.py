@@ -1,11 +1,10 @@
-"""Text-analysis operators on tiny fixtures + multimodal plumbing."""
+"""Text-analysis operators on tiny fixtures."""
 
 from __future__ import annotations
 
 import pytest
 
 from amp import text
-from amp.multimodal import extract_features, synth_media
 
 
 @pytest.fixture(scope="module")
@@ -48,261 +47,6 @@ def test_fingerprints_normalization_invariance(spark):
     rows = {r["doc_id"]: r for r in text.fingerprints(d).collect()}
     assert rows[1]["exact_fp"] == rows[2]["exact_fp"]
     assert rows[1]["exact_fp"] != rows[3]["exact_fp"]
-
-
-def test_multimodal_feature_shapes(spark):
-    media = synth_media(spark, 12)
-    feats = extract_features(media).collect()
-    assert len(feats) == 12
-    for r in feats:
-        assert len(r["payload_sha"]) == 64
-        assert len(r["feature"]) == 16
-    # deterministic across runs
-    again = extract_features(synth_media(spark, 12)).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, again))
-
-
-def test_decode_status_mixed_corpus_counted_never_raises(spark, monkeypatch):
-    """Format policy as DATA (magic-byte sniff + per-row decode_status +
-    counted metrics) over a mixed PNG / corrupt-PNG / JPEG-stub /
-    FLAC-stub / WebP-stub / GIF / BMP / garbage corpus with fakes
-    DISALLOWED: nothing raises, statuses and feature nullability are
-    exact, and decode_metrics counts match."""
-    import numpy as np
-
-    from amp import multimodal as mm
-
-    monkeypatch.setenv("AMP_FAKE_DECODE", "0")
-    good_png = mm.png_encode(
-        np.arange(64, dtype=np.uint8).reshape(8, 8), filter_type=2
-    )
-    import struct as _struct
-
-    lossy_webp = (b"RIFF" + _struct.pack("<I", 16) + b"WEBP"
-                  + b"VP8 " + _struct.pack("<I", 4) + b"\x00" * 4)
-    lossless_webp = (b"RIFF" + _struct.pack("<I", 17) + b"WEBP"
-                     + b"VP8L" + _struct.pack("<I", 5) + b"\x2f" + b"\x00" * 4)
-    # well-formed 1x1 images: a decoder would read them, the ladder has none
-    gif = (b"GIF89a\x01\x00\x01\x00\x80\x00\x00\xff\xff\xff\x00\x00\x00"
-           b",\x00\x00\x00\x00\x01\x00\x01\x00\x00\x02\x02D\x01\x00;")
-    bmp = (b"BM" + _struct.pack("<IHHI", 58, 0, 0, 54)
-           + _struct.pack("<IiiHHIIiiII", 40, 1, 1, 1, 24, 0, 4, 0, 0, 0, 0)
-           + b"\x80\x80\x80\x00")
-    rows = [
-        ("ok0", good_png),
-        ("ok1", mm.png_encode(np.zeros((4, 4), np.uint8))),
-        ("corrupt0", good_png[: len(good_png) // 2]),      # torn PNG
-        ("jpeg0", b"\xff\xd8\xff\xe0" + b"\x00" * 32),     # torn JPEG
-        ("flac0", b"fLaC" + b"\x00" * 32),                # FLAC stub
-        ("webp0", lossy_webp),                             # lossy VP8 stub
-        ("webp1", lossless_webp),                          # lossless VP8L stub
-        ("gif0", gif),                                     # 1x1 GIF89a
-        ("bmp0", bmp),                                     # 1x1 24-bit BMP
-        ("junk0", b"not an image at all"),
-    ]
-    media = spark.createDataFrame(
-        [
-            {"media_id": k, "kind": "image", "mime": None, "payload": p,
-             "width": None, "height": None, "duration_ms": None}
-            for k, p in rows
-        ],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    feats = {r["media_id"]: r for r in mm.extract_features(media).collect()}
-    if mm.HAVE_PIL:  # ladder differs with Pillow present; core contract same
-        assert feats["ok0"]["decode_status"] == "real"
-        assert feats["corrupt0"]["decode_status"] == "corrupt"
-    else:
-        assert feats["ok0"]["decode_status"] == "real" and feats["ok0"]["fmt"] == "png"
-        assert feats["ok1"]["decode_status"] == "real"
-        assert feats["corrupt0"]["decode_status"] == "corrupt"
-        assert feats["corrupt0"]["feature"] is None
-        # JPEG and FLAC are sniffed but have no stdlib decoder: the
-        # ladder's tail counts them unsupported-as-data, not a crash
-        assert feats["jpeg0"]["decode_status"] == "unsupported"
-        assert feats["jpeg0"]["fmt"] == "jpeg"
-        assert feats["jpeg0"]["feature"] is None
-        assert feats["flac0"]["decode_status"] == "unsupported"
-        assert feats["flac0"]["fmt"] == "flac"
-        assert feats["flac0"]["feature"] is None
-        # WebP likewise, lossy VP8 and lossless VP8L alike
-        for k in ("webp0", "webp1"):
-            assert feats[k]["fmt"] == "webp"
-            assert feats[k]["decode_status"] == "unsupported"
-            assert feats[k]["feature"] is None
-        # GIF and BMP likewise: sniffed, no stdlib decoder
-        for k, fmt in (("gif0", "gif"), ("bmp0", "bmp")):
-            assert feats[k]["fmt"] == fmt
-            assert feats[k]["decode_status"] == "unsupported"
-            assert feats[k]["feature"] is None
-        assert feats["junk0"]["decode_status"] == "unsupported"
-        assert feats["junk0"]["fmt"] == "unknown"
-        m = {
-            (r["decode_status"], r["fmt"]): r["n"]
-            for r in mm.decode_metrics(mm.extract_features(media)).collect()
-        }
-        assert m[("real", "png")] == 2 and m[("corrupt", "png")] == 1
-        assert m[("unsupported", "jpeg")] == 1
-        assert m[("unsupported", "flac")] == 1
-        assert m[("unsupported", "webp")] == 2
-        assert ("real", "webp") not in m
-        assert m[("unsupported", "gif")] == 1
-        assert m[("unsupported", "bmp")] == 1
-        assert m[("unsupported", "unknown")] == 1
-
-    # with fakes allowed every row gets a feature and a fake/real status
-    monkeypatch.setenv("AMP_FAKE_DECODE", "1")
-    feats2 = mm.extract_features(media).collect()
-    assert all(r["feature"] is not None for r in feats2)
-    assert {r["decode_status"] for r in feats2} <= {"real", "fake"}
-    if not mm.HAVE_PIL:
-        fake = {r["media_id"]: r for r in feats2}
-        assert fake["gif0"]["decode_status"] == "fake"
-        assert fake["bmp0"]["decode_status"] == "fake"
-
-
-def test_decode_real_path_when_pil_else_fake(spark):
-    """Real decode runs when Pillow is importable (grayscale 8x8 via
-    PIL), deterministic fake otherwise — same plumbing either way."""
-    import numpy as np
-
-    from amp import multimodal as mm
-
-    if mm.HAVE_PIL:
-        import io as _io
-
-        from PIL import Image
-
-        buf = _io.BytesIO()
-        Image.new("L", (32, 32), color=200).save(buf, format="PNG")
-        grid = mm._decode_image(buf.getvalue(), allow_fake=False)
-        assert grid.shape == (8, 8)
-        assert np.allclose(grid, 200.0 / 255.0, atol=1e-6)
-    else:
-        with pytest.raises(NotImplementedError):
-            mm._decode_image(b"not-an-image", allow_fake=False)
-        g1 = mm._decode_image(b"payload")
-        g2 = mm._decode_image(b"payload")
-        assert g1.shape == (8, 8) and (g1 == g2).all()
-
-
-def test_png_roundtrip_all_filters():
-    """Pure-stdlib PNG codec: every unfilter branch (None/Sub/Up/
-    Average/Paeth) inverts its encoder filter bit-exactly."""
-    import numpy as np
-
-    from amp.multimodal import png_decode, png_encode
-
-    rng = np.random.RandomState(7)
-    for shape in [(8, 8), (16, 12), (5, 31)]:
-        grid = rng.randint(0, 256, size=shape, dtype=np.uint8)
-        for ftype in range(5):
-            payload = png_encode(grid, filter_type=ftype)
-            got = png_decode(payload)
-            assert got.shape == shape
-            assert np.array_equal((got * 255.0).round().astype(np.uint8), grid), (
-                f"filter {ftype} roundtrip mismatch"
-            )
-
-
-def test_png_decode_rgb_luma():
-    """Color-type-2 (RGB) branch: hand-assembled PNG decodes to ITU-R
-    601 luma."""
-    import struct
-    import zlib as _zlib
-
-    import numpy as np
-
-    from amp.multimodal import _PNG_SIG, png_decode
-
-    w, h = 3, 2
-    rgb = np.array(
-        [[[255, 0, 0], [0, 255, 0], [0, 0, 255]],
-         [[255, 255, 255], [0, 0, 0], [128, 128, 128]]],
-        dtype=np.uint8,
-    )
-    scan = b"".join(b"\x00" + rgb[y].tobytes() for y in range(h))
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", _zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    payload = (
-        _PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", _zlib.compress(scan))
-        + chunk(b"IEND", b"")
-    )
-    got = png_decode(payload) * 255.0
-    expect = 0.299 * rgb[:, :, 0] + 0.587 * rgb[:, :, 1] + 0.114 * rgb[:, :, 2]
-    assert np.allclose(got, expect, atol=1e-4)
-
-
-def test_extract_features_real_decode_no_fake(spark, monkeypatch):
-    """The REAL decode path end-to-end through Spark with the fake
-    fallback disabled (AMP_FAKE_DECODE=0): PNG payloads produce exactly
-    the row/col means of the decoded 8x8 grid."""
-    import numpy as np
-
-    from amp import multimodal as mm
-
-    monkeypatch.setenv("AMP_FAKE_DECODE", "0")
-    rng = np.random.RandomState(3)
-    grids = {f"p{i}": rng.randint(0, 256, size=(16, 16), dtype=np.uint8) for i in range(4)}
-    rows = [
-        {
-            "media_id": k,
-            "kind": "image",
-            "mime": "image/png",
-            "payload": mm.png_encode(g, filter_type=i % 5),
-            "width": 16,
-            "height": 16,
-            "duration_ms": None,
-        }
-        for i, (k, g) in enumerate(grids.items())
-    ]
-    media = spark.createDataFrame(rows, schema=mm.MEDIA_SCHEMA)
-    feats = {r["media_id"]: np.array(r["feature"]) for r in mm.extract_features(media).collect()}
-    assert len(feats) == 4
-    for k, g in grids.items():
-        grid = mm._resize8(mm.png_decode(mm.png_encode(g)))
-        expect = np.resize(
-            np.concatenate([grid.mean(axis=0), grid.mean(axis=1)]), 16
-        ).astype(np.float32)
-        assert np.allclose(feats[k], expect, atol=1e-6)
-        # and it is NOT the content-hash fake of the same payload
-        import hashlib as _hashlib
-
-        digest = _hashlib.sha256(mm.png_encode(g, filter_type=0)).digest()
-        fake = (
-            np.frombuffer((digest * 2)[:64], dtype=np.uint8)
-            .reshape(8, 8)
-            .astype(np.float32)
-            / 255.0
-        )
-        assert not np.allclose(feats[k][:8], fake.mean(axis=0), atol=1e-6)
-
-
-def test_decode_corrupt_png_raises_without_fake():
-    from amp import multimodal as mm
-
-    bad = mm._PNG_SIG + b"\x00" * 20
-    if mm.HAVE_PIL:
-        import pytest as _pytest
-
-        with _pytest.raises(Exception):
-            mm._decode_image(bad, allow_fake=False)
-    else:
-        import pytest as _pytest
-
-        with _pytest.raises(Exception):
-            mm._decode_image(bad, allow_fake=False)
-    # with the fake allowed, a corrupt payload degrades deterministically
-    g1 = mm._decode_image(bad, allow_fake=True)
-    g2 = mm._decode_image(bad, allow_fake=True)
-    assert g1.shape == (8, 8) and (g1 == g2).all()
 
 
 def test_decompress_documents_statuses(spark):
