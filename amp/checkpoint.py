@@ -6,18 +6,22 @@ Postgres table keyed by run_id (scripts/init_db.sql:78-115), and re-runs
 first DELETE the run's partition (internal/matcher/shared.go:244-256) —
 i.e. idempotent partition overwrite. Here:
 
-  * every stage writes parquet partitioned by ``run_id`` with
-    mode("overwrite") + dynamic partition overwrite — same idempotency;
-  * a ``manifest`` table (the analog of the reference's ``runs`` table,
-    init_db.sql:117-121) records per-stage row counts + wall time;
-    per-partition row counts are recorded in a companion ``counters``
-    table (north_rule: "per-partition lineage and counters");
-  * resume: a stage whose manifest row exists is read back instead of
-    recomputed — kill the job after stage k, rerun, and stages 1..k are
-    served from the checkpoint (tested resume-equals-fresh).
+  * every stage write is a new snapshot version, parquet partitioned by
+    ``run_id`` and ``_v`` with mode("overwrite") + dynamic partition
+    overwrite — same idempotency;
+  * a ``manifest`` row per stage (the analog of the reference's ``runs``
+    table, init_db.sql:117-121) records row count, wall time, the
+    current version pointer, the digest of its data-file set and its
+    schema; per-partition row counts are recorded in a companion
+    ``counters`` table (north_rule: "per-partition lineage and
+    counters");
+  * resume: a stage whose manifest row exists and whose digest still
+    matches the files on disk is read back instead of recomputed — kill
+    the job after stage k, rerun, and stages 1..k are served from the
+    checkpoint (tested resume-equals-fresh).
 
-Iceberg is the intended catalog at production scale (snapshot ids would
-land in the manifest's ``snapshot`` column); the runtime jar is not in
+Iceberg is the intended catalog at production scale (its snapshot ids
+would take the place of the version pointer); the runtime jar is not in
 this sandbox, so the layout is partitioned parquet with an identical
 API — the swap is confined to this module.
 """
@@ -31,6 +35,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -51,36 +56,11 @@ def _atomic_write_text(path: str, text: str) -> None:
     os.replace(tmp, path)
 
 
-def read_manifest_dir(root: str) -> list[dict]:
-    """All stage-manifest rows under ``root`` — a PURE READ (no
-    makedirs, no Spark conf mutation), safe for read-only callers like
-    the serving layer's /metrics endpoint. Missing directory reads as
-    an empty manifest; torn rows (crash mid-write under the pre-atomic
-    layout) are skipped, matching _load_manifest's not-done semantics."""
-    out: list[dict] = []
-    d = os.path.join(root, "_manifest")
-    try:
-        names = sorted(os.listdir(d))
-    except OSError:
-        return out
-    for f in names:
-        if not f.endswith(".json"):
-            continue  # .snapshots.jsonl logs live alongside
-        try:
-            with open(os.path.join(d, f)) as fh:
-                out.append(json.load(fh))
-        except (json.JSONDecodeError, OSError):
-            continue  # torn manifest == stage not done; skip the row
-    return out
-
-
 class CheckpointManager:
-    """All snapshot-log mutations (_commit, expire_snapshots, rollback,
-    the legacy-layout migration) serialize on one flock per stage —
-    without it, an expire that read the log before a concurrent commit
-    could rewrite the log WITHOUT the new row, after which the next
-    write derives max(log)+1, reuses the live version id, and
-    dynamic-overwrites its data files."""
+    """Versioned write, verify and resume of pipeline stages. A stage
+    commit appends to the stage's snapshot log and swaps its manifest
+    pointer under one flock per stage, so two writers racing a stage
+    resolve with one loud loser instead of a corrupted version chain."""
 
     def __init__(self, spark: SparkSession, root: str, run_id: int):
         self.spark = spark
@@ -91,7 +71,7 @@ class CheckpointManager:
 
     def _stage_lock(self, stage: str):
         """Exclusive flock guarding the stage's snapshot log + manifest
-        pointer. Every mutator takes it; readers stay lock-free (they
+        pointer. The commit takes it; readers stay lock-free (they
         tolerate either side of an atomic os.replace)."""
         from contextlib import contextmanager
 
@@ -135,22 +115,18 @@ class CheckpointManager:
     def is_done(self, stage: str) -> bool:
         return self._load_manifest(stage) is not None
 
-    def manifest(self) -> list[dict]:
-        return read_manifest_dir(self.root)
-
     # -- snapshots ----------------------------------------------------------
     # Every write of a stage creates a NEW snapshot version, laid out as
     # a second partition level (run_id=<r>/_v=<version>): dynamic
-    # partition overwrite replaces only the version being written, so
-    # older versions' data files survive on disk — the parquet-fallback
-    # form of Iceberg's append-only data files + snapshot list. The
-    # manifest's ``snapshot`` column is the CURRENT version pointer;
-    # ``read(stage, snapshot=...)`` time-travels, ``rollback`` moves the
-    # pointer, ``expire_snapshots`` garbage-collects old versions.
+    # partition overwrite replaces only the version being written, so a
+    # crashed write never touches the committed version (racing writers:
+    # see _commit). The manifest's ``snapshot`` column is the CURRENT
+    # version pointer.
 
-    def _run_partition_dir(self, stage: str, version: str | None = None) -> str:
-        base = os.path.join(self.table_path(stage), f"run_id={self.run_id}")
-        return os.path.join(base, f"_v={version}") if version else base
+    def _run_partition_dir(self, stage: str, version: str) -> str:
+        return os.path.join(
+            self.table_path(stage), f"run_id={self.run_id}", f"_v={version}"
+        )
 
     def _snapshot_log_path(self, stage: str) -> str:
         return os.path.join(
@@ -186,103 +162,15 @@ class CheckpointManager:
                 raise
         return out
 
-    def current_snapshot(self, stage: str) -> str | None:
-        row = self._load_manifest(stage)
-        if row is None:
-            return None
-        # a manifest carries a VERSION pointer only in the versioned
-        # generation (marked by snapshot_digest). Older generations
-        # stored None or the file-set digest in "snapshot" — treating
-        # either as a version would filter on the nonexistent _v
-        # partition column; return None so read() takes the flat-layout
-        # branch
-        if "snapshot_digest" not in row:
-            return None
-        return row.get("snapshot")
-
-    def rollback(self, stage: str, snapshot: str) -> None:
-        """Move the stage's current pointer to an OLDER snapshot (its
-        data files were retained). Downstream stages checkpointed on top
-        of the newer version keep their manifests — call
-        ``invalidate(downstream_stage)`` for each to force recompute, as
-        a catalog-level rollback would."""
-        with self._stage_lock(stage):
-            log = {s["snapshot"]: s for s in self.snapshots(stage)}
-            if snapshot not in log:
-                raise ValueError(
-                    f"rollback: stage {stage} has no snapshot {snapshot!r}; "
-                    f"known: {sorted(log)}"
-                )
-            row = self._load_manifest(stage)
-            if row is None:
-                raise ValueError(f"rollback: stage {stage} has no manifest")
-            entry = log[snapshot]
-            # re-list the retained version's files: the manifest's
-            # explicit file list must describe the version the pointer
-            # now names, and a digest mismatch here means the "retained"
-            # files were lost — fail loudly rather than roll back to a
-            # hole
-            snap, files = self._snapshot_of(stage, snapshot)
-            if snap != entry["digest"]:
-                raise ValueError(
-                    f"rollback: snapshot {snapshot!r} of stage {stage} no "
-                    f"longer matches its logged digest (files lost or "
-                    f"tampered)"
-                )
-            row.update(
-                snapshot=snapshot,
-                snapshot_digest=entry["digest"],
-                rows=entry["rows"],
-                n_files=entry["n_files"],
-                n_bytes=entry["n_bytes"],
-                files=files if len(files) <= 64 else None,
-            )
-            _atomic_write_text(self._manifest_path(stage), json.dumps(row))
-
     def invalidate(self, stage: str) -> None:
         """Drop the stage's done-marker so the next stage() call
-        recomputes it (data files stay until expire_snapshots)."""
+        recomputes it. Superseded versions' data files stay on disk;
+        nothing reclaims them."""
         p = self._manifest_path(stage)
         if os.path.exists(p):
             os.remove(p)
 
-    def expire_snapshots(self, stage: str, keep_last: int = 1) -> list[str]:
-        """Iceberg expire_snapshots analog: retain the CURRENT pointer
-        plus the newest ``keep_last - 1`` other versions; delete the
-        data files of everything else and truncate the log. keep_last=1
-        after a rollback therefore GCs the abandoned newer version.
-        Returns expired version ids."""
-        import shutil
-
-        # log read + rewrite under the stage lock: expire racing a
-        # concurrent _commit would otherwise rewrite the log from a
-        # pre-commit read and erase the just-committed row. Metadata
-        # first, data second (Iceberg's order): a crash between the two
-        # leaves orphaned data dirs — garbage, never a dangling pointer.
-        with self._stage_lock(stage):
-            log = self.snapshots(stage)
-            current = self.current_snapshot(stage)
-            keep = {current} if current else set()
-            for s in reversed(log):  # newest first
-                if len(keep) >= keep_last:
-                    break
-                keep.add(s["snapshot"])
-            expired = [s["snapshot"] for s in log if s["snapshot"] not in keep]
-            kept_rows = [s for s in log if s["snapshot"] in keep]
-            # atomic rewrite: a crash mid-truncate must not empty the
-            # log — the log is the sole source of truth for
-            # next-version-id derivation, and an emptied log would
-            # restart ids at 000001 and dynamic-overwrite still-live
-            # retained version data
-            _atomic_write_text(
-                self._snapshot_log_path(stage),
-                "".join(json.dumps(s) + "\n" for s in kept_rows),
-            )
-        for v in expired:
-            shutil.rmtree(self._run_partition_dir(stage, v), ignore_errors=True)
-        return expired
-
-    def _snapshot_of(self, stage: str, version: str | None = None) -> tuple[str, list[dict]]:
+    def _snapshot_of(self, stage: str, version: str) -> tuple[str, list[dict]]:
         """Iceberg-shaped snapshot: the manifest pins the exact data-file
         set (relative path + byte size) of this run's partition; the
         snapshot id is a digest of that file list. On a real Iceberg
@@ -313,23 +201,12 @@ class CheckpointManager:
     def verify_snapshot(self, stage: str) -> bool:
         """Recompute the stage's file-set digest and compare with the
         manifest — False means the checkpoint was tampered with or
-        partially lost and the stage must be recomputed, not resumed."""
+        partially lost (or its manifest carries no digest) and the stage
+        must be recomputed, not resumed."""
         recorded = self._load_manifest(stage)
-        if recorded is None:
+        if recorded is None or "snapshot_digest" not in recorded:
             return False
-        if "snapshot_digest" not in recorded:
-            # legacy manifest written before snapshots existed: distinct
-            # from tampering — accept it (the done-marker contract it
-            # was written under) but say so, instead of silently
-            # recomputing a valid checkpoint forever.
-            import logging
-
-            logging.getLogger("amp.checkpoint").info(
-                "stage %s: legacy manifest without a snapshot id — "
-                "accepted as valid; rewrite the stage to upgrade", stage
-            )
-            return True
-        snap, _ = self._snapshot_of(stage, recorded.get("snapshot"))
+        snap, _ = self._snapshot_of(stage, recorded["snapshot"])
         return snap == recorded["snapshot_digest"]
 
     # -- write / read ------------------------------------------------------
@@ -338,30 +215,28 @@ class CheckpointManager:
 
     def write(self, df: DataFrame, stage: str, started_at: float | None = None) -> DataFrame:
         """Checkpoint a stage: versioned partitioned write (a NEW
-        snapshot; older versions' files are retained for time-travel) +
-        per-partition counters + manifest row. Returns the re-read
-        DataFrame so downstream stages consume the materialized table
-        (cuts lineage, exactly like the reference's table-to-table
+        snapshot) + per-partition counters + manifest row. Returns the
+        re-read DataFrame so downstream stages consume the materialized
+        table (cuts lineage, exactly like the reference's table-to-table
         passes)."""
         t0 = started_at if started_at is not None else time.time()
         path = self.table_path(stage)
-        self._migrate_legacy_layout(stage)
-        # next version id = max(logged ids) + 1 — NOT log length:
-        # expire_snapshots truncates the log, and length+1 would then
-        # REUSE a still-live id and dynamic-overwrite its data files.
-        # A crashed write that never appended its log row still reuses
-        # its own id and overwrites only its partial dir (idempotent
-        # retry) because the max is unchanged.
+        # next version id = max(logged ids) + 1. A crashed write that
+        # never appended its log row reuses its own id and overwrites
+        # only its partial dir (idempotent retry) because the max is
+        # unchanged.
         log = self.snapshots(stage)
         parent_id = max((int(s["snapshot"]) for s in log), default=0)
         next_id = parent_id + 1
         version = f"{next_id:06d}"
         if "run_id" not in df.columns:
             df = df.withColumn("run_id", F.lit(self.run_id))
-        df.withColumn("_v", F.lit(version)).write.mode("overwrite").partitionBy(
-            "run_id", "_v"
-        ).parquet(path)
-        back = self._read_version(stage, version)
+        df = df.withColumn("_v", F.lit(version))
+        df.write.mode("overwrite").partitionBy("run_id", "_v").parquet(path)
+        # the written schema is recorded and read back explicitly: a
+        # version of zero rows leaves no parquet file to infer it from
+        schema = df.schema.jsonValue()
+        back = self._read_version(stage, version, schema)
 
         # per-partition lineage counters (north_rule)
         counters = (
@@ -393,16 +268,16 @@ class CheckpointManager:
             "path": path,
             # Iceberg-shaped: ``snapshot`` is the CURRENT version
             # pointer; ``snapshot_digest`` pins that version's
-            # data-file set (verify_snapshot checks it on
-            # resume). The explicit file list is for small-table
-            # inspection only — beyond 64 files the digest +
-            # totals carry the contract without bloating every
-            # manifest() load
+            # data-file set (verify_snapshot checks it on resume). The
+            # explicit file list is for small-table inspection only —
+            # beyond 64 files the digest + totals carry the contract
+            # without bloating every manifest load
             "snapshot": version,
             "snapshot_digest": snap,
             "n_files": len(files),
             "n_bytes": sum(f["bytes"] for f in files),
             "files": files if len(files) <= 64 else None,
+            "schema": schema,
         }
         self._commit(stage, parent_id, entry, manifest_row)
         return back
@@ -444,78 +319,27 @@ class CheckpointManager:
             )
             _atomic_write_text(self._manifest_path(stage), json.dumps(manifest_row))
 
-    def _migrate_legacy_layout(self, stage: str) -> None:
-        """A pre-snapshot checkpoint laid files flat under run_id=<r>/;
-        writing a versioned _v=... dir NEXT TO them would make Spark's
-        partition discovery fail with conflicting directory structures.
-        Relocate any flat legacy content into _v=000000 (data preserved,
-        readable via read(stage, snapshot='000000')) before the first
-        versioned write."""
-        base = self._run_partition_dir(stage)
-        if not os.path.isdir(base):
-            return
-        with self._stage_lock(stage):
-            flat = [n for n in os.listdir(base) if not n.startswith("_v=")]
-            if not flat:
-                return
-            legacy_dir = self._run_partition_dir(stage, "000000")
-            os.makedirs(legacy_dir, exist_ok=True)
-            for n in flat:
-                os.rename(os.path.join(base, n), os.path.join(legacy_dir, n))
-            snap, files = self._snapshot_of(stage, "000000")
-            entry = {
-                "snapshot": "000000",
-                "digest": snap,
-                "rows": None,  # unknown without a scan; digest pins the files
-                "n_files": len(files),
-                "n_bytes": sum(f["bytes"] for f in files),
-                "ts": time.time(),
-                "migrated_legacy": True,
-            }
-            cur = self.snapshots(stage)
-            _atomic_write_text(
-                self._snapshot_log_path(stage),
-                "".join(json.dumps(s) + "\n" for s in [*cur, entry]),
-            )
-            # upgrade the legacy manifest IN THE SAME STEP: a crash after
-            # the relocation but before the new versioned write would
-            # otherwise leave current_snapshot() == None, and read()'s
-            # flat branch would scan the migrated run_id=<r>/_v=000000
-            # layout with an extra _v partition column (schema drift on
-            # resume)
-            row = self._load_manifest(stage)
-            if row is not None and "snapshot_digest" not in row:
-                row.update(
-                    snapshot="000000",
-                    snapshot_digest=snap,
-                    n_files=len(files),
-                    n_bytes=sum(f["bytes"] for f in files),
-                    files=files if len(files) <= 64 else None,
-                )
-                _atomic_write_text(self._manifest_path(stage), json.dumps(row))
-
-    def _read_version(self, stage: str, version: str) -> DataFrame:
+    def _read_version(self, stage: str, version: str, schema: dict | None) -> DataFrame:
+        """One version of the stage, partition-pruned. ``schema`` is the
+        recorded written schema; manifests that carry none (written
+        before it was recorded, never of an empty version) infer it."""
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
         return (
-            self.spark.read.parquet(self.table_path(stage))
+            reader.parquet(self.table_path(stage))
             .where((F.col("run_id") == self.run_id) & (F.col("_v") == version))
             .drop("_v")
         )
 
-    def read(self, stage: str, snapshot: str | None = None) -> DataFrame:
-        """Read the stage at its CURRENT snapshot, or time-travel to an
-        explicit older ``snapshot`` id (both partition-pruned)."""
-        version = snapshot or self.current_snapshot(stage)
-        if version is None:
-            # legacy layout (pre-snapshot manifests): flat run partition.
-            # Defensive _v drop: if a crashed migration left the data
-            # relocated under _v=000000 but the manifest un-upgraded,
-            # partition discovery surfaces _v — dropping it restores the
-            # flat-read schema either way
-            df = self.spark.read.parquet(self.table_path(stage)).where(
-                F.col("run_id") == self.run_id
+    def read(self, stage: str) -> DataFrame:
+        """Read the stage at its CURRENT snapshot."""
+        row = self._load_manifest(stage)
+        if row is None or "snapshot_digest" not in row:
+            raise ValueError(
+                f"read: stage {stage} has no committed snapshot under {self.root}"
             )
-            return df.drop("_v") if "_v" in df.columns else df
-        return self._read_version(stage, version)
+        return self._read_version(stage, row["snapshot"], row.get("schema"))
 
     def stage(self, name: str, thunk) -> DataFrame:
         """Run-or-resume: resume only when the manifest row exists AND

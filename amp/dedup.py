@@ -175,31 +175,24 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
-def _sampled_windows(
-    docs: DataFrame, window: int, sample_hex: str, use_md5: bool
-) -> DataFrame:
+def _sampled_windows(docs: DataFrame, window: int, sample_hex: str) -> DataFrame:
     """(doc_id, whash): every ``window``-token span hashed (stride 1),
     kept iff the hash matches the content-defined sample predicate —
     see substring_duplicates for why sampling by VALUE (not position)
     is alignment-free."""
     toks = docs.select("doc_id", tokens_col().alias("toks"))
-    hash_one = "md5" if use_md5 else "xxhash64"
     win_hash = (
         f"transform(sequence(1, size(toks) - {window - 1}), "
-        f"i -> {hash_one}(concat_ws(' ', slice(toks, i, {window}))))"
+        f"i -> md5(concat_ws(' ', slice(toks, i, {window}))))"
     )
-    if use_md5:
-        keep = f"filter({win_hash}, h -> substring(h, 1, {len(sample_hex)}) = '{sample_hex}')"
-    else:
-        keep = f"filter({win_hash}, h -> pmod(h, 16) = 0)"
+    keep = f"filter({win_hash}, h -> substring(h, 1, {len(sample_hex)}) = '{sample_hex}')"
     # docs shorter than the window contain no full window — and Spark's
     # sequence(1, n) DESCENDS for n < 1 instead of being empty, so the
     # short case must be guarded out explicitly (typed empty array: the
-    # CASE branches must agree on array<string> vs array<bigint>)
-    empty_t = "string" if use_md5 else "bigint"
+    # CASE branches must agree on array<string>)
     guarded = (
         f"CASE WHEN size(toks) < {window} "
-        f"THEN CAST(array() AS array<{empty_t}>) ELSE {keep} END"
+        f"THEN CAST(array() AS array<string>) ELSE {keep} END"
     )
     return toks.select(
         "doc_id", F.explode(F.array_distinct(F.expr(guarded))).alias("whash")
@@ -211,7 +204,6 @@ def substring_duplicates(
     window: int = 32,
     sample_hex: str = "0",
     max_window_freq: int = 64,
-    use_md5: bool = True,
 ) -> DataFrame:
     """Exact-substring duplicate pairs: documents sharing at least one
     identical ``window``-token span, the contamination/boilerplate case
@@ -220,13 +212,13 @@ def substring_duplicates(
     (left_id, right_id, n_shared_windows).
 
     Every window position is hashed (stride 1) and then sampled
-    CONTENT-DEFINED: a window is kept iff its hash starts with
-    ``sample_hex`` (md5 path) / its int hash ≡ 0 mod 16 (xxhash64
-    path). Sampling by hash value instead of by position makes the
-    selection alignment-free — both documents keep exactly the same
+    CONTENT-DEFINED: a window is kept iff its md5 hex starts with
+    ``sample_hex``. Sampling by hash value instead of by position makes
+    the selection alignment-free — both documents keep exactly the same
     windows of a shared span no matter where the span sits in each, so
-    a shared span of L >= window tokens is detected with probability
-    1-(15/16)^(L-window+1) (≈0.86 at L=window+31, →1 rapidly). A
+    with the default one-digit ``sample_hex`` a shared span of L >=
+    window tokens is detected with probability 1-(15/16)^(L-window+1)
+    (≈0.86 at L=window+31, →1 rapidly). A
     positional stride would silently miss mis-aligned copies.
 
     Windows seen in more than ``max_window_freq`` documents (license
@@ -234,14 +226,11 @@ def substring_duplicates(
     the same frequency-cap-over-hot-keys policy as the blocking stage
     (never a silent explosion; lower the cap for dirtier corpora).
 
-    ``use_md5=True`` (default) hashes windows with md5 — engine-portable,
-    so the DuckDB oracle computes identical keys. ``use_md5=False`` uses
-    xxhash64 int keys (cheaper shuffles, the production choice); the
-    pair set is identical up to hash-sampling (asserted in tests on the
-    planted fixture). At scale: the window explode is ~n_tokens/16 rows
+    md5 is engine-portable, so the DuckDB oracle computes identical
+    keys. At scale: the window explode is ~n_tokens/16 rows
     per doc, the join is a capped equi-self-join on the window key —
     never all-pairs."""
-    wh = _sampled_windows(docs, window, sample_hex, use_md5)
+    wh = _sampled_windows(docs, window, sample_hex)
     from pyspark.sql import Window as W
 
     sized = wh.withColumn(
@@ -263,7 +252,6 @@ def substring_contamination(
     window: int = 32,
     sample_hex: str = "0",
     max_window_freq: int = 64,
-    use_md5: bool = True,
     eval_docs_hint: int | None = None,
     broadcast_eval_max_docs: int = 100_000,
 ) -> DataFrame:
@@ -283,10 +271,10 @@ def substring_contamination(
     ``broadcast_eval_max_docs``; otherwise the join shuffles on the
     window key — the same size-gated policy as the scorer's
     broadcast_sides_max_records gate."""
-    tw = _sampled_windows(train, window, sample_hex, use_md5).withColumnRenamed(
+    tw = _sampled_windows(train, window, sample_hex).withColumnRenamed(
         "doc_id", "train_id"
     )
-    ew = _sampled_windows(eval_docs, window, sample_hex, use_md5).withColumnRenamed(
+    ew = _sampled_windows(eval_docs, window, sample_hex).withColumnRenamed(
         "doc_id", "eval_id"
     )
     from pyspark.sql import Window as W

@@ -107,22 +107,16 @@ class MatchIndex:
         ck = CheckpointManager(spark, root, run_id=0)
         ck.write(self.records, "index_records")
         ck.write(self.sides, "index_sides")
-        items = sorted(self.idf.items())
-        if items:
-            idf_df = spark.createDataFrame(
-                pd.DataFrame(items, columns=["token_hash", "idf"]),
-                "token_hash long, idf double",
-            )
-            ck.write(idf_df, "index_idf")
-        # empty vocabulary: skip the table entirely (a partitioned write
-        # of zero rows leaves no readable parquet) and flag it in the
-        # manifest so load() round-trips {} faithfully
+        idf_df = spark.createDataFrame(
+            pd.DataFrame(sorted(self.idf.items()), columns=["token_hash", "idf"]),
+            "token_hash long, idf double",
+        )
+        ck.write(idf_df, "index_idf")
         with open(os.path.join(root, "index_config.json"), "w") as fh:
             json.dump(
                 {
                     "cfg": dataclasses.asdict(self.cfg),
                     "uses_provided_embeddings": self.uses_provided_embeddings,
-                    "idf_empty": not items,
                 },
                 fh,
             )
@@ -140,6 +134,8 @@ class MatchIndex:
         # checkpointed tables come back with the run_id partition column;
         # sides keep the side-table schema (writes union new rows on)
         sides = ck.read("index_sides").drop("run_id")
+        # indexes saved before checkpoints recorded their schema wrote
+        # no table for an empty vocabulary and flagged it instead
         if meta.get("idf_empty"):
             idf: dict[int, float] = {}
         else:

@@ -14,7 +14,6 @@ reader/writer — batching, vectorization and parallel load come free
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 REPO_FILES_SCHEMA = T.StructType(
@@ -44,13 +43,10 @@ def read_repo_files(spark: SparkSession, path: str, fmt: str = "parquet") -> Dat
 
 
 def write_results(
-    df: DataFrame,
-    path: str,
-    fmt: str = "parquet",
-    partition_by: tuple[str, ...] = ("run_id",),
-    sort_within_partitions: tuple[str, ...] = (),
+    df: DataFrame, path: str, sort_within_partitions: tuple[str, ...] = ()
 ) -> None:
-    """S11 + S8 semantics: idempotent partition overwrite (the
+    """S11 + S8 semantics: parquet, partitioned by ``run_id`` when the
+    column is present, with idempotent partition overwrite (the
     reference DELETEs the run's partition then re-inserts,
     shared.go:244-256; dynamic partition overwrite is the same
     contract in one atomic-ish write).
@@ -65,15 +61,9 @@ def write_results(
     if sort_cols:
         df = df.sortWithinPartitions(*sort_cols)
     w = df.write.mode("overwrite")
-    cols = [c for c in partition_by if c in df.columns]
-    if cols:
-        w = w.partitionBy(*cols)
-    if fmt == "parquet":
-        w.parquet(path)
-    elif fmt == "json":
-        w.json(path)
-    else:
-        raise ValueError(f"unsupported format: {fmt}")
+    if "run_id" in df.columns:
+        w = w.partitionBy("run_id")
+    w.parquet(path)
 
 
 def results_json(df: DataFrame, limit: int | None = 1000) -> list[dict]:

@@ -42,9 +42,8 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from . import io as amp_io
-from .config import AmpConfig, DEFAULT_CONFIG
-from .incremental import (MatchIndex, append_records, build_index,
-                          match_records, match_rows, remove_records)
+from .incremental import (MatchIndex, append_records, match_records,
+                          match_rows, remove_records)
 
 # the repo_files columns, in order
 REQUIRED_FIELDS = ("repo", "path", "commit", "lang", "content")
@@ -114,12 +113,6 @@ class MatchService:
         with self._lock:
             self._run_seq += 1
             return self._run_seq
-
-    @classmethod
-    def from_files(
-        cls, spark: SparkSession, files, cfg: AmpConfig = DEFAULT_CONFIG
-    ) -> "MatchService":
-        return cls(spark, build_index(files, cfg))
 
     def match_single(self, record: dict, top_n: int = 5) -> list[dict]:
         """POST /api/v1/match with one JSON record
@@ -333,20 +326,11 @@ def make_handler(service: MatchService):
             if self.path == "/healthz":
                 self._send(200, {"status": "ok"})
             elif self.path == "/metrics":
-                # request counters + checkpoint manifest (when the index
-                # was loaded from / saved to a checkpoint root) — the
-                # reference's timing middleware analog, wired
+                # request counters — the reference's timing middleware
+                # analog, wired
                 with service._lock:
                     counters = dict(service.metrics)
-                payload = {"counters": counters}
-                root = getattr(service, "checkpoint_root", None)
-                if root:
-                    # pure directory read — a GET must not makedirs or
-                    # mutate session Spark conf (ADVICE r4)
-                    from .checkpoint import read_manifest_dir
-
-                    payload["manifest"] = read_manifest_dir(root)
-                self._send(200, payload)
+                self._send(200, {"counters": counters})
             else:
                 self._send(404, {"error": "not found"})
 

@@ -110,13 +110,12 @@ def test_substring_duplicates_alignment_free(spark):
         (5, "too short"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for use_md5 in (True, False):
-        out = {(r["left_id"], r["right_id"]): r["n_shared_windows"]
-               for r in dedup.substring_duplicates(docs, window=32, use_md5=use_md5).collect()}
-        # the misaligned 200-token exact span is found; sub-window
-        # overlap and unrelated docs are not
-        assert set(out) == {(1, 2)}, out
-        assert out[(1, 2)] >= 1
+    out = {(r["left_id"], r["right_id"]): r["n_shared_windows"]
+           for r in dedup.substring_duplicates(docs, window=32).collect()}
+    # the misaligned 200-token exact span is found; sub-window
+    # overlap and unrelated docs are not
+    assert set(out) == {(1, 2)}, out
+    assert out[(1, 2)] >= 1
 
 
 def test_substring_contamination_train_vs_eval(spark):

@@ -135,6 +135,44 @@ def test_no_orphan_top_level_names_in_engine():
     assert kept_used == set(KEPT_FOR_TESTS), set(KEPT_FOR_TESTS) - kept_used
 
 
+def test_no_orphan_methods_in_engine():
+    """Every method of a class in amp/ is named (as an attribute or a
+    name) by some non-test file. Dunders are skipped, and so are the
+    methods of a class with a base defined outside amp/: the stdlib
+    calls those by protocol (``do_GET``, ``process_request``)."""
+    texts = _non_test_sources()
+    trees = {p: ast.parse(src, p) for p, src in texts.items()}
+    used = set()
+    for tree in trees.values():
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Name):
+                used.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                used.add(n.attr)
+    amp_dir = os.path.join(ROOT, "amp")
+    classes = [
+        (path, node)
+        for path, tree in trees.items() if os.path.dirname(path) == amp_dir
+        for node in ast.walk(tree) if isinstance(node, ast.ClassDef)
+    ]
+    ours = {c.name for _, c in classes}
+    orphans = []
+    for path, cls in classes:
+        bases = [b.id if isinstance(b, ast.Name) else getattr(b, "attr", None)
+                 for b in cls.bases]
+        if any(b not in ours for b in bases):
+            continue
+        for fn in cls.body:
+            if (isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and not (fn.name.startswith("__") and fn.name.endswith("__"))
+                    and fn.name not in used):
+                orphans.append(
+                    f"{os.path.relpath(path, ROOT)}:{fn.lineno} {cls.name}.{fn.name}"
+                )
+    assert len(classes) > 5
+    assert not orphans, orphans
+
+
 def test_every_config_field_is_read():
     """Every AmpConfig field is read as an attribute (``cfg.<field>``)
     by some non-test file other than amp/config.py: a field nothing

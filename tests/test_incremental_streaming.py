@@ -462,6 +462,22 @@ def test_index_save_load_identical_matches(spark, small_corpus, index, tmp_path_
     assert got_mem == got_disk
 
 
+def test_index_save_load_empty_vocabulary(spark, index, tmp_path_factory):
+    """An index whose IDF dictionary is empty saves a zero-row IDF table
+    and loads it back as {}."""
+    import copy
+
+    from amp.incremental import MatchIndex
+
+    empty = copy.copy(index)
+    empty.idf = {}
+    root = str(tmp_path_factory.mktemp("index_ck_empty_idf"))
+    empty.save(root)
+    loaded = MatchIndex.load(spark, root)
+    assert loaded.idf == {}
+    assert loaded.n_records == index.n_records
+
+
 def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_path_factory):
     """An index_config.json written before the postings-join, gather
     scorer, fused-reps and salted pair-gen paths were removed, before

@@ -3,6 +3,7 @@ recall, resume-equals-fresh, datagen determinism."""
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -85,6 +86,41 @@ def test_checkpointed_run_equals_in_memory_on_dirty_input(
         assert ck["metrics"]["n_contents"] == mem["metrics"]["n_contents"]
         assert ck["reps"].count() == mem["reps"].count()
         assert assignments(ck) == assignments(mem)
+
+
+def test_checkpointed_run_with_empty_stages_resumes(spark, tmp_path_factory):
+    """Three unrelated files give no exact edges, no candidate pairs and
+    no scored edges: those stages checkpoint zero rows. The checkpointed
+    run must still equal the in-memory run, and a second call must serve
+    every stage from its checkpoint (no stage writes a second version)."""
+    from amp.pipeline import run_pipeline
+
+    files = spark.createDataFrame(
+        [
+            ("a/alpha", "src/parser.py", "1" * 40, "python",
+             "def parse_tokens(stream):\n    return [t.strip() for t in stream]\n"),
+            ("b/beta", "lib/Render.java", "2" * 40, "java",
+             "class Render { void paint(Canvas c) { c.fill(0xff00ff); } }\n"),
+            ("c/gamma", "cmd/serve.go", "3" * 40, "go",
+             "func main() { http.ListenAndServe(\":8080\", nil) }\n"),
+        ],
+        "repo string, path string, commit string, lang string, content string",
+    )
+
+    def assignments(out):
+        return sorted(tuple(r) for r in out["clusters"].select(
+            "record_id", "cluster_id").collect())
+
+    mem = assignments(run_pipeline(spark, files))
+    assert len({c for _, c in mem}) == 3
+    root = str(tmp_path_factory.mktemp("ck_empty"))
+    assert assignments(run_pipeline(spark, files, checkpoint_root=root)) == mem
+    assert assignments(run_pipeline(spark, files, checkpoint_root=root)) == mem
+    logs = sorted(glob.glob(os.path.join(root, "_manifest", "*.snapshots.jsonl")))
+    assert len(logs) == 8
+    for p in logs:
+        with open(p) as fh:
+            assert len(fh.read().splitlines()) == 1, p
 
 
 def test_per_class_recall(spark, small_corpus, pipeline_out):
@@ -173,8 +209,6 @@ def test_snapshot_pins_file_set_and_gates_resume(spark, tmp_path_factory):
     exact data-file set; tampering with the checkpoint flips
     verify_snapshot to False and stage() recomputes instead of resuming
     the corrupt table."""
-    import glob
-
     from amp.checkpoint import CheckpointManager
 
     root = str(tmp_path_factory.mktemp("snap_ck"))
@@ -189,7 +223,8 @@ def test_snapshot_pins_file_set_and_gates_resume(spark, tmp_path_factory):
     ck.stage("nums", thunk)
     assert calls["n"] == 1
     assert ck.verify_snapshot("nums")
-    man = [m for m in ck.manifest() if m["stage"] == "nums"][0]
+    with open(os.path.join(root, "_manifest", "run0_nums.json")) as fh:
+        man = json.load(fh)
     assert man["snapshot"] and man["n_files"] >= 1 and man["files"]
 
     # clean resume: served from the checkpoint, thunk not re-run
@@ -222,153 +257,3 @@ def test_spark_submit_pyfiles_launcher():
     assert out.returncode == 0 and lines, out.stderr[-2000:]
     res = json.loads(lines[-1])
     assert res["records"] == 169 and res["clusters"] == 126
-
-
-def test_snapshot_time_travel_and_rollback(spark, tmp_path_factory):
-    """Per-write snapshot ids with read-at-snapshot: a second write of a
-    stage creates a NEW version while the old version's files survive;
-    read() serves the current pointer, read(snapshot=...) time-travels,
-    rollback() moves the pointer back, expire_snapshots() GCs."""
-    from amp.checkpoint import CheckpointManager
-
-    root = str(tmp_path_factory.mktemp("tt_ck"))
-    ck = CheckpointManager(spark, root, run_id=0)
-
-    ck.write(spark.range(10).selectExpr("id", "id * 2 AS v"), "nums")
-    v1 = ck.current_snapshot("nums")
-    ck.write(spark.range(5).selectExpr("id", "id * 3 AS v"), "nums")
-    v2 = ck.current_snapshot("nums")
-    assert v1 != v2
-    log = ck.snapshots("nums")
-    assert [s["snapshot"] for s in log] == [v1, v2]
-    assert log[0]["rows"] == 10 and log[1]["rows"] == 5
-
-    # current read = v2; time-travel read = v1 (files retained)
-    assert ck.read("nums").count() == 5
-    old = ck.read("nums", snapshot=v1)
-    assert old.count() == 10
-    assert sorted(r["v"] for r in old.collect()) == [2 * i for i in range(10)]
-    assert ck.verify_snapshot("nums")
-
-    # rollback: pointer moves, verification tracks the old digest,
-    # resume (stage) serves the OLD version without recompute
-    ck.rollback("nums", v1)
-    assert ck.current_snapshot("nums") == v1
-    assert ck.verify_snapshot("nums")
-    served = ck.stage("nums", lambda: (_ for _ in ()).throw(AssertionError("recompute")))
-    assert served.count() == 10
-
-    # expire: v2's files go away, v1 (current) survives
-    expired = ck.expire_snapshots("nums", keep_last=1)
-    assert expired == [v2]
-    assert ck.read("nums").count() == 10
-    assert [s["snapshot"] for s in ck.snapshots("nums")] == [v1]
-
-    with pytest.raises(ValueError, match="no snapshot"):
-        ck.rollback("nums", "999999")
-
-
-def test_resume_from_older_snapshot_byte_identical_clusters(spark, tmp_path_factory):
-    """SURVEY §1.2 closing test: checkpoint a full pipeline run, then
-    overwrite an upstream stage (new snapshot), roll it back to the
-    original snapshot, invalidate downstream stages, and resume — the
-    final clusters are byte-identical to the first run."""
-    import hashlib as _hashlib
-
-    from amp.checkpoint import CheckpointManager
-    from amp.datagen import gen_files
-    from amp.pipeline import run_pipeline
-
-    root = str(tmp_path_factory.mktemp("tt_pipe"))
-    files = gen_files(spark, 120, partitions=8)
-
-    def cluster_sha(out):
-        rows = sorted(
-            (r["record_id"], r["cluster_id"]) for r in out["clusters"].collect()
-        )
-        return _hashlib.sha256(str(rows).encode()).hexdigest()
-
-    out1 = run_pipeline(spark, files, checkpoint_root=root)
-    sha1 = cluster_sha(out1)
-
-    ck = CheckpointManager(spark, root, run_id=0)
-    v1 = ck.current_snapshot("records")
-    # a divergent rewrite of the records stage (half the corpus) — the
-    # newer snapshot that we will time-travel AWAY from
-    ck.write(ck.read("records").limit(60), "records")
-    assert ck.current_snapshot("records") != v1
-
-    ck.rollback("records", v1)
-    downstream = [
-        "reps", "exact_edges", "sides", "pairs", "scored", "edges", "clusters",
-    ]
-    for st in downstream:
-        ck.invalidate(st)
-    out2 = run_pipeline(spark, files, checkpoint_root=root)
-    assert cluster_sha(out2) == sha1
-
-
-def test_write_after_expire_never_reuses_a_live_version_id(spark, tmp_path_factory):
-    """Version ids must be max+1, not log-length+1: after
-    expire_snapshots truncates the log, a length-derived id would REUSE
-    a still-live version and dynamic-overwrite its retained data."""
-    from amp.checkpoint import CheckpointManager
-
-    root = str(tmp_path_factory.mktemp("vid_ck"))
-    ck = CheckpointManager(spark, root, run_id=0)
-    for n in (10, 20, 30):
-        ck.write(spark.range(n).selectExpr("id"), "nums")
-    v3 = ck.current_snapshot("nums")
-    ck.expire_snapshots("nums", keep_last=2)  # drops v1, keeps v2+v3
-    ck.write(spark.range(40).selectExpr("id"), "nums")
-    v4 = ck.current_snapshot("nums")
-    assert v4 != v3
-    # the retained older version is intact, not silently overwritten
-    assert ck.read("nums", snapshot=v3).count() == 30
-    assert ck.read("nums").count() == 40
-    ids = [s["snapshot"] for s in ck.snapshots("nums")]
-    assert len(ids) == len(set(ids)), f"duplicate version ids in log: {ids}"
-
-
-def test_legacy_flat_checkpoint_resumes_and_upgrades(spark, tmp_path_factory):
-    """A checkpoint written by the pre-snapshot generation (flat
-    run_id=<r>/ layout, manifest without snapshot_digest) must (a) be
-    readable -- current_snapshot returns None so read() takes the flat
-    branch instead of filtering on the nonexistent _v column -- and (b)
-    survive an upgrade write: flat files migrate to _v=000000 instead of
-    colliding with the new versioned dirs."""
-    import json
-    import os
-
-    from amp.checkpoint import CheckpointManager
-
-    root = str(tmp_path_factory.mktemp("legacy_ck"))
-    ck = CheckpointManager(spark, root, run_id=0)
-    # fabricate the legacy generation: flat partitioned write + manifest
-    # carrying the old digest-in-snapshot shape
-    spark.range(10).selectExpr("id", "0 AS run_id").write.mode("overwrite").partitionBy(
-        "run_id"
-    ).parquet(ck.table_path("nums"))
-    with open(ck._manifest_path("nums"), "w") as fh:
-        json.dump(
-            {"run_id": 0, "stage": "nums", "rows": 10, "snapshot": "ab12cd34ef56ab78"},
-            fh,
-        )
-    # (a) legacy resume: verify accepts, read takes the flat branch
-    assert ck.verify_snapshot("nums")
-    assert ck.current_snapshot("nums") is None
-    assert ck.read("nums").count() == 10
-    served = ck.stage("nums", lambda: (_ for _ in ()).throw(AssertionError("recompute")))
-    assert served.count() == 10
-    # (b) upgrade write: no partition-discovery collision, legacy data
-    # preserved as version 000000
-    ck.write(spark.range(25).selectExpr("id"), "nums")
-    assert ck.read("nums").count() == 25
-    assert ck.read("nums", snapshot="000000").count() == 10
-    flat_leftovers = [
-        n
-        for n in os.listdir(os.path.join(ck.table_path("nums"), "run_id=0"))
-        if not n.startswith("_v=")
-    ]
-    assert flat_leftovers == []
-

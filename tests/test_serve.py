@@ -12,10 +12,11 @@ import pytest
 
 @pytest.fixture(scope="module")
 def service(spark, small_corpus):
+    from amp.incremental import build_index
     from amp.serve import MatchService
 
     files, _ = small_corpus
-    return MatchService.from_files(spark, files)
+    return MatchService(spark, build_index(files))
 
 
 def _one_record(files):
@@ -493,34 +494,6 @@ def test_duplicates_cache_hit_serves_during_refresh(
     assert not t.is_alive()
 
 
-def test_metrics_get_is_side_effect_free(spark, small_corpus, service, tmp_path):
-    """GET /metrics on a service with a checkpoint_root must not
-    makedirs under the root or mutate session Spark conf (ADVICE r4:
-    the old path constructed a CheckpointManager per request)."""
-    from amp.serve import serve
-
-    root = str(tmp_path / "ck_never_written")
-    service.checkpoint_root = root
-    before = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    httpd = serve(service, port=0)
-    try:
-        port = httpd.server_address[1]
-        with urllib.request.urlopen(f"http://127.0.0.1:{port}/metrics") as r:
-            m = json.load(r)
-        assert m["manifest"] == []
-        import os
-
-        assert not os.path.exists(root), "read-only GET created directories"
-        assert (
-            spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            == before
-        )
-    finally:
-        httpd.shutdown()
-        httpd.server_close()
-        delattr(service, "checkpoint_root")
-
-
 def test_server_close_drains_queued_sockets(spark, small_corpus, service):
     """server_close must shut down still-queued connections instead of
     leaving them for (possibly exited) workers — fd leak at shutdown
@@ -562,10 +535,11 @@ def test_http_index_append_e2e(spark, small_corpus):
     """Round-5 task: POST /index/append extends the live index — the
     appended record becomes findable by /match, /metrics reflects the
     new index size, and the duplicates cache is invalidated."""
+    from amp.incremental import build_index
     from amp.serve import MatchService, serve
 
     files, _ = small_corpus
-    svc = MatchService.from_files(spark, files)  # private: append mutates
+    svc = MatchService(spark, build_index(files))  # private: append mutates
     n0 = svc.index.records.count()
     # warm the duplicates cache so the append has something to invalidate
     svc.duplicates(limit=5)
@@ -630,12 +604,13 @@ def test_http_index_remove_e2e(spark, small_corpus):
     """POST /index/remove shrinks the live index: the removed record
     stops being matchable, /metrics reflects the new size, the
     duplicates cache is invalidated, and bad bodies are 400s."""
+    from amp.incremental import build_index
     from amp.serve import MatchService, serve
 
     from pyspark.sql import functions as F
 
     files, _ = small_corpus
-    svc = MatchService.from_files(spark, files)
+    svc = MatchService(spark, build_index(files))
     n0 = svc.index.records.count()
     svc.duplicates(limit=5)  # warm the cache so remove invalidates it
     assert svc._dup_df is not None
