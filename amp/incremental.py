@@ -500,6 +500,10 @@ def match_records(
          ``cfg.broadcast_sides_max_records`` pairs, both broadcast and
          the index side table is never shuffled; a larger batch keeps
          the shuffled joins.
+
+    The batch pipeline's frequency cap (``cfg.max_block_size``) is not
+    applied here: a query is paired with every index member of each of
+    its blocks, so a hot block's pair work grows with the index.
     """
     _check_query_embeddings(index, query_embeddings)
     q_sides = scoring.query_side_features(query_files, index.idf_b, index.cfg, run_id)

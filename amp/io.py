@@ -66,10 +66,11 @@ def write_results(
     w.parquet(path)
 
 
-def results_json(df: DataFrame, limit: int | None = 1000) -> list[dict]:
+def results_json(df: DataFrame, limit: int | None = None) -> list[dict]:
     """The HTTP-response analog (handler.go:190): small, request-scoped
-    outputs only — this is a driver-side collect by design. limit=None
-    collects everything (callers that cache and slice themselves)."""
+    outputs only — this is a driver-side collect by design. Collects
+    every row unless the caller passes a ``limit``: a limit cuts an
+    unordered frame, so which rows survive it is arbitrary."""
     if limit is not None:
         df = df.limit(limit)
     return [row.asDict(recursive=True) for row in df.collect()]

@@ -50,13 +50,16 @@ REQUIRED_FIELDS = ("repo", "path", "commit", "lang", "content")
 
 # Match bodies of at most this many records are featurized in the
 # driver (match_rows); larger ones take match_records, whose Python
-# worker pass costs a fixed ~0.3 s but spreads the featurizing over the
-# executor cores. Measured crossover of match_batch, 4 cores,
-# 12,000-base index, median of 3 interleaved reps per path (s):
+# worker pass costs a fixed ~0.1 s (a warm 4-task mapInPandas job:
+# 0.18 s, against 0.07 s for the same job without Python) but spreads
+# the featurizing over the executor cores. Measured crossover of
+# match_batch, 4 cores, 12,000-base index, median of 3 interleaved reps
+# per path (s):
 #   rows         1     30    100    300   1,000  3,000 (5.9 MB body)
-#   in-driver  0.94  1.08  0.85  1.13   1.45   3.72
-#   DataFrame  1.23  1.30  1.18  1.30   1.41   2.35
-# The bound is the largest size where the driver won every rep.
+#   in-driver  0.58  0.60  0.62  0.85   1.49   3.44
+#   DataFrame  0.92  0.76  0.89  0.81   1.13   2.38
+# The bound was set as the largest size where the driver won every rep;
+# it won 2 of 3 at 300 and every rep at 100 (ROADMAP open items).
 _LOCAL_FEATURIZE_MAX_ROWS = 300
 
 
@@ -139,7 +142,9 @@ class MatchService:
 
     def _match(self, rows: list[tuple], top_n: int) -> list[dict]:
         """Validated rows -> matches: featurized in the driver up to the
-        row bound, through a files DataFrame above it."""
+        row bound, through a files DataFrame above it. The whole answer
+        is returned: at most rows x top_n, and the rows are bounded by
+        the body cap."""
         run_id = self._next_run_id()
         if len(rows) <= _LOCAL_FEATURIZE_MAX_ROWS:
             out = match_rows(self.index, rows, run_id=run_id, top_n=top_n)

@@ -135,6 +135,32 @@ def test_served_matches_equal_dataframe_path(spark, small_corpus, service):
     assert service.match_batch([]) == []
 
 
+def test_batch_match_answer_is_not_truncated(spark):
+    """A batch match returns every ranked row, also past 1,000: 40
+    near-identical queries against 40 near-identical index records
+    share their blocks, so a large top_n keeps 40 candidates each."""
+    import pandas as pd
+
+    from amp.incremental import build_index, match_rows
+    from amp.serve import MatchService
+
+    body = "def step(state, x):\n    return state * 31 + x\n" * 12
+
+    def rec(repo, i):
+        return (repo, "src/step.py", f"{i:040d}", "python", body + f"# v{i}\n")
+
+    index = build_index(spark.createDataFrame(
+        pd.DataFrame([rec("index/repo", i) for i in range(40)], columns=_FIELDS)
+    ))
+    queries = [rec("query/repo", i) for i in range(40)]
+    want = match_rows(index, queries, top_n=100).count()
+    assert want > 1000
+    got = MatchService(spark, index).match_batch(
+        [dict(zip(_FIELDS, q)) for q in queries], top_n=100
+    )
+    assert len(got) == want
+
+
 @pytest.mark.parametrize("field, value", [
     ("content", None), ("content", 5), ("path", None), ("repo", 7),
     ("commit", ["c"]), ("lang", 5),
