@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import AmpConfig, DEFAULT_CONFIG
+from .io import empty_frame
 
 
 def _canon(edges: DataFrame, edges_unique: bool = False) -> DataFrame:
@@ -97,10 +98,7 @@ def _union_find_pdf(pdf, spark, id_type: str, stats_out: dict | None = None) -> 
             )
         # schema follows the edge id type (string record_ids in the ER
         # pipeline, int64 doc_ids in the documents-table queries)
-        return spark.createDataFrame(
-            pd.DataFrame({"record_id": [], "cluster_id": []}),
-            f"record_id {id_type}, cluster_id {id_type}",
-        )
+        return empty_frame(spark, f"record_id {id_type}, cluster_id {id_type}")
 
     both = pd.concat([pdf["u"], pdf["v"]], ignore_index=True)
     codes, uniques = pd.factorize(both, sort=True)

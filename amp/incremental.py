@@ -19,11 +19,19 @@ init_db.sql:78-85):
     blocking.all_blocks over the side rows;
   * ``idf`` and ``idf_b`` — the frozen IDF dictionary and ONE Broadcast
     handle of it, shared by every request and write of the version.
-build_index and MatchIndex.load create all of it. append_records and
-remove_records derive the next version incrementally: they featurize
-and block only the side rows they add, anti-join only the side ids
-they drop, and reuse the IDF handle under ``frozen`` (a new one under
-``refresh``).
+build_index and MatchIndex.load create all of it. append_records,
+append_rows and remove_records derive the next version from lookups
+sized by the write: the driver collects the index rows that share the
+write's contents or ids and decides which side rows drop and which
+representatives are added. Only those are featurized and blocked; the
+dropped ids filter the index tables as literals, and records, sides and
+blocks are pinned side by side, each in its pre-write partition count.
+Nothing is aggregated or featurized over the whole index: the lookups
+are filtered scans that return rows sized by the write. A served
+append of new contents is 4 Spark jobs and starts no Python worker; a
+remove is 5, and 6 when it promotes a surviving record. The IDF handle
+is reused under ``frozen`` (a new one under ``refresh``, which
+re-derives every representative and side row).
 
 A request owns only its own rows. match_records normalizes and
 featurizes a query DataFrame in one Python worker pass and pins it;
@@ -107,10 +115,14 @@ class MatchIndex:
         ck = CheckpointManager(spark, root, run_id=0)
         ck.write(self.records, "index_records")
         ck.write(self.sides, "index_sides")
-        idf_df = spark.createDataFrame(
-            pd.DataFrame(sorted(self.idf.items()), columns=["token_hash", "idf"]),
-            "token_hash long, idf double",
-        )
+        idf_schema = "token_hash long, idf double"
+        if self.idf:
+            idf_df = spark.createDataFrame(
+                pd.DataFrame(sorted(self.idf.items()), columns=["token_hash", "idf"]),
+                idf_schema,
+            )
+        else:  # a zero-row pandas frame would start Python workers
+            idf_df = amp_io.empty_frame(spark, idf_schema)
         ck.write(idf_df, "index_idf")
         with open(os.path.join(root, "index_config.json"), "w") as fh:
             json.dump(
@@ -188,95 +200,160 @@ def build_index(
     )
 
 
-def _probe_and_reps(records: DataFrame) -> tuple[int, int, DataFrame]:
-    """(n_rows, n_distinct_ids, pinned representatives) of pinned
-    ``records``. The probe and the representatives pin are independent
-    jobs over one immutable table, so they run side by side, as in
-    pipeline.prepare."""
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_probe = pool.submit(normalize.uniqueness_stats, records, False)
-        reps = normalize.representatives(records).localCheckpoint(eager=True)
-        n_rows, n_ids, _ = f_probe.result()
-    return n_rows, n_ids, reps
+def _featurize(
+    reps: DataFrame, idf_b: Broadcast, cfg: AmpConfig, vecs: DataFrame | None
+) -> DataFrame:
+    """Pinned side rows of ``reps`` (records rows) under ``idf_b``, with
+    the provided vectors ``vecs`` (record_id, embedding) attached when
+    the index holds provided embeddings."""
+    sides = scoring.side_features_onepass(reps, idf_b, cfg)
+    if vecs is not None:
+        sides = scoring.attach_embeddings(
+            sides, vecs, expected_ids=reps.select("record_id")
+        )
+    return sides.localCheckpoint(eager=True)
+
+
+def _edit(
+    table: DataFrame, key: str, dropped: list[str], added: DataFrame | None
+) -> DataFrame:
+    """``table`` without the rows whose ``key`` is in ``dropped`` and
+    with the rows of ``added``, pinned in the table's own partition
+    count — or ``table`` itself when the write changes none of it. The
+    ids go into the plan as literals: an anti-join against even a
+    driver-built frame costs jobs of its own (its broadcast)."""
+    if not dropped and added is None:
+        return table
+    out = table.where(~F.col(key).isin(dropped)) if dropped else table
+    if added is not None:
+        out = out.unionByName(added)
+    return out.coalesce(table.rdd.getNumPartitions()).localCheckpoint(eager=True)
 
 
 def _next_version(
     index: MatchIndex,
-    records: DataFrame,
-    reps: DataFrame,
-    new_reps: DataFrame,
-    dropped: DataFrame,
-    n_rows: int,
+    gone: list[str],
+    new_records: DataFrame | None,
+    n_records: int,
+    dropped: list[str],
+    added_ids: list[str],
+    featurize,
     policy: str,
     vecs: DataFrame | None,
 ) -> MatchIndex:
-    """The index version over ``records`` and their ``reps`` (both
-    pinned), derived from ``index`` by the write's own rows:
-      * ``new_reps`` — the representatives with no side row yet (new
-        contents, and contents whose representative changed);
-      * ``dropped`` (record_id) — ids covering every side row that lost
-        its place, and no representative; extra ids that hold no side
-        row leave the anti-joins unchanged.
-    Both are write-sized, so they broadcast and the index tables stream
-    past them. Side rows of representatives that stay are kept
-    (``frozen``) or re-featurized with a fresh IDF (``refresh``); only
-    the side rows added are blocked. ``vecs`` (record_id, embedding)
-    covers every representative featurized here, for indexes holding
-    provided embeddings."""
+    """The index version after one write the driver has decided:
+      * ``gone`` — the record ids the write removes, ``new_records`` —
+        the normalized rows it appends, ``n_records`` — the count after;
+      * ``dropped`` — the side ids that lose their place (removed
+        representatives, and representatives an appended id undercuts);
+      * ``added_ids`` — the representatives that gain a side row;
+        ``featurize(added_ids, idf_b)`` returns their side rows ready to
+        be read twice (pinned, or an in-memory relation).
+    ``frozen`` keeps every other side row and the IDF handle, and
+    featurizes only ``added_ids``; ``refresh`` re-derives the
+    representatives, the IDF and every side row from the pinned records
+    (``vecs`` then covers every representative). Only the side rows
+    added are blocked: block keys come from sig, lang and stem, never
+    from the IDF, so a kept side row keeps its keys under both
+    policies. Records, sides and blocks are pinned side by side."""
     cfg = index.cfg
-    f_sides = None
-    # independent pins run side by side: the dropped ids beside the
-    # feature pass, then the side table beside the block table
     with ThreadPoolExecutor(max_workers=2) as pool:
-        f_dropped = pool.submit(dropped.localCheckpoint, True)
+        f_records = pool.submit(_edit, index.records, "record_id", gone, new_records)
         if policy == "refresh":
+            reps = normalize.representatives(f_records.result()).localCheckpoint(
+                eager=True
+            )
             idf = features.idf_map(reps, reps.count(), cfg)
             idf_b = reps.sparkSession.sparkContext.broadcast(idf)
-            sides = scoring.side_features_onepass(reps, idf_b, cfg)
-            if vecs is not None:
-                sides = scoring.attach_embeddings(
-                    sides, vecs, expected_ids=reps.select("record_id")
-                )
-            sides = sides.localCheckpoint(eager=True)
-            added = sides.join(
-                F.broadcast(new_reps.select("record_id")), "record_id", "leftsemi"
-            )
+            sides = _featurize(reps, idf_b, cfg, vecs)
+            added = sides.where(F.col("record_id").isin(added_ids))
         else:
             idf, idf_b = index.idf, index.idf_b
-            added = scoring.side_features_onepass(new_reps, idf_b, cfg)
-            if vecs is not None:
-                added = scoring.attach_embeddings(
-                    added, vecs, expected_ids=new_reps.select("record_id")
-                )
-            added = added.localCheckpoint(eager=True)
-        dropped = f_dropped.result()
-        if policy == "frozen":
-            f_sides = pool.submit(
-                index.sides.join(F.broadcast(dropped), "record_id", "left_anti")
-                .select(*added.columns)
-                .unionByName(added)
-                .coalesce(index.sides.rdd.getNumPartitions())
-                .localCheckpoint,
-                True,
-            )
-        # block keys come from sig, lang and stem, never from the IDF, so
-        # a kept side row keeps its keys under both policies
-        blocks = (
-            index.blocks.join(
-                F.broadcast(dropped.withColumnRenamed("record_id", "right_id")),
-                "right_id", "left_anti",
-            )
-            .unionByName(_block_table(added, cfg))
-            .coalesce(index.blocks.rdd.getNumPartitions())
-            .localCheckpoint(eager=True)
+            added = featurize(added_ids, idf_b) if added_ids else None
+            f_sides = pool.submit(_edit, index.sides, "record_id", dropped, added)
+        blocks = _edit(
+            index.blocks, "right_id", dropped,
+            _block_table(added, cfg) if added_ids else None,
         )
-        if f_sides is not None:
+        if policy == "frozen":
             sides = f_sides.result()
+        records = f_records.result()
     return MatchIndex(
         records, sides, idf, cfg,
         uses_provided_embeddings=index.uses_provided_embeddings,
-        blocks=blocks, idf_b=idf_b, n_records=n_rows,
+        blocks=blocks, idf_b=idf_b, n_records=n_records,
     )
+
+
+def _append(
+    index: MatchIndex,
+    new_records: DataFrame,
+    keys: list[tuple[str, str]],
+    featurize,
+    policy: str,
+    vecs: DataFrame | None,
+    caller: str,
+) -> MatchIndex:
+    """append_records and append_rows after normalize: ``new_records``
+    are the appended rows and ``keys`` their (record_id, content_sha),
+    in the driver. One lookup collects the index rows that share an
+    appended content or id; from them the driver finds each content's
+    current representative (its min record_id) and any appended id that
+    exists already. The rows come back ungrouped: AQE would run a
+    grouped aggregation's shuffle as a job of its own, and they are only
+    the members of the contents the write touches."""
+    ids = [rid for rid, _ in keys]
+    hits = (
+        index.records.where(
+            F.col("content_sha").isin(sorted({sha for _, sha in keys}))
+            | F.col("record_id").isin(ids)
+        )
+        .select("record_id", "content_sha")
+        .collect()
+    )
+    n_collide = len(ids) - len(set(ids) - {rid for rid, _ in hits})
+    if n_collide:
+        # appending a record_id that already exists is an upsert, which
+        # this path does not implement — fail loudly (the reference's
+        # resync truncates and reloads, shared.go:244-256)
+        raise ValueError(
+            f"{caller}: {n_collide} appended record_ids collide with existing "
+            "ones — append is insert-only; rebuild the index for upserts"
+        )
+    current, winners = _min_ids(hits), _min_ids(keys)
+    # a content's appended winner becomes its representative when the
+    # content is new or the winner undercuts the current one, whose side
+    # row then drops
+    dropped, added_ids = [], []
+    for sha, rid in winners.items():
+        old = current.get(sha)
+        if old is None or rid < old:
+            added_ids.append(rid)
+            if old is not None:
+                dropped.append(old)
+    return _next_version(
+        index, [], new_records, index.n_records + len(ids),
+        dropped, added_ids, featurize, policy, vecs,
+    )
+
+
+def _min_ids(rows) -> dict[str, str]:
+    """content_sha -> min record_id of (record_id, content_sha) rows."""
+    out: dict[str, str] = {}
+    for rid, sha in rows:
+        if sha not in out or rid < out[sha]:
+            out[sha] = rid
+    return out
+
+
+def _check_append(index: MatchIndex, policy: str, embeddings, caller: str) -> None:
+    if policy not in ("frozen", "refresh"):
+        raise ValueError(f"{caller}: unknown policy {policy!r}")
+    if index.uses_provided_embeddings and embeddings is None:
+        raise ValueError(
+            f"{caller}: the index holds provided embeddings; pass "
+            "embeddings for the appended records (same model/dim)"
+        )
 
 
 def append_records(
@@ -293,60 +370,32 @@ def append_records(
     IDF policy (explicit, because the trade-off is real):
       * ``frozen`` (default): new records are weighted with the index's
         EXISTING IDF dictionary. Incremental cost — one normalize pass
-        over the new files, one feature pass over the new
-        representatives, one representatives recompute. Drift trade-off:
-        tokens introduced by the appended batch score 0 (absent from
-        the dictionary), and document frequencies do not shift — scores
-        equal a fresh ``build_index(all_files, idf_override=old_idf)``
-        EXACTLY (tested), but diverge from a fresh build's own IDF as
-        the appended fraction grows. Re-freeze periodically.
-      * ``refresh``: recompute the IDF over the union and re-featurize
-        every representative — near-rebuild cost (normalize of old
-        records is still skipped), zero drift.
+        over the new files, a lookup of the index rows sharing their
+        contents or ids, one feature pass over the representatives the
+        append adds, and the three table pins; nothing is aggregated or
+        featurized over the whole index. Drift trade-off: tokens introduced by the
+        appended batch score 0 (absent from the dictionary), and
+        document frequencies do not shift — scores equal a fresh
+        ``build_index(all_files, idf_override=old_idf)`` EXACTLY
+        (tested), but diverge from a fresh build's own IDF as the
+        appended fraction grows. Re-freeze periodically.
+      * ``refresh``: recompute the representatives and the IDF over the
+        union and re-featurize every representative — near-rebuild cost
+        (normalize of old records is still skipped), zero drift.
 
     Representative swaps are handled exactly: if an appended record's id
     undercuts the current representative of an existing content, the old
     side row is dropped and the new winner featurized — the resulting
     side table is one row per distinct content keyed by the GLOBAL min
-    record id, byte-equal to a fresh build's.
+    record id, byte-equal to a fresh build's. Rows already in the
+    driver take append_rows, which runs no Python worker.
     """
-    if policy not in ("frozen", "refresh"):
-        raise ValueError(f"append_records: unknown policy {policy!r}")
+    _check_append(index, policy, embeddings, "append_records")
     cfg = index.cfg
-    if index.uses_provided_embeddings and embeddings is None:
-        raise ValueError(
-            "append_records: the index holds provided embeddings; pass "
-            "embeddings for the appended records (same model/dim)"
-        )
     new_records = normalize.normalize(files, cfg, run_id=0).localCheckpoint(
         eager=True
     )
-    records = (
-        index.records.select(*new_records.columns)
-        .unionByName(new_records)
-        .localCheckpoint(eager=True)
-    )
-    n_rows, n_ids, reps = _probe_and_reps(records)
-    if n_ids != n_rows:
-        # appending a record_id that already exists is an upsert, which
-        # this path does not implement — fail loudly (the reference's
-        # resync truncates and reloads, shared.go:244-256)
-        raise ValueError(
-            f"append_records: {n_rows - n_ids} appended record_ids collide "
-            "with existing ones — append is insert-only; rebuild the index "
-            "for upserts"
-        )
-    # append is insert-only, so every new representative is an appended
-    # record, and every old record sharing its content lost its place
-    # (the former representative among them holds the side row)
-    new_reps = reps.join(
-        F.broadcast(new_records.select("record_id")), "record_id", "leftsemi"
-    )
-    dropped = (
-        index.records.select("record_id", "content_sha")
-        .join(F.broadcast(new_reps.select("content_sha")), "content_sha", "leftsemi")
-        .select("record_id")
-    )
+    keys = [tuple(r) for r in new_records.select("record_id", "content_sha").collect()]
     vecs = None
     if index.uses_provided_embeddings:
         vecs = embeddings.select(
@@ -355,8 +404,46 @@ def append_records(
         )
         if policy == "refresh":
             vecs = index.sides.select("record_id", "embedding").unionByName(vecs)
-    return _next_version(
-        index, records, reps, new_reps, dropped, n_rows, policy, vecs
+
+    def featurize(rep_ids, idf_b):
+        reps = new_records.where(F.col("record_id").isin(rep_ids))
+        return _featurize(reps, idf_b, cfg, vecs)
+
+    return _append(
+        index, new_records, keys, featurize, policy, vecs, "append_records"
+    )
+
+
+def append_rows(
+    index: MatchIndex, rows: list[tuple], policy: str = "frozen"
+) -> MatchIndex:
+    """append_records for rows that are Python objects in the driver
+    already — an HTTP request's, as match_rows is for match_records:
+    ``rows`` are (repo, path, commit, lang, content) tuples of strings
+    (lang may be None). The rows are normalized here, and under
+    ``frozen`` the representatives the append adds are featurized here
+    too, with the version's IDF dictionary (the normalize → side kernel
+    composition of scoring.query_side_rows). Both reach Spark as
+    in-memory Arrow relations, so no Python worker runs. The version
+    equals append_records' over the same rows (tested). The cost grows
+    with the rows in the driver's one thread, so large batches belong on
+    append_records (serve bounds the rows it sends here). Not for
+    provided-embedding indexes: the rows carry no vectors."""
+    _check_append(index, policy, None, "append_rows")
+    cfg = index.cfg
+    spark = index.records.sparkSession
+    files = pd.DataFrame(rows, columns=amp_io.REPO_FILES_SCHEMA.names)
+    recs = next(normalize._normalize_batches(cfg, 0)(iter([files])))
+
+    def featurize(rep_ids, _idf_b):
+        reps = recs[recs["record_id"].isin(rep_ids)].reset_index(drop=True)
+        sides = next(scoring._side_kernel(index.idf, cfg)(iter([reps])))
+        return spark.createDataFrame(sides, scoring.SIDE_SCHEMA)
+
+    return _append(
+        index, spark.createDataFrame(recs, normalize.RECORDS_SCHEMA),
+        list(zip(recs["record_id"], recs["content_sha"])),
+        featurize, policy, None, "append_rows",
     )
 
 
@@ -369,7 +456,9 @@ def remove_records(
     """Incremental run-0 shrink — the inverse of ``append_records``
     (the reference's only removal path is the full resync truncate,
     shared.go:244-256; this skips the rebuild): drop the named records
-    and repair the one-row-per-content side table.
+    and repair the one-row-per-content side table. ``record_ids`` is a
+    list of ids, or a DataFrame whose first column holds them (collected:
+    the driver decides the write).
 
     Removal is EXACT: every id must exist in the index (a typo'd id
     silently "removing" nothing would let callers believe a record is
@@ -380,7 +469,10 @@ def remove_records(
     record WAS the representative of a content that still has other
     rows, the content's new winner (min surviving record_id) is
     featurized; contents whose every row was removed lose their side
-    row entirely.
+    row entirely. Two lookups decide it in the driver — the removed
+    ids' rows, then the rows of the contents they touch — and only the
+    promoted representatives are featurized: a remove that promotes
+    none runs no Python worker.
 
     IDF policy as in append_records: ``frozen`` keeps the dictionary
     (document frequencies do not shift — results equal a fresh
@@ -393,47 +485,43 @@ def remove_records(
     if policy not in ("frozen", "refresh"):
         raise ValueError(f"remove_records: unknown policy {policy!r}")
     cfg = index.cfg
-    spark = index.records.sparkSession
     if isinstance(record_ids, DataFrame):
-        ids_df = record_ids.select(
-            F.col(record_ids.columns[0]).cast("string").alias("record_id")
-        )
-    else:
-        ids = [str(r) for r in record_ids]
-        if not ids:
-            raise ValueError("remove_records: empty id list")
-        # built from pandas: a frame of a Python list is computed by a
-        # Python worker pool of its own (see serve.MatchService._files_df)
-        ids_df = spark.createDataFrame(pd.DataFrame({"record_id": ids}),
-                                       "record_id string")
-    ids_df = ids_df.dropDuplicates(["record_id"]).localCheckpoint(eager=True)
-    # the removal is write-sized, so its ids broadcast and the index
-    # tables stream past them, never shuffled. Requested and present ids
-    # in one aggregation (index record_ids are unique: each requested id
-    # hits at most once).
-    gone = F.broadcast(ids_df)
-    hits = index.records.select("record_id").join(gone, "record_id", "leftsemi")
-    counts = (
-        ids_df.select(F.lit(1).alias("req"), F.lit(0).alias("hit"))
-        .unionByName(hits.select(F.lit(0).alias("req"), F.lit(1).alias("hit")))
-        .agg(F.sum("req").alias("n_req"), F.sum("hit").alias("n_hit"))
-        .first()
+        record_ids = [r[0] for r in record_ids.select(
+            F.col(record_ids.columns[0]).cast("string")).collect()]
+    ids = sorted({str(r) for r in record_ids})
+    if not ids:
+        raise ValueError("remove_records: empty id list")
+    found = (
+        index.records.where(F.col("record_id").isin(ids))
+        .select("record_id", "content_sha")
+        .collect()
     )
-    n_req, n_hit = int(counts["n_req"] or 0), int(counts["n_hit"] or 0)
-    if n_hit != n_req:
+    if len(found) != len(ids):
         raise ValueError(
-            f"remove_records: {n_req - n_hit} of {n_req} ids are not in "
-            "the index — removal is exact, not best-effort"
+            f"remove_records: {len(ids) - len(found)} of {len(ids)} ids are "
+            "not in the index — removal is exact, not best-effort"
         )
-    records = index.records.join(gone, "record_id", "left_anti").localCheckpoint(
-        eager=True
-    )
-    n_rows, _, reps = _probe_and_reps(records)
-    if n_rows == 0:
+    if len(ids) == index.n_records:
         raise ValueError(
             "remove_records: removal would empty the index — rebuild "
             "instead of shrinking to nothing"
         )
+    members = (
+        index.records.where(
+            F.col("content_sha").isin(sorted({sha for _, sha in found}))
+        )
+        .select("record_id", "content_sha")
+        .collect()
+    )
+    # a removed representative drops its side row, and its content's
+    # min surviving id (if any) is promoted. Removal never dethrones a
+    # surviving representative.
+    gone = set(ids)
+    current = _min_ids(members)
+    survivors = _min_ids((rid, sha) for rid, sha in members if rid not in gone)
+    dropped = sorted(rid for rid in current.values() if rid in gone)
+    promoted = sorted(survivors[sha] for sha, rid in current.items()
+                      if rid in gone and sha in survivors)
 
     vecs = (index.sides.select("record_id", "embedding")
             if index.uses_provided_embeddings else None)
@@ -444,13 +532,14 @@ def remove_records(
                 F.col(embeddings.columns[1]).alias("embedding"),
             )
         ).dropDuplicates(["record_id"])
-    # representatives promoted because their content's winner was
-    # removed. A removed id is nobody's representative any more, and
-    # removal never dethrones a surviving representative, so the removed
-    # ids cover exactly the side rows to drop.
-    new_reps = reps.join(index.sides.select("record_id"), "record_id", "left_anti")
+
+    def featurize(rep_ids, idf_b):
+        reps = index.records.where(F.col("record_id").isin(rep_ids))
+        return _featurize(reps, idf_b, cfg, vecs)
+
     return _next_version(
-        index, records, reps, new_reps, ids_df, n_rows, policy, vecs
+        index, ids, None, index.n_records - len(ids),
+        dropped, promoted, featurize, policy, vecs,
     )
 
 

@@ -14,6 +14,7 @@ reader/writer — batching, vectorization and parallel load come free
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 REPO_FILES_SCHEMA = T.StructType(
@@ -74,3 +75,14 @@ def results_json(df: DataFrame, limit: int | None = None) -> list[dict]:
     if limit is not None:
         df = df.limit(limit)
     return [row.asDict(recursive=True) for row in df.collect()]
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """A zero-row DataFrame of the DDL ``schema``, planned wholly in the
+    JVM (an empty relation of no partitions). A zero-row pandas or list
+    frame is computed through a PythonRDD over one partition per core,
+    so it starts Python workers to return nothing."""
+    return spark.range(0).select(*[
+        F.lit(None).cast(f.dataType).alias(f.name)
+        for f in T.StructType.fromDDL(schema).fields
+    ])

@@ -28,7 +28,12 @@ right here in the driver, where its rows already are
 (incremental.match_rows), so the scorer is its only Python worker
 stage; a larger body takes match_records, one Python pass for its
 features and one for the scorer. A single match with candidates is
-nine small jobs whose cost is scheduling, not data. Bulk dedup is the
+nine small jobs whose cost is scheduling, not data. An append body
+under the same bound is normalized and featurized in the driver too
+(incremental.append_rows), and every write is decided in the driver
+from lookups sized by the write: an append of new contents is 4 jobs
+and no Python worker, a remove 5 (6 when it promotes a surviving
+record, whose features take one Python pass). Bulk dedup is the
 offline pipeline (amp.pipeline), not a request.
 """
 
@@ -42,25 +47,29 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from . import io as amp_io
-from .incremental import (MatchIndex, append_records, match_records,
-                          match_rows, remove_records)
+from .incremental import (MatchIndex, append_records, append_rows,
+                          match_records, match_rows, remove_records)
 
 # the repo_files columns, in order
 REQUIRED_FIELDS = ("repo", "path", "commit", "lang", "content")
 
 # Match bodies of at most this many records are featurized in the
-# driver (match_rows); larger ones take match_records, whose Python
-# worker pass costs a fixed ~0.1 s (a warm 4-task mapInPandas job:
-# 0.18 s, against 0.07 s for the same job without Python) but spreads
-# the featurizing over the executor cores. Measured crossover of
-# match_batch, 4 cores, 12,000-base index, median of 3 interleaved reps
-# per path (s):
-#   rows         1     30    100    300   1,000  3,000 (5.9 MB body)
-#   in-driver  0.58  0.60  0.62  0.85   1.49   3.44
-#   DataFrame  0.92  0.76  0.89  0.81   1.13   2.38
-# The bound was set as the largest size where the driver won every rep;
-# it won 2 of 3 at 300 and every rep at 100 (ROADMAP open items).
-_LOCAL_FEATURIZE_MAX_ROWS = 300
+# driver (match_rows), and append bodies normalized and featurized there
+# (append_rows); larger ones take match_records / append_records, whose
+# Python worker pass costs a fixed ~0.1 s (a warm 4-task mapInPandas
+# job: 0.18 s, against 0.07 s for the same job without Python) but
+# spreads the work over the executor cores. Measured crossover, 4 cores,
+# 12,000-base index, median of 3 interleaved reps per path (s):
+#   rows               100   150   200   250   300
+#   match  in-driver  0.52  0.75  0.86  0.75  0.88
+#   match  DataFrame  0.95  0.72  0.65  0.80  0.86
+#   append in-driver  0.27  0.40  0.45  0.50  0.55
+#   append DataFrame  0.68  0.80  0.74  0.82  0.80
+# The bound is the largest measured size at and below which the driver
+# won every rep of both bodies: it lost a match rep at 150, 200 and 300,
+# and no append rep. A second round and the wider match crossover (1 to
+# 3,000 rows) are in ROADMAP's open items.
+_LOCAL_FEATURIZE_MAX_ROWS = 100
 
 
 def _request_rows(records: list) -> list[tuple]:
@@ -81,6 +90,21 @@ def _request_rows(records: list) -> list[tuple]:
                 kind = "a string or null" if f == "lang" else "a string"
                 raise ValueError(f"field {f!r} must be {kind}")
         rows.append(tuple(r[f] for f in REQUIRED_FIELDS))
+    return rows
+
+
+def _whole_clusters(clusters, limit: int) -> list[dict]:
+    """The first ``limit`` rows of a (record_id, cluster_id) table in
+    (cluster_id, record_id) order, less the cluster that the cut splits:
+    a reply holds whole clusters only, so it can be shorter than
+    ``limit`` (empty when the first cluster alone is larger). One row
+    past the cut is read to tell whether the last cluster goes on."""
+    rows = amp_io.results_json(
+        clusters.orderBy("cluster_id", "record_id"), limit=limit + 1
+    )
+    if len(rows) > limit:
+        split = rows[limit]["cluster_id"]
+        rows = [r for r in rows[:limit] if r["cluster_id"] != split]
     return rows
 
 
@@ -158,8 +182,9 @@ class MatchService:
         """POST /api/v1/index/append: extend the live index with new
         records WITHOUT a rebuild (the reference's periodic S3 resync,
         cmd/addressmatchpro/main.go:73-90, truncates + reloads; here the
-        run-0 extension is incremental via amp.incremental.append_records
-        with its frozen-vs-refresh IDF policy).
+        run-0 extension is incremental via amp.incremental.append_rows —
+        append_records for a body over the row bound — with its
+        frozen-vs-refresh IDF policy).
 
         Concurrency contract: appends serialize on ``_append_lock``;
         in-flight match/duplicates requests keep the index reference they
@@ -178,9 +203,14 @@ class MatchService:
                 "append over HTTP is not supported for provided-embedding "
                 "indexes; use amp.incremental.append_records directly"
             )
-        files = self._files_df(_request_rows(records))
+        rows = _request_rows(records)
         with self._append_lock:
-            new_index = append_records(self.index, files, policy=policy)
+            if len(rows) <= _LOCAL_FEATURIZE_MAX_ROWS:
+                new_index = append_rows(self.index, rows, policy=policy)
+            else:
+                new_index = append_records(
+                    self.index, self._files_df(rows), policy=policy
+                )
             self._swap(new_index, "append_requests")
         return {"appended": len(records), "index_records": new_index.n_records}
 
@@ -233,11 +263,13 @@ class MatchService:
         the cache on swap), so the clustering is computed ONCE per
         index version (full blocking+scoring+CC pipeline,
         request-scoped like the reference's endpoint) and MATERIALIZED
-        as a pinned DataFrame; every call collects only its own
-        ``limit`` rows from it — interactive latency without re-running
-        the pipeline per unauthenticated request, and without ever
-        collecting the full cluster table to the driver (one row per
-        index record — GBs on a large index). ``refresh=True`` forces a
+        as a pinned DataFrame; every call collects at most ``limit``
+        rows from it: whole clusters in (cluster_id, record_id) order,
+        less the cluster the limit would split (_whole_clusters) —
+        interactive latency without re-running the pipeline per
+        unauthenticated request, and without ever collecting the full
+        cluster table to the driver (one row per index record — GBs on
+        a large index). ``refresh=True`` forces a
         recompute (e.g. after swapping ``self.index``) — reachable over
         HTTP via ``{"refresh": true}`` in the POST body; the previous
         pinned DataFrame is unpersisted (no cache leak across
@@ -251,7 +283,7 @@ class MatchService:
             with self._lock:
                 df = self._dup_df
             if df is not None:
-                return amp_io.results_json(df, limit=limit)
+                return _whole_clusters(df, limit)
         with self._dup_compute_lock:
             with self._lock:
                 df = None if refresh else self._dup_df
@@ -297,10 +329,10 @@ class MatchService:
                     # index swapped mid-compute (append): serve this
                     # response, leave the cache invalidated, and free
                     # the stale pin once its rows are collected
-                    rows = amp_io.results_json(df, limit=limit)
+                    rows = _whole_clusters(df, limit)
                     df.unpersist()
                     return rows
-        return amp_io.results_json(df, limit=limit)
+        return _whole_clusters(df, limit)
 
     def _index_files_view(self, index: MatchIndex | None = None):
         # records table carries the original (repo, path, commit, lang)

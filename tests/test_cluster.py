@@ -115,3 +115,17 @@ def test_pairwise_f1_counts(spark):
     m = pairwise_f1(clusters, labels)
     assert (m["tp"], m["fp"], m["fn"]) == (1, 0, 1)
     assert m["precision"] == 1.0 and m["recall"] == 0.5
+
+
+def test_cc_of_no_edges_plans_no_python_rdd(spark):
+    """The driver CC of an empty edge frame answers with a JVM-planned
+    empty relation: a zero-row pandas frame would be computed through a
+    PythonRDD, whose tasks start Python workers to return nothing."""
+    import pandas as pd
+
+    from amp.cluster import _union_find_pdf
+
+    out = _union_find_pdf(pd.DataFrame({"u": [], "v": []}), spark, "string")
+    assert "PythonRDD" not in out._jdf.queryExecution().toRdd().toDebugString()
+    assert out.collect() == []
+    assert out.schema.simpleString() == "struct<record_id:string,cluster_id:string>"

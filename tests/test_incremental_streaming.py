@@ -397,6 +397,127 @@ def test_remove_refresh_policy_recomputes_idf(spark, small_corpus):
     assert _match_rows(idx1, q) == _match_rows(fresh, q)
 
 
+def _digest(df):
+    """(rows, order-insensitive xxhash64 sum) of a table, run_id aside;
+    the sum is taken as decimal(38,0), as a long sum overflows."""
+    cols = sorted(c for c in df.columns if c != "run_id")
+    r = df.agg(
+        F.count("*").alias("n"),
+        F.coalesce(F.sum(F.xxhash64(*cols).cast("decimal(38,0)")), F.lit(0)).alias("h"),
+    ).first()
+    return r["n"], int(r["h"])
+
+
+def _assert_same_tables(got, want):
+    for t in ("records", "sides", "blocks"):
+        assert _digest(getattr(got, t)) == _digest(getattr(want, t)), t
+    assert got.n_records == want.n_records
+
+
+def _copy_with_id(src, tag, below=None, above=None):
+    """A repo_files row holding ``src``'s content under a new key whose
+    record_id sorts below ``below`` or above ``above`` -> (row, id)."""
+    import hashlib
+    import itertools
+
+    from amp.normalize import _US, RECORD_ID_HEX
+
+    for i in itertools.count():
+        key = (f"append/{tag}", src["path"], f"{i:040d}")
+        rid = hashlib.sha256(_US.join(key).encode()).hexdigest()[:RECORD_ID_HEX]
+        if (below is None or rid < below) and (above is None or rid > above):
+            return (*key, src["lang"], src["content"]), rid
+
+
+def test_append_rows_equals_append_records(spark, small_corpus):
+    """append_rows (rows in the driver, featurized there) builds the
+    same version as append_records over the same rows, table for table,
+    and both equal a fresh build with the same dictionary: a copy whose
+    id undercuts a content's representative swaps it, a copy with a
+    larger id swaps nothing, and an id that collides — inside the batch
+    or with the index — fails the append. Under ``refresh`` the two
+    agree as well."""
+    from amp.incremental import append_records, append_rows
+    from amp.normalize import record_id_expr
+
+    files, _ = small_corpus
+    idx0 = build_index(files, CFG)
+    rep_ids = sorted(r["record_id"] for r in idx0.sides.select("record_id").collect())
+    top, low = rep_ids[-1], rep_ids[0]
+    src = {
+        r["record_id"]: r
+        for r in files.withColumn("record_id", record_id_expr())
+        .where(F.col("record_id").isin([top, low]))
+        .collect()
+    }
+    swap_row, swap_id = _copy_with_id(src[top], "swap", below=top)
+    dup_row, dup_id = _copy_with_id(src[low], "dup", above=low)
+    new_row = ("append/new", "new/unique_file.py", "0" * 40, "python",
+               "def appended_only_here():\n    return 'qzxv_86420'\n")
+    rows = [swap_row, dup_row, new_row]
+
+    def frame(rows):
+        return spark.createDataFrame(
+            pd.DataFrame(rows, columns=amp_io.REPO_FILES_SCHEMA.names),
+            amp_io.REPO_FILES_SCHEMA,
+        )
+
+    by_rows = append_rows(idx0, rows)
+    by_frame = append_records(idx0, frame(rows))
+    _assert_same_tables(by_rows, by_frame)
+    assert by_rows.n_records == idx0.n_records + 3
+    assert by_rows.idf_b is idx0.idf_b
+    side_ids = {r["record_id"] for r in by_rows.sides.select("record_id").collect()}
+    assert swap_id in side_ids and top not in side_ids
+    assert low in side_ids and dup_id not in side_ids
+    _assert_same_tables(
+        by_rows,
+        build_index(files.unionByName(frame(rows)), CFG, idf_override=idx0.idf),
+    )
+    _assert_index_state(by_rows)
+    refreshed = append_rows(idx0, rows, policy="refresh")
+    _assert_same_tables(refreshed, append_records(idx0, frame(rows), policy="refresh"))
+    assert refreshed.idf_b is not idx0.idf_b
+
+    old_row = tuple(files.select(*amp_io.REPO_FILES_SCHEMA.names).first())
+    for bad in ([new_row, new_row], [new_row, old_row]):
+        with pytest.raises(ValueError, match="1 appended record_ids collide"):
+            append_rows(idx0, bad)
+        with pytest.raises(ValueError, match="1 appended record_ids collide"):
+            append_records(idx0, frame(bad))
+
+
+def test_served_removes_equal_fresh_frozen_build(spark, small_corpus):
+    """Served removes — one that promotes a content's surviving record,
+    one that drops a whole content — leave the tables of a fresh build
+    over the survivors with the same dictionary."""
+    from amp.normalize import record_id_expr
+    from amp.serve import MatchService
+
+    files, _ = small_corpus
+    svc = MatchService(spark, build_index(files, CFG))
+    idx0 = svc.index
+    multi = sorted(
+        (r for r in idx0.records.groupBy("content_sha")
+         .agg(F.sort_array(F.collect_list("record_id")).alias("ids")).collect()
+         if len(r["ids"]) >= 2),
+        key=lambda r: r["content_sha"],
+    )
+    promote = [multi[0]["ids"][0]]   # the representative; the rest survive
+    whole = list(multi[1]["ids"])    # every record of the content
+    svc.remove(promote)
+    svc.remove(whole)
+    side_ids = {r["record_id"] for r in svc.index.sides.select("record_id").collect()}
+    assert multi[0]["ids"][1] in side_ids
+    assert not side_ids & set(promote + whole)
+
+    remaining = files.withColumn("record_id", record_id_expr()).where(
+        ~F.col("record_id").isin(promote + whole)
+    ).drop("record_id")
+    _assert_same_tables(svc.index, build_index(remaining, CFG, idf_override=idx0.idf))
+    _assert_index_state(svc.index)
+
+
 def test_streaming_ingest_normalizes_like_batch(spark, small_corpus, tmp_path_factory):
     from amp import normalize, streaming
 
@@ -476,6 +597,31 @@ def test_index_save_load_empty_vocabulary(spark, index, tmp_path_factory):
     loaded = MatchIndex.load(spark, root)
     assert loaded.idf == {}
     assert loaded.n_records == index.n_records
+
+
+def test_index_save_of_empty_vocabulary_plans_no_python_rdd(
+    spark, index, tmp_path_factory, monkeypatch
+):
+    """The zero-row IDF table an empty vocabulary saves is planned in
+    the JVM, not through a PythonRDD (whose tasks start Python workers
+    to return nothing)."""
+    import copy
+
+    from amp.checkpoint import CheckpointManager
+
+    written = {}
+    real_write = CheckpointManager.write
+
+    def spy(self, df, stage, *a, **kw):
+        written[stage] = df
+        return real_write(self, df, stage, *a, **kw)
+
+    monkeypatch.setattr(CheckpointManager, "write", spy)
+    empty = copy.copy(index)
+    empty.idf = {}
+    empty.save(str(tmp_path_factory.mktemp("index_ck_empty_idf_plan")))
+    lineage = written["index_idf"]._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage
 
 
 def test_index_load_ignores_retired_config_keys(spark, small_corpus, index, tmp_path_factory):

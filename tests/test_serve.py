@@ -706,3 +706,80 @@ def test_http_index_remove_e2e(spark, small_corpus):
     finally:
         httpd.shutdown()
         httpd.server_close()
+
+
+def _fresh_records(tag: str, n: int) -> list[dict]:
+    return [
+        {"repo": f"writes/{tag}", "path": f"pkg/mod_{tag}_{i}.py", "commit": "c" * 40,
+         "lang": "python",
+         "content": f"def only_{tag}_{i}(x):\n    return x * {i} + len('{tag}')\n"}
+        for i in range(n)
+    ]
+
+
+def _record_ids(records: list[dict]) -> list[str]:
+    import hashlib
+
+    from amp.normalize import _US, RECORD_ID_HEX
+
+    return [
+        hashlib.sha256(_US.join((r["repo"], r["path"], r["commit"])).encode())
+        .hexdigest()[:RECORD_ID_HEX]
+        for r in records
+    ]
+
+
+def test_served_writes_job_budget_and_partition_counts(spark, small_corpus):
+    """A served append or remove is decided in the driver from lookups
+    sized by the write: each runs at most 7 Spark jobs (no full-index
+    probe or representatives pass), and after append/remove pairs every
+    index table keeps the base index's partition count."""
+    from amp.incremental import build_index
+    from amp.serve import MatchService
+
+    files, _ = small_corpus
+    svc = MatchService(spark, build_index(files))
+    tables = ("records", "sides", "blocks")
+
+    def partitions():
+        return {t: getattr(svc.index, t).rdd.getNumPartitions() for t in tables}
+
+    base = partitions()
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(fn) -> int:
+        before = set(tracker.getJobIdsForGroup(None))
+        fn()
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    for k in range(3):
+        recs = _fresh_records(f"w{k}", 4)
+        assert jobs(lambda: svc.append(recs)) <= 7
+        assert jobs(lambda: svc.remove(_record_ids(recs))) <= 7
+        assert svc.index.n_records == files.count()
+        assert partitions() == base
+
+
+def test_duplicates_reply_holds_whole_clusters(spark, small_corpus, service):
+    """/duplicates answers whole clusters in (cluster_id, record_id)
+    order: the cluster a limit would split is left out, and the next
+    cluster would not have fit."""
+    from collections import defaultdict
+
+    service._dup_df = None
+    everything = service.duplicates(limit=10**6)
+    members = defaultdict(set)
+    for r in everything:
+        members[r["cluster_id"]].add(r["record_id"])
+    ordered = sorted((r["cluster_id"], r["record_id"]) for r in everything)
+    assert max(len(m) for m in members.values()) > 1
+    for limit in (50, 200):
+        got = [(r["cluster_id"], r["record_id"]) for r in service.duplicates(limit=limit)]
+        assert 0 < len(got) <= limit
+        assert got == ordered[: len(got)]
+        got_members = defaultdict(set)
+        for cid, rid in got:
+            got_members[cid].add(rid)
+        assert all(got_members[c] == members[c] for c in got_members)
+        if len(got) < len(ordered):
+            assert len(got) + len(members[ordered[len(got)][0]]) > limit
