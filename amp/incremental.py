@@ -21,13 +21,14 @@ init_db.sql:78-85):
     handle of it, shared by every request and write of the version.
 build_index and MatchIndex.load create all of it. append_records,
 append_rows and remove_records derive the next version from lookups
-sized by the write: the driver collects the index rows that share the
-write's contents or ids and decides which side rows drop and which
-representatives are added. Only those are featurized and blocked; the
-dropped ids filter the index tables as literals, and records, sides and
-blocks are pinned side by side, each in its pre-write partition count.
-Nothing is aggregated or featurized over the whole index: the lookups
-are filtered scans that return rows sized by the write. A served
+sized by the write: the driver collects one row per content the write
+touches (its representative, the min record_id) and decides which side
+rows drop and which representatives are added. Only those are
+featurized and blocked; the dropped ids filter the index tables as one
+SQL IN list, and records, sides and blocks are pinned side by side,
+each in its pre-write partition count. Nothing is aggregated or
+featurized over the whole index: the lookups are filtered scans,
+grouped in one task, that return rows sized by the write. A served
 append of new contents is 4 Spark jobs and starts no Python worker; a
 remove is 5, and 6 when it promotes a surviving record. The IDF handle
 is reused under ``frozen`` (a new one under ``refresh``, which
@@ -56,7 +57,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark import Broadcast
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import blocking, features, normalize, rank, scoring
@@ -214,17 +215,28 @@ def _featurize(
     return sides.localCheckpoint(eager=True)
 
 
+def _isin(col: str, values) -> Column:
+    """``col IN (values)`` over string literals — how a write names its
+    ids and contents in a plan: an anti- or semi-join against even a
+    driver-built frame costs jobs of its own (its broadcast). The list
+    reaches the JVM as ONE SQL expression: ``Column.isin`` makes a py4j
+    call per literal, 4.5 s for 12,000 ids against 0.01 s parsed."""
+    if not values:
+        return F.lit(False)
+    quoted = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+              for v in sorted(values))
+    return F.expr(f"{col} IN ({', '.join(quoted)})")
+
+
 def _edit(
     table: DataFrame, key: str, dropped: list[str], added: DataFrame | None
 ) -> DataFrame:
     """``table`` without the rows whose ``key`` is in ``dropped`` and
     with the rows of ``added``, pinned in the table's own partition
-    count — or ``table`` itself when the write changes none of it. The
-    ids go into the plan as literals: an anti-join against even a
-    driver-built frame costs jobs of its own (its broadcast)."""
+    count — or ``table`` itself when the write changes none of it."""
     if not dropped and added is None:
         return table
-    out = table.where(~F.col(key).isin(dropped)) if dropped else table
+    out = table.where(~_isin(key, dropped)) if dropped else table
     if added is not None:
         out = out.unionByName(added)
     return out.coalesce(table.rdd.getNumPartitions()).localCheckpoint(eager=True)
@@ -266,7 +278,7 @@ def _next_version(
             idf = features.idf_map(reps, reps.count(), cfg)
             idf_b = reps.sparkSession.sparkContext.broadcast(idf)
             sides = _featurize(reps, idf_b, cfg, vecs)
-            added = sides.where(F.col("record_id").isin(added_ids))
+            added = sides.where(_isin("record_id", added_ids))
         else:
             idf, idf_b = index.idf, index.idf_b
             added = featurize(added_ids, idf_b) if added_ids else None
@@ -296,22 +308,18 @@ def _append(
 ) -> MatchIndex:
     """append_records and append_rows after normalize: ``new_records``
     are the appended rows and ``keys`` their (record_id, content_sha),
-    in the driver. One lookup collects the index rows that share an
-    appended content or id; from them the driver finds each content's
-    current representative (its min record_id) and any appended id that
-    exists already. The rows come back ungrouped: AQE would run a
-    grouped aggregation's shuffle as a job of its own, and they are only
-    the members of the contents the write touches."""
+    in the driver. One lookup returns a row per content the append
+    touches (and per content holding an appended id): the content's
+    current representative (its min record_id) and how many appended
+    ids it holds already."""
     ids = [rid for rid, _ in keys]
-    hits = (
-        index.records.where(
-            F.col("content_sha").isin(sorted({sha for _, sha in keys}))
-            | F.col("record_id").isin(ids)
-        )
-        .select("record_id", "content_sha")
-        .collect()
+    taken = _isin("record_id", ids)
+    current = _content_rows(
+        index.records,
+        _isin("content_sha", {sha for _, sha in keys}) | taken,
+        F.count_if(taken).alias("taken"),
     )
-    n_collide = len(ids) - len(set(ids) - {rid for rid, _ in hits})
+    n_collide = len(ids) - len(set(ids)) + sum(r["taken"] for r in current)
     if n_collide:
         # appending a record_id that already exists is an upsert, which
         # this path does not implement — fail loudly (the reference's
@@ -320,13 +328,17 @@ def _append(
             f"{caller}: {n_collide} appended record_ids collide with existing "
             "ones — append is insert-only; rebuild the index for upserts"
         )
-    current, winners = _min_ids(hits), _min_ids(keys)
+    reps = {r["content_sha"]: r["rep"] for r in current}
+    winners: dict[str, str] = {}
+    for rid, sha in keys:
+        if sha not in winners or rid < winners[sha]:
+            winners[sha] = rid
     # a content's appended winner becomes its representative when the
     # content is new or the winner undercuts the current one, whose side
     # row then drops
     dropped, added_ids = [], []
     for sha, rid in winners.items():
-        old = current.get(sha)
+        old = reps.get(sha)
         if old is None or rid < old:
             added_ids.append(rid)
             if old is not None:
@@ -337,13 +349,20 @@ def _append(
     )
 
 
-def _min_ids(rows) -> dict[str, str]:
-    """content_sha -> min record_id of (record_id, content_sha) rows."""
-    out: dict[str, str] = {}
-    for rid, sha in rows:
-        if sha not in out or rid < out[sha]:
-            out[sha] = rid
-    return out
+def _content_rows(records: DataFrame, cond: Column, *aggs: Column) -> list:
+    """One row per content of the ``records`` rows matching ``cond``:
+    content_sha, ``rep`` (its min record_id) and ``aggs``, collected to
+    the driver — a content held by thousands of records (an empty file,
+    a license) still returns one row. The matching rows are grouped in
+    one task, so the aggregation needs no exchange, which AQE would run
+    as a job of its own."""
+    return (
+        records.where(cond)
+        .coalesce(1)
+        .groupBy("content_sha")
+        .agg(F.min("record_id").alias("rep"), *aggs)
+        .collect()
+    )
 
 
 def _check_append(index: MatchIndex, policy: str, embeddings, caller: str) -> None:
@@ -370,15 +389,15 @@ def append_records(
     IDF policy (explicit, because the trade-off is real):
       * ``frozen`` (default): new records are weighted with the index's
         EXISTING IDF dictionary. Incremental cost — one normalize pass
-        over the new files, a lookup of the index rows sharing their
-        contents or ids, one feature pass over the representatives the
-        append adds, and the three table pins; nothing is aggregated or
-        featurized over the whole index. Drift trade-off: tokens introduced by the
-        appended batch score 0 (absent from the dictionary), and
-        document frequencies do not shift — scores equal a fresh
-        ``build_index(all_files, idf_override=old_idf)`` EXACTLY
-        (tested), but diverge from a fresh build's own IDF as the
-        appended fraction grows. Re-freeze periodically.
+        over the new files, a lookup of one row per content the append
+        touches, one feature pass over the representatives the append
+        adds, and the three table pins; nothing is aggregated or
+        featurized over the whole index. Drift trade-off: tokens
+        introduced by the appended batch score 0 (absent from the
+        dictionary), and document frequencies do not shift — scores
+        equal a fresh ``build_index(all_files, idf_override=old_idf)``
+        EXACTLY (tested), but diverge from a fresh build's own IDF as
+        the appended fraction grows. Re-freeze periodically.
       * ``refresh``: recompute the representatives and the IDF over the
         union and re-featurize every representative — near-rebuild cost
         (normalize of old records is still skipped), zero drift.
@@ -388,7 +407,12 @@ def append_records(
     side row is dropped and the new winner featurized — the resulting
     side table is one row per distinct content keyed by the GLOBAL min
     record id, byte-equal to a fresh build's. Rows already in the
-    driver take append_rows, which runs no Python worker.
+    driver can take append_rows, which runs no Python worker but does
+    all its work in the driver's one thread; bulk appends belong here.
+    A write names its ids and contents in its plans as IN lists, and
+    planning a query grows with its lists — about 0.2-0.3 s for one of
+    12,000 ids: 12,000 rows appended to a 16,837-record index took 5.5 s
+    and their removal 3.0 s (4 cores, median of 3).
     """
     _check_append(index, policy, embeddings, "append_records")
     cfg = index.cfg
@@ -406,7 +430,7 @@ def append_records(
             vecs = index.sides.select("record_id", "embedding").unionByName(vecs)
 
     def featurize(rep_ids, idf_b):
-        reps = new_records.where(F.col("record_id").isin(rep_ids))
+        reps = new_records.where(_isin("record_id", rep_ids))
         return _featurize(reps, idf_b, cfg, vecs)
 
     return _append(
@@ -426,9 +450,11 @@ def append_rows(
     composition of scoring.query_side_rows). Both reach Spark as
     in-memory Arrow relations, so no Python worker runs. The version
     equals append_records' over the same rows (tested). The cost grows
-    with the rows in the driver's one thread, so large batches belong on
-    append_records (serve bounds the rows it sends here). Not for
-    provided-embedding indexes: the rows carry no vectors."""
+    with the rows in the driver's one thread: against append_records
+    over the same rows it takes 0.4-0.7x the time up to 300 rows, about
+    the same at 1,000 and 1.4-1.6x at 4,000 (an 8 MB request body), so
+    bulk appends belong on append_records. Not for provided-embedding
+    indexes: the rows carry no vectors."""
     _check_append(index, policy, None, "append_rows")
     cfg = index.cfg
     spark = index.records.sparkSession
@@ -470,9 +496,9 @@ def remove_records(
     rows, the content's new winner (min surviving record_id) is
     featurized; contents whose every row was removed lose their side
     row entirely. Two lookups decide it in the driver — the removed
-    ids' rows, then the rows of the contents they touch — and only the
-    promoted representatives are featurized: a remove that promotes
-    none runs no Python worker.
+    ids' rows, then one row per content they touch (its current and its
+    min surviving record_id) — and only the promoted representatives
+    are featurized: a remove that promotes none runs no Python worker.
 
     IDF policy as in append_records: ``frozen`` keeps the dictionary
     (document frequencies do not shift — results equal a fresh
@@ -491,11 +517,8 @@ def remove_records(
     ids = sorted({str(r) for r in record_ids})
     if not ids:
         raise ValueError("remove_records: empty id list")
-    found = (
-        index.records.where(F.col("record_id").isin(ids))
-        .select("record_id", "content_sha")
-        .collect()
-    )
+    gone = _isin("record_id", ids)
+    found = index.records.where(gone).select("record_id", "content_sha").collect()
     if len(found) != len(ids):
         raise ValueError(
             f"remove_records: {len(ids) - len(found)} of {len(ids)} ids are "
@@ -506,22 +529,18 @@ def remove_records(
             "remove_records: removal would empty the index — rebuild "
             "instead of shrinking to nothing"
         )
-    members = (
-        index.records.where(
-            F.col("content_sha").isin(sorted({sha for _, sha in found}))
-        )
-        .select("record_id", "content_sha")
-        .collect()
+    touched = _content_rows(
+        index.records,
+        _isin("content_sha", {sha for _, sha in found}),
+        F.min(F.when(~gone, F.col("record_id"))).alias("survivor"),
     )
     # a removed representative drops its side row, and its content's
     # min surviving id (if any) is promoted. Removal never dethrones a
     # surviving representative.
-    gone = set(ids)
-    current = _min_ids(members)
-    survivors = _min_ids((rid, sha) for rid, sha in members if rid not in gone)
-    dropped = sorted(rid for rid in current.values() if rid in gone)
-    promoted = sorted(survivors[sha] for sha, rid in current.items()
-                      if rid in gone and sha in survivors)
+    gone_ids = set(ids)
+    dethroned = [r for r in touched if r["rep"] in gone_ids]
+    dropped = sorted(r["rep"] for r in dethroned)
+    promoted = sorted(r["survivor"] for r in dethroned if r["survivor"] is not None)
 
     vecs = (index.sides.select("record_id", "embedding")
             if index.uses_provided_embeddings else None)
@@ -534,7 +553,7 @@ def remove_records(
         ).dropDuplicates(["record_id"])
 
     def featurize(rep_ids, idf_b):
-        reps = index.records.where(F.col("record_id").isin(rep_ids))
+        reps = index.records.where(_isin("record_id", rep_ids))
         return _featurize(reps, idf_b, cfg, vecs)
 
     return _next_version(

@@ -29,12 +29,12 @@ right here in the driver, where its rows already are
 stage; a larger body takes match_records, one Python pass for its
 features and one for the scorer. A single match with candidates is
 nine small jobs whose cost is scheduling, not data. An append body
-under the same bound is normalized and featurized in the driver too
-(incremental.append_rows), and every write is decided in the driver
-from lookups sized by the write: an append of new contents is 4 jobs
-and no Python worker, a remove 5 (6 when it promotes a surviving
-record, whose features take one Python pass). Bulk dedup is the
-offline pipeline (amp.pipeline), not a request.
+is normalized and featurized in the driver too (incremental.append_rows),
+and every write is decided in the driver from lookups sized by the
+write: an append of new contents is 4 jobs and no Python worker, a
+remove 5 (6 when it promotes a surviving record, whose features take
+one Python pass). Bulk dedup is the offline pipeline (amp.pipeline),
+not a request.
 """
 
 from __future__ import annotations
@@ -47,28 +47,25 @@ import pandas as pd
 from pyspark.sql import SparkSession
 
 from . import io as amp_io
-from .incremental import (MatchIndex, append_records, append_rows,
-                          match_records, match_rows, remove_records)
+from .incremental import (MatchIndex, append_rows, match_records, match_rows,
+                          remove_records)
 
 # the repo_files columns, in order
 REQUIRED_FIELDS = ("repo", "path", "commit", "lang", "content")
 
 # Match bodies of at most this many records are featurized in the
-# driver (match_rows), and append bodies normalized and featurized there
-# (append_rows); larger ones take match_records / append_records, whose
-# Python worker pass costs a fixed ~0.1 s (a warm 4-task mapInPandas
-# job: 0.18 s, against 0.07 s for the same job without Python) but
-# spreads the work over the executor cores. Measured crossover, 4 cores,
+# driver (match_rows); larger ones take match_records, whose Python
+# worker pass costs a fixed ~0.1 s (a warm 4-task mapInPandas job:
+# 0.18 s, against 0.07 s for the same job without Python) but spreads
+# the work over the executor cores. Measured crossover, 4 cores,
 # 12,000-base index, median of 3 interleaved reps per path (s):
 #   rows               100   150   200   250   300
 #   match  in-driver  0.52  0.75  0.86  0.75  0.88
 #   match  DataFrame  0.95  0.72  0.65  0.80  0.86
-#   append in-driver  0.27  0.40  0.45  0.50  0.55
-#   append DataFrame  0.68  0.80  0.74  0.82  0.80
 # The bound is the largest measured size at and below which the driver
-# won every rep of both bodies: it lost a match rep at 150, 200 and 300,
-# and no append rep. A second round and the wider match crossover (1 to
-# 3,000 rows) are in ROADMAP's open items.
+# won every rep: it lost a rep at 150, 200 and 300. A second round and
+# the wider crossover (1 to 3,000 rows) are in ROADMAP's open items.
+# Append bodies do not use it: they always take append_rows.
 _LOCAL_FEATURIZE_MAX_ROWS = 100
 
 
@@ -182,9 +179,11 @@ class MatchService:
         """POST /api/v1/index/append: extend the live index with new
         records WITHOUT a rebuild (the reference's periodic S3 resync,
         cmd/addressmatchpro/main.go:73-90, truncates + reloads; here the
-        run-0 extension is incremental via amp.incremental.append_rows —
-        append_records for a body over the row bound — with its
-        frozen-vs-refresh IDF policy).
+        run-0 extension is incremental via amp.incremental.append_rows,
+        with its frozen-vs-refresh IDF policy). The rows are normalized
+        and featurized in the driver at any body size: up to 300 rows
+        that takes 0.4-0.7x the time of append_records' Python passes, and
+        at the 8 MB body cap (4,000 rows) 1.4-1.6x their time (ROADMAP).
 
         Concurrency contract: appends serialize on ``_append_lock``;
         in-flight match/duplicates requests keep the index reference they
@@ -205,12 +204,7 @@ class MatchService:
             )
         rows = _request_rows(records)
         with self._append_lock:
-            if len(rows) <= _LOCAL_FEATURIZE_MAX_ROWS:
-                new_index = append_rows(self.index, rows, policy=policy)
-            else:
-                new_index = append_records(
-                    self.index, self._files_df(rows), policy=policy
-                )
+            new_index = append_rows(self.index, rows, policy=policy)
             self._swap(new_index, "append_requests")
         return {"appended": len(records), "index_records": new_index.n_records}
 

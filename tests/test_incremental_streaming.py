@@ -334,6 +334,7 @@ def test_remove_records_frozen_equals_fresh_frozen_build(spark, small_corpus):
     assert idx1.idf == idx0.idf
     # the removed representatives' keys left the block table
     _assert_index_state(idx1)
+    _assert_same_tables(idx1, fresh)
     q = _queries(files)
     assert _match_rows(idx1, q) == _match_rows(fresh, q)
 
@@ -429,6 +430,13 @@ def _copy_with_id(src, tag, below=None, above=None):
             return (*key, src["lang"], src["content"]), rid
 
 
+def _files_frame(spark, rows):
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=amp_io.REPO_FILES_SCHEMA.names),
+        amp_io.REPO_FILES_SCHEMA,
+    )
+
+
 def test_append_rows_equals_append_records(spark, small_corpus):
     """append_rows (rows in the driver, featurized there) builds the
     same version as append_records over the same rows, table for table,
@@ -456,14 +464,8 @@ def test_append_rows_equals_append_records(spark, small_corpus):
                "def appended_only_here():\n    return 'qzxv_86420'\n")
     rows = [swap_row, dup_row, new_row]
 
-    def frame(rows):
-        return spark.createDataFrame(
-            pd.DataFrame(rows, columns=amp_io.REPO_FILES_SCHEMA.names),
-            amp_io.REPO_FILES_SCHEMA,
-        )
-
     by_rows = append_rows(idx0, rows)
-    by_frame = append_records(idx0, frame(rows))
+    by_frame = append_records(idx0, _files_frame(spark, rows))
     _assert_same_tables(by_rows, by_frame)
     assert by_rows.n_records == idx0.n_records + 3
     assert by_rows.idf_b is idx0.idf_b
@@ -472,11 +474,13 @@ def test_append_rows_equals_append_records(spark, small_corpus):
     assert low in side_ids and dup_id not in side_ids
     _assert_same_tables(
         by_rows,
-        build_index(files.unionByName(frame(rows)), CFG, idf_override=idx0.idf),
+        build_index(files.unionByName(_files_frame(spark, rows)), CFG, idf_override=idx0.idf),
     )
     _assert_index_state(by_rows)
     refreshed = append_rows(idx0, rows, policy="refresh")
-    _assert_same_tables(refreshed, append_records(idx0, frame(rows), policy="refresh"))
+    _assert_same_tables(
+        refreshed, append_records(idx0, _files_frame(spark, rows), policy="refresh")
+    )
     assert refreshed.idf_b is not idx0.idf_b
 
     old_row = tuple(files.select(*amp_io.REPO_FILES_SCHEMA.names).first())
@@ -484,38 +488,73 @@ def test_append_rows_equals_append_records(spark, small_corpus):
         with pytest.raises(ValueError, match="1 appended record_ids collide"):
             append_rows(idx0, bad)
         with pytest.raises(ValueError, match="1 appended record_ids collide"):
-            append_records(idx0, frame(bad))
+            append_records(idx0, _files_frame(spark, bad))
 
 
-def test_served_removes_equal_fresh_frozen_build(spark, small_corpus):
-    """Served removes — one that promotes a content's surviving record,
-    one that drops a whole content — leave the tables of a fresh build
-    over the survivors with the same dictionary."""
-    from amp.normalize import record_id_expr
-    from amp.serve import MatchService
+def test_write_ids_are_matched_as_literal_strings(spark, index):
+    """Writes name their ids in the plan as one SQL IN list: quotes,
+    backslashes and SQL text in an id are matched literally, never
+    parsed."""
+    from amp.incremental import _isin, remove_records
+
+    odd = ["it's", "a\\'b", "c\\", "x') OR ('1'='1", "tab\tnew\nline", "ü€"]
+    frame = spark.createDataFrame([(v,) for v in odd + ["plain", "x"]], "record_id string")
+    assert sorted(r[0] for r in frame.where(_isin("record_id", odd)).collect()) == sorted(odd)
+    assert frame.where(_isin("record_id", [])).count() == 0
+    with pytest.raises(ValueError, match=f"{len(odd)} of {len(odd)} ids are not in"):
+        remove_records(index, odd)
+
+
+def test_writes_to_a_content_of_many_records_collect_a_row_per_content(
+    spark, small_corpus, monkeypatch
+):
+    """A write that touches a content held by many index records (an
+    empty file, a license) brings the driver one row per content, not
+    one per record, and still repairs the representative exactly: an
+    appended copy whose id undercuts the representative takes its
+    place, and removing the copy again restores the version."""
+    import hashlib
+
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
+
+    from amp.incremental import append_rows, remove_records
+    from amp.normalize import _US, RECORD_ID_HEX
 
     files, _ = small_corpus
-    svc = MatchService(spark, build_index(files, CFG))
-    idx0 = svc.index
-    multi = sorted(
-        (r for r in idx0.records.groupBy("content_sha")
-         .agg(F.sort_array(F.collect_list("record_id")).alias("ids")).collect()
-         if len(r["ids"]) >= 2),
-        key=lambda r: r["content_sha"],
+    src = files.first()
+    copies = [(f"copies/{i}", src["path"], src["commit"], src["lang"], src["content"])
+              for i in range(80)]
+    base = files.unionByName(_files_frame(spark, copies))
+    idx0 = build_index(base, CFG)
+    copy_id = hashlib.sha256(_US.join(copies[0][:3]).encode()).hexdigest()[:RECORD_ID_HEX]
+    sha = idx0.records.where(F.col("record_id") == copy_id).first()["content_sha"]
+    rep, n_held = (
+        idx0.records.where(F.col("content_sha") == sha)
+        .agg(F.min("record_id"), F.count("*")).first()
     )
-    promote = [multi[0]["ids"][0]]   # the representative; the rest survive
-    whole = list(multi[1]["ids"])    # every record of the content
-    svc.remove(promote)
-    svc.remove(whole)
-    side_ids = {r["record_id"] for r in svc.index.sides.select("record_id").collect()}
-    assert multi[0]["ids"][1] in side_ids
-    assert not side_ids & set(promote + whole)
+    assert n_held > len(copies)
+    row, rid = _copy_with_id(src, "undercut", below=rep)
 
-    remaining = files.withColumn("record_id", record_id_expr()).where(
-        ~F.col("record_id").isin(promote + whole)
-    ).drop("record_id")
-    _assert_same_tables(svc.index, build_index(remaining, CFG, idf_override=idx0.idf))
-    _assert_index_state(svc.index)
+    sizes = []
+    real_collect = ClassicFrame.collect
+
+    def spy(self):
+        out = real_collect(self)
+        sizes.append(len(out))
+        return out
+
+    monkeypatch.setattr(ClassicFrame, "collect", spy)
+    idx1 = append_rows(idx0, [row])
+    idx2 = remove_records(idx1, [rid])
+    monkeypatch.undo()
+    assert sizes == [1, 1, 1]  # the append's lookup; the remove's two
+
+    side_ids = {r["record_id"] for r in idx1.sides.select("record_id").collect()}
+    assert rid in side_ids and rep not in side_ids
+    fresh = build_index(base.unionByName(_files_frame(spark, [row])), CFG,
+                        idf_override=idx0.idf)
+    _assert_same_tables(idx1, fresh)
+    _assert_same_tables(idx2, idx0)
 
 
 def test_streaming_ingest_normalizes_like_batch(spark, small_corpus, tmp_path_factory):
