@@ -55,34 +55,43 @@ def _minhash_coeffs(cfg: AmpConfig) -> tuple[list[int], list[int]]:
     return a.tolist(), b.tolist()
 
 
-def minhash_blocks(sigs: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(record_id, block_key) rows: one key per band. Band key =
-    xxhash64(band index, its r signature values) — an int64, so every
-    downstream shuffle/join on blocking keys moves fixed-width ints,
-    never strings (explicit-repartition-on-blocking-keys is the
-    north_rule; int keys make that repartition cheap)."""
+def _band_keys_sql(cfg: AmpConfig) -> str:
+    """SQL of a side row's MinHash band keys: the array<bigint> of its
+    distinct xxhash64(band index, the band's r signature values) over
+    ``sig``. One SQL expression, not ~14 Column calls per band: a query
+    batch builds this plan per request, and each Column call is a
+    driver round trip to the JVM.
+
+    array_distinct makes the no-duplicate-(record_id, block_key)
+    invariant STRUCTURAL within the pass (band index is salted into
+    each key, so duplicates require a real xxhash64 collision — but
+    the grouped pair-gen's hot-key pre-count counts raw rows, and its
+    equivalence to the authoritative distinct-size gate must not rest
+    on a probabilistic argument). Cross-pass duplicates would need a
+    minhash-vs-path key collision (disjoint hash inputs; 2^-64),
+    and the post-collect distinct-size filter remains authoritative."""
     r = cfg.minhash_rows_per_band
-    # one SQL expression, not ~14 Column calls per band: a query batch
-    # builds this plan per request, and each Column call is a driver
-    # round trip to the JVM
     band_keys = ", ".join(
         f"xxhash64({band}, "
         + ", ".join(f"element_at(sig, {band * r + i + 1})" for i in range(r))
         + ")"
         for band in range(cfg.minhash_bands)
     )
-    # array_distinct makes the no-duplicate-(record_id, block_key)
-    # invariant STRUCTURAL within the pass (band index is salted into
-    # each key, so duplicates require a real xxhash64 collision — but
-    # the grouped pair-gen's hot-key pre-count counts raw rows, and its
-    # equivalence to the authoritative distinct-size gate must not rest
-    # on a probabilistic argument). Cross-pass duplicates would need a
-    # minhash-vs-path key collision (disjoint hash inputs; 2^-64),
-    # and the post-collect distinct-size filter remains authoritative.
+    return f"array_distinct(array({band_keys}))"
+
+
+# SQL of a side row's exact-attribute key, its (lang, path stem)
+_PATH_KEY_SQL = "xxhash64('p', lang, stem)"
+
+
+def minhash_blocks(sigs: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
+    """(record_id, block_key) rows: one key per band. Band key =
+    xxhash64(band index, its r signature values) — an int64, so every
+    downstream shuffle/join on blocking keys moves fixed-width ints,
+    never strings (explicit-repartition-on-blocking-keys is the
+    north_rule; int keys make that repartition cheap)."""
     return (
-        sigs.select(
-            "record_id", F.expr(f"array_distinct(array({band_keys}))").alias("keys")
-        )
+        sigs.selectExpr("record_id", f"{_band_keys_sql(cfg)} AS keys")
         .select("record_id", F.explode("keys").alias("block_key"))
         .withColumn("pass_name", F.lit("minhash"))
     )
@@ -91,10 +100,21 @@ def minhash_blocks(sigs: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFram
 def path_blocks(reps: DataFrame) -> DataFrame:
     """Exact-attribute pass: (lang, stem) — catches renames/edits that
     keep the file name (reference analog: state/city equality blocks)."""
-    return reps.select(
+    return reps.selectExpr("record_id", f"{_PATH_KEY_SQL} AS block_key").withColumn(
+        "pass_name", F.lit("path")
+    )
+
+
+def block_key_arrays(sides: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
+    """(record_id, block_keys) rows: the keys all_blocks gives each side
+    row, as one array per row (exploded, the all_blocks rows). It is a
+    single projection, with no explode or union, so over an in-memory
+    relation (a served request's side rows) Spark folds it into the
+    relation and collecting it runs no job."""
+    return sides.selectExpr(
         "record_id",
-        F.xxhash64(F.lit("p"), F.col("lang"), F.col("stem")).alias("block_key"),
-    ).withColumn("pass_name", F.lit("path"))
+        f"concat({_band_keys_sql(cfg)}, array({_PATH_KEY_SQL})) AS block_keys",
+    )
 
 
 def all_blocks(

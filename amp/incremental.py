@@ -36,16 +36,21 @@ re-derives every representative and side row).
 
 A request owns only its own rows. match_records normalizes and
 featurizes a query DataFrame in one Python worker pass and pins it;
-match_rows featurizes query rows already in the driver (a served
-request's) in-process and hands Spark the finished side rows, so the
-scorer is the request's only Python stage. From there both share one
-tail: the query's block keys meet the pinned index blocks in a
+the query's block keys then meet the pinned index blocks in a
 broadcast join (the candidate pairs, pinned), and the scorer reads the
 query sides plus the index side rows those pairs name — no index-side
-table is rebuilt or shuffled per request. The query side is blocked
-against the index side ONLY (no index-index pairs — the reference gets
-this from `candidates.run_id = 0 AND input.run_id = $1`), then
-ranked/top-k per query record (match.sql:66, matcher.go:221-228).
+table is rebuilt or shuffled per request. match_rows matches query
+rows already in the driver (a served request's) in the driver, as the
+reference's matcher loops over its candidates in Go (matcher.go:119-211):
+it featurizes them, looks up the index block rows of their keys and
+the side rows of their candidates (two filtered scans: 2 Spark jobs,
+1 with no candidate), then scores and ranks the pairs in-process, so
+no Python worker runs. Past _LOCAL_SCORE_MAX_PAIRS looked-up rows or
+pairs (the measured point where scoring in the driver stops winning)
+it takes match_records' Spark tail instead. Both block
+the query side against the index side ONLY (no index-index pairs — the
+reference gets this from `candidates.run_id = 0 AND input.run_id = $1`),
+then rank/top-k per query record (match.sql:66, matcher.go:221-228).
 """
 
 from __future__ import annotations
@@ -217,10 +222,11 @@ def _featurize(
 
 def _isin(col: str, values) -> Column:
     """``col IN (values)`` over string literals — how a write names its
-    ids and contents in a plan: an anti- or semi-join against even a
-    driver-built frame costs jobs of its own (its broadcast). The list
-    reaches the JVM as ONE SQL expression: ``Column.isin`` makes a py4j
-    call per literal, 4.5 s for 12,000 ids against 0.01 s parsed."""
+    ids and contents in a plan, and a served match its candidates: an
+    anti- or semi-join against even a driver-built frame costs jobs of
+    its own (its broadcast). The list reaches the JVM as ONE SQL
+    expression: ``Column.isin`` makes a py4j call per literal, 4.5 s
+    for 12,000 ids against 0.01 s parsed."""
     if not values:
         return F.lit(False)
     quoted = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -598,8 +604,8 @@ def match_records(
     the pinned block table and the IDF broadcast. Request-scoped:
       1. the query sides — normalize and side kernels in ONE Python
          worker pass over the batch (plus provided ``query_embeddings``),
-         pinned; match_rows featurizes rows already in the driver
-         in-process instead, and shares steps 2-3 (_match_sides);
+         pinned (match_rows matches rows already in the driver
+         in-process instead, and reaches steps 2-3 only past its gate);
       2. the candidate pairs — the query's block keys broadcast-joined
          against the pinned index blocks (the index blocks stream
          map-side, never shuffled), deduplicated and pinned;
@@ -625,6 +631,14 @@ def match_records(
     return _match_sides(index, q_sides.localCheckpoint(eager=True), top_n)
 
 
+# the columns of a match answer: the scored pair, its ends renamed, and
+# the candidate's rank within its query
+_ANSWER_SCHEMA = (
+    scoring.SCORED_SCHEMA.replace("left_id", "query_id", 1)
+    .replace("right_id", "candidate_id", 1) + ", rank int"
+)
+
+
 def match_rows(
     index: MatchIndex,
     rows: list[tuple],
@@ -634,20 +648,115 @@ def match_rows(
     """match_records for query rows that are Python objects in the
     driver already — an HTTP request's: ``rows`` are (repo, path,
     commit, lang, content) tuples of strings (lang may be None). The
-    rows are featurized in this process with the version's IDF
-    dictionary (scoring.query_side_rows) and handed to Spark as an
-    in-memory Arrow relation, so no Python worker runs and nothing is
-    pinned before blocking; the rest is match_records' steps 2-3.
-    Answers equal match_records over the same rows (tested). The cost
-    grows with the rows in the driver's one thread, so large batches
-    belong on match_records (serve bounds the rows it sends here)."""
+    whole match runs in this process, where the rows are, and Spark
+    only looks up the index rows it needs:
+      1. the rows are featurized with the version's IDF dictionary
+         (scoring.query_side_rows) into an in-memory Arrow relation,
+         and its block keys come from one projection over it
+         (blocking.block_key_arrays), which Spark folds into the
+         relation — no job;
+      2. the pinned index blocks holding those keys come back as one
+         filtered scan — 1 job; the pairs, their dedup and the removal
+         of self-pairs are decided here;
+      3. when there are pairs, the candidates' side rows come back as
+         a second filtered scan — 1 job; the pairs are scored in this
+         process (scoring.score_pair_rows) and cut to the top_n per
+         query, and the answer is an in-memory relation.
+    No Python worker runs. When the lookup or the pairs outgrow
+    _LOCAL_SCORE_MAX_PAIRS (where scoring in the driver stops winning)
+    or ``cfg.broadcast_sides_max_records``, steps 2-3 fall back to
+    match_records' Spark tail over the same relation. Answers equal match_records over
+    the same rows (tested). The featurizing cost grows with the rows in
+    the driver's one thread, so large batches belong on match_records
+    (serve bounds the rows it sends here)."""
     _check_query_embeddings(index, None)
+    cfg = index.cfg
+    spark = index.records.sparkSession
+    if not rows:
+        return amp_io.empty_frame(spark, _ANSWER_SCHEMA)
     files = pd.DataFrame(rows, columns=amp_io.REPO_FILES_SCHEMA.names)
-    q_sides = index.records.sparkSession.createDataFrame(
-        scoring.query_side_rows(files, index.idf, index.cfg, run_id),
-        scoring.SIDE_SCHEMA,
+    q_pdf = scoring.query_side_rows(files, index.idf, cfg, run_id)
+    q_sides = spark.createDataFrame(q_pdf, scoring.SIDE_SCHEMA)
+    pairs = _lookup_pairs(index, q_sides)
+    if pairs is None:
+        return _match_sides(index, q_sides, top_n)
+    if not pairs:
+        return amp_io.empty_frame(spark, _ANSWER_SCHEMA)
+    cand = index.sides.where(_isin("record_id", {r for _, r in pairs}))
+    scored = scoring.score_pair_rows(
+        pd.DataFrame(sorted(pairs), columns=["left_id", "right_id"]),
+        q_pdf, cand.toPandas(), cfg,
     )
-    return _match_sides(index, q_sides, top_n)
+    ranked = _ranked_rows(scored, top_n if top_n is not None else cfg.top_k)
+    if ranked.empty:  # a zero-row pandas frame would start Python workers
+        return amp_io.empty_frame(spark, _ANSWER_SCHEMA)
+    return spark.createDataFrame(ranked, _ANSWER_SCHEMA)
+
+
+# The most block rows and candidate pairs a served match scores in the
+# driver; past it, match_rows takes the Spark tail. Single served
+# matches into one hot (lang, path stem) block, 3 interleaved reps per
+# path, 4 cores, an index of 105,837 records (the 12,000-base corpus
+# plus hot blocks), wall seconds:
+#   pairs     in the driver        Spark tail
+#   1,000     0.32 0.35 0.29       0.70 0.72 0.67
+#   3,000     0.39 0.32 0.32       0.59 0.56 0.64
+#   10,000    0.56 0.61 0.68       0.79 0.84 0.73
+#   25,000    1.25 1.38 1.17       1.02 1.17 1.00
+#   50,000    2.19 2.15 2.39       1.55 1.50 1.57
+# The bound is the largest measured size at which the driver won every
+# rep. At 10,000 pairs the driver thread holds the GIL for 0.21-0.34 s
+# of CPU, the Spark tail for 0.03 s.
+_LOCAL_SCORE_MAX_PAIRS = 10_000
+
+
+def _lookup_pairs(index: MatchIndex, q_sides: DataFrame) -> set | None:
+    """The (query id, index id) candidate pairs of the query side rows
+    ``q_sides`` (an in-memory relation), found in the driver from one
+    filtered scan of the pinned block table — or None when the scan or
+    the pairs pass _LOCAL_SCORE_MAX_PAIRS rows, or the index config's
+    ``broadcast_sides_max_records`` (the most candidate side rows a
+    match brings through the driver) if that is lower. A query is
+    paired with every index member of each of its blocks, never with
+    its own id (match_records' pairs). The scan is one task: at the
+    105,837-record index above it read p50 71 ms against 125 ms for
+    the same filter over the table's 8 partitions collected whole."""
+    gate = min(index.cfg.broadcast_sides_max_records, _LOCAL_SCORE_MAX_PAIRS)
+    queries_of: dict[int, set[str]] = {}
+    for r in blocking.block_key_arrays(q_sides, index.cfg).collect():
+        for key in r["block_keys"]:
+            queries_of.setdefault(key, set()).add(r["record_id"])
+    # the keys reach the JVM as ONE IN list of bigint literals
+    keys = ", ".join(f"{k}L" for k in sorted(queries_of))
+    hits = (
+        index.blocks.where(F.expr(f"block_key IN ({keys})"))
+        .coalesce(1).limit(gate + 1).collect()
+    )
+    if len(hits) > gate:
+        return None
+    pairs = {
+        (q, h["right_id"])
+        for h in hits
+        for q in queries_of[h["block_key"]]
+        if q != h["right_id"]
+    }
+    return pairs if len(pairs) <= gate else None
+
+
+def _ranked_rows(scored: pd.DataFrame, k: int) -> pd.DataFrame:
+    """rank.rank_candidates over rank.top_k of scored pairs, in pandas:
+    per query, rows in (score desc, candidate asc) order, the first
+    ``k`` kept, ranked 1.. with equal (score, candidate) rows sharing
+    the first one's rank (a query id given twice pairs twice)."""
+    out = scored.sort_values(
+        ["left_id", "score", "right_id"], ascending=[True, False, True]
+    )
+    rn = out.groupby("left_id").cumcount() + 1
+    out = out[rn <= k].assign(rank=rn[rn <= k])
+    out["rank"] = out.groupby(["left_id", "score", "right_id"])["rank"].transform("min")
+    return out.rename(
+        columns={"left_id": "query_id", "right_id": "candidate_id"}
+    ).astype({"rank": "int32"})
 
 
 def _match_sides(index: MatchIndex, q_sides: DataFrame, top_n: int | None) -> DataFrame:

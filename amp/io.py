@@ -79,10 +79,12 @@ def results_json(df: DataFrame, limit: int | None = None) -> list[dict]:
 
 def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
     """A zero-row DataFrame of the DDL ``schema``, planned wholly in the
-    JVM (an empty relation of no partitions). A zero-row pandas or list
-    frame is computed through a PythonRDD over one partition per core,
-    so it starts Python workers to return nothing."""
-    return spark.range(0).select(*[
+    JVM. A zero-row pandas or list frame is computed through a PythonRDD
+    over one partition per core, so it starts Python workers to return
+    nothing. The optimizer folds a zero limit over a one-row range into
+    an empty local relation, so collecting it runs no job either (a
+    zero-row range drops the limit instead, and still runs one)."""
+    return spark.range(1).select(*[
         F.lit(None).cast(f.dataType).alias(f.name)
         for f in T.StructType.fromDDL(schema).fields
-    ])
+    ]).limit(0)

@@ -662,32 +662,13 @@ SCORED_SCHEMA = (
 )
 
 
-def score_pairs_onepass(
-    pairs: DataFrame,
-    sides: DataFrame,
-    cfg: AmpConfig = DEFAULT_CONFIG,
-    n_records: int | None = None,
-    right_sides: DataFrame | None = None,
-) -> DataFrame:
-    """Candidate pairs -> scored pairs: two record-sized equi-joins to
-    the one-pass feature table, then ONE Arrow-batched scorer computing
-    every similarity (tf-idf dot/cosine via sorted-hash intersection,
-    MinHash-agreement Jaccard, embedding cosine, Jaro-Winkler,
-    Levenshtein, lang flag) and the weighted composite. The reference's
-    driver-side Go row loop (matcher.go:119-211) collapses into this.
-
-    Join strategy: when the caller knows the record count (the pipeline
-    probes it anyway) and it is within ``cfg.broadcast_sides_max_records``,
-    the quantized side table broadcasts into both joins — the pair table
-    and the wide pair+features intermediate then never shuffle (the
-    intermediate is the single largest exchange in the pipeline: every
-    pair row carries BOTH sides' ~300 B payloads). Above the gate the
-    joins stay shuffled-hash — the shape that survives 10^12 records.
-
-    ``right_sides`` (default: ``sides``) is the table right_ids join
-    against, for callers whose two ends come from different tables —
-    match_records joins query ids to the query batch and candidate ids
-    to index rows only."""
+def _score_kernel(cfg: AmpConfig):
+    """The pair scorer over pandas batches of joined pairs (left_id,
+    right_id and each end's l_/r_ stem, lang, sig, emb and tfblob): one
+    SCORED_SCHEMA row per input row. Shared by score_pairs_onepass,
+    which maps it over the joined pair table in Spark, and the served
+    match (incremental.match_rows), which runs it in the driver over
+    the few pairs of one request."""
     import numpy as np
 
     def fn(batches):
@@ -746,17 +727,68 @@ def score_pairs_onepass(
                 }
             )
 
+    return fn
+
+
+def _side_columns(end: str, p: str) -> dict[str, str]:
+    """SIDE_SCHEMA column -> its name on the ``end`` ("left"/"right") of
+    a joined pair row, as the score kernel reads it."""
+    return {"record_id": f"{end}_id", "stem": f"{p}_stem", "lang": f"{p}_lang",
+            "sig": f"{p}_sig", "embedding": f"{p}_emb", "tfblob": f"{p}_tfblob"}
+
+
+def score_pair_rows(
+    pairs: pd.DataFrame,
+    sides: pd.DataFrame,
+    right_sides: pd.DataFrame,
+    cfg: AmpConfig = DEFAULT_CONFIG,
+) -> pd.DataFrame:
+    """score_pairs_onepass run in this process over pandas frames: the
+    (left_id, right_id) ``pairs`` joined to the SIDE_SCHEMA rows of
+    their left ends in ``sides`` and their right ends in
+    ``right_sides``, then the score kernel — the same SCORED_SCHEMA
+    rows, as pandas. For the few pairs of one served request, whose
+    side rows are in the driver already."""
+    joined = pairs.merge(
+        sides.rename(columns=_side_columns("left", "l")), on="left_id"
+    ).merge(right_sides.rename(columns=_side_columns("right", "r")), on="right_id")
+    return next(_score_kernel(cfg)(iter([joined])))
+
+
+def score_pairs_onepass(
+    pairs: DataFrame,
+    sides: DataFrame,
+    cfg: AmpConfig = DEFAULT_CONFIG,
+    n_records: int | None = None,
+    right_sides: DataFrame | None = None,
+) -> DataFrame:
+    """Candidate pairs -> scored pairs: two record-sized equi-joins to
+    the one-pass feature table, then ONE Arrow-batched scorer computing
+    every similarity (tf-idf dot/cosine via sorted-hash intersection,
+    MinHash-agreement Jaccard, embedding cosine, Jaro-Winkler,
+    Levenshtein, lang flag) and the weighted composite. The reference's
+    driver-side Go row loop (matcher.go:119-211) collapses into this.
+
+    Join strategy: when the caller knows the record count (the pipeline
+    probes it anyway) and it is within ``cfg.broadcast_sides_max_records``,
+    the quantized side table broadcasts into both joins — the pair table
+    and the wide pair+features intermediate then never shuffle (the
+    intermediate is the single largest exchange in the pipeline: every
+    pair row carries BOTH sides' ~300 B payloads). Above the gate the
+    joins stay shuffled-hash — the shape that survives 10^12 records.
+
+    ``right_sides`` (default: ``sides``) is the table right_ids join
+    against, for callers whose two ends come from different tables —
+    match_records joins query ids to the query batch and candidate ids
+    to index rows only."""
     def side(df: DataFrame, end: str, p: str) -> DataFrame:
         # one selectExpr call: each Column call is a driver-JVM round trip
-        return df.selectExpr(
-            f"record_id AS {end}_id", f"stem AS {p}_stem", f"lang AS {p}_lang",
-            f"sig AS {p}_sig", f"embedding AS {p}_emb", f"tfblob AS {p}_tfblob",
-        )
+        return df.selectExpr(*(f"{c} AS {a}" for c, a in _side_columns(end, p).items()))
 
     lhs = side(sides, "left", "l")
     rhs = side(sides if right_sides is None else right_sides, "right", "r")
     if n_records is not None and n_records <= cfg.broadcast_sides_max_records:
         lhs, rhs = F.broadcast(lhs), F.broadcast(rhs)
     joined = pairs.join(lhs, "left_id").join(rhs, "right_id")
-    return joined.mapInPandas(fn, SCORED_SCHEMA)
+    return joined.mapInPandas(_score_kernel(cfg), SCORED_SCHEMA)
 

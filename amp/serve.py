@@ -21,14 +21,20 @@ the reference's interactive shapes (single/batch match) because a
 request pays only for its own rows. Everything index-sized — side
 rows, the (record, block key) table, the IDF broadcast — is built once
 per index version (build, load, or an append/remove, which maintains it
-incrementally), and a match streams the pinned index tables into
-broadcast joins against the request's rows, never shuffling them. A
-match body of up to _LOCAL_FEATURIZE_MAX_ROWS records is featurized
-right here in the driver, where its rows already are
-(incremental.match_rows), so the scorer is its only Python worker
-stage; a larger body takes match_records, one Python pass for its
-features and one for the scorer. A single match with candidates is
-nine small jobs whose cost is scheduling, not data. An append body
+incrementally), and a match reads the pinned index tables without
+shuffling them. A match body of up to _LOCAL_FEATURIZE_MAX_ROWS
+records is matched right here in the driver, where its rows already
+are (incremental.match_rows): featurized, paired, scored and ranked in
+this process, while Spark looks up only the index block rows of its
+keys and the side rows of its candidates. That is 2 Spark jobs with
+candidates, 1 without, none for an empty body, and no Python worker.
+The in-driver steps hold the GIL: a single match spends about 11 ms
+featurizing and 6 ms scoring (12,000-base index, 4 cores). A match
+whose blocks hold more than incremental._LOCAL_SCORE_MAX_PAIRS
+candidate pairs is scored by the Spark tail instead (a hot block).
+A larger body takes match_records, one Python pass for its features
+and one for the scorer, with the pinned index tables streamed into
+broadcast joins against the request's rows. An append body
 is normalized and featurized in the driver too (incremental.append_rows),
 and every write is decided in the driver from lookups sized by the
 write: an append of new contents is 4 jobs and no Python worker, a
@@ -53,20 +59,23 @@ from .incremental import (MatchIndex, append_rows, match_records, match_rows,
 # the repo_files columns, in order
 REQUIRED_FIELDS = ("repo", "path", "commit", "lang", "content")
 
-# Match bodies of at most this many records are featurized in the
-# driver (match_rows); larger ones take match_records, whose Python
-# worker pass costs a fixed ~0.1 s (a warm 4-task mapInPandas job:
-# 0.18 s, against 0.07 s for the same job without Python) but spreads
-# the work over the executor cores. Measured crossover, 4 cores,
-# 12,000-base index, median of 3 interleaved reps per path (s):
-#   rows               100   150   200   250   300
-#   match  in-driver  0.52  0.75  0.86  0.75  0.88
-#   match  DataFrame  0.95  0.72  0.65  0.80  0.86
+# Match bodies of at most this many records are matched in the driver
+# (match_rows: featurized, scored and ranked in-process, 2 Spark jobs);
+# larger ones take match_records, whose Python worker passes for the
+# features and the scorer cost a fixed ~0.1 s each (a warm 4-task
+# mapInPandas job: 0.18 s, against 0.07 s for the same job without
+# Python) but spread the work over the executor cores. Measured
+# crossover, 4 cores, 12,000-base index, 3 interleaved reps per path
+# (s, in rep order):
+#   rows                    100               300               1,000
+#   match  in-driver  0.32 0.28 0.28  0.49 0.49 0.53  0.94 1.09 0.83
+#   match  DataFrame  0.95 0.67 0.75  0.87 0.82 0.78  1.16 1.08 0.83
 # The bound is the largest measured size at and below which the driver
-# won every rep: it lost a rep at 150, 200 and 300. A second round and
-# the wider crossover (1 to 3,000 rows) are in ROADMAP's open items.
-# Append bodies do not use it: they always take append_rows.
-_LOCAL_FEATURIZE_MAX_ROWS = 100
+# won every rep: it lost the second rep at 1,000 rows.
+# Append bodies do not use it: they always take append_rows. The pairs
+# a body scores in the driver have their own measured bound,
+# incremental._LOCAL_SCORE_MAX_PAIRS.
+_LOCAL_FEATURIZE_MAX_ROWS = 300
 
 
 def _request_rows(records: list) -> list[tuple]:

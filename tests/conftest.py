@@ -32,3 +32,21 @@ def pipeline_out(spark, small_corpus):
     out["clusters"] = out["clusters"].cache()
     out["clusters"].count()
     return out
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """fn -> (fn's result, the count of Spark jobs it started). The
+    listener bus is drained on both sides: the status tracker learns
+    of a job through it."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+
+    def run(fn):
+        bus.waitUntilEmpty()
+        before = set(tracker.getJobIdsForGroup(None))
+        out = fn()
+        bus.waitUntilEmpty()
+        return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    return run

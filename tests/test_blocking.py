@@ -174,3 +174,34 @@ def test_grouped_pairgen_hot_key_dropped_and_equals_salted(spark):
     assert got == _per_key_pairs(rows, cap=cap)
     assert len(got) == 4 * (10 * 9 // 2)
     assert not any(l.startswith("h") for l, _ in got)
+
+
+def test_block_key_arrays_explode_to_all_blocks(spark):
+    """The served match's key projection holds, per side row, exactly
+    the all_blocks rows of that row — also for content with fewer
+    tokens than shingle_k, empty content and a null lang."""
+    from collections import Counter
+
+    import pandas as pd
+
+    rows = [
+        ("r/a", "src/main.py", "a" * 40, "python", "def f(x):\n    return x + 1\n" * 3),
+        ("r/b", "src/main.py", "b" * 40, None, "def f(x):\n    return x + 1\n" * 3),
+        ("r/c", "lib/util.rs", "c" * 40, "rust", "fn a"),
+        ("r/d", "lib/util.rs", "d" * 40, None, ""),
+    ]
+    files = pd.DataFrame(rows, columns=["repo", "path", "commit", "lang", "content"])
+    sides = spark.createDataFrame(
+        scoring.query_side_rows(files, {}, CFG), scoring.SIDE_SCHEMA
+    )
+    assert len("fn a".split()) < CFG.shingle_k
+    got = Counter(
+        (r["record_id"], k)
+        for r in blocking.block_key_arrays(sides, CFG).collect()
+        for k in r["block_keys"]
+    )
+    want = Counter(
+        (r["record_id"], r["block_key"])
+        for r in blocking.all_blocks(sides, sides, CFG).collect()
+    )
+    assert got == want

@@ -143,9 +143,9 @@ def test_single_match_plan_shape(spark, small_corpus, index):
 
 
 def test_served_match_plan_shape(spark, small_corpus, index, monkeypatch):
-    """A served match featurizes its rows in the driver: a single match
-    runs exactly one Python map node, the scorer, and shuffles no index
-    table. A batch over the row bound takes the DataFrame path (the
+    """A served match runs in the driver: a single match and a 2-row
+    batch run no Python map node, read both index tables and shuffle
+    neither. A batch over the row bound takes the DataFrame path (the
     featurizer and the scorer) and answers with identical rows."""
     import amp.serve as serve_mod
 
@@ -157,13 +157,13 @@ def test_served_match_plan_shape(spark, small_corpus, index, monkeypatch):
     _, python_nodes = _match_python_nodes(
         spark, index, lambda: svc.match_single(rec, top_n=5)
     )
-    assert python_nodes == 1
+    assert python_nodes == 0
 
     batch = [rec, dict(rec, path="other/" + rec["path"])]
     in_driver, python_nodes = _match_python_nodes(
         spark, index, lambda: svc.match_batch(batch, top_n=5)
     )
-    assert python_nodes == 1
+    assert python_nodes == 0
     monkeypatch.setattr(serve_mod, "_LOCAL_FEATURIZE_MAX_ROWS", 1)
     via_frame, python_nodes = _match_python_nodes(
         spark, index, lambda: svc.match_batch(batch, top_n=5)
@@ -174,6 +174,147 @@ def test_served_match_plan_shape(spark, small_corpus, index, monkeypatch):
         return sorted(tuple(sorted(m.items())) for m in rows)
 
     assert key(via_frame) == key(in_driver)
+
+
+_FIELDS = ("repo", "path", "commit", "lang", "content")
+
+
+def _driver_and_spark(spark, idx, rows, top_n):
+    """(match_rows' answer, the Spark tail's answer over the same query
+    side rows) as sorted row tuples, with each answer's columns."""
+    from amp import scoring
+    from amp.incremental import _match_sides, match_rows
+
+    q_sides = spark.createDataFrame(
+        scoring.query_side_rows(pd.DataFrame(rows, columns=_FIELDS), idx.idf, idx.cfg),
+        scoring.SIDE_SCHEMA,
+    )
+
+    def answer(df):
+        return df.columns, sorted(tuple(r) for r in df.collect())
+
+    return (answer(match_rows(idx, rows, top_n=top_n)),
+            answer(_match_sides(idx, q_sides, top_n)))
+
+
+def _rid(row) -> str:
+    """The record id of a (repo, path, commit, ...) row."""
+    import hashlib
+
+    from amp.normalize import _US, RECORD_ID_HEX
+
+    return hashlib.sha256(_US.join(row[:3]).encode()).hexdigest()[:RECORD_ID_HEX]
+
+
+def _corpus_queries(files, idx):
+    """Served query rows over the corpus: an index representative
+    resubmitted under a new id and under its own id, two rows with one
+    content, a null lang, and a file with no candidate."""
+    reps = {r["record_id"] for r in idx.sides.select("record_id").collect()}
+    one = next(r for r in files.select(*_FIELDS).limit(50).collect() if _rid(r) in reps)
+    q = ("query/repo", "query/" + one["path"], "f" * 40, one["lang"], one["content"])
+    return {
+        "resubmitted": q,
+        "own_id": tuple(one),
+        "twin": (q[0], "twin/" + q[1], *q[2:]),
+        "null_lang": (q[0], "nolang/" + q[1], q[2], None, q[4]),
+        "lone": ("query/repo", "zz/no_such_stem_qq.zz", "e" * 40, None,
+                 "xyzzy plugh frobnicate quux"),
+    }
+
+
+def test_driver_match_equals_spark_tail(spark, small_corpus, index):
+    """match_rows scores in the driver and answers exactly what the
+    Spark tail (_match_sides) answers over the same query side rows, on
+    every column: alone and together, for a query with no candidate, an
+    index record under its own id (its self-pair excluded), two rows
+    with one content, a null lang and a row given twice, at top_n 1 and
+    above the candidate count."""
+    files, _ = small_corpus
+    qs = _corpus_queries(files, index)
+    for name, row in qs.items():
+        for top_n in (1, 100):
+            got, want = _driver_and_spark(spark, index, [row], top_n)
+            assert got == want, (name, top_n)
+    got, want = _driver_and_spark(spark, index, list(qs.values()), 100)
+    assert got == want
+    pairs = {r[:2] for r in got[1]}
+    own = _rid(qs["own_id"])
+    assert (_rid(qs["resubmitted"]), own) in pairs
+    assert (own, own) not in pairs
+    assert _rid(qs["lone"]) not in {q for q, _ in pairs}
+    for top_n in (1, 100):
+        got, want = _driver_and_spark(spark, index, [qs["resubmitted"]] * 2, top_n)
+        assert got == want
+
+
+@pytest.fixture(scope="module")
+def tie_index(spark):
+    """Five index records of one (lang, path stem) block and distinct
+    one-token contents, built with a frequency cap of 2: an empty-content
+    query in that block scores every member equally (path, lang and no
+    content feature), so candidate ids alone order them."""
+    import dataclasses
+
+    rows = [(f"tie/r{i}", "src/handler.py", f"{i:040d}", "python", f"tok{i}")
+            for i in range(5)]
+    cfg = dataclasses.replace(CFG, max_block_size=2)
+    files = spark.createDataFrame(pd.DataFrame(rows, columns=_FIELDS), amp_io.REPO_FILES_SCHEMA)
+    return build_index(files, cfg)
+
+
+def test_driver_match_breaks_equal_scores_by_candidate(spark, tie_index):
+    """Equal scores rank by candidate_id, and the served match pairs a
+    query with every member of a block above max_block_size (serving is
+    uncapped): the driver answer equals the Spark tail's at top_n 1, 2
+    and above the candidate count."""
+    query = [("query/repo", "src/handler.py", "f" * 40, "python", "")]
+    members = sorted(r["record_id"] for r in tie_index.sides.collect())
+    for top_n in (1, 2, 10):
+        got, want = _driver_and_spark(spark, tie_index, query, top_n)
+        assert got == want
+        rows = [dict(zip(got[0], r)) for r in got[1]]
+        assert sorted(r["candidate_id"] for r in rows) == members[:top_n]
+        assert len({r["score"] for r in rows}) == 1
+        assert sorted(r["rank"] for r in rows) == list(range(1, min(top_n, 5) + 1))
+
+
+def test_driver_match_falls_back_past_the_gate(spark, small_corpus, index, monkeypatch):
+    """When the block lookup or the pairs pass _LOCAL_SCORE_MAX_PAIRS
+    or ``broadcast_sides_max_records`` rows, a served match takes the
+    Spark tail (its scorer runs) and answers the same rows; below the
+    gate the Spark scorer never runs."""
+    import copy
+    import dataclasses
+
+    import amp.incremental as incremental
+    from amp import scoring
+    from amp.incremental import match_rows
+
+    files, _ = small_corpus
+    rows = list(_corpus_queries(files, index).values())
+    calls = []
+    real = scoring.score_pairs_onepass
+    monkeypatch.setattr(
+        scoring, "score_pairs_onepass", lambda *a, **kw: calls.append(1) or real(*a, **kw)
+    )
+
+    def answer(idx):
+        return sorted(tuple(r) for r in match_rows(idx, rows, top_n=3).collect())
+
+    want = answer(index)
+    assert want and not calls
+    for gate in (0, 1):
+        gated = copy.copy(index)
+        gated.cfg = dataclasses.replace(index.cfg, broadcast_sides_max_records=gate)
+        calls.clear()
+        assert answer(gated) == want
+        assert calls
+    for bound in (0, 1):
+        monkeypatch.setattr(incremental, "_LOCAL_SCORE_MAX_PAIRS", bound)
+        calls.clear()
+        assert answer(index) == want
+        assert calls
 
 
 def _assert_index_state(idx):

@@ -73,3 +73,13 @@ def test_pipeline_cli_output_writes_sorted_clusters(spark, tmp_path, monkeypatch
     for f in files:
         vals = pq.read_table(f, columns=["cluster_id"])["cluster_id"].to_pylist()
         assert vals == sorted(vals)
+
+
+def test_empty_frame_collects_without_a_job(spark, count_jobs):
+    """io.empty_frame folds into an empty local relation: collecting it
+    starts no Spark job, and it keeps the schema it was given."""
+    from amp.io import empty_frame
+
+    df = empty_frame(spark, "a string, b double, rank int")
+    assert count_jobs(df.collect) == ([], 0)
+    assert df.schema.simpleString() == "struct<a:string,b:double,rank:int>"

@@ -729,7 +729,7 @@ def _record_ids(records: list[dict]) -> list[str]:
     ]
 
 
-def test_served_writes_job_budget_and_partition_counts(spark, small_corpus):
+def test_served_writes_job_budget_and_partition_counts(spark, small_corpus, count_jobs):
     """A served append or remove is decided in the driver from lookups
     sized by the write: each runs at most 7 Spark jobs (no full-index
     probe or representatives pass), and after append/remove pairs every
@@ -745,19 +745,33 @@ def test_served_writes_job_budget_and_partition_counts(spark, small_corpus):
         return {t: getattr(svc.index, t).rdd.getNumPartitions() for t in tables}
 
     base = partitions()
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs(fn) -> int:
-        before = set(tracker.getJobIdsForGroup(None))
-        fn()
-        return len(set(tracker.getJobIdsForGroup(None)) - before)
-
     for k in range(3):
         recs = _fresh_records(f"w{k}", 4)
-        assert jobs(lambda: svc.append(recs)) <= 7
-        assert jobs(lambda: svc.remove(_record_ids(recs))) <= 7
+        assert count_jobs(lambda: svc.append(recs))[1] <= 7
+        assert count_jobs(lambda: svc.remove(_record_ids(recs)))[1] <= 7
         assert svc.index.n_records == files.count()
         assert partitions() == base
+
+
+def test_served_match_job_budget(small_corpus, service, count_jobs):
+    """A served match runs in the driver: at most 2 Spark jobs (the
+    block lookup and the candidates' side rows) with candidates, at
+    most 1 without."""
+    files, _ = small_corpus
+    rec = _one_record(files)
+    lone = dict(rec, path="zz/no_such_stem_qq.zz", lang=None,
+                content="xyzzy plugh frobnicate quux")
+    out, n = count_jobs(lambda: service.match_single(rec))
+    assert out and n <= 2
+    out, n = count_jobs(lambda: service.match_batch([rec, dict(rec, path="b/" + rec["path"])]))
+    assert out and n <= 2
+    out, n = count_jobs(lambda: service.match_single(lone))
+    assert out == [] and n <= 1
+
+
+def test_empty_match_body_runs_no_job(service, count_jobs):
+    """An empty batch match is answered in the driver: [] and no job."""
+    assert count_jobs(lambda: service.match_batch([])) == ([], 0)
 
 
 def test_duplicates_reply_holds_whole_clusters(spark, small_corpus, service):
