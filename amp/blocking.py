@@ -106,14 +106,13 @@ def path_blocks(reps: DataFrame) -> DataFrame:
 
 
 def block_key_arrays(sides: DataFrame, cfg: AmpConfig = DEFAULT_CONFIG) -> DataFrame:
-    """(record_id, block_keys) rows: the keys all_blocks gives each side
+    """The side rows with ``block_keys``, the keys all_blocks gives each
     row, as one array per row (exploded, the all_blocks rows). It is a
     single projection, with no explode or union, so over an in-memory
     relation (a served request's side rows) Spark folds it into the
     relation and collecting it runs no job."""
     return sides.selectExpr(
-        "record_id",
-        f"concat({_band_keys_sql(cfg)}, array({_PATH_KEY_SQL})) AS block_keys",
+        "*", f"concat({_band_keys_sql(cfg)}, array({_PATH_KEY_SQL})) AS block_keys"
     )
 
 

@@ -14,11 +14,15 @@ offline run-0 bootstrap, which fills its feature tables and the
 customer_keys blocking keys once (cmd/addressmatchpro/main.go:92-173,
 init_db.sql:78-85):
   * ``records`` — the normalized rows, and ``n_records``, their count;
-  * ``sides``   — one-pass feature rows, one per distinct content;
+  * ``sides``   — one-pass feature rows, one per distinct content, and
+    ``n_sides``, their count;
   * ``blocks``  — the pinned (right_id, block_key) table:
     blocking.all_blocks over the side rows;
   * ``idf`` and ``idf_b`` — the frozen IDF dictionary and ONE Broadcast
-    handle of it, shared by every request and write of the version.
+    handle of it, shared by every request and write of the version;
+  * ``driver_copy`` — up to _DRIVER_COPY_MAX_ROWS side rows, a
+    read-only copy of ``sides`` (Arrow) and ``blocks`` (sorted int64
+    keys) in the driver, collected in one job.
 build_index and MatchIndex.load create all of it. append_records,
 append_rows and remove_records derive the next version from lookups
 sized by the write: the driver collects one row per content the write
@@ -28,10 +32,13 @@ featurized and blocked; the dropped ids filter the index tables as one
 SQL IN list, and records, sides and blocks are pinned side by side,
 each in its pre-write partition count. Nothing is aggregated or
 featurized over the whole index: the lookups are filtered scans,
-grouped in one task, that return rows sized by the write. A served
-append of new contents is 4 Spark jobs and starts no Python worker; a
-remove is 5, and 6 when it promotes a surviving record. The IDF handle
-is reused under ``frozen`` (a new one under ``refresh``, which
+grouped in one task, that return rows sized by the write. The driver
+copy drops the same ids and appends the added rows with their keys,
+copying only the record batches that held a dropped row. A
+served append of new contents is 4 Spark jobs and starts no Python
+worker; a remove is 5, and 7 when it promotes a surviving record (its
+side row takes one Python pass, and one collect for the copy). The IDF
+handle is reused under ``frozen`` (a new one under ``refresh``, which
 re-derives every representative and side row).
 
 A request owns only its own rows. match_records normalizes and
@@ -42,12 +49,12 @@ query sides plus the index side rows those pairs name — no index-side
 table is rebuilt or shuffled per request. match_rows matches query
 rows already in the driver (a served request's) in the driver, as the
 reference's matcher loops over its candidates in Go (matcher.go:119-211):
-it featurizes them, looks up the index block rows of their keys and
-the side rows of their candidates (two filtered scans: 2 Spark jobs,
-1 with no candidate), then scores and ranks the pairs in-process, so
-no Python worker runs. Past _LOCAL_SCORE_MAX_PAIRS looked-up rows or
-pairs (the measured point where scoring in the driver stops winning)
-it takes match_records' Spark tail instead. Both block
+it featurizes them, looks up the index side rows sharing their keys in
+the version's driver copy, then scores and ranks the pairs in-process,
+so no Spark job and no Python worker runs. Past _LOCAL_SCORE_MAX_PAIRS
+looked-up rows or pairs (the measured point where scoring in the
+driver stops winning), or on a version with no driver copy, it takes
+match_records' Spark tail instead. Both block
 the query side against the index side ONLY (no index-index pairs — the
 reference gets this from `candidates.run_id = 0 AND input.run_id = $1`),
 then rank/top-k per query record (match.sql:66, matcher.go:221-228).
@@ -60,7 +67,10 @@ import json
 import os
 from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import Broadcast
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,6 +104,8 @@ class MatchIndex:
         blocks: DataFrame,
         idf_b: Broadcast,
         n_records: int,
+        n_sides: int,
+        driver_copy: "_DriverCopy | None",
     ):
         self.records = records
         self.sides = sides
@@ -105,6 +117,10 @@ class MatchIndex:
         # unpersisted, never destroyed (in-flight requests may read it)
         self.idf_b = idf_b
         self.n_records = n_records
+        self.n_sides = n_sides
+        # ``sides`` and ``blocks`` in the driver, up to
+        # _DRIVER_COPY_MAX_ROWS side rows (_copy_of)
+        self.driver_copy = driver_copy
         # when True, every query batch must bring vectors of the same
         # model/dim (match_records query_embeddings=...) — pair scoring
         # dots left x right vectors and mixed dims would score garbage
@@ -159,13 +175,149 @@ class MatchIndex:
         else:
             idf_rows = ck.read("index_idf").collect()
             idf = {int(r["token_hash"]): float(r["idf"]) for r in idf_rows}
+        provided = meta.get("uses_provided_embeddings", False)
+        n_sides = sides.count()
         return cls(
             records, sides, idf, cfg,
-            uses_provided_embeddings=meta.get("uses_provided_embeddings", False),
+            uses_provided_embeddings=provided,
             blocks=_block_table(sides, cfg).localCheckpoint(eager=True),
             idf_b=spark.sparkContext.broadcast(idf),
             n_records=records.count(),
+            n_sides=n_sides,
+            driver_copy=_copy_of(sides, n_sides, cfg, provided),
         )
+
+
+class _DriverCopy:
+    """A read-only driver copy of an index version's side rows and block
+    table: ``batches``, the SIDE_SCHEMA rows as Arrow record batches
+    (``rows`` views them as one table), and the block table as ``keys``,
+    its block keys sorted (int64), with ``pos``, the position in the
+    rows of each key's side row. A lookup is a binary search over
+    ``keys``, so match_rows pairs and fetches from it without a Spark
+    job. Never changed in place: in-flight requests may still read a
+    retired version's copy. A write shares every batch it does not
+    touch with the copy it derives from, so it copies only the batches
+    holding its dropped rows, plus the key arrays."""
+
+    def __init__(self, batches: list, keys: np.ndarray, pos: np.ndarray, schema: pa.Schema):
+        self.batches, self.keys, self.pos, self.schema = batches, keys, pos, schema
+        # the position of each batch's first row, and the row count
+        self.starts = np.cumsum([0] + [b.num_rows for b in batches])
+
+    @classmethod
+    def of(cls, keyed: pa.Table) -> "_DriverCopy":
+        """The copy of side rows that carry their ``block_keys``
+        (blocking.block_key_arrays)."""
+        lists = keyed.column("block_keys").combine_chunks()
+        keys = pc.list_flatten(lists).to_numpy()
+        order = np.argsort(keys, kind="stable")
+        rows = keyed.drop_columns(["block_keys"])
+        return cls(
+            [b for b in rows.to_batches() if b.num_rows], keys[order],
+            pc.list_parent_indices(lists).to_numpy()[order], rows.schema,
+        )
+
+    @property
+    def rows(self) -> pa.Table:
+        return pa.Table.from_batches(self.batches, self.schema)
+
+    @property
+    def nbytes(self) -> int:
+        return sum(b.nbytes for b in self.batches) + self.keys.nbytes + self.pos.nbytes
+
+    def edit(self, dropped: list[str], added: list) -> "_DriverCopy":
+        """The next version's copy: without the side rows of the
+        ``dropped`` ids, with the ``added`` side rows (blocking.
+        block_key_arrays Rows) appended as one batch. The added keys are
+        merged into the sorted keys, not sorted with them."""
+        batches, keys, pos = self.batches, self.keys, self.pos
+        if dropped:
+            ids = pa.chunked_array([b.column("record_id") for b in batches], pa.string())
+            keep = pc.invert(pc.is_in(ids, pa.array(dropped, pa.string())))
+            keep = keep.to_numpy(zero_copy_only=False)
+            spans = [keep[a:b] for a, b in zip(self.starts[:-1], self.starts[1:])]
+            batches = [b if s.all() else b.filter(s) for b, s in zip(batches, spans)]
+            batches = [b for b in batches if b.num_rows]
+            held = keep[pos]
+            keys, pos = keys[held], (np.cumsum(keep) - 1)[pos[held]]
+        if added:
+            schema = self.schema.append(pa.field("block_keys", pa.list_(pa.int64())))
+            new = _DriverCopy.of(pa.Table.from_pylist([r.asDict() for r in added], schema))
+            at = np.searchsorted(keys, new.keys, "right")
+            n_kept = sum(b.num_rows for b in batches)
+            keys, pos = np.insert(keys, at, new.keys), np.insert(pos, at, new.pos + n_kept)
+            batches = batches + new.batches
+        return _DriverCopy(batches, keys, pos, self.schema)
+
+    def lookup(self, queries: list, gate: int) -> tuple[set, pd.DataFrame] | None:
+        """The (query id, index id) candidate pairs of the query side
+        rows ``queries`` (blocking.block_key_arrays Rows) and the side
+        rows of their candidates, as pandas — or None when the block
+        rows of the queries' keys or the pairs pass ``gate``. A query is
+        paired with every index member of each of its blocks, never with
+        its own id (match_records' pairs)."""
+        queries_of: dict[int, set[str]] = {}
+        for r in queries:
+            for key in r["block_keys"]:
+                queries_of.setdefault(key, set()).add(r["record_id"])
+        qk = np.fromiter(queries_of, np.int64, len(queries_of))
+        lo = np.searchsorted(self.keys, qk, "left")
+        hi = np.searchsorted(self.keys, qk, "right")
+        if int((hi - lo).sum()) > gate:
+            return None
+        hits = {
+            (q, p)
+            for key, a, b in zip(qk.tolist(), lo.tolist(), hi.tolist())
+            for p in self.pos[a:b].tolist()
+            for q in queries_of[key]
+        }
+        # each batch takes its own rows: a take over a table of several
+        # batches first copies them all into one
+        at = np.array(sorted({p for _, p in hits}), np.int64)
+        of = np.searchsorted(self.starts, at, "right") - 1
+        cand = pa.Table.from_batches([
+            self.batches[b].take(pa.array(at[of == b] - self.starts[b]))
+            for b in np.unique(of).tolist()
+        ], self.schema).to_pandas()
+        rid = dict(zip(at.tolist(), cand["record_id"]))
+        pairs = {(q, rid[p]) for q, p in hits if q != rid[p]}
+        return (pairs, cand) if len(pairs) <= gate else None
+
+
+# The most side rows an index version copies into the driver (_copy_of).
+# It counts rows, which a version knows without a job (prepare's count,
+# or the count before a write plus its added less its dropped rows);
+# the bytes are known only once collected. Measured on amp.datagen
+# corpora (seed 42, 12,000 / 41,000 / 82,000 bases), 4 cores, 8 GB
+# driver heap, one or two fresh builds each: a copy is ~985 B a side row
+# (tfblob 585, sig 132, embedding 68, keys and positions 144). Edit is a
+# 4-row append / remove (p50 of 30), lookup one indexed row's keys.
+#   side rows  copy MB  prepare s  collect s  RSS +MB Python/JVM  edit ms append/remove  lookup ms
+#   14,638       14.4   12.6       0.46       20/65               1.3/2.0                0.6
+#   50,009       49.2   27.6 25.0  1.10 0.96  65/56 65/55         2.5/5.9 2.2/5.1        1.6 0.7
+#   100,017      98.5   48.0 38.9  4.69 1.29  130/151 130/447     5.3/13.4 5.1/12.9      2.6 1.0
+# A served write is ~0.5 s and a served match through the Spark tail
+# 0.59-0.84 s, so even at the bound the copy costs a write a few per cent
+# and saves a match most of its time. Memory sets the bound: the
+# collect's JVM buffers stay in the heap and vary run to run (+151 and
+# +447 MB at the same 100,017 rows). The bound is the largest size
+# measured. It is separate from cfg.broadcast_sides_max_records, the
+# batch scorer's broadcast threshold, so raising that for a larger
+# cluster does not grow what the serving driver holds.
+_DRIVER_COPY_MAX_ROWS = 100_000
+
+
+def _copy_of(
+    sides: DataFrame, n_sides: int, cfg: AmpConfig, provided: bool
+) -> _DriverCopy | None:
+    """The driver copy of a version's ``n_sides`` side rows, collected
+    with their block keys in one job — or None past
+    _DRIVER_COPY_MAX_ROWS and for provided embeddings, which match_rows
+    rejects."""
+    if provided or n_sides > _DRIVER_COPY_MAX_ROWS:
+        return None
+    return _DriverCopy.of(blocking.block_key_arrays(sides, cfg).toArrow())
 
 
 def _block_table(sides: DataFrame, cfg: AmpConfig) -> DataFrame:
@@ -195,14 +347,17 @@ def build_index(
     computation and featurizes with the given dictionary — the
     fresh-build equivalence point for append_records' frozen-IDF policy
     (and the bring-your-own-IDF hook for cross-corpus scoring)."""
-    records, _, idf, sides, n_rows, _ = prepare(
+    records, _, idf, sides, n_rows, n_sides = prepare(
         files, cfg, run_id=0, embeddings=embeddings, idf=idf_override
     )
+    provided = embeddings is not None
     return MatchIndex(
-        records, sides, idf, cfg, uses_provided_embeddings=embeddings is not None,
+        records, sides, idf, cfg, uses_provided_embeddings=provided,
         blocks=_block_table(sides, cfg).localCheckpoint(eager=True),
         idf_b=files.sparkSession.sparkContext.broadcast(idf),
         n_records=n_rows,
+        n_sides=n_sides,
+        driver_copy=_copy_of(sides, n_sides, cfg, provided),
     )
 
 
@@ -222,11 +377,10 @@ def _featurize(
 
 def _isin(col: str, values) -> Column:
     """``col IN (values)`` over string literals — how a write names its
-    ids and contents in a plan, and a served match its candidates: an
-    anti- or semi-join against even a driver-built frame costs jobs of
-    its own (its broadcast). The list reaches the JVM as ONE SQL
-    expression: ``Column.isin`` makes a py4j call per literal, 4.5 s
-    for 12,000 ids against 0.01 s parsed."""
+    ids and contents in a plan: an anti- or semi-join against even a
+    driver-built frame costs jobs of its own (its broadcast). The list
+    reaches the JVM as ONE SQL expression: ``Column.isin`` makes a py4j
+    call per literal, 4.5 s for 12,000 ids against 0.01 s parsed."""
     if not values:
         return F.lit(False)
     quoted = ("'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
@@ -273,15 +427,23 @@ def _next_version(
     (``vecs`` then covers every representative). Only the side rows
     added are blocked: block keys come from sig, lang and stem, never
     from the IDF, so a kept side row keeps its keys under both
-    policies. Records, sides and blocks are pinned side by side."""
+    policies. Records, sides and blocks are pinned side by side.
+
+    The driver copy follows the side rows (_copy_of's budget): under
+    ``frozen`` the copy of ``index`` less ``dropped`` plus the added
+    rows, collected with their keys (no job for an in-memory relation);
+    under ``refresh``, or when a remove brings an index past the budget
+    under it, collected anew."""
     cfg = index.cfg
+    provided = index.uses_provided_embeddings
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_records = pool.submit(_edit, index.records, "record_id", gone, new_records)
         if policy == "refresh":
             reps = normalize.representatives(f_records.result()).localCheckpoint(
                 eager=True
             )
-            idf = features.idf_map(reps, reps.count(), cfg)
+            n_sides = reps.count()
+            idf = features.idf_map(reps, n_sides, cfg)
             idf_b = reps.sparkSession.sparkContext.broadcast(idf)
             sides = _featurize(reps, idf_b, cfg, vecs)
             added = sides.where(_isin("record_id", added_ids))
@@ -296,10 +458,18 @@ def _next_version(
         if policy == "frozen":
             sides = f_sides.result()
         records = f_records.result()
+    if policy == "frozen":
+        n_sides = index.n_sides - len(dropped) + len(added_ids)
+    old = index.driver_copy
+    if policy == "frozen" and old is not None and n_sides <= _DRIVER_COPY_MAX_ROWS:
+        keyed = blocking.block_key_arrays(added, cfg).collect() if added_ids else []
+        copy = old.edit(dropped, keyed)
+    else:
+        copy = _copy_of(sides, n_sides, cfg, provided)
     return MatchIndex(
-        records, sides, idf, cfg,
-        uses_provided_embeddings=index.uses_provided_embeddings,
-        blocks=blocks, idf_b=idf_b, n_records=n_records,
+        records, sides, idf, cfg, uses_provided_embeddings=provided,
+        blocks=blocks, idf_b=idf_b, n_records=n_records, n_sides=n_sides,
+        driver_copy=copy,
     )
 
 
@@ -633,10 +803,9 @@ def match_records(
 
 # the columns of a match answer: the scored pair, its ends renamed, and
 # the candidate's rank within its query
-_ANSWER_SCHEMA = (
-    scoring.SCORED_SCHEMA.replace("left_id", "query_id", 1)
-    .replace("right_id", "candidate_id", 1) + ", rank int"
-)
+_ANSWER_COLUMNS = ["query_id", "candidate_id"] + [
+    c.split()[0] for c in scoring.SCORED_SCHEMA.split(", ")[2:]
+] + ["rank"]
 
 
 def match_rows(
@@ -644,53 +813,57 @@ def match_rows(
     rows: list[tuple],
     run_id: int = 1,
     top_n: int | None = None,
-) -> DataFrame:
+) -> pd.DataFrame | DataFrame:
     """match_records for query rows that are Python objects in the
     driver already — an HTTP request's: ``rows`` are (repo, path,
     commit, lang, content) tuples of strings (lang may be None). The
-    whole match runs in this process, where the rows are, and Spark
-    only looks up the index rows it needs:
+    whole match runs in this process, where the rows are, against the
+    version's driver copy of its side rows and block keys:
       1. the rows are featurized with the version's IDF dictionary
          (scoring.query_side_rows) into an in-memory Arrow relation,
          and its block keys come from one projection over it
          (blocking.block_key_arrays), which Spark folds into the
          relation — no job;
-      2. the pinned index blocks holding those keys come back as one
-         filtered scan — 1 job; the pairs, their dedup and the removal
-         of self-pairs are decided here;
-      3. when there are pairs, the candidates' side rows come back as
-         a second filtered scan — 1 job; the pairs are scored in this
-         process (scoring.score_pair_rows) and cut to the top_n per
-         query, and the answer is an in-memory relation.
-    No Python worker runs. When the lookup or the pairs outgrow
-    _LOCAL_SCORE_MAX_PAIRS (where scoring in the driver stops winning)
-    or ``cfg.broadcast_sides_max_records``, steps 2-3 fall back to
-    match_records' Spark tail over the same relation. Answers equal match_records over
-    the same rows (tested). The featurizing cost grows with the rows in
-    the driver's one thread, so large batches belong on match_records
-    (serve bounds the rows it sends here)."""
+      2. the index side rows sharing those keys are found by a binary
+         search over the copy's sorted keys; the pairs, their dedup and
+         the removal of self-pairs are decided here;
+      3. the pairs are scored against the candidates' rows of the copy
+         (scoring.score_pair_rows) and cut to the top_n per query.
+    No Spark job and no Python worker runs, and the answer is the
+    ranked rows as pandas (the columns of match_records' answer, in its
+    order). Past _LOCAL_SCORE_MAX_PAIRS looked-up block rows or pairs
+    (where scoring in the driver stops winning), and for a version of
+    more than _DRIVER_COPY_MAX_ROWS side rows, which holds no copy,
+    steps 2-3 take match_records' Spark tail over the same relation,
+    and the answer is its DataFrame. That is the trade: a served match
+    into an index of 105,837 records took 0.59-0.84 s through the tail,
+    against 0.29-0.68 s when it looked its rows up with two filtered
+    scans (4 cores, one hot block of 1,000-10,000 pairs). Answers equal
+    match_records over the same rows (tested). The featurizing cost
+    grows with the rows in the driver's one thread, so large batches
+    belong on match_records (serve bounds the rows it sends here)."""
     _check_query_embeddings(index, None)
     cfg = index.cfg
-    spark = index.records.sparkSession
+    no_answer = pd.DataFrame(columns=_ANSWER_COLUMNS)
     if not rows:
-        return amp_io.empty_frame(spark, _ANSWER_SCHEMA)
+        return no_answer
     files = pd.DataFrame(rows, columns=amp_io.REPO_FILES_SCHEMA.names)
     q_pdf = scoring.query_side_rows(files, index.idf, cfg, run_id)
-    q_sides = spark.createDataFrame(q_pdf, scoring.SIDE_SCHEMA)
-    pairs = _lookup_pairs(index, q_sides)
-    if pairs is None:
-        return _match_sides(index, q_sides, top_n)
-    if not pairs:
-        return amp_io.empty_frame(spark, _ANSWER_SCHEMA)
-    cand = index.sides.where(_isin("record_id", {r for _, r in pairs}))
-    scored = scoring.score_pair_rows(
-        pd.DataFrame(sorted(pairs), columns=["left_id", "right_id"]),
-        q_pdf, cand.toPandas(), cfg,
+    q_sides = index.records.sparkSession.createDataFrame(q_pdf, scoring.SIDE_SCHEMA)
+    copy = index.driver_copy
+    found = None if copy is None else copy.lookup(
+        blocking.block_key_arrays(q_sides, cfg).collect(),
+        min(cfg.broadcast_sides_max_records, _LOCAL_SCORE_MAX_PAIRS),
     )
-    ranked = _ranked_rows(scored, top_n if top_n is not None else cfg.top_k)
-    if ranked.empty:  # a zero-row pandas frame would start Python workers
-        return amp_io.empty_frame(spark, _ANSWER_SCHEMA)
-    return spark.createDataFrame(ranked, _ANSWER_SCHEMA)
+    if found is None:
+        return _match_sides(index, q_sides, top_n)
+    pairs, cand = found
+    if not pairs:
+        return no_answer
+    scored = scoring.score_pair_rows(
+        pd.DataFrame(sorted(pairs), columns=["left_id", "right_id"]), q_pdf, cand, cfg
+    )
+    return _ranked_rows(scored, top_n if top_n is not None else cfg.top_k)
 
 
 # The most block rows and candidate pairs a served match scores in the
@@ -706,41 +879,10 @@ def match_rows(
 #   50,000    2.19 2.15 2.39       1.55 1.50 1.57
 # The bound is the largest measured size at which the driver won every
 # rep. At 10,000 pairs the driver thread holds the GIL for 0.21-0.34 s
-# of CPU, the Spark tail for 0.03 s.
+# of CPU, the Spark tail for 0.03 s. The driver path was measured when
+# it still looked up its block and side rows with two Spark jobs; it
+# runs none now, and the bound is unchanged.
 _LOCAL_SCORE_MAX_PAIRS = 10_000
-
-
-def _lookup_pairs(index: MatchIndex, q_sides: DataFrame) -> set | None:
-    """The (query id, index id) candidate pairs of the query side rows
-    ``q_sides`` (an in-memory relation), found in the driver from one
-    filtered scan of the pinned block table — or None when the scan or
-    the pairs pass _LOCAL_SCORE_MAX_PAIRS rows, or the index config's
-    ``broadcast_sides_max_records`` (the most candidate side rows a
-    match brings through the driver) if that is lower. A query is
-    paired with every index member of each of its blocks, never with
-    its own id (match_records' pairs). The scan is one task: at the
-    105,837-record index above it read p50 71 ms against 125 ms for
-    the same filter over the table's 8 partitions collected whole."""
-    gate = min(index.cfg.broadcast_sides_max_records, _LOCAL_SCORE_MAX_PAIRS)
-    queries_of: dict[int, set[str]] = {}
-    for r in blocking.block_key_arrays(q_sides, index.cfg).collect():
-        for key in r["block_keys"]:
-            queries_of.setdefault(key, set()).add(r["record_id"])
-    # the keys reach the JVM as ONE IN list of bigint literals
-    keys = ", ".join(f"{k}L" for k in sorted(queries_of))
-    hits = (
-        index.blocks.where(F.expr(f"block_key IN ({keys})"))
-        .coalesce(1).limit(gate + 1).collect()
-    )
-    if len(hits) > gate:
-        return None
-    pairs = {
-        (q, h["right_id"])
-        for h in hits
-        for q in queries_of[h["block_key"]]
-        if q != h["right_id"]
-    }
-    return pairs if len(pairs) <= gate else None
 
 
 def _ranked_rows(scored: pd.DataFrame, k: int) -> pd.DataFrame:

@@ -16,31 +16,32 @@ shape as the reference's single binary). Request batches become run_id
 (match.sql:30-31). No web framework dependency: the serving layer is a
 thin adapter; all matching semantics live in amp.incremental.
 
-Scale note: per-request Spark jobs on a shared session are fine for
-the reference's interactive shapes (single/batch match) because a
-request pays only for its own rows. Everything index-sized — side
-rows, the (record, block key) table, the IDF broadcast — is built once
-per index version (build, load, or an append/remove, which maintains it
-incrementally), and a match reads the pinned index tables without
-shuffling them. A match body of up to _LOCAL_FEATURIZE_MAX_ROWS
+Scale note: everything index-sized — side rows, the (record, block
+key) table, the IDF broadcast, and, up to
+incremental._DRIVER_COPY_MAX_ROWS side rows, a driver copy of the side
+rows and block keys — is built once per index version (build, load, or
+an append/remove, which maintains it incrementally), so a request pays
+only for its own rows. A match body of up to _LOCAL_FEATURIZE_MAX_ROWS
 records is matched right here in the driver, where its rows already
-are (incremental.match_rows): featurized, paired, scored and ranked in
-this process, while Spark looks up only the index block rows of its
-keys and the side rows of its candidates. That is 2 Spark jobs with
-candidates, 1 without, none for an empty body, and no Python worker.
-The in-driver steps hold the GIL: a single match spends about 11 ms
-featurizing and 6 ms scoring (12,000-base index, 4 cores). A match
-whose blocks hold more than incremental._LOCAL_SCORE_MAX_PAIRS
-candidate pairs is scored by the Spark tail instead (a hot block).
-A larger body takes match_records, one Python pass for its features
-and one for the scorer, with the pinned index tables streamed into
-broadcast joins against the request's rows. An append body
-is normalized and featurized in the driver too (incremental.append_rows),
-and every write is decided in the driver from lookups sized by the
-write: an append of new contents is 4 jobs and no Python worker, a
-remove 5 (6 when it promotes a surviving record, whose features take
-one Python pass). Bulk dedup is the offline pipeline (amp.pipeline),
-not a request.
+are (incremental.match_rows): featurized, paired against the driver
+copy, scored and ranked in this process, and its ranked rows are the
+reply as they are. That is no Spark job and no Python worker. The
+in-driver steps hold the GIL: a warm single match spends about 4 ms
+featurizing, 8 ms scoring and 6 ms ranking (12,000-base index, 4
+cores). A match whose blocks hold more than
+incremental._LOCAL_SCORE_MAX_PAIRS candidate pairs (a hot block), or
+into a version past the driver copy's budget, is scored by the Spark
+tail instead, which reads the pinned index tables without shuffling
+them. A larger body takes match_records, one Python pass for
+its features and one for the scorer, with the pinned index tables
+streamed into broadcast joins against the request's rows. /metrics
+counts the matches each path answered. An append body is normalized
+and featurized in the driver too (incremental.append_rows), and every
+write is decided in the driver from lookups sized by the write: an
+append of new contents is 4 jobs and no Python worker, a remove 5 (7
+when it promotes a surviving record, whose features take one Python
+pass). Bulk dedup is the offline pipeline (amp.pipeline), not a
+request.
 """
 
 from __future__ import annotations
@@ -60,7 +61,8 @@ from .incremental import (MatchIndex, append_rows, match_records, match_rows,
 REQUIRED_FIELDS = ("repo", "path", "commit", "lang", "content")
 
 # Match bodies of at most this many records are matched in the driver
-# (match_rows: featurized, scored and ranked in-process, 2 Spark jobs);
+# (match_rows: featurized, scored and ranked in-process; 2 Spark jobs
+# when measured, none since the index version keeps a driver copy);
 # larger ones take match_records, whose Python worker passes for the
 # features and the scorer cost a fixed ~0.1 s each (a warm 4-task
 # mapInPandas job: 0.18 s, against 0.07 s for the same job without
@@ -114,6 +116,18 @@ def _whole_clusters(clusters, limit: int) -> list[dict]:
     return rows
 
 
+def _index_gauges(index: MatchIndex) -> dict[str, int]:
+    """/metrics gauges of the live index version: its record count and
+    the size of its driver copy (rows and estimated bytes, 0 without
+    one)."""
+    copy = index.driver_copy
+    return {
+        "index_records": index.n_records,
+        "driver_copy_rows": copy.rows.num_rows if copy is not None else 0,
+        "driver_copy_bytes": copy.nbytes if copy is not None else 0,
+    }
+
+
 class MatchService:
     """Transport-independent handlers (tested directly; HTTP below)."""
 
@@ -140,6 +154,11 @@ class MatchService:
             "append_requests": 0,
             "remove_requests": 0,
             "errors": 0,
+            # which path answered each match: the driver (match_rows'
+            # copy lookup) or Spark (its tail, or match_records)
+            "matches_in_driver": 0,
+            "matches_in_spark": 0,
+            **_index_gauges(index),
         }
 
     def _next_run_id(self) -> int:
@@ -182,7 +201,12 @@ class MatchService:
             out = match_records(
                 self.index, self._files_df(rows), run_id=run_id, top_n=top_n
             )
-        return amp_io.results_json(out)
+        in_driver = isinstance(out, pd.DataFrame)
+        with self._lock:
+            self.metrics["matches_in_driver" if in_driver else "matches_in_spark"] += 1
+        # a driver answer is read as Python values: the rows, key order
+        # and value types results_json gives for a relation
+        return out.to_dict("records") if in_driver else amp_io.results_json(out)
 
     def append(self, records: list[dict], policy: str = "frozen") -> dict:
         """POST /api/v1/index/append: extend the live index with new
@@ -250,7 +274,7 @@ class MatchService:
         with self._lock:
             old_index, self.index = self.index, new_index
             self.metrics[counter] += 1
-            self.metrics["index_records"] = new_index.n_records
+            self.metrics.update(_index_gauges(new_index))
             old_dup, self._dup_df = self._dup_df, None
         if old_dup is not None:
             old_dup.unpersist()

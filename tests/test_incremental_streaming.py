@@ -143,10 +143,12 @@ def test_single_match_plan_shape(spark, small_corpus, index):
 
 
 def test_served_match_plan_shape(spark, small_corpus, index, monkeypatch):
-    """A served match runs in the driver: a single match and a 2-row
-    batch run no Python map node, read both index tables and shuffle
-    neither. A batch over the row bound takes the DataFrame path (the
-    featurizer and the scorer) and answers with identical rows."""
+    """A served match runs in the driver against the version's driver
+    copy: a single match and a 2-row batch each start one SQL execution,
+    the key projection over the request's own in-memory rows, which is
+    a local table scan alone (no job, no index table read). A batch over
+    the row bound takes the DataFrame path (the featurizer and the
+    scorer) and answers with identical rows."""
     import amp.serve as serve_mod
 
     files, _ = small_corpus
@@ -154,16 +156,15 @@ def test_served_match_plan_shape(spark, small_corpus, index, monkeypatch):
     rec = {"repo": "query/repo", "path": "query/" + one["path"], "commit": "f" * 40,
            "lang": one["lang"], "content": one["content"]}
     svc = serve_mod.MatchService(spark, index)
-    _, python_nodes = _match_python_nodes(
-        spark, index, lambda: svc.match_single(rec, top_n=5)
-    )
-    assert python_nodes == 0
-
     batch = [rec, dict(rec, path="other/" + rec["path"])]
-    in_driver, python_nodes = _match_python_nodes(
-        spark, index, lambda: svc.match_batch(batch, top_n=5)
-    )
-    assert python_nodes == 0
+    for match in (lambda: svc.match_single(rec, top_n=5),
+                  lambda: svc.match_batch(batch, top_n=5)):
+        in_driver: list = []
+        graphs = _executed_graphs(spark, lambda: in_driver.extend(match()))
+        assert in_driver
+        assert [{name for name, _ in nodes.values()} for nodes, _ in graphs] == [
+            {"LocalTableScan"}
+        ]
     monkeypatch.setattr(serve_mod, "_LOCAL_FEATURIZE_MAX_ROWS", 1)
     via_frame, python_nodes = _match_python_nodes(
         spark, index, lambda: svc.match_batch(batch, top_n=5)
@@ -179,22 +180,35 @@ def test_served_match_plan_shape(spark, small_corpus, index, monkeypatch):
 _FIELDS = ("repo", "path", "commit", "lang", "content")
 
 
+def _answer_rows(out) -> list[tuple]:
+    """match_rows' answer as sorted row tuples: the driver's ranked
+    pandas rows, or the Spark tail's DataFrame."""
+    if isinstance(out, pd.DataFrame):
+        return sorted(out.itertuples(index=False, name=None))
+    return sorted(tuple(r) for r in out.collect())
+
+
 def _driver_and_spark(spark, idx, rows, top_n):
     """(match_rows' answer, the Spark tail's answer over the same query
     side rows) as sorted row tuples, with each answer's columns."""
-    from amp import scoring
     from amp.incremental import _match_sides, match_rows
 
-    q_sides = spark.createDataFrame(
+    def answer(out):
+        return list(out.columns), _answer_rows(out)
+
+    return (answer(match_rows(idx, rows, top_n=top_n)),
+            answer(_match_sides(idx, _query_sides(spark, idx, rows), top_n)))
+
+
+def _query_sides(spark, idx, rows):
+    """The in-memory relation of query side rows that match_rows builds
+    for ``rows``."""
+    from amp import scoring
+
+    return spark.createDataFrame(
         scoring.query_side_rows(pd.DataFrame(rows, columns=_FIELDS), idx.idf, idx.cfg),
         scoring.SIDE_SCHEMA,
     )
-
-    def answer(df):
-        return df.columns, sorted(tuple(r) for r in df.collect())
-
-    return (answer(match_rows(idx, rows, top_n=top_n)),
-            answer(_match_sides(idx, q_sides, top_n)))
 
 
 def _rid(row) -> str:
@@ -300,7 +314,7 @@ def test_driver_match_falls_back_past_the_gate(spark, small_corpus, index, monke
     )
 
     def answer(idx):
-        return sorted(tuple(r) for r in match_rows(idx, rows, top_n=3).collect())
+        return _answer_rows(match_rows(idx, rows, top_n=3))
 
     want = answer(index)
     assert want and not calls
@@ -317,11 +331,105 @@ def test_driver_match_falls_back_past_the_gate(spark, small_corpus, index, monke
         assert calls
 
 
+def _side_row(r: dict) -> tuple:
+    """A side row as a hashable tuple, from a Row's or an Arrow row's
+    dict."""
+    return (r["record_id"], r["stem"], r["lang"], tuple(r["sig"]),
+            tuple(r["embedding"]), bytes(r["tfblob"]))
+
+
+def test_served_answer_json_equals_spark_tail_json(spark, small_corpus, index):
+    """A served match reads the driver's ranked rows as Python values,
+    and its reply JSON is byte for byte the JSON results_json gives for
+    the Spark tail's answer relation over the same rows, in the driver's
+    order (query, score desc, candidate): the same rows, key order,
+    value types and nulls, over every corpus query alone and together,
+    at top_n 1 and 100. /metrics counts the path and sizes the copy."""
+    import json
+
+    from amp.incremental import _match_sides
+    from amp.serve import MatchService
+
+    files, _ = small_corpus
+    qs = _corpus_queries(files, index)
+    svc = MatchService(spark, index)
+    for rows in [[row] for row in qs.values()] + [list(qs.values())]:
+        for top_n in (1, 100):
+            served = svc._match(rows, top_n)
+            tail = _match_sides(index, _query_sides(spark, index, rows), top_n)
+            want = sorted(amp_io.results_json(tail),
+                          key=lambda r: (r["query_id"], -r["score"], r["candidate_id"]))
+            assert json.dumps({"matches": served}) == json.dumps({"matches": want})
+    m = svc.metrics
+    assert (m["matches_in_driver"], m["matches_in_spark"]) == (12, 0)
+    assert m["index_records"] == index.n_records
+    assert m["driver_copy_rows"] == index.n_sides
+    assert m["driver_copy_bytes"] >= index.driver_copy.rows.nbytes > 0
+
+
+def test_index_past_the_side_row_budget_holds_no_driver_copy(
+    spark, small_corpus, index, monkeypatch, count_jobs
+):
+    """A version with more side rows than _DRIVER_COPY_MAX_ROWS holds no
+    driver copy, and match_rows answers the same rows through the Spark
+    tail. A write that takes a version past the budget drops its copy,
+    and one that brings it back under builds it; a write that leaves it
+    past the budget collects nothing for a copy."""
+    import amp.incremental as incremental
+    from amp import scoring
+    from amp.incremental import append_rows, match_rows, remove_records
+
+    files, _ = small_corpus
+    rows = list(_corpus_queries(files, index).values())
+    calls = []
+    real = scoring.score_pairs_onepass
+    monkeypatch.setattr(
+        scoring, "score_pairs_onepass", lambda *a, **kw: calls.append(1) or real(*a, **kw)
+    )
+
+    def answer(idx):
+        return _answer_rows(match_rows(idx, rows, top_n=3))
+
+    want = answer(index)
+    assert want and not calls
+    fresh = [("budget/repo", f"new/past_the_budget_{i}.py", "0" * 40, "python",
+              f"def past_the_budget_{i}():\n    return 'qxzv_{i}_13579'\n")
+             for i in range(2)]
+    within = append_rows(index, fresh)
+    _, n_within = count_jobs(lambda: remove_records(within, [_rid(fresh[0])]))
+
+    monkeypatch.setattr(incremental, "_DRIVER_COPY_MAX_ROWS", index.n_sides - 1)
+    past = build_index(files, CFG)
+    assert past.driver_copy is None
+    assert answer(past) == want and calls
+
+    monkeypatch.setattr(incremental, "_DRIVER_COPY_MAX_ROWS", index.n_sides)
+    at = build_index(files, CFG)
+    _assert_index_state(at)
+    over = append_rows(at, fresh)
+    assert over.driver_copy is None
+    _assert_index_state(over)
+    # a remove that leaves a version past the budget runs the jobs of
+    # one that edits a copy: it collects and counts nothing for a copy
+    still, n_still = count_jobs(lambda: remove_records(over, [_rid(fresh[0])]))
+    assert still.driver_copy is None and still.n_sides == index.n_sides + 1
+    assert n_still == n_within
+    _assert_index_state(still)
+    under = remove_records(still, [_rid(fresh[1])])
+    assert under.driver_copy is not None
+    _assert_index_state(under)
+
+
 def _assert_index_state(idx):
     """An index version's pinned block table is blocking.all_blocks over
-    its side rows (as a row set), and its record count is exact."""
+    its side rows (as a row set), and its record count is exact. A
+    version within the side-row budget holds a driver copy equal to its
+    side rows and block table as row sets, its keys sorted."""
     from collections import Counter
 
+    import numpy as np
+
+    import amp.incremental as incremental
     from amp import blocking
 
     got = Counter((r["right_id"], r["block_key"]) for r in idx.blocks.collect())
@@ -331,6 +439,17 @@ def _assert_index_state(idx):
     )
     assert got == want
     assert idx.n_records == idx.records.count()
+    sides = Counter(_side_row(r.asDict()) for r in idx.sides.collect())
+    assert idx.n_sides == sum(sides.values())
+    copy = idx.driver_copy
+    assert (copy is not None) == (
+        not idx.uses_provided_embeddings and idx.n_sides <= incremental._DRIVER_COPY_MAX_ROWS
+    )
+    if copy is not None:
+        assert Counter(_side_row(r) for r in copy.rows.to_pylist()) == sides
+        ids = copy.rows.column("record_id").to_pylist()
+        assert Counter(zip((ids[p] for p in copy.pos), copy.keys.tolist())) == got
+        assert np.all(np.diff(copy.keys) >= 0)
 
 
 def _match_rows(idx, q):
@@ -688,7 +807,9 @@ def test_writes_to_a_content_of_many_records_collect_a_row_per_content(
     idx1 = append_rows(idx0, [row])
     idx2 = remove_records(idx1, [rid])
     monkeypatch.undo()
-    assert sizes == [1, 1, 1]  # the append's lookup; the remove's two
+    # the append's lookup and its added side row with its keys (for the
+    # driver copy); the remove's two lookups and its promoted side row
+    assert sizes == [1, 1, 1, 1, 1]
 
     side_ids = {r["record_id"] for r in idx1.sides.select("record_id").collect()}
     assert rid in side_ids and rep not in side_ids
@@ -860,6 +981,7 @@ def test_build_index_with_provided_embeddings(spark, small_corpus):
         "record_id string, embedding array<float>",
     )
     idx = build_index(files, CFG, embeddings=prov)
+    assert idx.driver_copy is None  # match_rows rejects the index anyway
     # every side vector is unit-norm and 8-dim (the provided dim, not cfg.emb_dim)
     import math
 

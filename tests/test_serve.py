@@ -153,7 +153,7 @@ def test_batch_match_answer_is_not_truncated(spark):
         pd.DataFrame([rec("index/repo", i) for i in range(40)], columns=_FIELDS)
     ))
     queries = [rec("query/repo", i) for i in range(40)]
-    want = match_rows(index, queries, top_n=100).count()
+    want = len(match_rows(index, queries, top_n=100))
     assert want > 1000
     got = MatchService(spark, index).match_batch(
         [dict(zip(_FIELDS, q)) for q in queries], top_n=100
@@ -745,28 +745,34 @@ def test_served_writes_job_budget_and_partition_counts(spark, small_corpus, coun
         return {t: getattr(svc.index, t).rdd.getNumPartitions() for t in tables}
 
     base = partitions()
+    n_copy = svc.index.driver_copy.rows.num_rows
     for k in range(3):
         recs = _fresh_records(f"w{k}", 4)
-        assert count_jobs(lambda: svc.append(recs))[1] <= 7
-        assert count_jobs(lambda: svc.remove(_record_ids(recs)))[1] <= 7
+        n_append = count_jobs(lambda: svc.append(recs))[1]
+        assert svc.index.driver_copy.rows.num_rows == n_copy + 4
+        n_remove = count_jobs(lambda: svc.remove(_record_ids(recs)))[1]
+        assert n_append <= 7 and n_remove <= 7
+        # keeping the driver copy adds no job to an append of new
+        # contents or to a remove that promotes no survivor
+        assert (n_append, n_remove) == (4, 5)
         assert svc.index.n_records == files.count()
+        assert svc.index.driver_copy.rows.num_rows == n_copy
         assert partitions() == base
 
 
 def test_served_match_job_budget(small_corpus, service, count_jobs):
-    """A served match runs in the driver: at most 2 Spark jobs (the
-    block lookup and the candidates' side rows) with candidates, at
-    most 1 without."""
+    """A served match runs in the driver against the index version's
+    driver copy: no Spark job, with candidates or without."""
     files, _ = small_corpus
     rec = _one_record(files)
     lone = dict(rec, path="zz/no_such_stem_qq.zz", lang=None,
                 content="xyzzy plugh frobnicate quux")
     out, n = count_jobs(lambda: service.match_single(rec))
-    assert out and n <= 2
+    assert out and n == 0
     out, n = count_jobs(lambda: service.match_batch([rec, dict(rec, path="b/" + rec["path"])]))
-    assert out and n <= 2
+    assert out and n == 0
     out, n = count_jobs(lambda: service.match_single(lone))
-    assert out == [] and n <= 1
+    assert out == [] and n == 0
 
 
 def test_empty_match_body_runs_no_job(service, count_jobs):
